@@ -124,17 +124,15 @@ def q_sizing_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sizing_sweep_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F3: per-event running concurrency/resource sums.
 
-    Declared with ``segmented=True`` — the 100 TB plan (parallel
-    per-bucket windows + broadcast carry-in). Integer micro-unit
-    arithmetic makes it bit-identical to the single-window oracle."""
-    return running_sums(explode_events(_kept(spark, sf_dir)), segmented=True)
+    The 100 TB plan (parallel per-bucket windows + broadcast carry-in).
+    Integer micro-unit arithmetic makes it bit-identical to the
+    single-window oracle."""
+    return running_sums(explode_events(_kept(spark, sf_dir)))
 
 
 def q_sizing_sweep_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: sweep maxima (max concurrency, max pods + its timestamp)."""
-    return sweep_maxima(
-        running_sums(explode_events(_kept(spark, sf_dir)), segmented=True)
-    )
+    return sweep_maxima(running_sums(explode_events(_kept(spark, sf_dir))))
 
 
 def q_sizing_summary_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,22 +170,6 @@ def q_sizing_derive_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]:
         df = classify_range_join(df, col, out)
     return df.select(*SIZING_OUTPUT_COLS)
-
-
-def q_sizing_size_matrix_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship expressed as ONE pure Spark-SQL statement — assembled
-    from the SAME SQL generators the oracle uses (derive/classify/matrix
-    are dialect-portable), so the sizing formulas live in exactly one
-    place. Registers only the view the statement reads."""
-    query_history_from_events(spark, sf_dir).createOrReplaceTempView(
-        "query_history"
-    )
-    sql = (
-        "WITH "
-        + ",\n".join([ACCEPTED_CTE, DERIVED_CTE, CLASSIFIED_CTE])
-        + size_matrix_sql(P)
-    )
-    return spark.sql(sql)
 
 
 def q_sizing_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,7 +311,7 @@ def canonical_query_order() -> list[str]:
     owning query is hoisted before every consumer, so the build cost is
     billed to ``dedup_minhash`` and the graph/CC rows measure their own
     work. The converged BPE trainer is shared the same way since r14
-    (``text._BPE_MEMO``): ``text_bpe_merges_converged`` precedes
+    (memo owner ``"bpe"``): ``text_bpe_merges_converged`` precedes
     ``text_bpe_encode_converged`` in PROMOTED order, so the merge-table
     query pays the 16-round training and the encode row measures only
     its own corpus pass."""
@@ -341,7 +323,7 @@ def canonical_query_order() -> list[str]:
     consumers = {
         "graph_ppr", "graph_pagerank", "graph_pagerank_conserving",
         "graph_triangles", "dedup_hybrid", "dedup_components",
-        "dedup_components_star", "dedup_cluster_rep",
+        "dedup_cluster_rep",
         # r13 promotion: the incremental (new-vs-corpus) dedup reads the
         # same plan-keyed sigs cache via _band_frame(_MH_FULL)
         "dedup_incremental",
@@ -499,7 +481,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # --- pytest-verified extra tier (NOT part of the driver contract) -------------
-# Near-duplicate formulations live here and are oracle-checked by
+# Companion queries (metric views, per-op views, variants with their own
+# oracle) live here and are oracle-checked by
 # tests/test_extra_tier.py with the same Spark-vs-DuckDB comparator
 # (tools/compare_oracle.py). The strongest flagships are hoisted into the
 # declared tier via queries_ext.PROMOTED (r8 verdict task 1) — queries()
@@ -508,20 +491,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # pure-SQL twin of sizing_size_matrix (same oracle, same results)
-        "sizing_size_matrix_sql": q_sizing_size_matrix_sql,
-    }
-    base.update(queries_ext.extra_queries())
-    return base
+    return queries_ext.extra_queries()
 
 
 def extra_oracle_sql() -> dict[str, str]:
-    base = {
-        "sizing_size_matrix_sql": oracle_with(
-            ACCEPTED_CTE, DERIVED_CTE, CLASSIFIED_CTE,
-            body=size_matrix_sql(P),
-        ),
-    }
-    base.update(queries_ext.extra_oracle_sql())
-    return base
+    return queries_ext.extra_oracle_sql()

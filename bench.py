@@ -239,15 +239,9 @@ def _one_query_mode(sf_dir: str, sf: float, name: str, reps: int) -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
         spark.catalog.clearCache()
-        from impala_base_to_cdw_sizing_spark.operators.kmeans import (
-            _CENTROID_MEMO,
-        )
-        from impala_base_to_cdw_sizing_spark.operators.text import _BPE_MEMO
-        from impala_base_to_cdw_sizing_spark.sources.synthetic import _QH_MEMO
+        from impala_base_to_cdw_sizing_spark import memo
 
-        _QH_MEMO.clear()
-        _BPE_MEMO.clear()
-        _CENTROID_MEMO.clear()
+        memo.clear()
     print(json.dumps(
         {"query": name, "sf": sf, "times": times, "min": min(times),
          "loadavg1": loads}
@@ -385,9 +379,7 @@ def main() -> None:
         return
 
     import __spark_entry__ as ent
-    from impala_base_to_cdw_sizing_spark.operators.kmeans import _CENTROID_MEMO
-    from impala_base_to_cdw_sizing_spark.operators.text import _BPE_MEMO
-    from impala_base_to_cdw_sizing_spark.sources.synthetic import _QH_MEMO
+    from impala_base_to_cdw_sizing_spark import memo
 
     spark = _build_session(sf_dir)
     shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -398,9 +390,7 @@ def main() -> None:
         passes.append(_run_pass(spark, sf_dir, ent))
         # reset cross-query cache sharing so every pass is like-for-like
         spark.catalog.clearCache()
-        _QH_MEMO.clear()
-        _BPE_MEMO.clear()
-        _CENTROID_MEMO.clear()
+        memo.clear()
 
     timings = {name: min(p[name] for p in passes) for name in passes[0]}
     total = round(sum(timings.values()), 3)

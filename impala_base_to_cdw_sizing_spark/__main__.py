@@ -14,7 +14,9 @@ import sys
 from pathlib import Path
 
 
-def main(argv: list[str]) -> int:
+def main(argv: list[str] | None = None) -> int:
+    if argv is None:  # console-script entry: ``cdw-sizing <sizing.conf>``
+        argv = sys.argv
     if len(argv) != 2:
         print("ERROR: Config file parameter required")
         return 1
@@ -36,8 +38,6 @@ def main(argv: list[str]) -> int:
     if not params.input_file and not params.cm_url:
         print("ERROR: set input_file (EP2 replay) or cm_url (EP1 API mode)")
         return 1
-
-    from pyspark.sql import functions as F
 
     from .plans.pipeline import prepare_query_history, run_api_sizing
 
@@ -62,14 +62,10 @@ def main(argv: list[str]) -> int:
             return 1
 
     if params.output_file:
-        kept24 = _project24(classify(result.routed.kept))
-        pruned24 = _project24(classify(result.routed.pruned))
         write_sizing_outputs(
-            kept=kept24,
-            pruned=pruned24,
-            skipped=result.routed.skipped.withColumns(
-                {"start_ms": F.col("start_ms"), "end_ms": F.col("end_ms")}
-            ),
+            kept=_project24(result.classified_kept),
+            pruned=_project24(classify(result.routed.pruned)),
+            skipped=result.routed.skipped,
             output_cols=OUTPUT_FIELDS,
             main_path=params.output_file,
             pruned_path=params.prune_output_file or params.output_file + ".pruned",

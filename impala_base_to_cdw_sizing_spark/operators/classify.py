@@ -10,7 +10,8 @@ input and linearly scans a range-keyed dict. Here it is:
    the ``size_buckets`` dimension. Catalyst picks
    BroadcastNestedLoopJoin; at 5 bucket rows that is one comparison chain
    per row, also scale-safe. Kept as the generic range-join operator (the
-   reference's only "join", SURVEY §2.J) and property-tested equal to (1).
+   reference's only "join", SURVEY §2.J); ``sizing_derive_rangejoin``
+   runs it against the same DuckDB oracle as ``sizing_derive``.
 
 Faithful semantics: input is ceiled first (``:72``); values beyond the last
 bucket (x > 999) fall off the dict scan and return ``None`` → NULL here.
@@ -45,16 +46,13 @@ def tsize_expr(c: Column, dim: str = "pods") -> Column:
 
 def tsize_case_sql(x: str, dim: str = "pods") -> str:
     """ANSI CASE form of :func:`tsize_expr` — valid in BOTH DuckDB
-    (oracle side) and Spark SQL (``tsize_case_spark`` alias below)."""
+    (oracle side) and Spark SQL."""
     xe = f"CAST(ceil({x}) AS BIGINT)"
     whens = "\n    ".join(
         f"WHEN {xe} >= {lo} AND {xe} <= {hi} THEN '{label}'"
         for lo, hi, label in _buckets(dim)
     )
     return f"(CASE {whens} ELSE NULL END)"
-
-
-tsize_case_spark = tsize_case_sql  # the CASE chain is dialect-portable
 
 
 def classify(df: DataFrame) -> DataFrame:
@@ -84,73 +82,6 @@ def classify_cte(source: str = "derived") -> str:
     {tsize_case_sql("min_executor_pod_raw")} AS recommended_tsize
   FROM {source}
 )"""
-
-
-def classify_range_join_melted(
-    df: DataFrame, pairs: list[tuple[str, str]], dim: str = "pods"
-) -> DataFrame:
-    """Fourth equivalent form (r9 verdict residual nit): instead of one
-    broadcast range join PER classified column (five sequential BNLJs in
-    ``sizing_derive_rangejoin``), melt the five value columns into
-    ``(seq, out_name, val)`` long form, run ONE broadcast range join
-    against the bucket dim, and pivot back on ``seq``.
-
-    Why it is NOT the primary: the five sequential BNLJs are
-    shuffle-FREE pipelined broadcasts (each a 5-row dim scan per task),
-    while the pivot-back here shuffles 5x the fact rows — and the
-    when-chain form is pure expression (0 exchanges). At 100 TB
-    zero-shuffle wins; this form exists to document the melt pattern
-    and is pinned bit-equal to the other three by
-    ``tests/test_classify.py::test_melted_range_join_equals_when_chain``.
-    """
-    # stack() needs one common type; the pod columns mix BIGINT (already
-    # ceiled) and DOUBLE (the pre-ceil raw max) — DOUBLE holds both
-    # exactly here (pods < 2^53) and ceil() lands on the same bucket
-    stack_expr = "stack({n}, {args}) AS (out_name, val)".format(
-        n=len(pairs),
-        args=", ".join(f"'{out}', CAST({val} AS DOUBLE)" for val, out in pairs),
-    )
-    long = df.selectExpr("seq AS _seq", stack_expr)
-    b = size_buckets(df.sparkSession, dim).select("lo", "hi", "label")
-    x = F.ceil(F.col("val")).cast("long")
-    joined = long.join(F.broadcast(b), (x >= b.lo) & (x <= b.hi), "left")
-    # F.max, not F.first: if bucket ranges ever overlapped, first() would
-    # be order-nondeterministic while max() stays deterministic by
-    # construction (r10 ADVICE). With the disjoint shipped buckets each
-    # group has at most one non-NULL label, so max == the single match.
-    wide = (
-        joined.groupBy("_seq")
-        .pivot("out_name", [out for _, out in pairs])
-        .agg(F.max("label"))
-    )
-    return df.join(wide, df["seq"] == wide["_seq"], "left").drop("_seq")
-
-
-def classify_bucketizer(
-    df: DataFrame, value_col: str, out_col: str = "label", dim: str = "pods"
-) -> DataFrame:
-    """Third equivalent form (SURVEY §2.E1 option 3): ``ml.feature
-    .Bucketizer``. The buckets are contiguous after ceil, so right-open
-    splits ``[lo0, lo1, …, hi_last+1]`` reproduce the dict scan; values
-    past the last bucket keep the reference's ``None`` via the invalid
-    bucket index."""
-    from pyspark.ml.feature import Bucketizer
-
-    buckets = _buckets(dim)
-    splits = [float(lo) for lo, _, _ in buckets] + [buckets[-1][1] + 1.0, float("inf")]
-    labels = [label for _, _, label in buckets]
-    ceiled = df.withColumn("_ceiled", F.ceil(F.col(value_col)).cast("double"))
-    bucketed = Bucketizer(
-        splits=splits, inputCol="_ceiled", outputCol="_bucket",
-        handleInvalid="keep",
-    ).transform(ceiled)
-    label_expr = F.element_at(
-        F.lit(labels), (F.col("_bucket") + 1).cast("int")
-    )  # the overflow split (last) indexes past the array → NULL
-    return bucketed.withColumn(
-        out_col,
-        F.when(F.col("_bucket") < len(labels), label_expr),
-    ).drop("_ceiled", "_bucket")
 
 
 def classify_range_join(

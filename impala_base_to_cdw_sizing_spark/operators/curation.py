@@ -345,9 +345,11 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc DSIR importance score and top-quarter selection — the
-    SEQUENTIAL twin (one global row_number window).
+_DSIR_COARSE = 32  # coarse score-range buckets for the segmented form
+
+
+def q_sample_importance_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc DSIR importance score and top-quarter selection.
 
     Bucket b's weight is the add-one-smoothed log-likelihood ratio
     ln((t_b+1)/(T+B)) − ln((r_b+1)/(R+B)) of the target (lang='en')
@@ -357,29 +359,11 @@ def q_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction is order-independent (raw double sums are not). The ln is
     the deterministic sqrt/atanh construction above — bit-identical in
     Spark and DuckDB, so the micro-unit floor can never flip between
-    engines."""
-    scored = _dsir_scored(spark, sf_dir)
-    # the population size does not need a second global window — a
-    # broadcast 1-row aggregate supplies it
-    w = Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
-    n_docs = scored.agg(F.count("*").alias("n_docs"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .crossJoin(F.broadcast(n_docs))
-        .selectExpr(
-            "doc_id", "n_tokens", "score_micro",
-            f"rk <= CAST(ceil({_KEEP_FRAC} * n_docs) AS INT) AS selected",
-        )
-    )
+    engines.
 
-
-_DSIR_COARSE = 32  # coarse score-range buckets for the segmented form
-
-
-def q_sample_importance_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segmented DSIR selection — the PRIMARY form (r7 verdict #1): the
-    fraction-of-population cut is a rank threshold, and the exact global
-    rank decomposes into per-bucket local ranks + a broadcast carry-in
+    Segmented (r7 verdict #1): the fraction-of-population cut is a rank
+    threshold, and the exact global rank decomposes into per-bucket
+    local ranks + a broadcast carry-in
     (``segmented.segmented_row_number``), the same two-phase shape as
     budget selection. Coarse buckets are uniform slices of the integer
     micro-unit score, DESC-oriented (bucket 0 = best) so bucket order
@@ -388,8 +372,8 @@ def q_sample_importance_segmented(spark: SparkSession, sf_dir: str) -> DataFrame
     ``(score_micro DESC, doc_id ASC)`` total order. The bounds lookup is
     a 2-value action on the cached scored frame (n_docs rows — already
     reduced from the token explosion); ranks are integers, so the
-    decomposition is bit-equal to the one-window twin and runs against
-    the same sequential DuckDB oracle."""
+    decomposition is bit-equal to the one-window row_number of the
+    DuckDB oracle (``SQL_SAMPLE_IMPORTANCE``)."""
     # GC-scoped materialization (not .cache(): a registered query must
     # leave no residual CacheManager entry behind, r8 ADVICE)
     scored = _dsir_scored(spark, sf_dir).localCheckpoint(eager=True)
@@ -482,31 +466,6 @@ def _spark_quality_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_select_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy quality-ranked selection under a token budget (half the
-    corpus's tokens): every doc with its rank, running token total, and
-    whether it made the cut. Integer cumulative sums — exact.
-
-    This is the SEQUENTIAL oracle-shaped twin (one global ordered
-    window); the registered primary is
-    :func:`q_select_budget_segmented`, the parallel two-phase form."""
-    scored = _spark_quality_frame(spark, sf_dir)
-    budget = scored.agg(
-        F.floor(F.sum("n_tokens") * _BUDGET_FRAC).cast("long").alias("budget")
-    )
-    w = Window.orderBy(
-        F.col("quality_score").desc(), F.col("doc_id").asc()
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (
-        scored.crossJoin(F.broadcast(budget))
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .selectExpr(
-            "doc_id", "n_tokens", "quality_score", "cum_tokens",
-            "cum_tokens <= budget AS selected",
-        )
-    )
-
-
 def _duck_quality_cte() -> str:
     from .text import STOPWORDS, _lst
 
@@ -564,18 +523,20 @@ def _quality_bucket(n_buckets: int):
 
 
 def q_select_budget_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRIMARY registered form of budget selection (since r5): the
-    global ordered cumulative sum decomposes into parallel per-bucket
-    windows plus a carry-in — the same two-phase exact decomposition as
-    the segmented sweep (SCALE.md F2-F3), applied to the curation
-    surface. :func:`q_select_budget` remains the sequential twin.
+    """Greedy quality-ranked selection under a token budget (half the
+    corpus's tokens): every doc with its running token total and whether
+    it made the cut. Integer cumulative sums — exact.
 
-    Buckets come from quantizing quality_score to integer micro-units
-    and width-partitioning — O(1) per row, no sampling pass, and ties
-    can never straddle buckets (equal quality ⇒ equal bucket). Token
-    counts are integers, so ``local cumsum + carry`` is bit-equal to
-    the single-window plan; the DuckDB oracle runs the sequential form,
-    making the equivalence oracle-gated, not just property-tested."""
+    The global ordered cumulative sum decomposes into parallel
+    per-bucket windows plus a carry-in — the same two-phase exact
+    decomposition as the segmented sweep (SCALE.md F2-F3), applied to
+    the curation surface. Buckets come from quantizing quality_score to
+    integer micro-units and width-partitioning — O(1) per row, no
+    sampling pass, and ties can never straddle buckets (equal quality ⇒
+    equal bucket). Token counts are integers, so ``local cumsum +
+    carry`` is bit-equal to the single-window plan; the DuckDB oracle
+    runs the single-window form, making the equivalence oracle-gated,
+    not just property-tested."""
     n_buckets = 16
     scored = _spark_quality_frame(spark, sf_dir).withColumn(
         "bucket", _quality_bucket(n_buckets)
@@ -695,32 +656,17 @@ FROM costed, budget
 _N_STRATA = 10
 
 
-def q_quality_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile profile of the quality distribution: per stratum (1 = best)
-    the doc count, token mass, and quality bounds."""
-    scored = _spark_quality_frame(spark, sf_dir)
-    w = Window.orderBy(F.col("quality_score").desc(), F.col("doc_id").asc())
-    return (
-        scored.withColumn("stratum", F.ntile(_N_STRATA).over(w).cast("long"))
-        .groupBy("stratum")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("sum_tokens"),
-            F.min("quality_score").alias("q_lo"),
-            F.max("quality_score").alias("q_hi"),
-        )
-    )
-
-
 def q_quality_strata_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segmented decile profile — the PRIMARY form (r7 verdict #1): the
-    global NTILE becomes (exact segmented rank) + (closed-form tile
-    split). Coarse buckets reuse the static quality quantizer (no bounds
-    action — quality ∈ [0, 1] by construction); the global rank is
-    local-rank + broadcast carry (``segmented.segmented_row_number``)
-    and ``segmented.ntile_expr`` assigns the stratum as a per-row O(1)
-    expression. Bit-equal to the one-window twin; both run against the
-    same sequential-NTILE DuckDB oracle."""
+    """Decile profile of the quality distribution: per stratum (1 = best)
+    the doc count, token mass, and quality bounds.
+
+    Segmented (r7 verdict #1): the global NTILE becomes (exact segmented
+    rank) + (closed-form tile split). Coarse buckets reuse the static
+    quality quantizer (no bounds action — quality ∈ [0, 1] by
+    construction); the global rank is local-rank + broadcast carry
+    (``segmented.segmented_row_number``) and ``segmented.ntile_expr``
+    assigns the stratum as a per-row O(1) expression. Bit-equal to the
+    one-window NTILE of the DuckDB oracle (``_sql_quality_strata``)."""
     scored = _spark_quality_frame(spark, sf_dir).withColumn(
         "bucket", _quality_bucket(16)
     )
@@ -763,26 +709,14 @@ GROUP BY stratum
 def register_all() -> None:
     register_extra("dedup_semantic", q_dedup_semantic, _sql_dedup_semantic())
     register_extra("dedup_hybrid", q_dedup_hybrid, _sql_dedup_hybrid())
-    # segmented forms are the PRIMARY registration (r7 verdict #1); the
-    # one-window forms stay as *_sequential twins. Every pair shares one
-    # sequential DuckDB oracle, so the two-phase bit-equality is
-    # oracle-gated on both sides.
+    # the segmented decomposition IS the operator (r4 verdict #6, r7
+    # verdict #1); each oracle runs the one-window DuckDB form, so the
+    # two-phase bit-equality is oracle-gated.
     register_extra(
         "sample_importance", q_sample_importance_segmented, SQL_SAMPLE_IMPORTANCE
     )
     register_extra(
-        "sample_importance_sequential", q_sample_importance, SQL_SAMPLE_IMPORTANCE
-    )
-    # the segmented decomposition IS the operator (r4 verdict #6 — the
-    # sweep and pack_sequences already register their scale-safe forms
-    # as primary); the single-global-sort form stays registered as the
-    # oracle-shaped sequential twin. Both run against the sequential
-    # DuckDB oracle, so the two-phase bit-equality is oracle-gated.
-    register_extra(
         "corpus_select_budget", q_select_budget_segmented, _sql_select_budget()
-    )
-    register_extra(
-        "corpus_select_budget_sequential", q_select_budget, _sql_select_budget()
     )
     register_extra(
         "corpus_select_budget_dedup",
@@ -791,7 +725,4 @@ def register_all() -> None:
     )
     register_extra(
         "corpus_quality_strata", q_quality_strata_segmented, _sql_quality_strata()
-    )
-    register_extra(
-        "corpus_quality_strata_sequential", q_quality_strata, _sql_quality_strata()
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .queries_ext import register, register_extra
 from .similarity import DIM, DUCK_DOT, DUCK_EMB, N_QUERIES, SPARK_DOT
+from ..memo import MEMO
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
 K = 8
@@ -108,14 +109,13 @@ def _recompute(assigned: DataFrame) -> DataFrame:
 # The unrolled 2-iteration Lloyd plan is deep, and before r15 every
 # consumer re-optimized AND re-executed the whole training chain
 # (kmeans_clusters, sim_ivf_trained, dedup_semantic and dedup_hybrid
-# each trained from scratch). The memo is the accepted _QH_MEMO /
-# _BPE_MEMO pattern: in-process only, keyed per SparkContext (the
+# each trained from scratch). Memo owner "centroids" in the shared
+# registry (memo.py): in-process only, keyed per SparkContext (the
 # localCheckpoint's lifetime), cleared by bench.py between passes and
 # isolated reps, billed to the family's first toucher in canonical
 # bench order. Returning the SAME checkpointed frame also keeps
 # _sem_assigned's plan-keyed cache shared between dedup_semantic and
 # dedup_hybrid (tests/test_cache_hygiene.py pins that sharing).
-_CENTROID_MEMO: dict[tuple, DataFrame] = {}
 
 
 def trained_centroids(
@@ -151,14 +151,17 @@ def trained_centroids(
     k-row ``Scan ExistingRDD`` instead of re-optimizing (and, without a
     plan-keyed cache hit, re-executing) the unrolled Lloyd chain.
     ``memo_key`` additionally shares the checkpointed result across the
-    family's queries within one pass (see ``_CENTROID_MEMO``)."""
+    family's queries within one pass (memo owner ``"centroids"``)."""
     if memo_key is not None:
         # N_ITERS is part of the trained result's identity (tests
         # monkeypatch it to compare iteration counts)
         memo_key = (
-            emb.sparkSession.sparkContext.applicationId, N_ITERS, *memo_key
+            "centroids",
+            emb.sparkSession.sparkContext.applicationId,
+            N_ITERS,
+            *memo_key,
         )
-        hit = _CENTROID_MEMO.get(memo_key)
+        hit = MEMO.get(memo_key)
         if hit is not None:
             return hit
     if k_frame is None:
@@ -177,7 +180,7 @@ def trained_centroids(
         centroids = _recompute(_assign(train, centroids))
     centroids = centroids.localCheckpoint(eager=True)
     if memo_key is not None:
-        _CENTROID_MEMO[memo_key] = centroids
+        MEMO[memo_key] = centroids
     return centroids
 
 

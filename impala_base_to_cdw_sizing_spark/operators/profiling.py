@@ -22,15 +22,13 @@ the way a 100 TB stats pass must:
   ranks + broadcast carry-in, then NTILE computed as a per-row O(1)
   expression from the exact global rank
   (``segmented.segmented_row_number`` / ``segmented.ntile_expr``) — no
-  single-partition sort anywhere in the plan. The one-window sequential
-  twin stays registered as ``rel_equidepth_histogram_sequential``; both
-  run against the same sequential-NTILE DuckDB oracle, so the two-phase
-  bit-equality is oracle-gated.
+  single-partition sort anywhere in the plan. The DuckDB oracle runs the
+  one-window NTILE, so the two-phase bit-equality is oracle-gated.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries_ext import register_extra
@@ -132,30 +130,12 @@ def _analyze_sql() -> str:
 
 
 _N_BUCKETS = 8
-
-
-def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_input(spark, sf_dir, "orders")
-    w = Window.orderBy(F.col("o_totalprice").asc(), F.col("o_orderkey").asc())
-    return (
-        orders.select(
-            "o_totalprice", F.ntile(_N_BUCKETS).over(w).cast("long").alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-        )
-    )
-
-
 _HIST_COARSE = 32  # coarse value-range buckets for the segmented form
 
 
 def q_equidepth_histogram_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segmented equi-depth histogram — the scale path, bit-equal to the
-    one-window NTILE form.
+    one-window NTILE of the DuckDB oracle (``SQL_EQUIDEPTH``).
 
     Prices quantize to integer cents (monotone: equal prices share a
     coarse bucket, so the bucketing is ordering-consistent for the
@@ -221,12 +201,8 @@ GROUP BY bucket
 
 def register_all() -> None:
     register_extra("rel_analyze_stats", q_analyze_stats, _analyze_sql())
-    # segmented is the PRIMARY (r7 verdict #1); the one-window NTILE form
-    # stays as the sequential twin — both against the same sequential
-    # oracle, so the two-phase bit-equality is oracle-gated.
+    # segmented (r7 verdict #1) against the one-window NTILE oracle, so
+    # the two-phase bit-equality is oracle-gated
     register_extra(
         "rel_equidepth_histogram", q_equidepth_histogram_segmented, SQL_EQUIDEPTH
-    )
-    register_extra(
-        "rel_equidepth_histogram_sequential", q_equidepth_histogram, SQL_EQUIDEPTH
     )

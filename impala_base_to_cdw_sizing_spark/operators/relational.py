@@ -493,32 +493,15 @@ GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 _GAP_NS = 30 * 60 * 1_000_000_000  # 30 min
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # events.ts arrives normalized to raw epoch nanos (load_events)
-    ev = _load_events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "new_session",
-            (F.col("prev_ts").isNull() | (F.col("ts") - F.col("prev_ts") > _GAP_NS))
-            .cast("long"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("new_session").alias("n_sessions"),
-        )
-    )
-
-
 def q_sessionize_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-proof PRIMARY form (r9: the skewed gate measured the
-    single per-user window at α≈1.0 when one user holds ~30% of events).
-    Session flags come from ``segmented.sessionize_flags`` — per-(user,
-    week-bucket) local lag + per-user carry over the tiny bucket
-    summary — then the same partial-agg rollup. Bit-equal to the
-    sequential twin (integer ns flags) against the SAME oracle."""
+    """Per-user event and session counts, sessions cut at a 30-min gap.
+
+    Skew-proof (r9: the skewed gate measured a single per-user window at
+    α≈1.0 when one user holds ~30% of events). Session flags come from
+    ``segmented.sessionize_flags`` — per-(user, week-bucket) local lag +
+    per-user carry over the tiny bucket summary — then a partial-agg
+    rollup. Integer ns flags make it bit-equal to the one-window
+    per-user LAG of the DuckDB oracle (``SQL_SESSIONIZE``)."""
     from .segmented import sessionize_flags
 
     ev = _load_events(spark, sf_dir).select("user_id", "ts", "event_id")
@@ -800,11 +783,9 @@ def register_all() -> None:
     register("rel_semi_anti", q_semi_anti, SQL_SEMI_ANTI)
     register("rel_topk_per_group", q_topk_per_group, SQL_TOPK)
     register("rel_setops", q_setops, SQL_SETOPS)
-    # segmented is the PRIMARY (r9 skewed gate: the one-window form
-    # serializes a hot user); the sequential twin stays against the SAME
-    # oracle so parity doubles as the segmented≡sequential proof.
+    # segmented (r9 skewed gate: a one-window form serializes a hot
+    # user); the sequential DuckDB oracle gates its bit-equality
     register("rel_sessionize", q_sessionize_segmented, SQL_SESSIONIZE)
-    register_extra("rel_sessionize_sequential", q_sessionize, SQL_SESSIONIZE)
     # pytest-verified tier (driver report caps at 50 rows): ROLLUP is the
     # special case of rel_grouping_sets; the hourly time-bucket agg is
     # covered by events_rollup_cascade's cascading time grains

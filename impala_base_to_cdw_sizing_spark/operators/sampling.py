@@ -286,9 +286,8 @@ _RES_K = 64
 
 
 def _reservoir_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared race-key frame: (doc_id, n_chars, ln_micro, race_key)
-    for every document — the narrow per-row map both reservoir forms
-    top-k over."""
+    """The race-key frame: (doc_id, n_chars, ln_micro, race_key) for
+    every document — the narrow per-row map the reservoir top-k's over."""
     from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
 
     return (
@@ -313,31 +312,23 @@ def _reservoir_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _reservoir_keyed(spark, sf_dir)
-        .orderBy(F.col("race_key").asc(), F.col("doc_id").asc())
-        .limit(_RES_K)
-    )
-
-
 _RES_DAYS = 3
 
 
 def q_sample_reservoir_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeability witness for the weighted reservoir — registered as
-    an oracle-gated twin (r7 verdict #6): the corpus is split into
-    ``_RES_DAYS`` disjoint "days" (a hash of doc_id, mimicking daily
-    ingest partitions), each day keeps its own k-smallest-key reservoir
+    """Weighted reservoir sample of ``_RES_K`` docs, computed as a fold
+    over days (r7 verdict #6): the corpus is split into ``_RES_DAYS``
+    disjoint "days" (a hash of doc_id, mimicking daily ingest
+    partitions), each day keeps its own k-smallest-key reservoir
     (per-day window top-k — partitioned, parallel), and the day
     reservoirs are merged by re-taking the k smallest keys from their
     union (≤ days·k rows). Because each race key is a pure function of
     (doc_id, n_chars) — no RNG state — every global winner is
-    necessarily a winner of its own day, so merged ≡ single-pass
-    bit-for-bit, and BOTH run against the same single-pass DuckDB
-    oracle. This is the property that lets a 100 TB corpus be sampled
-    day-by-day and folded: reservoir(A ∪ B) = merge(reservoir(A),
-    reservoir(B))."""
+    necessarily a winner of its own day, so the fold is bit-equal to
+    the single-pass ORDER BY ... LIMIT k of the DuckDB oracle
+    (``_sql_sample_reservoir``). This is the property that lets a
+    100 TB corpus be sampled day-by-day and folded: reservoir(A ∪ B) =
+    merge(reservoir(A), reservoir(B))."""
     keyed = _reservoir_keyed(spark, sf_dir).withColumn(
         "day", F.expr(f"(doc_id * {_KNUTH}) % {_RES_DAYS}")
     )
@@ -389,7 +380,7 @@ def q_sample_reservoir_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated 7x gets 7 entries of 1/7 mass each, so the CLUSTER has
     one document's expected representation while any copy can win —
     exactly the no-hard-delete dedup contract a training sampler wants.
-    Same exponential-race construction as ``sample_reservoir`` (shared
+    Same exponential-race construction as ``sample_reservoir_merged`` (shared
     deterministic ln, one correctly-rounded division, global top-k);
     the combined weight stays an exact BIGINT (micro-char units)."""
     from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
@@ -461,11 +452,8 @@ def register_all() -> None:
     register("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES)
     register("corpus_decontaminate", q_decontaminate, _decontaminate_sql())
     register_extra("sample_split", q_sample_split, SQL_SAMPLE_SPLIT)
-    register_extra(
-        "sample_reservoir", q_sample_reservoir, _sql_sample_reservoir()
-    )
-    # same oracle as the single-pass form — oracle-gates the merge
-    # identity reservoir(∪ days) = merge(per-day reservoirs)
+    # the single-pass oracle gates the merge identity
+    # reservoir(∪ days) = merge(per-day reservoirs)
     register_extra(
         "sample_reservoir_merged", q_sample_reservoir_merged, _sql_sample_reservoir()
     )

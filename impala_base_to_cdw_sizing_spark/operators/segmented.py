@@ -5,8 +5,9 @@ over an unpartitioned window).
 A global ordered rank decomposes exactly into (1) a local rank inside a
 coarse *ordering-consistent* bucket plus (2) a broadcast carry-in of the
 row counts of all earlier buckets — the same two-phase decomposition the
-segmented sweep uses for running sums (``sweep.py:121``) and budget
-selection uses for cumulative token mass (``curation.py:461``), applied
+segmented sweep uses for running sums (``sweep.running_sums``) and budget
+selection uses for cumulative token mass
+(``curation.q_select_budget_segmented``), applied
 to pure ranks. "Ordering-consistent" means every row of bucket *b* sorts
 before every row of bucket *b+1* and rows that compare equal on the
 leading order column share a bucket; both hold whenever the bucket is a
@@ -39,8 +40,8 @@ def segmented_row_number(
     ``df[bucket]`` must be an ordering-consistent coarse partitioner for
     ``order_cols`` (see module docstring). Ranks are integers, so
     ``local rank + carry-in`` is bit-equal to the single-window plan —
-    pinned by the ``*_sequential`` twins running against the SAME
-    sequential DuckDB oracle, and by ``tests/test_segmented_rank.py``.
+    pinned by every caller's one-window DuckDB oracle, and by
+    ``tests/test_segmented_rank.py``.
     """
     w_local = Window.partitionBy(bucket).orderBy(*order_cols)
     local = df.withColumn("_lrk", F.row_number().over(w_local))
@@ -87,8 +88,8 @@ def sessionize_flags(
     per-(user, bucket) summary frame, which holds at most
     horizon/span rows per user (≈5 here) regardless of how hot the
     user is. All arithmetic is integer ns, so the flags are bit-equal
-    to the sequential single-window form — pinned by the
-    ``*_sequential`` twins sharing the same DuckDB oracle.
+    to the single per-user window — pinned by the one-window DuckDB
+    oracles of ``rel_sessionize`` and ``rel_session_stats``.
 
     With ``with_session_id=True`` the 1-based per-user session id is
     added the same two-phase way: local running flag-sum plus the

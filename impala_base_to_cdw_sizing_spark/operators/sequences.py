@@ -267,80 +267,38 @@ def register_all() -> None:
     register_extra(
         "rel_cumulative_distinct", q_cumulative_distinct, SQL_CUMULATIVE_DISTINCT
     )
-    # segmented primary (r9 skewed gate) + sequential twin, same oracle
+    # segmented (r9 skewed gate), gated by the sequential DuckDB oracle
     register_extra(
         "rel_session_stats", q_session_stats_segmented, SQL_SESSION_STATS
-    )
-    register_extra(
-        "rel_session_stats_sequential", q_session_stats, SQL_SESSION_STATS
     )
     register_extra("rel_rolling_median", q_rolling_median, SQL_ROLLING_MEDIAN)
     register_extra("rel_acf_hourly", q_acf_hourly, SQL_ACF_HOURLY)
 
 
 def q_session_stats_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-proof PRIMARY form (r9 skewed gate): flags AND session ids
-    from ``segmented.sessionize_flags(with_session_id=True)`` — per-
-    (user, week-bucket) local windows plus a per-user carry over the
-    tiny bucket summary, so a user holding 30% of the corpus spreads
-    across buckets instead of serializing one task. The session-level
-    rollup is unchanged (group keys include session_id; map-side combine
-    absorbs even the hot user's giant sessions). Bit-equal to the
-    sequential twin against the SAME oracle — integer flag/rank
-    arithmetic throughout."""
+    """Session-LEVEL statistics — what ``rel_sessionize`` (per-user
+    session counts) and the streaming form deliberately do not
+    materialize: the distribution of session length and duration.
+    Sessions are cut with the same shared 30-min gap rule
+    (``relational._GAP_NS``) and aggregated to one row per session, then
+    rolled up into a sessions-by-length histogram with exact duration
+    stats (BIGINT ns sums; the avg is the single display division).
+
+    Skew-proof (r9 skewed gate): flags AND session ids come from
+    ``segmented.sessionize_flags(with_session_id=True)`` — per-(user,
+    week-bucket) local windows plus a per-user carry over the tiny
+    bucket summary, so a user holding 30% of the corpus spreads across
+    buckets instead of serializing one task. The session-level rollup
+    groups on session_id, so map-side combine absorbs even the hot
+    user's giant sessions. Integer flag/rank arithmetic throughout makes
+    it bit-equal to the per-user windows of the DuckDB oracle
+    (``SQL_SESSION_STATS``)."""
     from .relational import _GAP_NS
     from .segmented import sessionize_flags
 
     ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id")
     sessions = (
         sessionize_flags(ev, _GAP_NS, with_session_id=True)
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            (F.max("ts") - F.min("ts")).cast("long").alias("dur_ns"),
-        )
-    )
-    return sessions.groupBy("n_events").agg(
-        F.count("*").cast("long").alias("n_sessions"),
-        F.min("dur_ns").cast("long").alias("min_dur_ns"),
-        F.max("dur_ns").cast("long").alias("max_dur_ns"),
-        F.sum("dur_ns").cast("long").alias("sum_dur_ns"),
-    ).selectExpr(
-        "n_events",
-        "n_sessions",
-        "min_dur_ns",
-        "max_dur_ns",
-        "sum_dur_ns",
-        "CAST(sum_dur_ns AS DOUBLE) / CAST(n_sessions AS DOUBLE)"
-        " AS avg_dur_ns",
-    )
-
-
-def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-LEVEL statistics — what ``rel_sessionize`` (per-user
-    session counts) and the streaming twin deliberately do not
-    materialize: the distribution of session length and duration.
-    Sessions are cut with the same shared 30-min gap rule
-    (``relational._GAP_NS``), assigned ids by a running sum of
-    new-session flags over the user-partitioned window, aggregated to
-    one row per session, then rolled up into a sessions-by-length
-    histogram with exact duration stats (BIGINT ns sums; the avg is
-    the single display division). Two user-partitioned windows + two
-    partial aggs — no global sort; the session-level frame never
-    leaves the cluster."""
-    from .relational import _GAP_NS
-
-    ev = load_events(spark, sf_dir).select("user_id", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(
-        "new_session",
-        (
-            F.col("prev_ts").isNull()
-            | (F.col("ts") - F.col("prev_ts") > _GAP_NS)
-        ).cast("long"),
-    )
-    sessions = (
-        flagged.withColumn("session_id", F.sum("new_session").over(w))
         .groupBy("user_id", "session_id")
         .agg(
             F.count("*").cast("long").alias("n_events"),

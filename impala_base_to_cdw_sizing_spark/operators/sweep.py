@@ -23,13 +23,13 @@ sequence everywhere; running sums are exact integer/decimal arithmetic;
 one final division emits doubles. End events negate the quantized start
 value, so a query's events cancel to exactly zero.
 
-Scale: ``Window.orderBy`` without partitions collapses to ONE partition —
-fine for correctness runs, a hazard at 100 TB. :func:`running_sums`
-therefore has ``segmented=True`` mode: events are range-bucketed by
-timestamp, per-bucket prefix sums run in parallel, and a tiny
-per-bucket-totals prefix (n_buckets rows, broadcast back) provides the
-carry-in. Exact same numbers — integer arithmetic is order-independent —
-with a parallel plan (SURVEY §4.3.2).
+Scale: ``Window.orderBy`` without partitions collapses to ONE partition,
+a hazard at 100 TB, so :func:`running_sums` never plans one. Events are
+range-bucketed by timestamp, per-bucket prefix sums run in parallel, and
+a tiny per-bucket-totals prefix (``_N_BUCKETS`` rows, broadcast back)
+provides the carry-in (SURVEY §4.3.2). Integer arithmetic is
+order-independent, so the result equals the single-window running sum
+of the DuckDB oracle (``RUNNING_SUMS_SQL``) exactly.
 
 Semantics preserved from the reference:
 - start events use the admission-adjusted timestamp (C14: start +
@@ -52,6 +52,8 @@ from pyspark.sql import functions as F
 MEASURES = ["pods", "cache", "mem", "cpu", "spill", "data_rate"]
 _SCALE = 1_000_000.0
 DEC0 = "decimal(38,0)"
+# uniform time-range buckets of the segmented sweep
+_N_BUCKETS = 64
 
 
 def _micro(c: Column) -> Column:
@@ -118,35 +120,11 @@ sweep_events AS (
 """
 
 
-def running_sums(
-    events: DataFrame, segmented: bool = False, n_buckets: int = 64
-) -> DataFrame:
+def running_sums(events: DataFrame) -> DataFrame:
     """F2+F3: exact global running sums over the (ts_ms, seq, sign DESC)
-    total order. ``segmented=True`` is the 100 TB plan: parallel
-    per-bucket windows + broadcast carry-in, bit-identical results."""
+    total order, as parallel per-bucket windows + a broadcast carry-in."""
     order = [F.col("ts_ms").asc(), F.col("seq").asc(), F.col("sign").desc()]
-    out_cols = ["seq", "ts_ms", "sign"]
 
-    def _emit_run(run_micro: dict[str, Column], run_queries: Column, pos: Column):
-        return [
-            run_queries.alias("run_queries"),
-            *[
-                (run_micro[m].cast("double") / _SCALE).alias(f"run_{m}")
-                for m in MEASURES
-            ],
-            pos.cast("int").alias("event_pos"),
-        ]
-
-    if not segmented:
-        w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-        run_micro = {
-            m: F.sum(F.col(f"{m}_u").cast(DEC0)).over(w) for m in MEASURES
-        }
-        run_queries = F.sum(F.col("sign").cast("long")).over(w)
-        pos = F.row_number().over(Window.orderBy(*order))
-        return events.select(*out_cols, *_emit_run(run_micro, run_queries, pos))
-
-    # --- segmented exact sweep (the scale path) ---
     # The min/max agg is an eager action: without the cache it executes
     # the whole upstream pipeline once for the bucket bounds, and the
     # local / totals branches below re-execute it twice more. Events are
@@ -155,10 +133,10 @@ def running_sums(
     lo, hi = events.agg(F.min("ts_ms"), F.max("ts_ms")).first()
     if lo is None:  # empty input: any constant bucketing is exact
         lo, hi = 0, 0
-    span = max(1, (hi - lo) // n_buckets + 1)
+    span = max(1, (hi - lo) // _N_BUCKETS + 1)
     # Uniform time-range buckets: assignment is ONE subtract + integer
-    # divide per row (plan size constant in n_buckets — the former
-    # chained-when form compiled n_buckets comparisons per row). The
+    # divide per row (plan size constant in the bucket count — the former
+    # chained-when form compiled one comparison per bucket per row). The
     # running sums are exact integer arithmetic, so ANY bucketization
     # yields bit-identical output (test_segmented_equals_global); uniform
     # slices only affect partition balance, and at 100 TB the same
@@ -189,10 +167,10 @@ def running_sums(
         F.count("*").alias("tot_rows"),
     )
     # carry-in for bucket b = Σ totals of buckets < b. The frame is tiny
-    # (n_buckets rows) but a partition-less Window here would still log
+    # (_N_BUCKETS rows) but a partition-less Window here would still log
     # Spark's single-partition warning on every run — a triangular
     # left self-join aggregate computes the same prefix sums with no
-    # window at all (≤ n_buckets² = 4096 pairs).
+    # window at all (≤ _N_BUCKETS² = 4096 pairs).
     t, p = totals.alias("t"), totals.alias("p")
     carry = (
         t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
@@ -211,11 +189,20 @@ def running_sums(
         )
     )
 
-    joined = local.join(F.broadcast(carry), "bucket")
-    run_micro = {m: F.col(f"loc_{m}") + F.col(f"carry_{m}") for m in MEASURES}
-    run_queries = (F.col("loc_queries") + F.col("carry_queries")).cast("long")
-    pos = F.col("loc_pos") + F.col("carry_rows")
-    return joined.select(*out_cols, *_emit_run(run_micro, run_queries, pos))
+    return local.join(F.broadcast(carry), "bucket").select(
+        "seq",
+        "ts_ms",
+        "sign",
+        (F.col("loc_queries") + F.col("carry_queries"))
+        .cast("long")
+        .alias("run_queries"),
+        *[
+            ((F.col(f"loc_{m}") + F.col(f"carry_{m}")).cast("double") / _SCALE)
+            .alias(f"run_{m}")
+            for m in MEASURES
+        ],
+        (F.col("loc_pos") + F.col("carry_rows")).cast("int").alias("event_pos"),
+    )
 
 
 _RUN_COLS_SQL = ",\n  ".join(

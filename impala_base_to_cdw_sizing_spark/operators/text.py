@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .queries_ext import register, register_extra
 from .smallplan import small_plan_mode
+from ..memo import MEMO
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
 _MOD = 1_000_000_000_000_000  # 1e15: keeps acc*31+x < 2^63
@@ -521,13 +522,12 @@ def _bpe_pair_counts(words: DataFrame) -> DataFrame:
 # One trained (words, merges) per (application, sf_dir, target, min):
 # the two converged BPE queries (merge table + encode) retrained the
 # IDENTICAL driver loop twice per bench pass / oracle session. The loop
-# output is deterministic, so this is the _QH_MEMO / plan-keyed-sigs
-# sharing pattern (canonical bench order bills the build to its first
+# output is deterministic, so it is memo owner "bpe" in the shared
+# registry (memo.py; canonical bench order bills the build to its first
 # toucher, text_bpe_merges_converged); bench.py clears it between
 # passes so every pass still pays the full training inside the timed
 # region. Values are a localCheckpoint (valid for the SparkContext's
 # lifetime) + a driver-side list.
-_BPE_MEMO: dict[tuple[str, str, int, int], tuple[DataFrame, list]] = {}
 
 
 def _bpe_trained_converged(
@@ -556,8 +556,8 @@ def _bpe_trained_converged(
     scale each vocab-sized job is ~0.2 s of fixed scheduling/planning
     cost, so halving the job count halves the loop; at 100 TB scale the
     same fusion halves the number of cluster-wide barriers per round."""
-    key = (spark.sparkContext.applicationId, sf_dir, target, min_pair_n)
-    memo = _BPE_MEMO.get(key)
+    key = ("bpe", spark.sparkContext.applicationId, sf_dir, target, min_pair_n)
+    memo = MEMO.get(key)
     if memo is not None:
         return memo
     words = (
@@ -594,7 +594,7 @@ def _bpe_trained_converged(
         if row is None or row["l"] is None or row["pair_n"] < min_pair_n:
             break
         merges.append((i, row["l"], row["r"], row["m"], row["pair_n"]))
-    _BPE_MEMO[key] = (words, merges)
+    MEMO[key] = (words, merges)
     return words, merges
 
 
@@ -2055,8 +2055,8 @@ def cc_labels_star(
     Convergence = the (count, xxhash64-sum) edge digest repeating — an
     O(1)-row action per round; the final stars give every node the
     component minimum as its direct neighbor. Labels are property-tested
-    equal to :func:`cc_labels_converged` (and oracle-checked through
-    ``dedup_components``'s recursive-CTE fixpoint when registered)."""
+    equal to :func:`cc_labels_converged` and oracle-checked through
+    ``dedup_hybrid``'s recursive-CTE fixpoint."""
 
     def _star(e: DataFrame, large: bool, dedupe: bool = True) -> DataFrame:
         m = e.groupBy("doc_a").agg(F.min("doc_b").alias("mnb")).select(
@@ -2127,32 +2127,6 @@ def cc_labels_star(
             F.col("doc_id"), F.coalesce("nbr_min", F.col("doc_id"))
         ).alias("cluster"),
     )
-
-
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_components`` computed by the O(log)-rounds large-star /
-    small-star algorithm (:func:`cc_labels_star`) instead of
-    diameter-bounded min-label propagation — the variant a 100 TB crawl
-    with long duplicate chains actually needs (a 1000-link chain is ~10
-    star rounds vs ~1000 propagation rounds). Same edge cut
-    (est_jaccard ≥ 0.5 over the MinHash candidates), same output schema
-    (doc_id → component-min cluster), same recursive-CTE fixpoint
-    oracle — so the log-rounds path is oracle-checked, not just
-    property-tested against the convergent one."""
-    pairs = (
-        q_dedup_minhash(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).cache()
-    docs = _docs(spark, sf_dir).select("doc_id")
-    # star rounds contract the edge frame itself, so labels come straight
-    # from the final stars; isolated docs fall out of the left join
-    labels = cc_labels_star(edges, docs)
-    edges.unpersist()
-    return labels.select("doc_id", "cluster")
 
 
 def _components_sql() -> str:
@@ -2712,9 +2686,6 @@ def register_all() -> None:
     register_extra(
         "dedup_substring_scrub", q_substring_scrub, _substring_scrub_sql()
     )
-    # the log-rounds CC shares dedup_components' recursive-CTE oracle:
-    # both must reach the identical component-min fixpoint
-    register_extra("dedup_components_star", q_dedup_components_star, _components_sql())
     register_extra("dedup_substring", q_dedup_substring, _substring_sql())
     register_extra(
         "dedup_substring_spans", q_dedup_substring_spans, _substring_spans_sql()

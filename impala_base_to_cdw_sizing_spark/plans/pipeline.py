@@ -62,7 +62,6 @@ def run_api_sizing(
     spark,
     params: SizingParams,
     fetcher=None,
-    segmented_sweep: bool = True,
 ) -> SizingResult:
     """EP1: the reference's API-mode program (``impala_query_sizing.py:
     309-341``) — paged CM fetch → flatten → the shared sizing pipeline.
@@ -88,14 +87,10 @@ def run_api_sizing(
         spark, fetcher, params.from_date, params.to_date, params.pool or None
     )
     qh = prepare_query_history(flatten_api_docs(docs))
-    return run_sizing(qh, params, segmented_sweep=segmented_sweep)
+    return run_sizing(qh, params)
 
 
-def run_sizing(
-    query_history: DataFrame,
-    params: SizingParams,
-    segmented_sweep: bool = True,
-) -> SizingResult:
+def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
     routed = route(query_history, params, derive)
     classified_kept = classify(routed.kept)
     # G1 counts the cached derived table (row-equal to accepted) so the
@@ -103,10 +98,10 @@ def run_sizing(
     # cached because three consumers read it (reports, utilization,
     # workload-size lookup)
     summary = summarize(routed.kept, routed.derived).cache()
-    # events feed both the running-sums output and the maxima (and, when
-    # segmented, the quantile pass) — cache so the explode runs once
+    # events feed both the running-sums output and the maxima (and the
+    # sweep's bucket-bounds pass) — cache so the explode runs once
     events = explode_events(routed.kept).cache()
-    running = running_sums(events, segmented=segmented_sweep)
+    running = running_sums(events)
     return SizingResult(
         routed=routed,
         classified_kept=classified_kept,

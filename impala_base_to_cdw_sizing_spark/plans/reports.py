@@ -152,7 +152,7 @@ def report_values_df(kept, accepted, pruned, params: SizingParams):
     from ..operators.sweep import explode_events, running_sums, sweep_maxima
 
     summary = summarize(kept, accepted)
-    maxima = sweep_maxima(running_sums(explode_events(kept), segmented=True))
+    maxima = sweep_maxima(running_sums(explode_events(kept)))
     util = utilization(summary, params)
     # G4 as a global aggregate (1 row even on empty input, like the
     # oracle's scalar subquery): max pod, earliest seq wins ties.

@@ -9,8 +9,7 @@
   (``:198,341-344``).
 
 Exact ``csv.QUOTE_NONNUMERIC`` byte-layout is an accepted divergence
-(SURVEY §2.B1): values are identical, quoting differs; a ``mapInPandas``
-writer exists for byte-golden needs but is not the default path.
+(SURVEY §2.B1): values are identical, quoting differs.
 """
 
 from __future__ import annotations
@@ -23,36 +22,6 @@ def write_csv(df: DataFrame, path: str) -> None:
     """Distributed CSV write with header. One directory of part files —
     the scale-correct layout (a single file would serialize the write)."""
     df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def write_csv_quote_nonnumeric(df: DataFrame, path: str) -> None:
-    """Byte-exact ``csv.QUOTE_NONNUMERIC`` writer (strings quoted, numbers
-    bare) — the reference's exact CSV dialect (``impala_query_sizing.py:123``).
-
-    Spark's native CSV sink cannot express per-type quoting, so this goes
-    through ``mapInPandas`` + ``pandas.to_csv``. Single partition by
-    design: byte-golden output implies one ordered file; use the
-    distributed :func:`write_csv` when layout fidelity is not required
-    (SURVEY §2.B1 accepted divergence).
-    """
-    import csv as _csv
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    cols = df.columns
-
-    def _to_lines(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        first = True
-        for pdf in it:
-            text = pdf.to_csv(
-                index=False, header=first, quoting=_csv.QUOTE_NONNUMERIC
-            )
-            first = False
-            yield pd.DataFrame({"line": text.splitlines()})
-
-    lines = df.coalesce(1).mapInPandas(_to_lines, "line string")
-    lines.write.mode("overwrite").text(path)
 
 
 def write_sizing_outputs(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import MEMO
 from ..schemas import QUERY_HISTORY_SCHEMA
 
 TPCH_TABLES = [
@@ -20,8 +21,8 @@ TPCH_TABLES = [
 
 
 # fan-out decision per (path, parallelism, rows_per_task): tiny
-# driver-side footer read, done once per input per process
-_FANOUT_MEMO: dict[tuple[str, int, int], int] = {}
+# driver-side footer read, done once per input per process (memo owner
+# "fanout" in the shared registry, memo.py)
 
 # below this row count the per-row work above a 1-task scan is trivial;
 # at/above it (sf0.1 ships 2 000-600 000-row single-row-group files) the
@@ -85,8 +86,8 @@ def _scan_fanout(path: str, cpus: int,
     expensive to move. Non-local paths (no readable footer) are left
     untouched.
     """
-    key = (path, cpus, rows_per_task)
-    hit = _FANOUT_MEMO.get(key)
+    key = ("fanout", path, cpus, rows_per_task)
+    hit = MEMO.get(key)
     if hit is not None:
         return hit
     fan = 0
@@ -110,7 +111,7 @@ def _scan_fanout(path: str, cpus: int,
                 fan = 0
     except Exception:  # noqa: BLE001 — unreadable/remote input: no fan-out
         fan = 0
-    _FANOUT_MEMO[key] = fan
+    MEMO[key] = fan
     return fan
 
 

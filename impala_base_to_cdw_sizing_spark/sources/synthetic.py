@@ -26,13 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import MEMO
+
 
 # One derived query_history per (session, sf_dir), cached: every sizing
 # query starts from this table, so materializing it once lets the whole
 # sizing family share a single events scan + derivation instead of
 # re-deriving per query (at 100 TB this is "stage the fact table once").
 # The frame is 2 small columns-of-longs per event row — cache-friendly.
-_QH_MEMO: dict[tuple[str, str], DataFrame] = {}
+# Memo owner "qh" in the shared registry (memo.py).
 
 
 def query_history_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,8 +49,8 @@ def query_history_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized + cached per (application, sf_dir); the transform is pure,
     so consumers share one materialization.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _QH_MEMO.get(key)
+    key = ("qh", spark.sparkContext.applicationId, sf_dir)
+    memo = MEMO.get(key)
     if memo is not None:
         return memo
     from .files import load_events
@@ -92,7 +94,7 @@ def query_history_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = df.withColumn(
         "end_ms", F.col("start_ms") + F.col("duration_millis")
     ).cache()
-    _QH_MEMO[key] = out
+    MEMO[key] = out
     return out
 
 

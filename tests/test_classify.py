@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.operators.classify import (
-    classify_bucketizer,
     classify_range_join,
     tsize_expr,
 )
@@ -43,66 +42,8 @@ def test_when_chain_equals_range_join(spark):
     assert mismatches == 0
 
 
-def test_bucketizer_equals_when_chain(spark):
-    df = spark.range(0, 1200).select((F.col("id") / 3.0).alias("x"))
-    chain = df.select("x", tsize_expr(F.col("x")).alias("a"))
-    bucketized = classify_bucketizer(df, "x", out_col="b")
-    merged = chain.join(bucketized, "x")
-    mismatches = merged.filter(
-        ~(
-            (F.col("a") == F.col("b"))
-            | (F.col("a").isNull() & F.col("b").isNull())
-        )
-    ).count()
-    assert mismatches == 0
-
-
 def test_range_join_is_broadcast(spark):
     df = spark.range(0, 100).select(F.col("id").cast("double").alias("x"))
     plan = classify_range_join(df, "x")._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
 
-
-def test_melted_range_join_equals_when_chain(spark):
-    """r9 verdict residual nit: the melt -> ONE broadcast range join ->
-    pivot-back form must agree with the when-chain (and therefore with
-    the 5-BNLJ twin, which shares the when-chain's oracle) on every row
-    and every classified column of the real derived table."""
-    from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
-    from impala_base_to_cdw_sizing_spark.operators.classify import (
-        classify,
-        classify_range_join_melted,
-    )
-    from impala_base_to_cdw_sizing_spark.operators.derive import derive
-    from impala_base_to_cdw_sizing_spark.operators.route import (
-        accepted_filter,
-        skip_split,
-    )
-    from impala_base_to_cdw_sizing_spark.sources.synthetic import (
-        query_history_from_events,
-    )
-    from tests.conftest import SF_SMALL
-
-    qh = query_history_from_events(spark, SF_SMALL)
-    accepted, _ = skip_split(accepted_filter(qh, DEFAULT_PARAMS))
-    derived = derive(accepted, DEFAULT_PARAMS)
-    pairs = [
-        ("min_exec_pod_cache", "tsize_cache"),
-        ("min_exec_pod_mem", "tsize_mem"),
-        ("min_exec_pod_cpu", "tsize_cpu"),
-        ("min_exec_pod_spill", "tsize_spill"),
-        ("min_executor_pod_raw", "recommended_tsize"),
-    ]
-    cols = ["seq"] + [out for _, out in pairs]
-    a = sorted(tuple(r) for r in classify(derived).select(*cols).collect())
-    b = sorted(
-        tuple(r)
-        for r in classify_range_join_melted(derived, pairs).select(*cols).collect()
-    )
-    assert a == b and len(a) > 0
-    # the melted plan really does plan ONE broadcast range join
-    plan = (
-        classify_range_join_melted(derived, pairs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastNestedLoopJoin") == 1

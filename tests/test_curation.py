@@ -12,9 +12,9 @@ from impala_base_to_cdw_sizing_spark.operators.curation import (
     _TARGET_LANG,
     q_dedup_hybrid,
     q_dedup_semantic,
-    q_quality_strata,
-    q_sample_importance,
-    q_select_budget,
+    q_quality_strata_segmented,
+    q_sample_importance_segmented,
+    q_select_budget_segmented,
 )
 from tests.conftest import SF_SMALL
 
@@ -80,7 +80,7 @@ def test_hybrid_clusters_refine_neither_signal(spark):
 
 
 def test_importance_resampling_prefers_target_language(spark):
-    sel = q_sample_importance(spark, SF_SMALL)
+    sel = q_sample_importance_segmented(spark, SF_SMALL)
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "lang"
     )
@@ -95,7 +95,7 @@ def test_importance_resampling_prefers_target_language(spark):
 
 
 def test_budget_selection_respects_budget_and_greedy_order(spark):
-    rows = q_select_budget(spark, SF_SMALL).collect()
+    rows = q_select_budget_segmented(spark, SF_SMALL).collect()
     total = sum(r.n_tokens for r in rows)
     budget = total * 0.5
     sel_tokens = sum(r.n_tokens for r in rows if r.selected)
@@ -110,17 +110,21 @@ def test_budget_selection_respects_budget_and_greedy_order(spark):
 
 def test_segmented_budget_equals_single_window(spark):
     """The two-phase (bucketed + carry-in) selection must be BIT-equal
-    to the single-ordered-window form — the sweep's exactness argument
-    transplanted to curation, and both share one sequential oracle."""
+    to the single-ordered-window form of the DuckDB oracle — the sweep's
+    exactness argument transplanted to curation."""
     from impala_base_to_cdw_sizing_spark.operators.curation import (
-        q_select_budget_segmented,
+        _sql_select_budget,
     )
+    from tools.compare_oracle import duck_connection
 
-    a = {r.doc_id: r for r in q_select_budget(spark, SF_SMALL).collect()}
+    a = {
+        r[0]: (r[3], r[4])
+        for r in duck_connection(SF_SMALL).execute(_sql_select_budget()).fetchall()
+    }
     b = {r.doc_id: r for r in q_select_budget_segmented(spark, SF_SMALL).collect()}
     assert set(a) == set(b)
     for d in a:
-        assert (a[d].cum_tokens, a[d].selected) == (b[d].cum_tokens, b[d].selected), d
+        assert a[d] == (b[d].cum_tokens, b[d].selected), d
     # and the plan is genuinely parallel: the local window partitions by
     # bucket, no global-ordering window remains on the cumsum path
     plan = (
@@ -131,7 +135,10 @@ def test_segmented_budget_equals_single_window(spark):
 
 
 def test_quality_strata_partition_the_corpus(spark):
-    rows = sorted(q_quality_strata(spark, SF_SMALL).collect(), key=lambda r: r.stratum)
+    rows = sorted(
+        q_quality_strata_segmented(spark, SF_SMALL).collect(),
+        key=lambda r: r.stratum,
+    )
     assert [r.stratum for r in rows] == list(range(1, 11))
     assert sum(r.n_docs for r in rows) == 500
     # NTILE balance: sizes differ by at most 1

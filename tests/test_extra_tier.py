@@ -1,6 +1,6 @@
-"""Extra-tier parity: near-duplicate formulations (second dialects of an
-already-checked oracle, metric companions, the per-op views of
-text_profile) are registered via ``register_extra`` and oracle-verified
+"""Extra-tier parity: companion queries (metric companions, the per-op
+views of text_profile, variants with their own oracle) are registered
+via ``register_extra`` and oracle-verified
 HERE with the exact comparator the declared tier uses
 (tools/compare_oracle.compare_frames). The strongest flagships are hoisted
 into the declared tier via ``queries_ext.PROMOTED`` (r8 verdict task 1)."""

@@ -134,7 +134,7 @@ def test_iterative_per_round_plans_stay_bounded(spark):
         for name in [
             "sim_mmr_rerank",
             "dedup_components",
-            "dedup_components_star",
+            "dedup_hybrid",
             "graph_pagerank",
             "graph_ppr",
         ]:
@@ -147,7 +147,7 @@ def test_iterative_per_round_plans_stay_bounded(spark):
     # (kmeans_clusters iterates via collected-centroid broadcast, no
     # per-round frame checkpoint — nothing for this hook to see there)
     assert set(per_round) == {
-        "sim_mmr_rerank", "dedup_components", "dedup_components_star",
+        "sim_mmr_rerank", "dedup_components", "dedup_hybrid",
         "graph_pagerank", "graph_ppr",
     }, sorted(per_round)
     # … and every intra-round plan stays bounded. The graph queries

@@ -28,7 +28,7 @@ def _det_ln(ratio: float) -> int:
     return int(math.floor(65536.0 * series * 1000000.0 + 0.5))
 
 
-# --- sample_reservoir -------------------------------------------------------------
+# --- sample_reservoir_merged ------------------------------------------------------
 
 
 def test_reservoir_matches_python_replication(spark):
@@ -36,10 +36,10 @@ def test_reservoir_matches_python_replication(spark):
         _KNUTH,
         _RES_K,
         _RES_M,
-        q_sample_reservoir,
+        q_sample_reservoir_merged,
     )
 
-    got = q_sample_reservoir(spark, SF_SMALL).collect()
+    got = q_sample_reservoir_merged(spark, SF_SMALL).collect()
     docs = duckdb.sql(
         f"SELECT doc_id, n_chars FROM '{SF_SMALL}/documents.parquet'"
     ).fetchall()
@@ -66,10 +66,10 @@ def test_reservoir_favors_heavy_docs(spark):
     the exponential-race direction — dividing by w must FAVOR large w,
     not penalize it)."""
     from impala_base_to_cdw_sizing_spark.operators.sampling import (
-        q_sample_reservoir,
+        q_sample_reservoir_merged,
     )
 
-    sel = [r.n_chars for r in q_sample_reservoir(spark, SF_SMALL).collect()]
+    sel = [r.n_chars for r in q_sample_reservoir_merged(spark, SF_SMALL).collect()]
     all_chars = [
         r[0]
         for r in duckdb.sql(

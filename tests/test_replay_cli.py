@@ -77,3 +77,19 @@ def test_cli_arg_validation(tmp_path: Path):
         capture_output=True, text=True, timeout=60, cwd=repo,
     )
     assert r.returncode == 1 and "doesn't exist" in r.stdout
+
+
+def test_console_script_main_reads_sys_argv():
+    """``pyproject.toml``'s ``cdw-sizing`` script calls ``main()`` with no
+    arguments; it must read ``sys.argv`` rather than raise TypeError."""
+    repo = str(Path(__file__).resolve().parent.parent)
+    r = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import sys; from impala_base_to_cdw_sizing_spark.__main__ import main;"
+            " sys.exit(main())",
+        ],
+        capture_output=True, text=True, timeout=60, cwd=repo,
+    )
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert "ERROR: Config file parameter required" in r.stdout

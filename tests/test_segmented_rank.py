@@ -2,11 +2,11 @@
 single-sort extras — equi-depth histogram, DSIR selection, quality
 strata — now register segmented primaries built on
 ``segmented.segmented_row_number`` + ``segmented.ntile_expr``. These
-tests pin (1) bit-equality of segmented vs sequential on the real
-tables, (2) the NTILE closed-form split against Spark's own NTILE on
-adversarial sizes (n < k, n % k ≠ 0, ties), and (3) the structural
-claim itself: the segmented plans contain ZERO partition-less Window
-nodes while the sequential twins contain exactly the one they pay for.
+tests pin (1) bit-equality of each segmented query with its sequential
+one-window DuckDB oracle on the real tables, (2) the NTILE closed-form
+split against Spark's own NTILE on adversarial sizes (n < k,
+n % k ≠ 0, ties), and (3) the structural claim itself: the segmented
+plans contain ZERO partition-less Window nodes.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from impala_base_to_cdw_sizing_spark.operators.segmented import (
     segmented_row_number,
 )
 from tests.conftest import SF_SMALL
+from tools.compare_oracle import compare_frames, duck_connection
 
 
 def global_window_count(df) -> int:
@@ -42,25 +43,28 @@ def global_window_count(df) -> int:
     return n
 
 
+# each segmented query with its sequential (one global window) oracle
 _PAIRS = [
-    (profiling.q_equidepth_histogram_segmented, profiling.q_equidepth_histogram),
-    (curation.q_sample_importance_segmented, curation.q_sample_importance),
-    (curation.q_quality_strata_segmented, curation.q_quality_strata),
+    (profiling.q_equidepth_histogram_segmented, profiling.SQL_EQUIDEPTH),
+    (curation.q_sample_importance_segmented, curation.SQL_SAMPLE_IMPORTANCE),
+    (curation.q_quality_strata_segmented, curation._sql_quality_strata()),
 ]
 
 
 def test_segmented_bit_equal_to_sequential(spark):
-    for seg, seq in _PAIRS:
-        a = seg(spark, SF_SMALL).collect()
-        b = seq(spark, SF_SMALL).collect()
-        key = lambda r: tuple(str(v) for v in r)
-        assert sorted(a, key=key) == sorted(b, key=key), seg.__name__
+    con = duck_connection(SF_SMALL)
+    for seg, sequential_sql in _PAIRS:
+        issues = compare_frames(
+            seg.__name__,
+            seg(spark, SF_SMALL).toPandas(),
+            con.execute(sequential_sql).fetch_df(),
+        )
+        assert not issues, (seg.__name__, issues)
 
 
 def test_segmented_primaries_have_no_global_window(spark):
-    for seg, seq in _PAIRS:
+    for seg, _ in _PAIRS:
         assert global_window_count(seg(spark, SF_SMALL)) == 0, seg.__name__
-        assert global_window_count(seq(spark, SF_SMALL)) == 1, seq.__name__
 
 
 def test_ntile_closed_form_matches_spark_ntile(spark):
@@ -137,10 +141,8 @@ def test_segmented_row_number_empty_and_single_bucket(spark):
 # r14: the allowlist is EMPTY — skyline's global pass (the last primary
 # window over a "provably bounded" intermediate) went segmented after
 # the r13 verdict observed a 2-D frontier is O(n) on anti-correlated
-# data, so every primary is now window-clean with zero exceptions. The
-# sequential twins still exist to pay the global window on purpose
-# (they gate the segmented forms' bit-equality through the shared
-# oracle). Adding a name here requires a documented bounded-input proof
+# data, so every primary is now window-clean with zero exceptions.
+# Adding a name here requires a documented bounded-input proof
 # with an adversarial fixture (the bar rel_skyline failed).
 _BOUNDED_INPUT_WINDOWS: set[str] = set()
 
@@ -160,7 +162,7 @@ def test_registry_primaries_have_no_global_window(spark):
     reg.update(ent.extra_queries())
     offenders = {}
     for name, fn in sorted(reg.items()):
-        if name.endswith("_sequential") or name in _BOUNDED_INPUT_WINDOWS:
+        if name in _BOUNDED_INPUT_WINDOWS:
             continue
         n = global_window_count(fn(spark, SF_SMALL))
         if n:
@@ -171,11 +173,15 @@ def test_registry_primaries_have_no_global_window(spark):
 def test_reservoir_merge_identity(spark):
     """r7 verdict #6: reservoir(∪ days) = merge(per-day reservoirs),
     bit-for-bit — the property that lets a 100 TB corpus be sampled
-    day-by-day and folded."""
+    day-by-day and folded. The single-pass reservoir is the DuckDB
+    oracle's ORDER BY race_key LIMIT k."""
     from impala_base_to_cdw_sizing_spark.operators import sampling
 
-    single = sampling.q_sample_reservoir(spark, SF_SMALL).collect()
+    single = duck_connection(SF_SMALL).execute(
+        sampling._sql_sample_reservoir()
+    ).fetchall()
     merged = sampling.q_sample_reservoir_merged(spark, SF_SMALL).collect()
+    assert len(single) == sampling._RES_K
     assert [tuple(r) for r in single] == [tuple(r) for r in merged]
     # and the merge is genuinely a fold over non-trivial day splits
     days = (

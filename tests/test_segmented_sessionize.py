@@ -1,6 +1,7 @@
 """Segmented sessionization (r9 skewed gate): the per-(user, week-bucket)
 decomposition must be row-equal to the sequential single-window form —
 especially at bucket boundaries, where the carry replaces the local lag.
+On the real tables the sequential form is the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -10,31 +11,31 @@ import pytest
 from impala_base_to_cdw_sizing_spark.operators import segmented as S
 from impala_base_to_cdw_sizing_spark.operators.relational import (
     _GAP_NS,
-    q_sessionize,
+    SQL_SESSIONIZE,
     q_sessionize_segmented,
 )
 from impala_base_to_cdw_sizing_spark.operators.sequences import (
-    q_session_stats,
+    SQL_SESSION_STATS,
     q_session_stats_segmented,
 )
 from tests.conftest import SF_SMALL
+from tools.compare_oracle import compare_frames, duck_connection
 
 _WEEK = S._SESS_SPAN_NS
 
 
-def _rows(df):
-    pdf = df.toPandas()
-    pdf = pdf[sorted(pdf.columns)]
-    return sorted(map(tuple, pdf.itertuples(index=False, name=None)))
-
-
 def test_segmented_equals_sequential_on_testdata(spark):
-    assert _rows(q_sessionize_segmented(spark, SF_SMALL)) == _rows(
-        q_sessionize(spark, SF_SMALL)
-    )
-    assert _rows(q_session_stats_segmented(spark, SF_SMALL)) == _rows(
-        q_session_stats(spark, SF_SMALL)
-    )
+    con = duck_connection(SF_SMALL)
+    for seg, sequential_sql in [
+        (q_sessionize_segmented, SQL_SESSIONIZE),
+        (q_session_stats_segmented, SQL_SESSION_STATS),
+    ]:
+        issues = compare_frames(
+            seg.__name__,
+            seg(spark, SF_SMALL).toPandas(),
+            con.execute(sequential_sql).fetch_df(),
+        )
+        assert not issues, (seg.__name__, issues)
 
 
 @pytest.mark.parametrize("boundary_gap", [

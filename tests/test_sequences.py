@@ -155,7 +155,7 @@ def test_cumulative_distinct_replicates_and_monotone(spark):
 def test_session_stats_replicates_and_ties_to_sessionize(spark):
     from impala_base_to_cdw_sizing_spark.operators.relational import (
         _GAP_NS,
-        q_sessionize,
+        q_sessionize_segmented,
     )
 
     ev = load_events(spark, SF_SMALL).select(
@@ -182,7 +182,7 @@ def test_session_stats_replicates_and_ties_to_sessionize(spark):
         e[1] = dur if e[1] is None else min(e[1], dur)
         e[2] = dur if e[2] is None else max(e[2], dur)
         e[3] += dur
-    rows = SQ.q_session_stats(spark, SF_SMALL).collect()
+    rows = SQ.q_session_stats_segmented(spark, SF_SMALL).collect()
     assert len(rows) == len(expect)
     for r in rows:
         n, lo, hi, tot = expect[r.n_events]
@@ -193,7 +193,7 @@ def test_session_stats_replicates_and_ties_to_sessionize(spark):
     # ties out to the per-user sessionize counts exactly
     total_sessions = sum(r.n_sessions for r in rows)
     assert total_sessions == sum(
-        r.n_sessions for r in q_sessionize(spark, SF_SMALL).collect()
+        r.n_sessions for r in q_sessionize_segmented(spark, SF_SMALL).collect()
     )
     total_events = sum(r.n_events * r.n_sessions for r in rows)
     assert total_events == len(ev)

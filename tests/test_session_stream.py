@@ -15,7 +15,9 @@ from tests.conftest import SF_SMALL
 
 
 def test_session_stream_equals_batch(spark, tmp_path):
-    from impala_base_to_cdw_sizing_spark.operators.relational import q_sessionize
+    from impala_base_to_cdw_sizing_spark.operators.relational import (
+        q_sessionize_segmented,
+    )
     from impala_base_to_cdw_sizing_spark.sources.files import load_events
     from impala_base_to_cdw_sizing_spark.streaming.session_stream import (
         session_stream,
@@ -63,7 +65,7 @@ def test_session_stream_equals_batch(spark, tmp_path):
     got = {(r.user_id): (r.n_events, r.n_sessions) for r in snap.collect()}
     batch = {
         r.user_id: (r.n_events, r.n_sessions)
-        for r in q_sessionize(spark, SF_SMALL).collect()
+        for r in q_sessionize_segmented(spark, SF_SMALL).collect()
     }
     assert got == batch
     # sessions are a real cut, not one-per-event or one-per-user

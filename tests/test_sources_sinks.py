@@ -169,33 +169,6 @@ def test_ep1_api_mode_end_to_end(spark):
     assert values.concurrent["max_concurrent_queries"] >= 1
 
 
-def test_quote_nonnumeric_writer_byte_exact(spark, tmp_path: Path):
-    import csv as _csv
-    import io
-
-    from impala_base_to_cdw_sizing_spark.sinks.csv_sinks import (
-        write_csv_quote_nonnumeric,
-    )
-
-    rows = [("a|1", 1, 1.5), ("b", 2, 2.25)]
-    df = spark.createDataFrame(rows, "name string, k long, x double")
-    out = tmp_path / "golden"
-    write_csv_quote_nonnumeric(df, str(out))
-    got = "\n".join(
-        p.read_text().rstrip("\n")
-        for p in sorted(out.glob("part-*"))
-        if p.read_text().strip()
-    )
-    buf = io.StringIO()
-    # \n terminator: the engine's text sink dialect (quoting semantics are
-    # the fidelity target; the reference's \r\n is a py2-csv artifact)
-    w = _csv.writer(buf, quoting=_csv.QUOTE_NONNUMERIC, lineterminator="\n")
-    w.writerow(["name", "k", "x"])
-    for r in rows:
-        w.writerow(r)
-    assert got == buf.getvalue().rstrip("\n")
-
-
 def test_multimodal_decode_and_frames(spark):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(20)
     payloads = with_payload(docs)

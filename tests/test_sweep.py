@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.operators.sweep import (
+    _N_BUCKETS,
+    MEASURES,
     explode_events,
     running_sums,
     sweep_maxima,
@@ -63,16 +66,64 @@ def test_sweep_matches_brute_force(spark):
         assert maxima.max_concurrent_queries == brute_force_max_concurrency(rows)
 
 
+def _micro(x: float) -> int:
+    # the engine's quantization, same IEEE op sequence: floor(x*1e6 + 0.5)
+    return math.floor(x * 1_000_000.0 + 0.5)
+
+
+def python_running_sums(rows) -> list[tuple]:
+    """One global running sum over the (ts_ms, seq, sign DESC) order —
+    the single-window semantics of the DuckDB oracle, in plain Python."""
+    events = []
+    for seq, start, end, wait, nb, cache, mem, spill, cpu, rate, pods in rows:
+        micro = [
+            _micro(pods), _micro(cache / nb), _micro(mem / nb),
+            _micro(cpu), _micro(spill / nb), _micro(rate),
+        ]
+        events.append((start + wait, seq, 1, micro))
+        events.append((end, seq, -1, [-u for u in micro]))
+    events.sort(key=lambda e: (e[0], e[1], -e[2]))
+    out, n_queries, run = [], 0, [0] * len(MEASURES)
+    for pos, (ts, seq, sign, micro) in enumerate(events, start=1):
+        n_queries += sign
+        run = [r + u for r, u in zip(run, micro)]
+        out.append(
+            (seq, ts, sign, n_queries, *[r / 1_000_000.0 for r in run], pos)
+        )
+    return out
+
+
 def test_segmented_equals_global(spark):
-    rows = _random_kept(300, seed=99)
+    """The segmented sweep (per-bucket windows + carry-in) equals one
+    global running sum exactly, on input with many tied timestamps spread
+    over most of the buckets."""
+    rng = random.Random(99)
+    rows = []
+    for i in range(300):
+        # a 20 ms grid makes starts, ends and admission-shifted starts
+        # collide, so the (seq, sign) tie-breaks decide the order
+        start = rng.randrange(0, 100) * 20
+        rows.append(
+            (
+                i, start, start + rng.randrange(1, 50) * 20,
+                rng.randrange(0, 3) * 20, rng.randrange(1, 8),
+                round(rng.uniform(0, 100), 2), round(rng.uniform(0, 100), 2),
+                round(rng.uniform(0, 50), 2), round(rng.uniform(0, 16), 2),
+                round(rng.uniform(0, 10), 2), round(rng.uniform(0, 120), 2),
+            )
+        )
+    expect = python_running_sums(rows)
+    ts = [e[1] for e in expect]
+    assert len(set(ts)) < len(ts) // 4  # heavily tied
+    span = (max(ts) - min(ts)) // _N_BUCKETS + 1
+    assert len({(t - min(ts)) // span for t in ts}) > _N_BUCKETS // 2
+
     kept = spark.createDataFrame(rows, KEPT_SCHEMA)
-    ev = explode_events(kept)
-    glob = running_sums(ev, segmented=False).orderBy("event_pos").collect()
-    seg = running_sums(ev, segmented=True, n_buckets=8).orderBy("event_pos").collect()
-    assert len(glob) == len(seg) == 600
-    for g, s in zip(glob, seg):
+    got = running_sums(explode_events(kept)).orderBy("event_pos").collect()
+    assert len(got) == len(expect) == 600
+    for g, e in zip(got, expect):
         # integer micro-unit arithmetic → exact equality, no tolerance
-        assert g == s, f"divergence at event_pos={g.event_pos}: {g} vs {s}"
+        assert tuple(g) == e, f"divergence at event_pos={e[-1]}: {g} vs {e}"
 
 
 def test_end_events_cancel_to_zero(spark):

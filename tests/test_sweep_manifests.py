@@ -43,6 +43,10 @@ def _load(name: str) -> dict:
 def test_ansi_sweep_covers_registry():
     m = _load("ANSI_SWEEP.json")
     assert m["ansi"] is True
+    # a green claim names the commit it ran on and when
+    assert m.get("head_commit") and m.get("utc"), (
+        "ANSI_SWEEP.json lacks head_commit/utc — re-run the sweep"
+    )
     assert m["fail"] == 0, f"ANSI sweep recorded failures: {m['failed_names']}"
     missing = sorted(_registry_names() - set(m["checked"]))
     assert not missing, (

@@ -67,9 +67,9 @@ def main() -> int:
         (out_dir / f"{name}_{suffix}.txt").write_text(plan)
         print(f"OK {name} -> plans/{tag}/{name}_{suffix}.txt")
         spark.catalog.clearCache()
-        from impala_base_to_cdw_sizing_spark.sources.synthetic import _QH_MEMO
+        from impala_base_to_cdw_sizing_spark import memo
 
-        _QH_MEMO.clear()
+        memo.clear()
     return rc
 
 

@@ -18,7 +18,8 @@ seed alone, independent of registration order.
 ``--manifest`` writes a JSON record of exactly which names were checked
 (r9 verdict #2: ANSI_SWEEP.json at the repo root is the ANSI sweep's
 manifest; tests/test_sweep_manifests.py fails if any registered query
-is missing from it, so registry growth forces a sweep re-run).
+is missing from it, so registry growth forces a sweep re-run), stamped
+with the checked-out commit and the UTC start time of the run.
 ``--extra`` checks the pytest-verified extra tier (extra_queries()) instead
 of the declared contract; ``--all`` checks both tiers in one session.
 ``--ansi`` runs Spark with spark.sql.ansi.enabled=true (r8 verdict #3:
@@ -33,7 +34,9 @@ float-adjacent agg is order-independent).
 from __future__ import annotations
 
 import math
+import subprocess
 import sys
+from datetime import datetime, timezone
 from pathlib import Path
 
 import duckdb
@@ -45,6 +48,19 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def manifest_stamp() -> dict[str, str]:
+    """Where and when a sweep ran: the checked-out commit (``-dirty`` when
+    tracked files differ from it) and the UTC start time."""
+    commit = subprocess.run(
+        ["git", "describe", "--always", "--dirty", "--abbrev=40"],
+        capture_output=True, text=True, cwd=Path(__file__).resolve().parent.parent,
+    ).stdout.strip()
+    return {
+        "head_commit": commit or "unknown",
+        "utc": datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
+    }
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -133,12 +149,11 @@ def main() -> int:
             args.append(a)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    stamp = manifest_stamp()
 
     import __spark_entry__ as ent
+    from impala_base_to_cdw_sizing_spark import memo
     from impala_base_to_cdw_sizing_spark.session import build_spark
-    from impala_base_to_cdw_sizing_spark.sources.synthetic import (
-        _QH_MEMO as _qh_memo,
-    )
 
     extra_conf = {"spark.sql.ansi.enabled": "true"} if ansi else None
     spark = build_spark(
@@ -190,7 +205,7 @@ def main() -> int:
             # unpersist them before the caller's action; without this the
             # caches of a 100+-query session accumulate in storage memory
             spark.catalog.clearCache()
-            _qh_memo.clear()  # so the next sizing query re-derives AND re-caches
+            memo.clear()  # so the next sizing query re-derives AND re-caches
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows={len(spark_pdf)})")
             continue
@@ -214,6 +229,7 @@ def main() -> int:
         import json
 
         Path(manifest_path).write_text(json.dumps({
+            **stamp,
             "sf_dir": sf_dir,
             "ansi": ansi,
             "partitions": partitions,

@@ -3,11 +3,12 @@
 The 128 GiB sandbox never pressures memory, so the segmented sweep's
 spill story rested on AQE prose. This script makes it a measurement: a
 DEDICATED low-memory session (2 GiB driver in local mode = executors
-share it, memory.fraction squeezed to 0.15, local[4]) runs
-the segmented sweep AND the sequential twin over sf3 (~2.6 M kept
-intervals → 5.2 M ±events), asserts the two remain row-for-row equal
-under spill, and reports the actual spill volume from the status REST
-API. Exit 0 = bit-equality held under pressure; the JSON line carries
+share it, memory.fraction squeezed to 0.15, local[4]) runs the segmented
+sweep over sf3 (~2.6 M kept intervals → 5.2 M ±events), checks its
+digest against the same digest of the DuckDB oracle's single-window
+running sums (``sizing_sweep_running``), and reports the actual spill
+volume from the status REST API. Exit 0 = bit-equality held under
+pressure; the JSON line carries
 the evidence (memoryBytesSpilled / diskBytesSpilled > 0, else the run
 proves only headroom, not spill behavior — the test checks this).
 
@@ -49,31 +50,35 @@ def main() -> int:
     )
     import __spark_entry__ as ent
     from impala_base_to_cdw_sizing_spark.operators.sweep import (
+        MEASURES,
         explode_events,
         running_sums,
     )
-    from pyspark.sql import functions as F
+    from tools.compare_oracle import duck_connection
 
-    events = explode_events(ent._kept(spark, sf_dir))
+    # Row digest computed inside each engine — collecting 10.5M rows into
+    # a squeezed driver would thrash the driver heap and measure the
+    # wrong thing. Every column enters as an exact DECIMAL(38,0) weighted
+    # by event_pos, so a changed value or a permuted row changes it;
+    # the same SQL text runs in Spark and DuckDB.
+    terms = ["seq", "ts_ms", "sign", "run_queries"] + [
+        f"floor(run_{m} * 1000000.0 + 0.5)" for m in MEASURES
+    ]
+    digest_sql = "SELECT COUNT(*) AS n, " + ", ".join(
+        f"SUM(CAST({t} AS DECIMAL(38,0)) * event_pos) AS h{i}"
+        for i, t in enumerate(terms)
+    ) + " FROM running"
 
-    def digest(df):
-        # order-independent row digest computed IN Spark — collecting
-        # 10.5M rows into a squeezed driver would thrash the driver
-        # heap and measure the wrong thing. sum of per-row xxhash64
-        # over every column (cast to string) detects any value change;
-        # count pins cardinality.
-        cols = [F.col(c).cast("string") for c in df.columns]
-        return df.agg(
-            F.count("*").alias("n"),
-            # DECIMAL(38,0) sum: exact and overflow-free for 10M 64-bit
-            # terms (ANSI mode makes a BIGINT sum of hashes throw)
-            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
-        ).first()
-
-    dg_seg = digest(running_sums(events, segmented=True))
-    dg_seq = digest(running_sums(events, segmented=False))
-    equal = tuple(dg_seg) == tuple(dg_seq)
-    n_rows = dg_seg["n"]
+    running_sums(explode_events(ent._kept(spark, sf_dir))).createOrReplaceTempView(
+        "running"
+    )
+    dg_spark = tuple(spark.sql(digest_sql).first())
+    oracle = ent.oracle_sql()["sizing_sweep_running"]
+    dg_duck = duck_connection(sf_dir).execute(
+        f"WITH running AS ({oracle}) {digest_sql}"
+    ).fetchone()
+    equal = dg_spark == tuple(dg_duck)
+    n_rows = dg_spark[0]
 
     # spill evidence from the status REST API (UI enabled above)
     ui = spark.sparkContext.uiWebUrl
@@ -90,7 +95,7 @@ def main() -> int:
                 "metric": "sweep_under_pressure",
                 "sf_dir": sf_dir,
                 "rows": int(n_rows),
-                "segmented_equals_sequential": equal,
+                "matches_oracle": equal,
                 "memoryBytesSpilled": mem_spill,
                 "diskBytesSpilled": disk_spill,
                 "driver_memory": "2g",

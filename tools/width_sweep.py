@@ -28,7 +28,11 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.compare_oracle import compare_frames, duck_connection  # noqa: E402
+from tools.compare_oracle import (  # noqa: E402
+    compare_frames,
+    duck_connection,
+    manifest_stamp,
+)
 
 CONFIGS: dict[str, dict] = {
     "p1": {"shuffle_partitions": 1},
@@ -43,7 +47,7 @@ def run_config(
 ) -> dict:
     import __spark_entry__ as ent
     from impala_base_to_cdw_sizing_spark.session import build_spark
-    from impala_base_to_cdw_sizing_spark.sources.synthetic import _QH_MEMO
+    from impala_base_to_cdw_sizing_spark import memo
 
     spark = build_spark(f"width-sweep-{label}", **opts)
     con = duck_connection(sf_dir)
@@ -63,7 +67,7 @@ def run_config(
             issues = [f"error: {str(e)[:200]}"]
         finally:
             spark.catalog.clearCache()
-            _QH_MEMO.clear()
+            memo.clear()
         if issues:
             failed.append(name)
             print(f"FAIL [{label}] {name}: {issues[0]}", file=sys.stderr)
@@ -87,6 +91,7 @@ def main() -> int:
             args.remove(a)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     labels = args[1:] or list(CONFIGS)
+    stamp = manifest_stamp()
     summary = {}
     for label in labels:
         summary[label] = run_config(label, CONFIGS[label], sf_dir, only=only)
@@ -102,7 +107,7 @@ def main() -> int:
             set().union(*(c["checked"] for c in summary.values()))
         )
         Path(manifest_path).write_text(
-            json.dumps({**out, "checked": checked}, indent=1) + "\n"
+            json.dumps({**stamp, **out, "checked": checked}, indent=1) + "\n"
         )
     print(json.dumps(out))
     return 1 if any(c["fail"] for c in summary.values()) else 0
