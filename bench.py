@@ -89,8 +89,6 @@ def _run_ep2(spark, sf_dir: str) -> float:
     if res.routed.derived is not None:
         res.routed.derived.unpersist()
     res.summary.unpersist()
-    if res.sweep_events is not None:
-        res.sweep_events.unpersist()
     return round(time.perf_counter() - t0, 3)
 
 

@@ -10,9 +10,12 @@ HALF_UP via BigDecimal while DuckDB rounds via C semantics, and the two can
 disagree on binary-exact halves (e.g. 0.125). ``floor(x*100 + 0.5)/100``
 is the same IEEE op sequence in both engines, so oracle hashes match.
 All reference values are non-negative, where this equals HALF_UP.
+``round2_py`` is the same op sequence in Python, for printed reports.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -31,6 +34,13 @@ ROUND2_SQL = "(floor(({x}) * 100.0 + 0.5) / 100.0)"
 def round2_sql(x: str) -> str:
     """DuckDB-side twin of :func:`round2`."""
     return ROUND2_SQL.format(x=x)
+
+
+def round2_py(x: float) -> float:
+    """Python twin of :func:`round2`. The built-in ``round(x, 2)``
+    rounds binary-exact halves to even (0.125 -> 0.12); this gives
+    0.13, as the Spark and DuckDB forms do."""
+    return math.floor(x * 100.0 + 0.5) / 100.0
 
 
 def ceil_long(c: Column) -> Column:

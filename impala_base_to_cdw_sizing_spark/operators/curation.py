@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from .kmeans import _assign, _cte_chain, _emb_norm, trained_centroids
 from .queries_ext import register_extra
-from .segmented import ntile_expr, segmented_row_number
+from .segmented import ntile_expr, segmented_cumsum, segmented_row_number
 from .similarity import DUCK_DOT, SPARK_DOT
 from .text import DUCK_TOKENS, SPARK_TOKENS, duck_charfold, spark_charfold
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
@@ -362,13 +362,11 @@ def q_sample_importance_segmented(spark: SparkSession, sf_dir: str) -> DataFrame
     engines.
 
     Segmented (r7 verdict #1): the fraction-of-population cut is a rank
-    threshold, and the exact global rank decomposes into per-bucket
-    local ranks + a broadcast carry-in
-    (``segmented.segmented_row_number``), the same two-phase shape as
-    budget selection. Coarse buckets are uniform slices of the integer
-    micro-unit score, DESC-oriented (bucket 0 = best) so bucket order
-    matches rank order; equal scores always share a bucket, so the
-    bucketing is ordering-consistent for the
+    threshold, and the exact global rank is
+    :func:`segmented.segmented_row_number`. Coarse buckets are uniform
+    slices of the integer micro-unit score, DESC-oriented (bucket 0 =
+    best) so bucket order matches rank order; equal scores always share
+    a bucket, so the bucketing is ordering-consistent for the
     ``(score_micro DESC, doc_id ASC)`` total order. The bounds lookup is
     a 2-value action on the cached scored frame (n_docs rows — already
     reduced from the token explosion); ranks are integers, so the
@@ -522,53 +520,34 @@ def _quality_bucket(n_buckets: int):
     ).cast("int")
 
 
+def _quality_order() -> list:
+    """The ``(quality_score DESC, doc_id ASC)`` total order."""
+    return [F.col("quality_score").desc(), F.col("doc_id").asc()]
+
+
 def q_select_budget_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy quality-ranked selection under a token budget (half the
     corpus's tokens): every doc with its running token total and whether
     it made the cut. Integer cumulative sums — exact.
 
-    The global ordered cumulative sum decomposes into parallel
-    per-bucket windows plus a carry-in — the same two-phase exact
-    decomposition as the segmented sweep (SCALE.md F2-F3), applied to
-    the curation surface. Buckets come from quantizing quality_score to
-    integer micro-units and width-partitioning — O(1) per row, no
-    sampling pass, and ties can never straddle buckets (equal quality ⇒
-    equal bucket). Token counts are integers, so ``local cumsum +
-    carry`` is bit-equal to the single-window plan; the DuckDB oracle
-    runs the single-window form, making the equivalence oracle-gated,
-    not just property-tested."""
-    n_buckets = 16
+    The global ordered cumulative sum is
+    :func:`segmented.segmented_cumsum` over :func:`_quality_bucket`'s
+    coarse quality bands. Token counts are integers, so it is bit-equal
+    to the single-window form the DuckDB oracle runs."""
     scored = _spark_quality_frame(spark, sf_dir).withColumn(
-        "bucket", _quality_bucket(n_buckets)
-    )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("quality_score").desc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = scored.withColumn("local_cum", F.sum("n_tokens").over(w_local))
-    # carry-in for bucket b = Σ token mass of buckets < b. The frame is
-    # tiny (n_buckets rows) but a partition-less Window here would still
-    # be the one plan shape the registry-wide audit forbids — a
-    # triangular self-join computes the same prefix sums with no window
-    # at all (the sweep's precedent, sweep.py:190; ≤ n_buckets² pairs).
-    btok = local.groupBy("bucket").agg(F.sum("n_tokens").alias("bucket_tokens"))
-    t, p = btok.alias("t"), btok.alias("p")
-    totals = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("p.bucket_tokens"), F.lit(0)).alias("carry"))
+        "bucket", _quality_bucket(16)
     )
     budget = scored.agg(
         F.floor(F.sum("n_tokens") * _BUDGET_FRAC).cast("long").alias("budget")
     )
     return (
-        local.join(F.broadcast(totals), "bucket")
+        segmented_cumsum(
+            scored, "bucket", _quality_order(), {"cum_tokens": F.col("n_tokens")}
+        )
         .crossJoin(F.broadcast(budget))
         .selectExpr(
-            "doc_id", "n_tokens", "quality_score",
-            "CAST(local_cum + carry AS BIGINT) AS cum_tokens",
-            "local_cum + carry <= budget AS selected",
+            "doc_id", "n_tokens", "quality_score", "cum_tokens",
+            "cum_tokens <= budget AS selected",
         )
     )
 
@@ -581,11 +560,10 @@ def q_select_budget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-weight). A text duplicated 7× costs its cluster one document's
     tokens in total, so near-duplicate floods cannot eat the budget —
     "pay for unique information, not bytes". Costs are exact BIGINT
-    micro-token units; the cumulative selection is the same segmented
-    two-phase decomposition as ``q_select_budget_segmented`` (coarse
-    quality buckets + parallel local cumsums + triangular-join carry),
-    so the plan has zero partition-less windows and the DuckDB oracle's
-    sequential window gates the decomposition."""
+    micro-token units; the cumulative selection is
+    :func:`segmented.segmented_cumsum` over the same quality buckets as
+    ``q_select_budget_segmented``, gated by the DuckDB oracle's
+    sequential window."""
     from .text import q_dedup_soft
 
     weights = q_dedup_soft(spark, sf_dir).select("doc_id", "weight_micro")
@@ -597,29 +575,18 @@ def q_select_budget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cost_micro", (F.col("n_tokens") * F.col("weight_micro")).cast("long")
         )
     )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("quality_score").desc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = scored.withColumn("local_cum", F.sum("cost_micro").over(w_local))
-    bcost = local.groupBy("bucket").agg(F.sum("cost_micro").alias("bucket_cost"))
-    t, p = bcost.alias("t"), bcost.alias("p")
-    totals = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("p.bucket_cost"), F.lit(0)).alias("carry"))
-    )
     budget = scored.agg(
         F.floor(F.sum("cost_micro") * _BUDGET_FRAC).cast("long").alias("budget")
     )
     return (
-        local.join(F.broadcast(totals), "bucket")
+        segmented_cumsum(
+            scored, "bucket", _quality_order(),
+            {"cum_cost_micro": F.col("cost_micro")},
+        )
         .crossJoin(F.broadcast(budget))
         .selectExpr(
             "doc_id", "n_tokens", "weight_micro", "quality_score",
-            "CAST(local_cum + carry AS BIGINT) AS cum_cost_micro",
-            "local_cum + carry <= budget AS selected",
+            "cum_cost_micro", "cum_cost_micro <= budget AS selected",
         )
     )
 
@@ -670,9 +637,7 @@ def q_quality_strata_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _spark_quality_frame(spark, sf_dir).withColumn(
         "bucket", _quality_bucket(16)
     )
-    ranked = segmented_row_number(
-        scored, [F.col("quality_score").desc(), F.col("doc_id").asc()]
-    )
+    ranked = segmented_row_number(scored, _quality_order())
     n_docs = scored.agg(F.count("*").cast("long").alias("n_docs"))
     return (
         ranked.crossJoin(F.broadcast(n_docs))

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from .aggregates import dsum, dsum_sql
 from .queries_ext import register, register_extra
+from .segmented import ntile_expr, segmented_cumsum, segmented_row_number
 from ..sources.files import ROWS_PER_TASK_COLLAPSING, read_input
 
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -1537,30 +1538,22 @@ def pareto_classes(rev: "DataFrame") -> "DataFrame":
     rev = rev.withColumn(
         "bucket", F.expr(f"-(rev DIV {_ABC_BUCKET_CENTS})").cast("long")
     )
-    w_local = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("rev").desc(), F.col("o_custkey").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = rev.withColumn("run", F.sum("rev").over(w_local))
-    totals = rev.groupBy("bucket").agg(F.sum("rev").alias("b_rev"))
-    t, p = totals.alias("t"), totals.alias("p")
-    carry = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("p.b_rev"), F.lit(0)).cast("long").alias("carry"))
-    )
     grand = rev.agg(F.sum("rev").cast("long").alias("total"))
     return (
-        local.join(F.broadcast(carry), "bucket")
+        segmented_cumsum(
+            rev,
+            "bucket",
+            [F.col("rev").desc(), F.col("o_custkey").asc()],
+            {"cum": F.col("rev")},
+        )
         .crossJoin(F.broadcast(grand))
         .selectExpr(
             "o_custkey",
             "rev",
-            "carry + run AS cum",
+            "cum",
             "total",
-            "CASE WHEN (carry + run) * 100 <= total * 80 THEN 'A'"
-            " WHEN (carry + run) * 100 <= total * 95 THEN 'B'"
+            "CASE WHEN cum * 100 <= total * 80 THEN 'A'"
+            " WHEN cum * 100 <= total * 95 THEN 'B'"
             " ELSE 'C' END AS abc_class",
         )
     )
@@ -1604,8 +1597,6 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     10⁷-scale rank and 10¹⁰-scale cents never overflows and the sum
     stays order-independent exact. The only doubles are the two final
     display divisions."""
-    from .segmented import segmented_row_number
-
     rev = (
         # r15: collapsing consumer — the per-customer partial agg folds
         # 10x before the first exchange, so the scan is read unfanned
@@ -1672,8 +1663,6 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank, O(1) per row, no window at all; the cumulative share is a
     10-row triangular carry. Everything is BIGINT cents until the two
     display divisions."""
-    from .segmented import ntile_expr, segmented_row_number
-
     rev = (
         # r15: collapsing consumer — the per-customer partial agg folds
         # 10x before the first exchange, so the scan is read unfanned

@@ -15,10 +15,10 @@ dedup/curation:
   per class, no quadratic matching), exactly reproducible via integer
   window sums.
 
-Scale: both are a single shuffle on the class key. A skewed class (one
-language dominating a 100 TB corpus) would salt the partition key and
-re-offset pack ids by salt bucket — same carry-in trick as the segmented
-sweep (SCALE.md).
+Scale: stratified sampling is a single shuffle on the class key. The
+registered packing salts each language into hash-range buckets and runs
+the running sum as :func:`segmented.segmented_cumsum`, so one language
+dominating a 100 TB corpus does not funnel through one partition.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .queries_ext import register, register_extra
+from .segmented import segmented_cumsum
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import read_input
 
@@ -115,47 +116,20 @@ def q_pack_sequences(
     """Greedy token-budget packing, **salted** (the registered 100 TB
     path, bit-equal to the unsalted oracle): each language's
     pseudo-random order is range-segmented into ``_PACK_SALTS`` salt
-    buckets on the uniform shuffle_key, running token sums are computed
-    per (lang, salt bucket) in parallel, and a tiny per-language
-    triangular self-join supplies each bucket's carry-in offset — the
-    same two-phase trick as the segmented concurrency sweep. A skewed
-    class now spreads over ``_PACK_SALTS`` window partitions instead of
-    funneling through one."""
+    buckets on the uniform shuffle_key, and the running token sums are
+    :func:`segmented.segmented_cumsum` keyed by language. A skewed class
+    spreads over ``_PACK_SALTS`` window partitions instead of funneling
+    through one."""
     order = [F.col("shuffle_key").asc(), F.col("doc_id").asc()]
     docs = _docs_with_pack_keys(spark, sf_dir).withColumn(
         "salt", (F.col("shuffle_key") / _SALT_WIDTH).cast("int")
     )
-    w = (
-        Window.partitionBy("lang", "salt")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = docs.withColumn("loc_cum", F.sum("n_tokens").over(w))
-    totals = docs.groupBy("lang", "salt").agg(
-        F.sum("n_tokens").alias("tot_tokens")
-    )
-    t, p = totals.alias("t"), totals.alias("p")
-    carry = (
-        t.join(
-            F.broadcast(p),
-            (F.col("p.lang") == F.col("t.lang"))
-            & (F.col("p.salt") < F.col("t.salt")),
-            "left",
-        )
-        .groupBy(F.col("t.lang").alias("lang"), F.col("t.salt").alias("salt"))
-        .agg(F.coalesce(F.sum("p.tot_tokens"), F.lit(0)).alias("carry_tokens"))
-    )
-    return (
-        local.join(F.broadcast(carry), ["lang", "salt"])
-        .selectExpr(
-            "doc_id", "lang", "n_tokens",
-            "loc_cum + carry_tokens AS cum_tokens",
-        )
-        .selectExpr(
-            "doc_id", "lang", "n_tokens", "cum_tokens",
-            f"CAST(floor((cum_tokens - n_tokens) / {budget}) AS BIGINT)"
-            " AS pack_id",
-        )
+    return segmented_cumsum(
+        docs, "salt", order, {"cum_tokens": F.col("n_tokens")}, keys=["lang"]
+    ).selectExpr(
+        "doc_id", "lang", "n_tokens", "cum_tokens",
+        f"CAST(floor((cum_tokens - n_tokens) / {budget}) AS BIGINT)"
+        " AS pack_id",
     )
 
 

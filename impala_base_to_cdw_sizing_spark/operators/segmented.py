@@ -1,31 +1,109 @@
-"""Segmented exact global ranking — the scale-safe replacement for the
-one remaining single-partition plan shape (``row_number()``/``NTILE()``
-over an unpartitioned window).
+"""Segmented prefix sums — the engine's one fallback for a global
+ordered window, which Spark would otherwise plan on a single partition
+(``Window.orderBy`` with no ``partitionBy``).
 
-A global ordered rank decomposes exactly into (1) a local rank inside a
-coarse *ordering-consistent* bucket plus (2) a broadcast carry-in of the
-row counts of all earlier buckets — the same two-phase decomposition the
-segmented sweep uses for running sums (``sweep.running_sums``) and budget
-selection uses for cumulative token mass
-(``curation.q_select_budget_segmented``), applied
-to pure ranks. "Ordering-consistent" means every row of bucket *b* sorts
-before every row of bucket *b+1* and rows that compare equal on the
-leading order column share a bucket; both hold whenever the bucket is a
-monotone quantization of that leading column, which is how all callers
-here construct it.
+A running sum over a global order decomposes exactly into three steps:
 
-At 100 TB the per-bucket windows run in parallel across executors (AQE
-re-splits an oversized bucket), the counts frame is ``n_buckets`` rows,
-and the carry is computed by a triangular self-join so even that tiny
-frame never touches a partition-less window (the sweep's precedent —
-Spark logs a single-partition warning on every unpartitioned window, and
-the plan shape is the thing being audited).
+1. a running window inside each coarse *ordering-consistent* bucket,
+   run in parallel across executors (AQE re-splits an oversized bucket);
+2. an exclusive prefix of the per-bucket totals — each bucket's
+   *carry-in* — computed by a triangular self-join of the tiny totals
+   frame (:func:`bucket_carry`);
+3. a broadcast join of that carry-in back onto the rows
+   (:func:`segmented_cumsum`).
+
+"Ordering-consistent" means every row of bucket *b* sorts before every
+row of bucket *b+1* and rows that compare equal on the leading order
+column share a bucket; both hold whenever the bucket is a monotone
+quantization of that leading column, which is how every caller
+constructs it. Bucket ids only have to be ordered: they may be
+negative (a descending order negates its quantization) and may have
+gaps. With optional ``keys`` every step runs per key, which turns a
+``PARTITION BY keys`` window into the same shape.
+
+Summed values are integers or decimals, so ``local + carry`` is exact
+and equals the single-window result bit for bit; each caller's DuckDB
+oracle runs the single-window form. A rank is a running count
+(:func:`segmented_row_number`), and a caller that only needs to locate
+a target row (the two-pass medians) uses the carry alone.
+
+The totals frame holds one row per bucket (per key), so the triangular
+join is at most buckets² pairs. A partition-less window over it would
+be just as cheap, but Spark logs a single-partition warning on every
+such window and the registry-wide plan audit forbids the shape.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping, Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def bucket_carry(
+    totals: DataFrame,
+    bucket: str,
+    sums: Sequence[str],
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Each bucket's exclusive prefix of the per-bucket totals.
+
+    ``totals`` has one row per ``(*keys, bucket)``. Returns its rows with
+    one column ``carry_<s>`` per name ``s`` in ``sums``: the sum of ``s``
+    over the rows with the same ``keys`` and a smaller ``bucket``, 0 for
+    the first bucket of each key."""
+    part = [*keys, bucket]
+    t, p = totals.alias("t"), totals.alias("p")
+    cond = F.col(f"p.{bucket}") < F.col(f"t.{bucket}")
+    for k in keys:
+        cond = cond & (F.col(f"p.{k}") == F.col(f"t.{k}"))
+    return (
+        t.join(F.broadcast(p), cond, "left")
+        .groupBy(*[F.col(f"t.{c}").alias(c) for c in part])
+        .agg(
+            # each group holds one t row, so max just passes its totals
+            # through; unlike grouping by them, it lets a caller that
+            # drops them prune the t side to a keys-only aggregate
+            *[F.max(f"t.{c}").alias(c) for c in totals.columns if c not in part],
+            *[
+                F.coalesce(F.sum(f"p.{s}"), F.lit(0)).alias(f"carry_{s}")
+                for s in sums
+            ],
+        )
+    )
+
+
+def segmented_cumsum(
+    df: DataFrame,
+    bucket: str,
+    order: Sequence[Column],
+    sums: Mapping[str, Column],
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Add inclusive running sums over ``order`` (per ``keys``), computed
+    without a global sort.
+
+    ``df[bucket]`` must be ordering-consistent for ``order`` (see module
+    docstring). ``sums`` maps each output column to the per-row value it
+    accumulates; an existing column of that name is replaced. Column
+    names starting ``_loc_`` or ``carry_`` are used internally."""
+    part = [*keys, bucket]
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = df.withColumns({f"_loc_{n}": F.sum(v).over(w) for n, v in sums.items()})
+    totals = df.groupBy(*part).agg(*[F.sum(v).alias(n) for n, v in sums.items()])
+    carry = bucket_carry(totals, bucket, list(sums), keys).select(
+        *part, *[f"carry_{n}" for n in sums]
+    )
+    return (
+        local.join(F.broadcast(carry), part)
+        .withColumns({n: F.col(f"_loc_{n}") + F.col(f"carry_{n}") for n in sums})
+        .drop(*[f"_loc_{n}" for n in sums], *[f"carry_{n}" for n in sums])
+    )
 
 
 def segmented_row_number(
@@ -35,28 +113,8 @@ def segmented_row_number(
     out: str = "grank",
 ) -> DataFrame:
     """Add ``out`` = the exact 1-based global ``row_number()`` over
-    ``order_cols``, computed without a global sort.
-
-    ``df[bucket]`` must be an ordering-consistent coarse partitioner for
-    ``order_cols`` (see module docstring). Ranks are integers, so
-    ``local rank + carry-in`` is bit-equal to the single-window plan —
-    pinned by every caller's one-window DuckDB oracle, and by
-    ``tests/test_segmented_rank.py``.
-    """
-    w_local = Window.partitionBy(bucket).orderBy(*order_cols)
-    local = df.withColumn("_lrk", F.row_number().over(w_local))
-    counts = df.groupBy(bucket).agg(F.count("*").alias("_bn"))
-    t, p = counts.alias("t"), counts.alias("p")
-    carry = (
-        t.join(F.broadcast(p), F.col(f"p.{bucket}") < F.col(f"t.{bucket}"), "left")
-        .groupBy(F.col(f"t.{bucket}").alias(bucket))
-        .agg(F.coalesce(F.sum("p._bn"), F.lit(0)).cast("long").alias("_carry"))
-    )
-    return (
-        local.join(F.broadcast(carry), bucket)
-        .withColumn(out, (F.col("_carry") + F.col("_lrk")).cast("long"))
-        .drop("_lrk", "_carry")
-    )
+    ``order_cols``: a running count by :func:`segmented_cumsum`."""
+    return segmented_cumsum(df, bucket, order_cols, {out: F.lit(1)})
 
 
 # calendar-week segments: WindowExec pays a per-group setup cost, so the

@@ -16,9 +16,8 @@ by bucketing, two passes, bounded memory:
 
 No node ever holds more than one bucket's values; the bucket frame is
 value-range-bounded (hundreds of rows), never data-bounded. The
-cumulative count uses the same broadcast triangular join as
-:func:`segmented.segmented_row_number` — no partition-less window
-anywhere in the plan.
+cumulative count below each bucket is :func:`segmented.bucket_carry` —
+no partition-less window anywhere in the plan.
 
 Exactness: values are exact integer cents (DECIMAL(12,2) · 100); the
 two middle order statistics are BIGINTs, and the single final division
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .queries_ext import register_extra
+from .segmented import bucket_carry
 from ..sources.files import read_input
 
 # $1000-wide buckets over l_extendedprice (~900..105k): ~110 buckets at
@@ -55,16 +55,11 @@ def q_median_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
         "explode(array_distinct(array((n + 1) DIV 2, (n + 2) DIV 2))) AS k",
     )
     bcounts = c.groupBy("bucket").agg(F.count("*").cast("long").alias("bn"))
-    t, p = bcounts.alias("t"), bcounts.alias("p")
-    cum = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"), F.col("t.bn").alias("bn"))
-        .agg(F.coalesce(F.sum("p.bn"), F.lit(0)).cast("long").alias("cum_below"))
-    )
+    cum = bucket_carry(bcounts, "bucket", ["bn"])
     targets = (
         ks.crossJoin(F.broadcast(cum))
-        .filter("cum_below < k AND k <= cum_below + bn")
-        .selectExpr("n", "k", "bucket", "k - cum_below AS offset")
+        .filter("carry_bn < k AND k <= carry_bn + bn")
+        .selectExpr("n", "k", "bucket", "k - carry_bn AS offset")
     )
     w = Window.partitionBy("bucket", "k").orderBy("cents")
     picked = (
@@ -142,17 +137,12 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w_total", "(w_total + 1) DIV 2 AS threshold"
     )
     bweights = c.groupBy("bucket").agg(F.sum("w").cast("long").alias("bw"))
-    t, p = bweights.alias("t"), bweights.alias("p")
-    cum = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"), F.col("t.bw").alias("bw"))
-        .agg(F.coalesce(F.sum("p.bw"), F.lit(0)).cast("long").alias("cum_below"))
-    )
+    cum = bucket_carry(bweights, "bucket", ["bw"])
     target = (
         cum.crossJoin(F.broadcast(tot))
-        .filter("cum_below < threshold AND threshold <= cum_below + bw")
+        .filter("carry_bw < threshold AND threshold <= carry_bw + bw")
         .selectExpr("bucket", "w_total", "threshold",
-                    "threshold - cum_below AS offset")
+                    "threshold - carry_bw AS offset")
     )
     w_run = (
         Window.partitionBy("bucket")
@@ -227,25 +217,11 @@ def q_group_median_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcounts = c.groupBy("grp", "bucket").agg(
         F.count("*").cast("long").alias("bn")
     )
-    t, p = bcounts.alias("t"), bcounts.alias("p")
-    cum = (
-        t.join(
-            F.broadcast(p),
-            (F.col("p.grp") == F.col("t.grp"))
-            & (F.col("p.bucket") < F.col("t.bucket")),
-            "left",
-        )
-        .groupBy(
-            F.col("t.grp").alias("grp"),
-            F.col("t.bucket").alias("bucket"),
-            F.col("t.bn").alias("bn"),
-        )
-        .agg(F.coalesce(F.sum("p.bn"), F.lit(0)).cast("long").alias("cum_below"))
-    )
+    cum = bucket_carry(bcounts, "bucket", ["bn"], keys=["grp"])
     targets = (
         ks.join(F.broadcast(cum), "grp")
-        .filter("cum_below < k AND k <= cum_below + bn")
-        .selectExpr("grp", "n", "k", "bucket", "k - cum_below AS offset")
+        .filter("carry_bn < k AND k <= carry_bn + bn")
+        .selectExpr("grp", "n", "k", "bucket", "k - carry_bn AS offset")
     )
     w = Window.partitionBy("grp", "bucket", "k").orderBy("cents")
     picked = (

@@ -23,11 +23,9 @@ sequence everywhere; running sums are exact integer/decimal arithmetic;
 one final division emits doubles. End events negate the quantized start
 value, so a query's events cancel to exactly zero.
 
-Scale: ``Window.orderBy`` without partitions collapses to ONE partition,
-a hazard at 100 TB, so :func:`running_sums` never plans one. Events are
-range-bucketed by timestamp, per-bucket prefix sums run in parallel, and
-a tiny per-bucket-totals prefix (``_N_BUCKETS`` rows, broadcast back)
-provides the carry-in (SURVEY §4.3.2). Integer arithmetic is
+Scale: :func:`running_sums` never plans a partition-less window. Events
+are range-bucketed by timestamp and summed by
+:func:`segmented.segmented_cumsum`; integer arithmetic is
 order-independent, so the result equals the single-window running sum
 of the DuckDB oracle (``RUNNING_SUMS_SQL``) exactly.
 
@@ -46,8 +44,10 @@ sorts on exact epoch-millis with a deterministic tie-break (SURVEY §7.0).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .segmented import segmented_cumsum
 
 MEASURES = ["pods", "cache", "mem", "cpu", "spill", "data_rate"]
 _SCALE = 1_000_000.0
@@ -122,7 +122,8 @@ sweep_events AS (
 
 def running_sums(events: DataFrame) -> DataFrame:
     """F2+F3: exact global running sums over the (ts_ms, seq, sign DESC)
-    total order, as parallel per-bucket windows + a broadcast carry-in."""
+    total order, by :func:`segmented.segmented_cumsum` over time-range
+    buckets."""
     order = [F.col("ts_ms").asc(), F.col("seq").asc(), F.col("sign").desc()]
 
     # The min/max agg is an eager action: without the cache it executes
@@ -146,62 +147,23 @@ def running_sums(events: DataFrame) -> DataFrame:
         "bucket", F.expr(f"CAST((ts_ms - {lo}) DIV {span} AS INT)")
     )
 
-    wb = (
-        Window.partitionBy("bucket")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = ev.withColumns(
+    running = segmented_cumsum(
+        ev,
+        "bucket",
+        order,
         {
-            **{f"loc_{m}": F.sum(F.col(f"{m}_u").cast(DEC0)).over(wb) for m in MEASURES},
-            "loc_queries": F.sum(F.col("sign").cast("long")).over(wb),
-            "loc_pos": F.row_number().over(
-                Window.partitionBy("bucket").orderBy(*order)
-            ),
-        }
+            **{m: F.col(f"{m}_u").cast(DEC0) for m in MEASURES},
+            "queries": F.col("sign").cast("long"),
+            "pos": F.lit(1),
+        },
     )
-
-    totals = ev.groupBy("bucket").agg(
-        *[F.sum(F.col(f"{m}_u").cast(DEC0)).alias(f"tot_{m}") for m in MEASURES],
-        F.sum(F.col("sign").cast("long")).alias("tot_queries"),
-        F.count("*").alias("tot_rows"),
-    )
-    # carry-in for bucket b = Σ totals of buckets < b. The frame is tiny
-    # (_N_BUCKETS rows) but a partition-less Window here would still log
-    # Spark's single-partition warning on every run — a triangular
-    # left self-join aggregate computes the same prefix sums with no
-    # window at all (≤ _N_BUCKETS² = 4096 pairs).
-    t, p = totals.alias("t"), totals.alias("p")
-    carry = (
-        t.join(F.broadcast(p), F.col("p.bucket") < F.col("t.bucket"), "left")
-        .groupBy(F.col("t.bucket").alias("bucket"))
-        .agg(
-            *[
-                F.coalesce(F.sum(F.col(f"p.tot_{m}")), F.lit(0).cast(DEC0)).alias(
-                    f"carry_{m}"
-                )
-                for m in MEASURES
-            ],
-            F.coalesce(F.sum(F.col("p.tot_queries")), F.lit(0)).alias(
-                "carry_queries"
-            ),
-            F.coalesce(F.sum(F.col("p.tot_rows")), F.lit(0)).alias("carry_rows"),
-        )
-    )
-
-    return local.join(F.broadcast(carry), "bucket").select(
+    return running.select(
         "seq",
         "ts_ms",
         "sign",
-        (F.col("loc_queries") + F.col("carry_queries"))
-        .cast("long")
-        .alias("run_queries"),
-        *[
-            ((F.col(f"loc_{m}") + F.col(f"carry_{m}")).cast("double") / _SCALE)
-            .alias(f"run_{m}")
-            for m in MEASURES
-        ],
-        (F.col("loc_pos") + F.col("carry_rows")).cast("int").alias("event_pos"),
+        F.col("queries").alias("run_queries"),
+        *[(F.col(m).cast("double") / _SCALE).alias(f"run_{m}") for m in MEASURES],
+        F.col("pos").cast("int").alias("event_pos"),
     )
 
 

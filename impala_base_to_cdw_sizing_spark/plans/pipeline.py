@@ -31,7 +31,6 @@ class SizingResult:
     utilization: DataFrame      # single row: G7
     sweep_running: DataFrame    # per-event running sums (F1-F3)
     sweep_maxima: DataFrame     # single row (F4)
-    sweep_events: DataFrame | None = None  # cached explode; unpersist when done
 
 
 def prepare_query_history(flat: DataFrame) -> DataFrame:
@@ -98,10 +97,9 @@ def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
     # cached because three consumers read it (reports, utilization,
     # workload-size lookup)
     summary = summarize(routed.kept, routed.derived).cache()
-    # events feed both the running-sums output and the maxima (and the
-    # sweep's bucket-bounds pass) — cache so the explode runs once
-    events = explode_events(routed.kept).cache()
-    running = running_sums(events)
+    # running_sums caches the exploded events itself: its eager
+    # bucket-bounds pass and both sweep branches read them
+    running = running_sums(explode_events(routed.kept))
     return SizingResult(
         routed=routed,
         classified_kept=classified_kept,
@@ -111,5 +109,4 @@ def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
         utilization=utilization(summary, params),
         sweep_running=running,
         sweep_maxima=sweep_maxima(running),
-        sweep_events=events,
     )

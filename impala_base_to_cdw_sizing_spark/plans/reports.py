@@ -13,6 +13,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from ..config import SizingParams
+from ..functions import round2_py
 from ..schemas import SIZE_ORDER
 from .pipeline import SizingResult
 
@@ -51,8 +52,16 @@ def collect_report_values(
     from ..operators.classify import tsize_expr
 
     # sequential: materializes the cached derived table + 1-row summary
-    # that four of the concurrent jobs below re-read
-    summary = result.summary.collect()[0].asDict()
+    # that four of the concurrent jobs below re-read; the workload size
+    # class rides along on the same row
+    summary = (
+        result.summary.select(
+            "*",
+            tsize_expr(F.col("min_executor_pod_workload")).alias("tsize_workload"),
+        )
+        .collect()[0]
+        .asDict()
+    )
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_argmax = pool.submit(result.argmax.collect)
         # the heaviest job: explode + running sums + maxima (also
@@ -78,12 +87,7 @@ def collect_report_values(
         for size in SIZE_ORDER
     }
 
-    workload_pods = summary["min_executor_pod_workload"]
-    tsize_workload = (
-        result.summary.select(
-            tsize_expr(F.col("min_executor_pod_workload")).alias("t")
-        ).collect()[0].t
-    )
+    tsize_workload = summary["tsize_workload"]
     constrained_by = [
         d for d in CONSTRAINT_DIMS if counts.get(tsize_workload, {}).get(d, 0) > 0
     ]
@@ -91,7 +95,7 @@ def collect_report_values(
     return ReportValues(
         individual={
             "total_queries": summary["total_queries"],
-            "total_query_time_sec": round(summary["total_query_time"], 2),
+            "total_query_time_sec": round2_py(summary["total_query_time"]),
             "highest_resources_query_id": argmax[0].query_id if argmax else None,
             "max_nodes": summary["max_backends"],
             "max_cores_per_node": summary["max_vcores"],
@@ -107,14 +111,14 @@ def collect_report_values(
             "max_concurrent_queries": maxima["max_concurrent_queries"],
             "max_concurrent_resources_ts_ms": maxima["max_pods_workload_ts_ms"],
             "max_concurrent_cores": maxima["max_concurrent_cores"],
-            "max_concurrent_data_gb": round(maxima["max_concurrent_cache"] or 0, 2),
-            "max_concurrent_spill_gb": round(maxima["max_concurrent_spill"] or 0, 2),
-            "max_concurrent_memory_gb": round(maxima["max_concurrent_memory"] or 0, 2),
+            "max_concurrent_data_gb": round2_py(maxima["max_concurrent_cache"] or 0),
+            "max_concurrent_spill_gb": round2_py(maxima["max_concurrent_spill"] or 0),
+            "max_concurrent_memory_gb": round2_py(maxima["max_concurrent_memory"] or 0),
             "max_concurrent_data_rate": maxima["max_concurrent_data_rate"],
         },
         cluster_sizing={
             "tsize_workload": tsize_workload,
-            "min_pods": workload_pods,
+            "min_pods": summary["min_executor_pod_workload"],
             "max_pods": int(-(-(maxima["max_pods_workload"] or 0) // 1)),
             "constrained_by": constrained_by,
         },

@@ -111,3 +111,22 @@ def test_size_matrix_row_sums(result):
         for r in result.matrix.groupBy("dim").agg(F.sum("n").alias("total")).collect()
     }
     assert per_dim == {d: kept_n for d in ("count", "cache", "mem", "cpu", "spill")}
+
+
+def test_report_values_round_half_up(spark):
+    """Printed report values use the oracle row's rounding rule: a total
+    query time of exactly 0.125 s is 0.13 in both the collected
+    values and the oracle-checked row (Python's ``round`` gives 0.12)."""
+    from impala_base_to_cdw_sizing_spark.plans.reports import (
+        collect_report_values,
+        report_values_df,
+    )
+
+    row = (0, "q0", "etl", 1_000, 1_125, 125, 1.0, 1.0, 0.0, 0.1, "QUERY", 0, 1, True)
+    res = run_sizing(spark.createDataFrame([row], QH_SCHEMA), DEFAULT_PARAMS)
+    values = collect_report_values(res, DEFAULT_PARAMS)
+    oracle_row = report_values_df(
+        res.classified_kept, res.routed.accepted, res.routed.pruned, DEFAULT_PARAMS
+    ).collect()[0]
+    assert values.individual["total_query_time_sec"] == 0.13
+    assert oracle_row.total_query_time_sec == 0.13

@@ -60,11 +60,9 @@ def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
         "skipped": f"{out_dir}/sizing.csv.skipped",
     }
     counts = write_sizing_outputs(
-        kept=_project24(_with_times(classify(res.routed.kept))),
+        kept=_project24(_with_times(res.classified_kept)),
         pruned=_project24(_with_times(classify(res.routed.pruned))),
-        skipped=res.routed.skipped.withColumns(
-            {"start_ms": F.col("start_ms"), "end_ms": F.col("end_ms")}
-        ),
+        skipped=res.routed.skipped,
         output_cols=OUTPUT_FIELDS,
         main_path=paths["kept"],
         pruned_path=paths["pruned"],
@@ -75,8 +73,6 @@ def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
     if res.routed.derived is not None:
         res.routed.derived.unpersist()
     res.summary.unpersist()
-    if res.sweep_events is not None:
-        res.sweep_events.unpersist()
 
     def _parts(p: str) -> int:
         d = Path(p)
