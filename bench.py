@@ -86,8 +86,7 @@ def _run_ep2(spark, sf_dir: str) -> float:
     collect_report_values(res, DEFAULT_PARAMS)  # forces every branch
     # unpersist the frames that actually hold the caches (kept is a
     # filter over derived, unpersisting it was a no-op)
-    if res.routed.derived is not None:
-        res.routed.derived.unpersist()
+    res.routed.derived.unpersist()
     res.summary.unpersist()
     return round(time.perf_counter() - t0, 3)
 

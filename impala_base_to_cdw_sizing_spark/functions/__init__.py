@@ -36,10 +36,13 @@ def round2_sql(x: str) -> str:
     return ROUND2_SQL.format(x=x)
 
 
-def round2_py(x: float) -> float:
+def round2_py(x: float | None) -> float | None:
     """Python twin of :func:`round2`. The built-in ``round(x, 2)``
     rounds binary-exact halves to even (0.125 -> 0.12); this gives
-    0.13, as the Spark and DuckDB forms do."""
+    0.13, as the Spark and DuckDB forms do. ``None`` stays ``None``,
+    as NULL does in SQL."""
+    if x is None:
+        return None
     return math.floor(x * 100.0 + 0.5) / 100.0
 
 

@@ -60,13 +60,12 @@ def prune_split(derived: DataFrame, params: SizingParams) -> tuple[DataFrame, Da
 class RoutedPlan:
     """The reference's full routing fan-out as named DataFrame branches."""
 
-    accepted: DataFrame  # pool/type filtered, metrics present (pre-derive)
     skipped: DataFrame   # D1 diversions
     kept: DataFrame      # derived, within pod limit → aggregates + sweep
     pruned: DataFrame    # derived, over pod limit → pruned sink only
-    derived: DataFrame | None = None  # the cached pre-prune derived table
-    # (row-for-row with ``accepted``; G1 counts read it to stay on the
-    # cache instead of re-deriving the source)
+    derived: DataFrame   # the cached pre-prune derived table (one row per
+    # accepted query; G1 counts read it to stay on the cache instead of
+    # re-deriving the source)
 
 
 def route(df: DataFrame, params: SizingParams, derive_fn) -> RoutedPlan:
@@ -79,7 +78,4 @@ def route(df: DataFrame, params: SizingParams, derive_fn) -> RoutedPlan:
     # clearCache (CLI/harness) or session end
     derived = derive_fn(with_metrics, params).cache()
     kept, pruned = prune_split(derived, params)
-    return RoutedPlan(
-        accepted=with_metrics, skipped=skipped, kept=kept, pruned=pruned,
-        derived=derived,
-    )
+    return RoutedPlan(skipped=skipped, kept=kept, pruned=pruned, derived=derived)

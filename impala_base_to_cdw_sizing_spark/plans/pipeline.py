@@ -29,7 +29,6 @@ class SizingResult:
     argmax: DataFrame           # single row: G4
     matrix: DataFrame           # long-form size × dim counts (G5)
     utilization: DataFrame      # single row: G7
-    sweep_running: DataFrame    # per-event running sums (F1-F3)
     sweep_maxima: DataFrame     # single row (F4)
 
 
@@ -107,6 +106,5 @@ def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
         argmax=argmax_query(routed.kept),
         matrix=size_matrix(classified_kept),
         utilization=utilization(summary, params),
-        sweep_running=running,
         sweep_maxima=sweep_maxima(running),
     )

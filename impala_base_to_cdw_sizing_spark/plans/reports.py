@@ -1,10 +1,15 @@
 """Report assembly — SURVEY.md §2.H (H1-H5), values-first.
 
 The reference prints five formatted text sections
-(``impala_query_sizing.py:399-458``); parity is checked on *values*
-(SURVEY §7.3.4), with the text rendering kept as a faithful-but-fixed
-presentation (canonical dim order in ``constrained_by`` — the reference
-iterates a set literal at ``:431``, which is nondeterministic).
+(``impala_query_sizing.py:399-458``). Their values are computed in one
+place, :func:`collect_report_values`. The CLI and EP1 render the
+collected struct with :func:`format_reports`; the declared
+``sizing_report_values`` query turns the same struct into one row with
+:func:`report_values_df`, so the DuckDB oracle checks exactly the values
+the CLI prints (SURVEY §7.3.4). The text rendering is a
+faithful-but-fixed presentation: ``constrained_by`` is in canonical dim
+order, where the reference iterates a set literal at ``:431``, which is
+nondeterministic.
 """
 
 from __future__ import annotations
@@ -20,6 +25,22 @@ from .pipeline import SizingResult
 DIM_ORDER = ["count", "cache", "mem", "cpu", "spill"]
 CONSTRAINT_DIMS = ["cache", "mem", "cpu", "spill"]
 
+# the declared ``sizing_report_values`` row: one column per printed value
+REPORT_VALUES_SCHEMA = (
+    "total_queries BIGINT NOT NULL, total_query_time_sec DOUBLE, "
+    "highest_resources_query_id STRING, max_nodes BIGINT, "
+    "max_cores_per_node DOUBLE, max_data_per_node_gb DOUBLE, "
+    "max_spill_per_node_gb DOUBLE, max_memory_per_node_gb DOUBLE, "
+    "max_data_rate DOUBLE, n_pools BIGINT NOT NULL, "
+    "prune_count BIGINT NOT NULL, max_concurrent_queries BIGINT, "
+    "max_concurrent_ts_ms BIGINT, max_concurrent_cores DOUBLE, "
+    "max_concurrent_data_gb DOUBLE, max_concurrent_spill_gb DOUBLE, "
+    "max_concurrent_memory_gb DOUBLE, max_concurrent_data_rate DOUBLE, "
+    "tsize_workload STRING, min_pods BIGINT, max_pods BIGINT, "
+    "constrained_by STRING NOT NULL, cache_util_pct DOUBLE, "
+    "mem_util_pct DOUBLE, cpu_util_pct DOUBLE, spill_util_pct DOUBLE"
+)
+
 
 @dataclass
 class ReportValues:
@@ -33,27 +54,30 @@ class ReportValues:
 def collect_report_values(
     result: SizingResult, params: SizingParams
 ) -> ReportValues:
-    """One driver-side pass over the tiny aggregate DataFrames.
+    """Every printed report value, collected to Python in one pass.
 
-    The seven aggregate reads are INDEPENDENT jobs over shared cached
-    inputs, so after one sequential action materializes the shared
-    caches (``summary.collect()`` forces the derived table and the
-    1-row summary) the rest are submitted from a small thread pool
-    (optimization guide §2.6: actions are only sequential because the
-    driver calls them sequentially — concurrent tiny jobs back-fill
-    idle executors instead of paying seven scheduling latencies end to
-    end). Results are identical: every job is a read of a deterministic
-    frame; the only ordering requirement is cache materialization
-    before fan-out, which the summary collect provides."""
+    One sequential read, then six concurrent ones. The first collect
+    reads the cached 1-row summary and the workload size class on it,
+    which materializes the summary cache. The six other reads are
+    independent jobs over the summary, the derived cache and the events
+    cache (``running_sums`` materialized the last two inside
+    ``run_sizing``), so they are submitted from a small thread pool
+    (optimization guide §2.6: concurrent tiny jobs back-fill idle
+    executors instead of paying six scheduling latencies end to end).
+    Each submission inherits the caller's job group and other local
+    properties, so the caller can count or cancel its jobs. Every job
+    reads a deterministic frame, so completion order cannot change a
+    value."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     from ..operators.classify import tsize_expr
 
-    # sequential: materializes the cached derived table + 1-row summary
-    # that four of the concurrent jobs below re-read; the workload size
-    # class rides along on the same row
+    # sequential: materializes the cached 1-row summary that the
+    # utilization job below re-reads; the workload size class rides
+    # along on the same row
     summary = (
         result.summary.select(
             "*",
@@ -62,17 +86,19 @@ def collect_report_values(
         .collect()[0]
         .asDict()
     )
+    # captures the caller's local properties (job group included) now
+    inherit = inheritable_thread_target(result.summary.sparkSession)
     with ThreadPoolExecutor(max_workers=4) as pool:
-        f_argmax = pool.submit(result.argmax.collect)
-        # the heaviest job: explode + running sums + maxima (also
-        # materializes the shared events cache — sole toucher here)
-        f_maxima = pool.submit(result.sweep_maxima.collect)
-        f_util = pool.submit(result.utilization.collect)
-        f_matrix = pool.submit(result.matrix.collect)
-        f_pools = pool.submit(
-            result.routed.kept.select("pool").distinct().collect
-        )
-        f_prune = pool.submit(result.routed.pruned.count)
+        def submit(fn):
+            return pool.submit(inherit(fn))
+
+        f_argmax = submit(result.argmax.collect)
+        # the heaviest job: running sums + maxima over the events cache
+        f_maxima = submit(result.sweep_maxima.collect)
+        f_util = submit(result.utilization.collect)
+        f_matrix = submit(result.matrix.collect)
+        f_pools = submit(result.routed.kept.select("pool").distinct().collect)
+        f_prune = submit(result.routed.pruned.count)
         argmax = f_argmax.result()
         maxima = f_maxima.result()[0].asDict()
         util = f_util.result()[0].asDict()
@@ -132,99 +158,28 @@ def collect_report_values(
     )
 
 
-def report_values_df(kept, accepted, pruned, params: SizingParams):
+def report_values_df(spark, values: ReportValues):
     """The five report sections (H1-H5 + G9) as ONE oracle-checkable row
     (``impala_query_sizing.py:399-458``; ``constrained_by`` :428-437).
 
-    :func:`collect_report_values` collects the same numbers driver-side
-    to render text; this is the declared-tier twin — every value is a
-    column of a single-row DataFrame so the DuckDB oracle can hash it.
-    All inputs are one-row aggregate frames (or the ≤30-row size matrix),
-    composed with broadcast cross joins — no shuffle grows with data.
-
+    The row is built from the collected ``values``, so the declared
+    ``sizing_report_values`` query checks exactly what the CLI prints.
     ``constrained_by`` is the canonical-dim-order string (SURVEY §7.0
     declared fix: the reference iterates a set literal at :431, which is
-    nondeterministic across Python runs); absent dims are skipped by
-    ``concat_ws``, so "no dimension constrained" is the empty string in
-    both engines. Rounding uses the deterministic ``round2`` twin.
+    nondeterministic across Python runs); "no dimension constrained" is
+    the empty string, as the oracle's ``concat_ws`` gives.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions import ceil_long, round2
-    from ..operators.aggregates import size_matrix, summarize, utilization
-    from ..operators.classify import tsize_expr
-    from ..operators.sweep import explode_events, running_sums, sweep_maxima
-
-    summary = summarize(kept, accepted)
-    maxima = sweep_maxima(running_sums(explode_events(kept)))
-    util = utilization(summary, params)
-    # G4 as a global aggregate (1 row even on empty input, like the
-    # oracle's scalar subquery): max pod, earliest seq wins ties.
-    argmax = kept.agg(
-        F.max_by(
-            F.col("query_id"), F.struct(F.col("min_executor_pod"), -F.col("seq"))
-        ).alias("highest_resources_query_id")
+    row = {
+        **values.individual, **values.concurrent, **values.cluster_sizing,
+        **values.utilization,
+    }
+    row.update(
+        n_pools=len(row["pools"]),
+        max_concurrent_ts_ms=row["max_concurrent_resources_ts_ms"],
+        constrained_by=" ".join(row["constrained_by"]),
     )
-    prune = pruned.agg(F.count("*").alias("prune_count"))
-    tsz = summary.select(
-        tsize_expr(F.col("min_executor_pod_workload")).alias("tsize_workload")
-    )
-    constrained = (
-        size_matrix(kept)
-        .join(F.broadcast(tsz), F.col("tsize") == F.col("tsize_workload"))
-        .agg(
-            F.concat_ws(
-                " ",
-                *[
-                    F.max(F.when((F.col("dim") == d) & (F.col("n") > 0), F.lit(d)))
-                    for d in CONSTRAINT_DIMS
-                ],
-            ).alias("constrained_by")
-        )
-    )
-    row = (
-        summary.crossJoin(F.broadcast(argmax))
-        .crossJoin(F.broadcast(prune))
-        .crossJoin(F.broadcast(maxima))
-        .crossJoin(F.broadcast(util))
-        .crossJoin(F.broadcast(tsz))
-        .crossJoin(F.broadcast(constrained))
-    )
-    z = F.lit(0.0)
-    return row.select(
-        F.col("total_queries"),
-        round2(F.col("total_query_time")).alias("total_query_time_sec"),
-        F.col("highest_resources_query_id"),
-        F.col("max_backends").alias("max_nodes"),
-        F.col("max_vcores").alias("max_cores_per_node"),
-        F.col("max_data").alias("max_data_per_node_gb"),
-        F.col("max_spill").alias("max_spill_per_node_gb"),
-        F.col("max_mem").alias("max_memory_per_node_gb"),
-        F.col("max_data_rate"),
-        F.col("n_pools"),
-        F.col("prune_count"),
-        F.col("max_concurrent_queries"),
-        F.col("max_pods_workload_ts_ms").alias("max_concurrent_ts_ms"),
-        F.col("max_concurrent_cores"),
-        round2(F.coalesce(F.col("max_concurrent_cache"), z)).alias(
-            "max_concurrent_data_gb"
-        ),
-        round2(F.coalesce(F.col("max_concurrent_spill"), z)).alias(
-            "max_concurrent_spill_gb"
-        ),
-        round2(F.coalesce(F.col("max_concurrent_memory"), z)).alias(
-            "max_concurrent_memory_gb"
-        ),
-        F.col("max_concurrent_data_rate"),
-        F.col("tsize_workload"),
-        F.col("min_executor_pod_workload").alias("min_pods"),
-        ceil_long(F.coalesce(F.col("max_pods_workload"), z)).alias("max_pods"),
-        F.col("constrained_by"),
-        F.col("cache_util_pct"),
-        F.col("mem_util_pct"),
-        F.col("cpu_util_pct"),
-        F.col("spill_util_pct"),
-    )
+    # fields are taken by schema name; the other keys are not columns
+    return spark.createDataFrame([row], REPORT_VALUES_SCHEMA)
 
 
 def format_reports(v: ReportValues) -> str:

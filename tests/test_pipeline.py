@@ -125,8 +125,56 @@ def test_report_values_round_half_up(spark):
     row = (0, "q0", "etl", 1_000, 1_125, 125, 1.0, 1.0, 0.0, 0.1, "QUERY", 0, 1, True)
     res = run_sizing(spark.createDataFrame([row], QH_SCHEMA), DEFAULT_PARAMS)
     values = collect_report_values(res, DEFAULT_PARAMS)
-    oracle_row = report_values_df(
-        res.classified_kept, res.routed.accepted, res.routed.pruned, DEFAULT_PARAMS
-    ).collect()[0]
+    oracle_row = report_values_df(spark, values).collect()[0]
     assert values.individual["total_query_time_sec"] == 0.13
     assert oracle_row.total_query_time_sec == 0.13
+
+
+@pytest.mark.parametrize(
+    "params",
+    [SizingParams(pool="nomatch"), SizingParams(pod_limit=0)],
+    ids=["pool_matches_nothing", "every_query_over_pod_limit"],
+)
+def test_report_values_with_no_kept_query(spark, params):
+    """No kept query: the report holds what the oracle row holds (SQL
+    NULLs and the coalesced zeros) and still renders."""
+    from impala_base_to_cdw_sizing_spark.plans.reports import (
+        collect_report_values,
+        format_reports,
+    )
+
+    res = run_sizing(spark.createDataFrame(ROWS, QH_SCHEMA), params)
+    values = collect_report_values(res, params)
+    assert values.individual["total_query_time_sec"] is None
+    assert values.individual["highest_resources_query_id"] is None
+    assert values.individual["pools"] == []
+    assert values.cluster_sizing == {
+        "tsize_workload": None,
+        "min_pods": None,
+        "max_pods": 0,
+        "constrained_by": [],
+    }
+    assert set(values.utilization.values()) == {None}
+    for dim in ("data", "spill", "memory"):
+        assert values.concurrent[f"max_concurrent_{dim}_gb"] == 0.0
+    text = format_reports(values)
+    assert " Total Query Time: None sec" in text
+    assert "None\t\tNone\t\t0\t\t" in text
+
+
+def test_report_jobs_inherit_caller_job_group(spark):
+    """Every report job runs in the caller's job group, so none escapes a
+    job-group count or cancel."""
+    from impala_base_to_cdw_sizing_spark.plans.reports import collect_report_values
+
+    sc = spark.sparkContext
+    res = run_sizing(spark.createDataFrame(ROWS, QH_SCHEMA), DEFAULT_PARAMS)
+    ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("report-values", "report values")
+    try:
+        collect_report_values(res, DEFAULT_PARAMS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # a difference, not equality: the tracker may evict old jobs meanwhile
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped_before == set()
+    assert sc.statusTracker().getJobIdsForGroup("report-values")

@@ -70,8 +70,7 @@ def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
     )
     collect_report_values(res, DEFAULT_PARAMS)
     elapsed = round(time.perf_counter() - t0, 3)
-    if res.routed.derived is not None:
-        res.routed.derived.unpersist()
+    res.routed.derived.unpersist()
     res.summary.unpersist()
 
     def _parts(p: str) -> int:
