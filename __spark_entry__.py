@@ -18,10 +18,12 @@ from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
 from impala_base_to_cdw_sizing_spark.operators import queries_ext  # noqa: F401 (registered below)
 from impala_base_to_cdw_sizing_spark.operators.aggregates import (
     argmax_query,
+    report_aggregate,
     size_matrix,
     size_matrix_sql,
     summarize,
     summarize_sql,
+    utilization,
     utilization_sql,
 )
 from impala_base_to_cdw_sizing_spark.operators.classify import classify, classify_cte
@@ -76,8 +78,17 @@ def _accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+def _derived(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return derive(_accepted(spark, sf_dir), P)
+
+
 def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return classify(derive(_accepted(spark, sf_dir), P))
+    return classify(_derived(spark, sf_dir))
+
+
+def _report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The single-row report aggregate every G-value query selects from."""
+    return report_aggregate(_derived(spark, sf_dir), P)
 
 
 def _kept(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,17 +119,17 @@ def q_sizing_skipped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sizing_size_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G5: size × dimension counts (long form) — the flagship aggregate."""
-    return size_matrix(_kept(spark, sf_dir))
+    return size_matrix(_report(spark, sf_dir))
 
 
 def q_sizing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1+G3+G6+G8: workload summary row."""
-    return summarize(_kept(spark, sf_dir), _accepted(spark, sf_dir))
+    return summarize(_report(spark, sf_dir))
 
 
 def q_sizing_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G4: highest-demand query id, earliest tie wins."""
-    return argmax_query(_kept(spark, sf_dir))
+    return argmax_query(_report(spark, sf_dir))
 
 
 def q_sizing_sweep_running(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,7 +143,7 @@ def q_sizing_sweep_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sizing_sweep_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: sweep maxima (max concurrency, max pods + its timestamp)."""
-    return sweep_maxima(running_sums(explode_events(_kept(spark, sf_dir))))
+    return sweep_maxima(explode_events(_kept(spark, sf_dir)))
 
 
 def q_sizing_summary_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,16 +154,14 @@ def q_sizing_summary_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = SizingParams(pool="click")
     qh = _qh(spark, sf_dir)
     accepted, _ = skip_split(accepted_filter(qh, params))
-    derived = derive(accepted, params)
-    kept, _ = prune_split(derived, params)
-    return summarize(kept, accepted)
+    return summarize(report_aggregate(derive(accepted, params), params))
 
 
 def q_sizing_derive_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 as the generic broadcast non-equi range join (the reference's
     only "join" analog, ``impala_query_sizing.py:71-84``): all five
     t-shirt labels come from ``classify_range_join`` against the
-    ``size_buckets`` dimension instead of the when-chain. Same oracle as
+    ``size_buckets`` dimension instead of the CASE text. Same oracle as
     ``sizing_derive`` — the two classifier formulations must agree on
     every row. Catalyst broadcasts the 5-row bucket dim, so each join is
     one comparison chain per row (scale-safe)."""
@@ -174,11 +183,7 @@ def q_sizing_derive_rangejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sizing_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7: average cluster-utilization percentages."""
-    from impala_base_to_cdw_sizing_spark.operators.aggregates import utilization
-
-    return utilization(
-        summarize(_kept(spark, sf_dir), _accepted(spark, sf_dir)), P
-    )
+    return utilization(_report(spark, sf_dir))
 
 
 def q_sizing_report_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +199,6 @@ def q_sizing_report_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     row = report_values_df(spark, collect_report_values(res, P))
     # the row holds plain values: the pipeline caches can go
     res.routed.derived.unpersist()
-    res.summary.unpersist()
     return row
 
 

@@ -87,7 +87,6 @@ def _run_ep2(spark, sf_dir: str) -> float:
     # unpersist the frames that actually hold the caches (kept is a
     # filter over derived, unpersisting it was a no-op)
     res.routed.derived.unpersist()
-    res.summary.unpersist()
     return round(time.perf_counter() - t0, 3)
 
 

@@ -79,21 +79,14 @@ def main(argv: list[str] | None = None) -> int:
 def _project24(df):
     """Map engine column names onto the reference's 24-column contract
     (header typo ``in_executor_pod_spill`` preserved — SURVEY §1.3)."""
-    from pyspark.sql import functions as F
-
-    return df.select(
+    return df.selectExpr(
         "query_id", "pool", "start_time", "end_time", "duration_millis",
-        "reqd_cache_gb",
-        F.col("min_exec_pod_cache").alias("min_exec_pod_cache"),
-        "tsize_cache",
-        "reqd_agg_mem",
-        F.col("min_exec_pod_mem").alias("min_exec_pod_mem"),
-        "tsize_mem",
+        "reqd_cache_gb", "min_exec_pod_cache", "tsize_cache",
+        "reqd_agg_mem", "min_exec_pod_mem", "tsize_mem",
         "cpu_time_sec", "query_sla_sec",
-        F.col("min_parallelism").alias("reqd_parallelism_cpu"),
+        "min_parallelism AS reqd_parallelism_cpu",
         "min_exec_pod_cpu", "tsize_cpu",
-        "memory_spilled_gb",
-        F.col("min_exec_pod_spill").alias("in_executor_pod_spill"),
+        "memory_spilled_gb", "min_exec_pod_spill AS in_executor_pod_spill",
         "tsize_spill",
         "min_executor_pod", "recommended_tsize",
         "query_type", "admission_wait", "num_backends",

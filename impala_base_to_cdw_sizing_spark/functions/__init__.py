@@ -28,12 +28,11 @@ def round2(c: Column) -> Column:
     return F.floor(c * 100.0 + 0.5) / 100.0
 
 
-ROUND2_SQL = "(floor(({x}) * 100.0 + 0.5) / 100.0)"
-
-
-def round2_sql(x: str) -> str:
-    """DuckDB-side twin of :func:`round2`."""
-    return ROUND2_SQL.format(x=x)
+def round2_sql(x: str, d: str = "") -> str:
+    """SQL text of :func:`round2`. DuckDB takes it as is; Spark SQL text
+    passes ``d="D"``, because Spark parses an unsuffixed ``100.0`` as a
+    DECIMAL literal where the Column form has a DOUBLE."""
+    return f"(floor(({x}) * 100.0{d} + 0.5{d}) / 100.0{d})"
 
 
 def round2_py(x: float | None) -> float | None:

@@ -1,9 +1,14 @@
 """Workload-level aggregations — SURVEY.md §2.G (G1-G9).
 
 The reference accumulates these in module-level globals during its
-row loop (``impala_query_sizing.py:272-305``); here each is a Spark
-aggregate with map-side partial aggregation — one shuffle of one row per
-partition, scale-independent output.
+row loop (``impala_query_sizing.py:272-305``); here they are ONE Spark
+aggregate, :func:`report_aggregate`, with map-side partial aggregation —
+one shuffle of one row per partition, scale-independent output. The
+declared per-value queries (:func:`summarize`, :func:`argmax_query`,
+:func:`size_matrix`, :func:`utilization`) select from that same row, so
+no value has a second Spark formulation. The aggregate is Spark SQL
+text: one parse on the JVM instead of hundreds of driver round-trips to
+build Columns.
 
 Float-determinism note: unordered floating SUM is order-dependent, so
 oracle-checked sums are accumulated in DECIMAL(38,6) (exact, commutative)
@@ -15,6 +20,8 @@ Semantics preserved:
   ones (:215 before :262).
 - G4 argmax uses strict ``>`` → earliest tie wins (:272-274); implemented
   as a total order (pod DESC, seq ASC).
+- Pruned rows (D3) feed no aggregate: each value is taken over the kept
+  rows only, selected by the prune route's own predicate.
 - G6 asymmetry: ``total_query_time`` excludes admission wait while the
   utilization integrals weight by the *full* duration (:300-305).
 """
@@ -25,8 +32,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SizingParams
+from ..functions import round2_sql
+from ..schemas import SIZE_ORDER
+from .classify import classify, tsize_case_sql
 
 DEC = "decimal(38,6)"
+
+# G5 dimensions → the label column each counts
+MATRIX_DIMS = {
+    "count": "recommended_tsize",
+    "cache": "tsize_cache",
+    "mem": "tsize_mem",
+    "cpu": "tsize_cpu",
+    "spill": "tsize_spill",
+}
+# G7 percentages → (integral column, per-node capacity field of SizingParams)
+_UTILIZATION = {
+    "cache_util_pct": ("util_cache", "cache_gb_per_node"),
+    "mem_util_pct": ("util_mem", "query_mem_per_node"),
+    "cpu_util_pct": ("util_cpu", "vcores_per_node"),
+    "spill_util_pct": ("util_spill", "scratch_gb_per_node"),
+}
 
 
 def dsum(c: Column) -> Column:
@@ -51,32 +77,92 @@ def dsum_sql(x: str) -> str:
     return dec_to_double_sql(f"SUM(CAST(({x}) AS DECIMAL(38,6)))")
 
 
-def summarize(kept: DataFrame, total_queries_df: DataFrame) -> DataFrame:
-    """G1+G2+G3+G6+G8 as one single-row DataFrame.
+def matrix_cell(dim: str, size: str) -> str:
+    """Column of the report aggregate holding one G5 count."""
+    return f"{dim}_{size}"
 
-    ``kept``: derived rows within the pod limit (post D3).
-    ``total_queries_df``: the pre-prune accepted set (G1 counts it).
+
+def report_aggregate(derived: DataFrame, params: SizingParams) -> DataFrame:
+    """G1-G8 as ONE single-row aggregate over the pre-prune ``derived``
+    table (``route.RoutedPlan.derived``).
+
+    "Kept" is the prune route's own predicate, ``NOT (min_executor_pod >
+    pod_limit)`` (``route.prune_split``), applied inside each aggregate
+    through ``CASE WHEN`` / ``count_if``. The row carries:
+
+    - ``total_queries`` (G1, pre-prune), ``prune_count`` and
+      ``kept_queries``;
+    - the G2/G3/G8 maxima and the DECIMAL(38,6) sums (G6 and the
+      utilization integrals);
+    - ``pools``: ``array_sort(collect_set(pool))``. A distinct count
+      beside the decimal sums would plan an Expand (SCALE.md);
+    - ``highest_resources_query_id`` (G4): ``max_by`` over
+      ``(min_executor_pod, ~seq)``, the earliest-``seq`` tie-break.
+      ``~seq`` is ``-seq - 1``, so it cannot overflow where ``-seq`` can;
+    - one count per size × dimension cell (G5), named by
+      :func:`matrix_cell`;
+    - ``tsize_workload`` and the four G7 percentages, projected on the
+      same row.
+
+    Fractional literals carry the ``D`` suffix: an unsuffixed ``1000.0``
+    is DECIMAL in Spark SQL, and every value here is DOUBLE or integral.
     """
-    agg = kept.agg(
-        F.max("num_backends").alias("max_backends"),
-        F.max("avg_vcores").alias("max_vcores"),
-        F.max("avg_mem").alias("max_mem"),
-        F.max("avg_data").alias("max_data"),
-        F.max("avg_data_rate").alias("max_data_rate"),
-        F.max("avg_spill").alias("max_spill"),
-        F.max("min_executor_pod").alias("min_executor_pod_workload"),
-        F.countDistinct("pool").alias("n_pools"),
-        dsum((F.col("duration_millis") - F.col("admission_wait")) / 1000.0).alias(
-            "total_query_time"
-        ),
-        dsum(F.col("reqd_agg_mem") * F.col("duration_sec")).alias("util_mem"),
-        dsum(F.col("cpu_time_sec")).alias("util_cpu"),
-        dsum(F.col("reqd_cache_gb") * F.col("duration_sec")).alias("util_cache"),
-        dsum(F.col("memory_spilled_gb") * F.col("duration_sec")).alias("util_spill"),
+    limit = params.pod_limit
+    kept = f"NOT (min_executor_pod > {limit})"
+
+    def k(x: str) -> str:
+        return f"CASE WHEN {kept} THEN {x} END"
+
+    def dsum_expr(x: str) -> str:
+        return f"CAST(sum({k(f'CAST(({x}) AS DECIMAL(38,6))')}) AS DOUBLE)"
+
+    maxima = {
+        "max_backends": "num_backends",
+        "max_vcores": "avg_vcores",
+        "max_mem": "avg_mem",
+        "max_data": "avg_data",
+        "max_data_rate": "avg_data_rate",
+        "max_spill": "avg_spill",
+        "min_executor_pod_workload": "min_executor_pod",
+    }
+    sums = {
+        "total_query_time": "(duration_millis - admission_wait) / 1000.0D",
+        "util_mem": "reqd_agg_mem * duration_sec",
+        "util_cpu": "cpu_time_sec",
+        "util_cache": "reqd_cache_gb * duration_sec",
+        "util_spill": "memory_spilled_gb * duration_sec",
+    }
+    agg = classify(derived).selectExpr(
+        "count(*) AS total_queries",
+        f"count_if(min_executor_pod > {limit}) AS prune_count",
+        f"count_if({kept}) AS kept_queries",
+        *[f"max({k(c)}) AS {name}" for name, c in maxima.items()],
+        f"array_sort(collect_set({k('pool')})) AS pools",
+        "max_by(query_id, "
+        f"{k('struct(min_executor_pod, ~seq)')}) AS highest_resources_query_id",
+        *[f"{dsum_expr(x)} AS {name}" for name, x in sums.items()],
+        *[
+            f"count_if({kept} AND {label} = '{size}') AS {matrix_cell(dim, size)}"
+            for dim, label in MATRIX_DIMS.items()
+            for size in SIZE_ORDER
+        ],
     )
-    total = total_queries_df.agg(F.count("*").alias("total_queries"))
-    # two 1-row frames: crossJoin is a no-shuffle broadcast at this size
-    return total.crossJoin(agg)
+    return agg.selectExpr(
+        "*",
+        f"{tsize_case_sql('min_executor_pod_workload')} AS tsize_workload",
+        *_utilization_exprs(params, "D"),
+    )
+
+
+def summarize(report: DataFrame) -> DataFrame:
+    """G1+G2+G3+G6+G8: the summary row, selected from
+    :func:`report_aggregate`."""
+    return report.selectExpr(
+        "total_queries", "max_backends", "max_vcores", "max_mem", "max_data",
+        "max_data_rate", "max_spill", "min_executor_pod_workload",
+        "CAST(size(pools) AS BIGINT) AS n_pools",
+        "total_query_time", "util_mem", "util_cpu", "util_cache", "util_spill",
+    )
 
 
 def summarize_sql(params: SizingParams) -> str:
@@ -104,35 +190,36 @@ WHERE min_executor_pod <= {params.pod_limit}
 """
 
 
-def argmax_query(kept: DataFrame) -> DataFrame:
+def argmax_query(report: DataFrame) -> DataFrame:
     """G4: query id with the highest pod demand, earliest tie wins
-    (strict ``>`` at :272-274). Total order → deterministic row."""
-    return (
-        kept.orderBy(F.col("min_executor_pod").desc(), F.col("seq").asc())
-        .select("query_id", "min_executor_pod")
-        .limit(1)
+    (strict ``>`` at :272-274), selected from :func:`report_aggregate`.
+    No row when nothing is kept."""
+    return report.where("kept_queries > 0").selectExpr(
+        "highest_resources_query_id AS query_id",
+        "min_executor_pod_workload AS min_executor_pod",
     )
 
 
-def size_matrix(classified_kept: DataFrame) -> DataFrame:
-    """G5: the size × dimension count matrix, long form.
+def size_matrix(report: DataFrame) -> DataFrame:
+    """G5: the size × dimension count matrix in long form, unpivoted from
+    the cells of :func:`report_aggregate`.
 
     The reference increments 5 counters per row into
-    ``size_matrix[size][dim]`` (:294-298). Here: unpivot the five label
-    columns → group → count. One shuffle over a ≤ 5×6 key space; AQE
-    coalesces it to nothing at any scale.
+    ``size_matrix[size][dim]`` (:294-298). As the oracle's GROUP BY does,
+    the long form keeps each dimension's NULL-size group (demand beyond
+    the last bucket: kept rows minus the dimension's five cells) and has
+    no row for an empty cell.
     """
-    long = classified_kept.selectExpr(
-        "stack(5, "
-        "'count', recommended_tsize, "
-        "'cache', tsize_cache, "
-        "'mem', tsize_mem, "
-        "'cpu', tsize_cpu, "
-        "'spill', tsize_spill) AS (dim, tsize)"
-    )
+    rows = []
+    for dim in MATRIX_DIMS:
+        cells = [matrix_cell(dim, size) for size in SIZE_ORDER]
+        rows += [f"'{dim}', '{size}', {c}" for size, c in zip(SIZE_ORDER, cells)]
+        rows.append(f"'{dim}', CAST(NULL AS STRING), kept_queries - {' - '.join(cells)}")
     return (
-        long.groupBy("dim", "tsize")
-        .agg(F.count("*").alias("n"))
+        report.selectExpr(f"stack({len(rows)}, {', '.join(rows)}) AS (dim, tsize, n)")
+        .where("n > 0")
+        # stack makes every output nullable; a count is NOT NULL
+        .selectExpr("dim", "tsize", "coalesce(n, 0L) AS n")
     )
 
 
@@ -151,44 +238,31 @@ SELECT dim, tsize, COUNT(*) AS n FROM long GROUP BY dim, tsize
 """
 
 
-def utilization(summary: DataFrame, params: SizingParams) -> DataFrame:
+def utilization(report: DataFrame) -> DataFrame:
     """G7: average cluster-utilization percentages
-    (``impala_query_sizing.py:449-453``). Pure arithmetic over the
-    single-row summary; rounding matches the reference's ``round(_, 2)``
-    via the deterministic round2 twin."""
-    from ..functions import round2
+    (``impala_query_sizing.py:449-453``), selected from
+    :func:`report_aggregate`. Rounding matches the reference's
+    ``round(_, 2)`` via the deterministic round2 twin."""
+    return report.select(*_UTILIZATION)
 
-    denom = F.col("min_executor_pod_workload") * F.col("total_query_time")
-    return summary.select(
-        round2(100 * F.col("util_cache") / (denom * params.cache_gb_per_node)).alias(
-            "cache_util_pct"
-        ),
-        round2(100 * F.col("util_mem") / (denom * params.query_mem_per_node)).alias(
-            "mem_util_pct"
-        ),
-        round2(100 * F.col("util_cpu") / (denom * params.vcores_per_node)).alias(
-            "cpu_util_pct"
-        ),
-        round2(100 * F.col("util_spill") / (denom * params.scratch_gb_per_node)).alias(
-            "spill_util_pct"
-        ),
-    )
+
+def _utilization_exprs(params: SizingParams, d: str) -> list[str]:
+    """The G7 percentages over the summary columns, as SQL text (``d`` as
+    in ``functions.round2_sql``)."""
+    denom = "(min_executor_pod_workload * total_query_time)"
+    return [
+        round2_sql(f"100 * {util} / ({denom} * {getattr(params, cap)})", d)
+        + f" AS {name}"
+        for name, (util, cap) in _UTILIZATION.items()
+    ]
 
 
 def utilization_sql(params: SizingParams) -> str:
     """Oracle body for :func:`utilization` over a ``summary`` CTE —
     the identical floor-quantized expression text in both dialects."""
-    def pct(util: str, per_node: float) -> str:
-        return (
-            f"(floor((100 * {util} / ((min_executor_pod_workload"
-            f" * total_query_time) * {per_node})) * 100.0 + 0.5) / 100.0)"
-        )
-
+    cols = ",\n  ".join(_utilization_exprs(params, ""))
     return f"""
 SELECT
-  {pct('util_cache', params.cache_gb_per_node)} AS cache_util_pct,
-  {pct('util_mem', params.query_mem_per_node)} AS mem_util_pct,
-  {pct('util_cpu', params.vcores_per_node)} AS cpu_util_pct,
-  {pct('util_spill', params.scratch_gb_per_node)} AS spill_util_pct
+  {cols}
 FROM summary
 """

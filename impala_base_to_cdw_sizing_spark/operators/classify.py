@@ -1,17 +1,17 @@
 """Range-bucket t-shirt classification — SURVEY.md §2.E (E1/E2).
 
 The reference's ``get_tsize`` (``impala_query_sizing.py:71-84``) ceils its
-input and linearly scans a range-keyed dict. Here it is:
+input and linearly scans a range-keyed dict. Here it is one ANSI ``CASE``
+text, :func:`tsize_case_sql`, generated from ``SIZE_BUCKET_ROWS``. Spark
+parses it with ``F.expr`` (:func:`tsize_expr`, :func:`classify`) and the
+DuckDB oracle embeds it (:func:`classify_cte`), so both engines evaluate
+the same text: a pure expression inside whole-stage codegen, zero
+shuffle, zero join. This is the 100 TB path.
 
-1. :func:`tsize_expr` — a ``when()`` chain: the default. Pure expression,
-   evaluated inside whole-stage codegen, zero shuffle, zero join. This is
-   the 100 TB path.
-2. :func:`classify_range_join` — a broadcast non-equi range join against
-   the ``size_buckets`` dimension. Catalyst picks
-   BroadcastNestedLoopJoin; at 5 bucket rows that is one comparison chain
-   per row, also scale-safe. Kept as the generic range-join operator (the
-   reference's only "join", SURVEY §2.J); ``sizing_derive_rangejoin``
-   runs it against the same DuckDB oracle as ``sizing_derive``.
+:func:`classify_range_join` is the generic broadcast non-equi range join
+against the ``size_buckets`` dimension (the reference's only "join",
+SURVEY §2.J); ``sizing_derive_rangejoin`` runs it against the same
+DuckDB oracle as ``sizing_derive``.
 
 Faithful semantics: input is ceiled first (``:72``); values beyond the last
 bucket (x > 999) fall off the dict scan and return ``None`` → NULL here.
@@ -32,21 +32,10 @@ def _buckets(dim: str) -> list[tuple[int, int, str]]:
     return [(lo, hi, label) for d, lo, hi, label in SIZE_BUCKET_ROWS if d == dim]
 
 
-def tsize_expr(c: Column, dim: str = "pods") -> Column:
-    """``get_tsize`` as a native when-chain. ``c`` may be fractional; it is
-    ceiled exactly like the reference (``impala_query_sizing.py:72``)."""
-    x = F.ceil(c).cast("long")
-    expr: Column | None = None
-    for lo, hi, label in _buckets(dim):
-        cond = (x >= lo) & (x <= hi)
-        expr = F.when(cond, label) if expr is None else expr.when(cond, label)
-    assert expr is not None
-    return expr.otherwise(F.lit(None).cast("string"))
-
-
 def tsize_case_sql(x: str, dim: str = "pods") -> str:
-    """ANSI CASE form of :func:`tsize_expr` — valid in BOTH DuckDB
-    (oracle side) and Spark SQL."""
+    """``get_tsize`` as an ANSI CASE over the SQL expression ``x``, valid
+    in both DuckDB and Spark SQL. ``x`` may be fractional; it is ceiled
+    exactly like the reference (``impala_query_sizing.py:72``)."""
     xe = f"CAST(ceil({x}) AS BIGINT)"
     whens = "\n    ".join(
         f"WHEN {xe} >= {lo} AND {xe} <= {hi} THEN '{label}'"
@@ -55,31 +44,40 @@ def tsize_case_sql(x: str, dim: str = "pods") -> str:
     return f"(CASE {whens} ELSE NULL END)"
 
 
+def tsize_expr(x: str, dim: str = "pods") -> Column:
+    """:func:`tsize_case_sql` as a Spark Column: one parse on the JVM
+    instead of a when-chain built call by call from the driver."""
+    return F.expr(tsize_case_sql(x, dim))
+
+
+# output label → the pod-demand column it classifies
+TSIZE_SOURCES = {
+    "tsize_cache": "min_exec_pod_cache",
+    "tsize_mem": "min_exec_pod_mem",
+    "tsize_cpu": "min_exec_pod_cpu",
+    "tsize_spill": "min_exec_pod_spill",
+    "recommended_tsize": "min_executor_pod_raw",
+}
+
+
 def classify(df: DataFrame) -> DataFrame:
     """Attach the five t-shirt labels the reference computes
     (``impala_query_sizing.py:252-259``): one per pod dimension plus the
     overall ``recommended_tsize`` (classified on the *pre-ceil* max, which
-    ceils to the same bucket input)."""
-    return df.withColumns(
-        {
-            "tsize_cache": tsize_expr(F.col("min_exec_pod_cache")),
-            "tsize_mem": tsize_expr(F.col("min_exec_pod_mem")),
-            "tsize_cpu": tsize_expr(F.col("min_exec_pod_cpu")),
-            "tsize_spill": tsize_expr(F.col("min_exec_pod_spill")),
-            "recommended_tsize": tsize_expr(F.col("min_executor_pod_raw")),
-        }
+    ceils to the same bucket input). ``df`` must not already carry them."""
+    return df.selectExpr(
+        "*", *[f"{tsize_case_sql(src)} AS {out}" for out, src in TSIZE_SOURCES.items()]
     )
 
 
 def classify_cte(source: str = "derived") -> str:
-    """Oracle CTE mirroring :func:`classify`."""
+    """Oracle CTE: the same CASE texts as :func:`classify`."""
+    labels = ",\n    ".join(
+        f"{tsize_case_sql(src)} AS {out}" for out, src in TSIZE_SOURCES.items()
+    )
     return f"""classified AS (
   SELECT *,
-    {tsize_case_sql("min_exec_pod_cache")} AS tsize_cache,
-    {tsize_case_sql("min_exec_pod_mem")} AS tsize_mem,
-    {tsize_case_sql("min_exec_pod_cpu")} AS tsize_cpu,
-    {tsize_case_sql("min_exec_pod_spill")} AS tsize_spill,
-    {tsize_case_sql("min_executor_pod_raw")} AS recommended_tsize
+    {labels}
   FROM {source}
 )"""
 

@@ -1,8 +1,8 @@
 """Per-query derived-metric pipeline — SURVEY.md §2.C (C3-C13).
 
-One ``withColumns`` block over the query-history fact table; every
-expression is a native Spark function, so the whole derivation lives in a
-single whole-stage-codegen span with zero shuffles. At 100 TB this is a
+One projection over the query-history fact table; every expression is a
+native Spark function, so the whole derivation lives in a single
+whole-stage-codegen span with zero shuffles. At 100 TB this is a
 pure map stage: it scales linearly with input partitions and Catalyst
 pushes any downstream filter below it.
 
@@ -18,17 +18,17 @@ Fixed-with-note (SURVEY.md §7.0): the reference runs under Python 2 where
 ``(cpu_adjustment_pct * min_parallelism) / 100`` floor-divides before the
 float division (``:244``); this engine uses true division throughout.
 
-The matching DuckDB oracle CTE is generated by :func:`derived_cte` from the
-same ``SizingParams`` so constants can never drift.
+Spark and the DuckDB oracle CTE (:func:`derived_cte`) parse the same
+expression texts, generated from the same ``SizingParams``, so neither
+the constants nor the operation order can drift.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..config import SizingParams
-from ..functions import ceil_long, ceil_long_sql, round2, round2_sql
+from ..functions import ceil_long_sql, round2_sql
 
 # columns added by derive(), in output order
 DERIVED_COLUMNS = [
@@ -42,89 +42,61 @@ DERIVED_COLUMNS = [
 ]
 
 
+def _derived_exprs(params: SizingParams, d: str) -> list[tuple[str, str]]:
+    """(name, SQL text) of the 18 derived columns. ``d`` suffixes the
+    fractional literals: ``"D"`` makes them DOUBLE in Spark SQL, ``""``
+    leaves the DuckDB text as it always was."""
+    dur = f"(duration_millis / 1000.0{d})"
+    minpar = ceil_long_sql(f"cpu_time_sec / {dur}")
+    pod = {
+        "cache": f"(reqd_cache_gb / {params.cache_gb_per_node})",
+        "mem": (
+            f"(((reqd_agg_mem * {params.mem_adjustment_pct}) / 100)"
+            f" / {params.query_mem_per_node})"
+        ),
+        "cpu": (
+            f"((({params.cpu_adjustment_pct} * {minpar}) / 100)"
+            f" / {params.parallel_factor!r}{d})"
+        ),
+        "spill": f"(memory_spilled_gb / {params.scratch_gb_per_node})",
+    }
+    pod_raw = f"greatest({', '.join(pod.values())})"
+    return [
+        ("duration_sec", dur),
+        ("query_sla_sec", round2_sql(dur, d)),
+        ("min_parallelism", minpar),
+        ("avg_vcores", round2_sql(f"{minpar} / num_backends", d)),
+        ("avg_mem", round2_sql("reqd_agg_mem / num_backends", d)),
+        ("avg_data", round2_sql("reqd_cache_gb / num_backends", d)),
+        ("avg_data_rate", round2_sql(f"reqd_cache_gb / num_backends / {dur}", d)),
+        ("avg_spill", round2_sql("memory_spilled_gb / num_backends", d)),
+        *[
+            item
+            for dim, raw in pod.items()
+            for item in [(f"pod_{dim}_raw", raw), (f"min_exec_pod_{dim}", ceil_long_sql(raw))]
+        ],
+        ("min_executor_pod_raw", pod_raw),
+        ("min_executor_pod", ceil_long_sql(pod_raw)),
+    ]
+
+
 def derive(df: DataFrame, params: SizingParams) -> DataFrame:
     """query_history → query_history + 18 derived columns.
 
     Expects columns: duration_millis, cpu_time_sec, reqd_cache_gb,
     reqd_agg_mem, memory_spilled_gb, num_backends (see
-    ``schemas.QUERY_HISTORY_SCHEMA`` / ``sources.synthetic``).
+    ``schemas.QUERY_HISTORY_SCHEMA`` / ``sources.synthetic``), and none
+    of the derived names.
     """
-    duration_sec = F.col("duration_millis") / 1000.0
-    min_parallelism = ceil_long(F.col("cpu_time_sec") / duration_sec)
-
-    pod_cache_raw = F.col("reqd_cache_gb") / params.cache_gb_per_node
-    pod_mem_raw = (
-        (F.col("reqd_agg_mem") * params.mem_adjustment_pct) / 100
-    ) / params.query_mem_per_node
-    pod_cpu_raw = (
-        (F.lit(params.cpu_adjustment_pct) * min_parallelism) / 100
-    ) / F.lit(params.parallel_factor)
-    pod_spill_raw = F.col("memory_spilled_gb") / params.scratch_gb_per_node
-    min_executor_pod_raw = F.greatest(
-        pod_cache_raw, pod_mem_raw, pod_cpu_raw, pod_spill_raw
-    )
-
-    cols: dict[str, Column] = {
-        "duration_sec": duration_sec,
-        "query_sla_sec": round2(duration_sec),
-        "min_parallelism": min_parallelism,
-        "avg_vcores": round2(min_parallelism / F.col("num_backends")),
-        "avg_mem": round2(F.col("reqd_agg_mem") / F.col("num_backends")),
-        "avg_data": round2(F.col("reqd_cache_gb") / F.col("num_backends")),
-        "avg_data_rate": round2(
-            F.col("reqd_cache_gb") / F.col("num_backends") / duration_sec
-        ),
-        "avg_spill": round2(F.col("memory_spilled_gb") / F.col("num_backends")),
-        "pod_cache_raw": pod_cache_raw,
-        "min_exec_pod_cache": ceil_long(pod_cache_raw),
-        "pod_mem_raw": pod_mem_raw,
-        "min_exec_pod_mem": ceil_long(pod_mem_raw),
-        "pod_cpu_raw": pod_cpu_raw,
-        "min_exec_pod_cpu": ceil_long(pod_cpu_raw),
-        "pod_spill_raw": pod_spill_raw,
-        "min_exec_pod_spill": ceil_long(pod_spill_raw),
-        "min_executor_pod_raw": min_executor_pod_raw,
-        "min_executor_pod": ceil_long(min_executor_pod_raw),
-    }
-    return df.withColumns(cols)
+    return df.selectExpr("*", *[f"{e} AS {n}" for n, e in _derived_exprs(params, "D")])
 
 
 def derived_cte(params: SizingParams, source: str = "query_history") -> str:
-    """DuckDB CTE body equivalent to :func:`derive` — same op order, same
-    constants (generated from the same ``SizingParams``)."""
-    dur = "(duration_millis / 1000.0)"
-    minpar = f"CAST(ceil(cpu_time_sec / {dur}) AS BIGINT)"
-    pod_cache = f"(reqd_cache_gb / {params.cache_gb_per_node})"
-    pod_mem = (
-        f"(((reqd_agg_mem * {params.mem_adjustment_pct}) / 100)"
-        f" / {params.query_mem_per_node})"
-    )
-    pod_cpu = (
-        f"((({params.cpu_adjustment_pct} * {minpar}) / 100)"
-        f" / {params.parallel_factor!r})"
-    )
-    pod_spill = f"(memory_spilled_gb / {params.scratch_gb_per_node})"
-    pod_raw = f"greatest({pod_cache}, {pod_mem}, {pod_cpu}, {pod_spill})"
-
+    """DuckDB CTE body equivalent to :func:`derive` — the same expression
+    texts, generated from the same ``SizingParams``."""
+    cols = ",\n    ".join(f"{e} AS {n}" for n, e in _derived_exprs(params, ""))
     return f"""derived AS (
   SELECT *,
-    {dur} AS duration_sec,
-    {round2_sql(dur)} AS query_sla_sec,
-    {minpar} AS min_parallelism,
-    {round2_sql(f"{minpar} / num_backends")} AS avg_vcores,
-    {round2_sql("reqd_agg_mem / num_backends")} AS avg_mem,
-    {round2_sql("reqd_cache_gb / num_backends")} AS avg_data,
-    {round2_sql(f"reqd_cache_gb / num_backends / {dur}")} AS avg_data_rate,
-    {round2_sql("memory_spilled_gb / num_backends")} AS avg_spill,
-    {pod_cache} AS pod_cache_raw,
-    {ceil_long_sql(pod_cache)} AS min_exec_pod_cache,
-    {pod_mem} AS pod_mem_raw,
-    {ceil_long_sql(pod_mem)} AS min_exec_pod_mem,
-    {pod_cpu} AS pod_cpu_raw,
-    {ceil_long_sql(pod_cpu)} AS min_exec_pod_cpu,
-    {pod_spill} AS pod_spill_raw,
-    {ceil_long_sql(pod_spill)} AS min_exec_pod_spill,
-    {pod_raw} AS min_executor_pod_raw,
-    {ceil_long_sql(pod_raw)} AS min_executor_pod
+    {cols}
   FROM {source}
 )"""

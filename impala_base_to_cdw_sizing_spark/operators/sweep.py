@@ -9,7 +9,8 @@ Spark-first re-expression:
   generator expression, no shuffle.
 - F2+F3 sort + prefix sums → a running-sum window over a deterministic
   total order ``(ts_ms, seq, sign DESC)``.
-- F4 conditional maxima → filter to start events, one aggregate;
+- F4 conditional maxima → per-bucket maxima of the local running sums
+  at start events, lifted by each bucket's carry-in (below);
   latest-tie-wins for the max-pods timestamp (the ``>=`` at :384-386)
   reproduced via an explicit (value, position) ordering.
 
@@ -23,11 +24,17 @@ sequence everywhere; running sums are exact integer/decimal arithmetic;
 one final division emits doubles. End events negate the quantized start
 value, so a query's events cancel to exactly zero.
 
-Scale: :func:`running_sums` never plans a partition-less window. Events
-are range-bucketed by timestamp and summed by
-:func:`segmented.segmented_cumsum`; integer arithmetic is
+Scale: neither the running sums nor the maxima plan a partition-less
+window. Events are range-bucketed by timestamp. :func:`running_sums`
+(the per-event table) adds each bucket's carry-in to its local running
+sums by :func:`segmented.segmented_cumsum`; integer arithmetic is
 order-independent, so the result equals the single-window running sum
-of the DuckDB oracle (``RUNNING_SUMS_SQL``) exactly.
+of the DuckDB oracle (``RUNNING_SUMS_SQL``) exactly. :func:`sweep_maxima`
+needs only the maxima, and a bucket's carry-in is one constant added to
+all its events: ``max(local + carry) = max(local) + carry``. So it
+reduces each bucket to its totals and its local maxima in one pass, runs
+:func:`segmented.bucket_carry` on that ≤ 64-row frame and takes the
+maximum over buckets. It never joins the carry back onto the events.
 
 Semantics preserved from the reference:
 - start events use the admission-adjusted timestamp (C14: start +
@@ -44,25 +51,32 @@ sorts on exact epoch-millis with a deterministic tie-break (SURVEY §7.0).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .segmented import segmented_cumsum
+from .segmented import bucket_carry, segmented_cumsum
 
 MEASURES = ["pods", "cache", "mem", "cpu", "spill", "data_rate"]
 _SCALE = 1_000_000.0
 DEC0 = "decimal(38,0)"
 # uniform time-range buckets of the segmented sweep
 _N_BUCKETS = 64
+# sweep_maxima output column per measure, in output order
+_MAXIMA_NAMES = {
+    "pods": "max_pods_workload",
+    "cache": "max_concurrent_cache",
+    "mem": "max_concurrent_memory",
+    "cpu": "max_concurrent_cores",
+    "spill": "max_concurrent_spill",
+    "data_rate": "max_concurrent_data_rate",
+}
 
 
-def _micro(c: Column) -> Column:
-    """Quantize a measure to integer micro-units, deterministically."""
-    return F.floor(c * _SCALE + 0.5).cast("long")
-
-
-def _micro_sql(x: str) -> str:
-    return f"CAST(floor(({x}) * 1000000.0 + 0.5) AS BIGINT)"
+def _micro_sql(x: str, d: str = "") -> str:
+    """Quantize a measure to integer micro-units, deterministically.
+    ``d="D"`` makes the literals DOUBLE in Spark SQL text; the DuckDB
+    oracle text leaves them unsuffixed."""
+    return f"CAST(floor(({x}) * 1000000.0{d} + 0.5{d}) AS BIGINT)"
 
 
 # raw measure expressions per impala_query_sizing.py:311-320
@@ -82,21 +96,19 @@ def explode_events(kept: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     ``keys`` passes extra grouping columns (e.g. ``("pool",)``) through to
     the endpoint rows for keyed downstream sweeps; the default (none)
     keeps the global-sweep oracle path byte-identical."""
-    quantized = kept.withColumns(
-        {f"{m}_u": _micro(F.expr(expr)) for m, expr in _RAW_MEASURES.items()}
-    )
-    start = F.struct(
-        (F.col("start_ms") + F.col("admission_wait")).alias("ts_ms"),
-        F.lit(1).alias("sign"),
-        *[F.col(f"{m}_u").alias(f"{m}_u") for m in MEASURES],
-    )
-    end = F.struct(
-        F.col("end_ms").alias("ts_ms"),
-        F.lit(-1).alias("sign"),
-        *[(-F.col(f"{m}_u")).alias(f"{m}_u") for m in MEASURES],
-    )
-    return quantized.select(
-        F.col("seq"), *[F.col(k) for k in keys], F.inline(F.array(start, end))
+
+    def endpoint(ts: str, sign: int) -> str:
+        neg = "-" if sign < 0 else ""
+        fields = [f"'ts_ms', {ts}", f"'sign', {sign}"] + [
+            f"'{m}_u', {neg}{_micro_sql(expr, 'D')}" for m, expr in _RAW_MEASURES.items()
+        ]
+        return f"named_struct({', '.join(fields)})"
+
+    return kept.selectExpr(
+        "seq",
+        *keys,
+        f"inline(array({endpoint('start_ms + admission_wait', 1)}, "
+        f"{endpoint('end_ms', -1)}))",
     )
 
 
@@ -120,16 +132,13 @@ sweep_events AS (
 """
 
 
-def running_sums(events: DataFrame) -> DataFrame:
-    """F2+F3: exact global running sums over the (ts_ms, seq, sign DESC)
-    total order, by :func:`segmented.segmented_cumsum` over time-range
-    buckets."""
-    order = [F.col("ts_ms").asc(), F.col("seq").asc(), F.col("sign").desc()]
-
+def _bucketed(events: DataFrame) -> DataFrame:
+    """Cache ``events`` and add ``bucket``: one of ``_N_BUCKETS`` uniform
+    time ranges, an ordering-consistent bucketing for the sweep order."""
     # The min/max agg is an eager action: without the cache it executes
     # the whole upstream pipeline once for the bucket bounds, and the
-    # local / totals branches below re-execute it twice more. Events are
-    # 2 rows × a handful of longs per query — the natural materialization.
+    # sweep re-executes it. Events are 2 rows × a handful of longs per
+    # query — the natural materialization.
     events = events.cache()
     lo, hi = events.agg(F.min("ts_ms"), F.max("ts_ms")).first()
     if lo is None:  # empty input: any constant bucketing is exact
@@ -143,12 +152,18 @@ def running_sums(events: DataFrame) -> DataFrame:
     # slices only affect partition balance, and at 100 TB the same
     # expression becomes calendar bucketing (fixed span = hour/day) with
     # no bounds action at all. AQE re-splits oversized buckets at runtime.
-    ev = events.withColumn(
+    return events.withColumn(
         "bucket", F.expr(f"CAST((ts_ms - {lo}) DIV {span} AS INT)")
     )
 
+
+def running_sums(events: DataFrame) -> DataFrame:
+    """F2+F3: exact global running sums over the (ts_ms, seq, sign DESC)
+    total order, by :func:`segmented.segmented_cumsum` over time-range
+    buckets."""
+    order = [F.col("ts_ms").asc(), F.col("seq").asc(), F.col("sign").desc()]
     running = segmented_cumsum(
-        ev,
+        _bucketed(events),
         "bucket",
         order,
         {
@@ -183,21 +198,56 @@ WINDOW w AS (ORDER BY ts_ms, seq, sign DESC ROWS UNBOUNDED PRECEDING)
 """
 
 
-def sweep_maxima(running: DataFrame) -> DataFrame:
-    """F4: conditional running maxima — only start events update maxima
-    (:381-396); max-pods timestamp uses ``>=`` → *latest* tie wins."""
-    starts = running.filter(F.col("sign") > 0)
-    return starts.agg(
-        F.max("run_queries").alias("max_concurrent_queries"),
-        F.max("run_pods").alias("max_pods_workload"),
-        F.max("run_cache").alias("max_concurrent_cache"),
-        F.max("run_mem").alias("max_concurrent_memory"),
-        F.max("run_cpu").alias("max_concurrent_cores"),
-        F.max("run_spill").alias("max_concurrent_spill"),
-        F.max("run_data_rate").alias("max_concurrent_data_rate"),
-        F.max_by(
-            F.col("ts_ms"), F.struct(F.col("run_pods"), F.col("event_pos"))
-        ).alias("max_pods_workload_ts_ms"),
+def sweep_maxima(events: DataFrame) -> DataFrame:
+    """F4: conditional running maxima of the :func:`explode_events` rows —
+    only start events update maxima (:381-396); the max-pods timestamp
+    uses ``>=`` → *latest* tie wins.
+
+    Per bucket, one window gives the local running sums and one aggregate
+    keeps the bucket totals, the local maxima at start events and the
+    local max-pods event ``(run_pods, pos, ts_ms)``. The totals give each
+    bucket's carry-in; a maximum is then ``max(local + carry)`` over
+    buckets. Sums stay exact decimals until one final division, and
+    ``CAST(x AS DOUBLE) / 1e6`` is monotone, so each maximum equals the
+    maximum of ``running_sums``' doubles. The timestamp follows
+    ``SWEEP_MAXIMA_SQL``'s order (``run_pods``, ``event_pos``): the same
+    double ``run_pods``, then (bucket, local position), which is the
+    global position. Inside one bucket the local maximum is taken on the
+    exact sum; that picks the same event unless two distinct sums in the
+    bucket round to one double, which needs a running pod sum above
+    2^33."""
+    win = "PARTITION BY bucket ORDER BY ts_ms, seq, sign DESC"
+    frame = f"OVER ({win} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    sums = {"queries": "CAST(sign AS BIGINT)"} | {
+        m: f"CAST({m}_u AS {DEC0})" for m in MEASURES
+    }
+    local = _bucketed(events).selectExpr(
+        "bucket", "ts_ms", "sign",
+        *[f"{x} AS {n}" for n, x in sums.items()],
+        *[f"sum({x}) {frame} AS run_{n}" for n, x in sums.items()],
+        f"row_number() OVER ({win}) AS pos",
+    )
+    per_bucket = local.groupBy("bucket").agg(
+        *[F.expr(f"sum({n}) AS {n}") for n in sums],
+        *[F.expr(f"max(CASE WHEN sign > 0 THEN run_{n} END) AS max_{n}") for n in sums],
+        F.expr("max(CASE WHEN sign > 0 THEN struct(run_pods, pos, ts_ms) END) AS top"),
+    )
+
+    def lifted(n: str) -> str:
+        return f"max(max_{n} + carry_{n})"
+
+    return (
+        bucket_carry(per_bucket, "bucket", list(sums))
+        .where("top IS NOT NULL")
+        .selectExpr(
+            f"{lifted('queries')} AS max_concurrent_queries",
+            *[
+                f"CAST({lifted(m)} AS DOUBLE) / {_SCALE!r}D AS {out}"
+                for m, out in _MAXIMA_NAMES.items()
+            ],
+            f"max_by(top.ts_ms, struct(CAST(top.run_pods + carry_pods AS DOUBLE)"
+            f" / {_SCALE!r}D, bucket, top.pos)) AS max_pods_workload_ts_ms",
+        )
     )
 
 

@@ -14,21 +14,20 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from ..config import SizingParams
-from ..operators.aggregates import argmax_query, size_matrix, summarize, utilization
 from ..operators.classify import classify
 from ..operators.derive import derive
 from ..operators.route import RoutedPlan, route
-from ..operators.sweep import explode_events, running_sums, sweep_maxima
+from ..operators.sweep import explode_events, sweep_maxima
 
 
 @dataclass
 class SizingResult:
+    """The pipeline's branches. The G-values are not a field: the report
+    reads them with one aggregate over ``routed.derived``
+    (``aggregates.report_aggregate``)."""
+
     routed: RoutedPlan
     classified_kept: DataFrame
-    summary: DataFrame          # single row: G1-G3, G6, G8
-    argmax: DataFrame           # single row: G4
-    matrix: DataFrame           # long-form size × dim counts (G5)
-    utilization: DataFrame      # single row: G7
     sweep_maxima: DataFrame     # single row (F4)
 
 
@@ -90,21 +89,11 @@ def run_api_sizing(
 
 def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
     routed = route(query_history, params, derive)
-    classified_kept = classify(routed.kept)
-    # G1 counts the cached derived table (row-equal to accepted) so the
-    # count doesn't re-derive from source; the 1-row summary is itself
-    # cached because three consumers read it (reports, utilization,
-    # workload-size lookup)
-    summary = summarize(routed.kept, routed.derived).cache()
-    # running_sums caches the exploded events itself: its eager
-    # bucket-bounds pass and both sweep branches read them
-    running = running_sums(explode_events(routed.kept))
+    # sweep_maxima caches the exploded events itself: its eager
+    # bucket-bounds pass materializes them, and the cached derived table
+    # under them, before the report reads both
     return SizingResult(
         routed=routed,
-        classified_kept=classified_kept,
-        summary=summary,
-        argmax=argmax_query(routed.kept),
-        matrix=size_matrix(classified_kept),
-        utilization=utilization(summary, params),
-        sweep_maxima=sweep_maxima(running),
+        classified_kept=classify(routed.kept),
+        sweep_maxima=sweep_maxima(explode_events(routed.kept)),
     )

@@ -2,11 +2,12 @@
 
 The reference prints five formatted text sections
 (``impala_query_sizing.py:399-458``). Their values are computed in one
-place, :func:`collect_report_values`. The CLI and EP1 render the
-collected struct with :func:`format_reports`; the declared
-``sizing_report_values`` query turns the same struct into one row with
-:func:`report_values_df`, so the DuckDB oracle checks exactly the values
-the CLI prints (SURVEY §7.3.4). The text rendering is a
+place, :func:`collect_report_values`, from two concurrent reads: the
+single-row report aggregate (G1-G8) and the sweep maxima (F4). The CLI
+and EP1 render the collected struct with :func:`format_reports`; the
+declared ``sizing_report_values`` query turns the same struct into one
+row with :func:`report_values_df`, so the DuckDB oracle checks exactly
+the values the CLI prints (SURVEY §7.3.4). The text rendering is a
 faithful-but-fixed presentation: ``constrained_by`` is in canonical dim
 order, where the reference iterates a set literal at ``:431``, which is
 nondeterministic.
@@ -19,10 +20,11 @@ from typing import Any
 
 from ..config import SizingParams
 from ..functions import round2_py
+from ..operators.aggregates import MATRIX_DIMS, matrix_cell, report_aggregate
 from ..schemas import SIZE_ORDER
 from .pipeline import SizingResult
 
-DIM_ORDER = ["count", "cache", "mem", "cpu", "spill"]
+DIM_ORDER = list(MATRIX_DIMS)
 CONSTRAINT_DIMS = ["cache", "mem", "cpu", "spill"]
 
 # the declared ``sizing_report_values`` row: one column per printed value
@@ -56,14 +58,13 @@ def collect_report_values(
 ) -> ReportValues:
     """Every printed report value, collected to Python in one pass.
 
-    One sequential read, then six concurrent ones. The first collect
-    reads the cached 1-row summary and the workload size class on it,
-    which materializes the summary cache. The six other reads are
-    independent jobs over the summary, the derived cache and the events
-    cache (``running_sums`` materialized the last two inside
-    ``run_sizing``), so they are submitted from a small thread pool
-    (optimization guide §2.6: concurrent tiny jobs back-fill idle
-    executors instead of paying six scheduling latencies end to end).
+    Two concurrent reads, one row each: ``aggregates.report_aggregate``
+    over the cached derived table (G1-G8, with the workload size class
+    and the utilization on the same row) and the sweep maxima over the
+    cached events (F4). ``run_sizing`` materialized both caches, so the
+    reads are independent jobs; they are submitted from a two-thread
+    pool (optimization guide §2.6: concurrent tiny jobs back-fill idle
+    executors instead of paying their scheduling latencies end to end).
     Each submission inherits the caller's job group and other local
     properties, so the caller can count or cancel its jobs. Every job
     reads a deterministic frame, so completion order cannot change a
@@ -71,66 +72,39 @@ def collect_report_values(
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
-    from pyspark.sql import functions as F
 
-    from ..operators.classify import tsize_expr
-
-    # sequential: materializes the cached 1-row summary that the
-    # utilization job below re-reads; the workload size class rides
-    # along on the same row
-    summary = (
-        result.summary.select(
-            "*",
-            tsize_expr(F.col("min_executor_pod_workload")).alias("tsize_workload"),
-        )
-        .collect()[0]
-        .asDict()
-    )
+    report = report_aggregate(result.routed.derived, params)
     # captures the caller's local properties (job group included) now
-    inherit = inheritable_thread_target(result.summary.sparkSession)
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        def submit(fn):
-            return pool.submit(inherit(fn))
-
-        f_argmax = submit(result.argmax.collect)
-        # the heaviest job: running sums + maxima over the events cache
-        f_maxima = submit(result.sweep_maxima.collect)
-        f_util = submit(result.utilization.collect)
-        f_matrix = submit(result.matrix.collect)
-        f_pools = submit(result.routed.kept.select("pool").distinct().collect)
-        f_prune = submit(result.routed.pruned.count)
-        argmax = f_argmax.result()
+    inherit = inheritable_thread_target(report.sparkSession)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_report = pool.submit(inherit(report.collect))
+        f_maxima = pool.submit(inherit(result.sweep_maxima.collect))
+        agg = f_report.result()[0].asDict()
         maxima = f_maxima.result()[0].asDict()
-        util = f_util.result()[0].asDict()
-        matrix = {
-            (r.dim, r.tsize): r.n for r in f_matrix.result() if r.tsize is not None
-        }
-        pools = sorted(r.pool for r in f_pools.result())
-        prune_count = f_prune.result()
 
     counts = {
-        size: {dim: int(matrix.get((dim, size), 0)) for dim in DIM_ORDER}
+        size: {dim: agg[matrix_cell(dim, size)] for dim in DIM_ORDER}
         for size in SIZE_ORDER
     }
 
-    tsize_workload = summary["tsize_workload"]
+    tsize_workload = agg["tsize_workload"]
     constrained_by = [
         d for d in CONSTRAINT_DIMS if counts.get(tsize_workload, {}).get(d, 0) > 0
     ]
 
     return ReportValues(
         individual={
-            "total_queries": summary["total_queries"],
-            "total_query_time_sec": round2_py(summary["total_query_time"]),
-            "highest_resources_query_id": argmax[0].query_id if argmax else None,
-            "max_nodes": summary["max_backends"],
-            "max_cores_per_node": summary["max_vcores"],
-            "max_data_per_node_gb": summary["max_data"],
-            "max_spill_per_node_gb": summary["max_spill"],
-            "max_memory_per_node_gb": summary["max_mem"],
-            "max_data_rate": summary["max_data_rate"],
-            "pools": pools,
-            "prune_count": prune_count,
+            "total_queries": agg["total_queries"],
+            "total_query_time_sec": round2_py(agg["total_query_time"]),
+            "highest_resources_query_id": agg["highest_resources_query_id"],
+            "max_nodes": agg["max_backends"],
+            "max_cores_per_node": agg["max_vcores"],
+            "max_data_per_node_gb": agg["max_data"],
+            "max_spill_per_node_gb": agg["max_spill"],
+            "max_memory_per_node_gb": agg["max_mem"],
+            "max_data_rate": agg["max_data_rate"],
+            "pools": agg["pools"],
+            "prune_count": agg["prune_count"],
             "pod_limit": params.pod_limit,
         },
         concurrent={
@@ -144,16 +118,14 @@ def collect_report_values(
         },
         cluster_sizing={
             "tsize_workload": tsize_workload,
-            "min_pods": summary["min_executor_pod_workload"],
+            "min_pods": agg["min_executor_pod_workload"],
             "max_pods": int(-(-(maxima["max_pods_workload"] or 0) // 1)),
             "constrained_by": constrained_by,
         },
         query_counts=counts,
         utilization={
-            "cache_util_pct": util["cache_util_pct"],
-            "mem_util_pct": util["mem_util_pct"],
-            "cpu_util_pct": util["cpu_util_pct"],
-            "spill_util_pct": util["spill_util_pct"],
+            name: agg[name]
+            for name in ("cache_util_pct", "mem_util_pct", "cpu_util_pct", "spill_util_pct")
         },
     )
 

@@ -8,13 +8,16 @@
 - B3 skipped list: ``id|duration|start|end|state``-style pipe-joined lines
   (``:198,341-344``).
 
+Each returned count comes from an ``Observation`` on the write itself,
+so counting costs no action of its own.
+
 Exact ``csv.QUOTE_NONNUMERIC`` byte-layout is an accepted divergence
 (SURVEY §2.B1): values are identical, quoting differs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -22,6 +25,14 @@ def write_csv(df: DataFrame, path: str) -> None:
     """Distributed CSV write with header. One directory of part files —
     the scale-correct layout (a single file would serialize the write)."""
     df.write.mode("overwrite").option("header", True).csv(path)
+
+
+def _counted_write(df: DataFrame, write) -> int:
+    """Run ``write(df)`` and return the rows it wrote, counted by an
+    ``Observation`` on the write itself instead of a second action."""
+    obs = Observation()
+    write(df.observe(obs, F.expr("count(1) AS rows")))
+    return obs.get["rows"]
 
 
 def write_sizing_outputs(
@@ -38,26 +49,21 @@ def write_sizing_outputs(
     ``kept``/``pruned`` must already carry ``output_cols`` (the 24-column
     contract); ``skipped`` needs query_id/duration_millis/start_ms/end_ms.
     """
-    kept_out = kept.select(*output_cols)
-    write_csv(kept_out, main_path)
-
-    prune_count = pruned.count()
-    if prune_count > 0:  # lazy-open mirror of :263-266
-        write_csv(pruned.select(*output_cols), pruned_path)
-
-    skipped_lines = skipped.select(
-        F.concat_ws(
-            "|",
-            F.col("query_id"),
-            F.col("duration_millis").cast("string"),
-            F.col("start_ms").cast("string"),
-            F.col("end_ms").cast("string"),
-        ).alias("value")
-    )
-    skipped_lines.write.mode("overwrite").text(skipped_path)
-
-    return {
-        "kept": kept_out.count(),
-        "pruned": prune_count,
-        "skipped": skipped_lines.count(),
+    counts = {
+        "kept": _counted_write(
+            kept.select(*output_cols), lambda df: write_csv(df, main_path)
+        ),
+        "pruned": 0,
     }
+    if not pruned.isEmpty():  # lazy-open mirror of :263-266
+        counts["pruned"] = _counted_write(
+            pruned.select(*output_cols), lambda df: write_csv(df, pruned_path)
+        )
+    skipped_lines = skipped.selectExpr(
+        "concat_ws('|', query_id, CAST(duration_millis AS STRING), "
+        "CAST(start_ms AS STRING), CAST(end_ms AS STRING)) AS value"
+    )
+    counts["skipped"] = _counted_write(
+        skipped_lines, lambda df: df.write.mode("overwrite").text(skipped_path)
+    )
+    return counts

@@ -20,11 +20,11 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 import pytest
 from impala_base_to_cdw_sizing_spark.config import SizingParams
 from impala_base_to_cdw_sizing_spark.operators.aggregates import (
+    report_aggregate,
     summarize,
     summarize_sql,
     utilization,
@@ -166,14 +166,13 @@ def test_param_injected_oracles_agree_on_fuzzed_params(spark):
         _assert_frames_equal("derive+classify", got, want)
 
         # 3. summarize with the param-dependent kept-split
-        kept = d.filter(F.col("min_executor_pod") <= params.pod_limit)
-        summary = summarize(kept, d)
-        got_s = summary.toPandas()
+        report = report_aggregate(d, params)
+        got_s = summarize(report).toPandas()
         want_s = con.execute(f"{prefix} {summarize_sql(params)}").fetch_df()
         _assert_frames_equal("summarize", got_s, want_s)
 
-        # 4. utilization percentages off the same summary
-        got_u = utilization(summary, params).toPandas()
+        # 4. utilization percentages off the same aggregate
+        got_u = utilization(report).toPandas()
         want_u = con.execute(
             f"{prefix}, summary AS ({summarize_sql(params)})"
             f" {utilization_sql(params)}"

@@ -9,6 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS, SizingParams
+from impala_base_to_cdw_sizing_spark.operators.aggregates import (
+    argmax_query,
+    report_aggregate,
+    size_matrix,
+    summarize,
+)
 from impala_base_to_cdw_sizing_spark.plans.pipeline import run_sizing
 
 QH_SCHEMA = (
@@ -64,6 +70,12 @@ def result(spark):
     return run_sizing(qh, DEFAULT_PARAMS)
 
 
+@pytest.fixture(scope="module")
+def report(result):
+    """The single-row report aggregate the report values come from."""
+    return report_aggregate(result.routed.derived, DEFAULT_PARAMS)
+
+
 def test_routing_counts(result):
     kept, pruned, skipped = _mini_oracle(DEFAULT_PARAMS)
     assert result.routed.kept.count() == len(kept)
@@ -71,25 +83,25 @@ def test_routing_counts(result):
     assert [r.query_id for r in result.routed.skipped.collect()] == skipped
 
 
-def test_total_queries_counts_pruned_rows(result):
+def test_total_queries_counts_pruned_rows(report):
     # G1: increment at :215 precedes prune at :262
     kept, pruned, _ = _mini_oracle(DEFAULT_PARAMS)
-    summary = result.summary.collect()[0]
+    summary = summarize(report).collect()[0]
     assert summary.total_queries == len(kept) + len(pruned)
 
 
-def test_argmax_earliest_tie_wins(result):
+def test_argmax_earliest_tie_wins(report):
     # q3 (seq 3) and q7 (seq 7) tie on pod demand; strict > keeps q3
     kept, _, _ = _mini_oracle(DEFAULT_PARAMS)
     best = max(kept, key=lambda r: (r["pod"], -r["seq"]))
-    assert result.argmax.collect()[0].query_id == best["qid"] == "q3"
+    assert argmax_query(report).collect()[0].query_id == best["qid"] == "q3"
 
 
-def test_utilization_asymmetry(result):
+def test_utilization_asymmetry(report):
     # total_query_time subtracts admission wait; util integrals use full
     # duration (impala_query_sizing.py:300-305)
     kept, _, _ = _mini_oracle(DEFAULT_PARAMS)
-    summary = result.summary.collect()[0]
+    summary = summarize(report).collect()[0]
     want_time = sum((r["dur"] - r["wait"]) / 1000.0 for r in kept)
     want_util_mem = sum(r["mem"] * r["dur_s"] for r in kept)
     assert summary.total_query_time == pytest.approx(want_time, rel=1e-9)
@@ -103,12 +115,12 @@ def test_pool_filter(spark):
     assert pools == {"etl"}
 
 
-def test_size_matrix_row_sums(result):
+def test_size_matrix_row_sums(result, report):
     # every kept row contributes exactly once per dimension
     kept_n = result.routed.kept.count()
     per_dim = {
         r.dim: r.total
-        for r in result.matrix.groupBy("dim").agg(F.sum("n").alias("total")).collect()
+        for r in size_matrix(report).groupBy("dim").agg(F.sum("n").alias("total")).collect()
     }
     assert per_dim == {d: kept_n for d in ("count", "cache", "mem", "cpu", "spill")}
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 import pytest
 from impala_base_to_cdw_sizing_spark.operators.classify import tsize_expr
@@ -50,7 +49,7 @@ def test_tsize_expr_matches_python_model(spark):
         df = _SPARK.createDataFrame([(x,) for x in xs], "x double")
         got = [
             r.label
-            for r in df.select(tsize_expr(F.col("x")).alias("label")).collect()
+            for r in df.select(tsize_expr("x").alias("label")).collect()
         ]
         want = [model_get_tsize(x) for x in xs]
         assert got == want
@@ -64,7 +63,6 @@ def test_sweep_concurrency_property(spark):
     overlap on hypothesis-generated intervals."""
     from impala_base_to_cdw_sizing_spark.operators.sweep import (
         explode_events,
-        running_sums,
         sweep_maxima,
     )
 
@@ -95,7 +93,7 @@ def test_sweep_concurrency_property(spark):
             for i, (s, d) in enumerate(intervals)
         ]
         kept = _SPARK.createDataFrame(rows, schema)
-        got = sweep_maxima(running_sums(explode_events(kept))).collect()[0]
+        got = sweep_maxima(explode_events(kept)).collect()[0]
         # brute force replicating the engine's total order exactly:
         # (ts, seq, sign DESC) — start before end only within a (ts, seq)
         events = sorted(

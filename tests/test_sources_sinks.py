@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
@@ -129,6 +130,86 @@ def test_sizing_sinks(spark, tmp_path: Path):
     assert skipped_line.count("|") == 3  # id|duration|start|end
     # lazy prune sink: dir exists iff pruned rows exist
     assert (tmp_path / "pruned").exists() == (counts["pruned"] > 0)
+
+
+def _csv_rows(out_dir: Path) -> int:
+    """Data rows of a Spark CSV directory: each part repeats the header."""
+    return sum(
+        max(0, len(p.read_text().splitlines()) - 1) for p in out_dir.glob("part-*")
+    )
+
+
+def _text_rows(out_dir: Path) -> int:
+    return sum(len(p.read_text().splitlines()) for p in out_dir.glob("part-*"))
+
+
+def _replay_history(spark, tmp_path: Path):
+    """The replay CLI's input shape: no ``has_mem_metric``, so the skip
+    route is ``df.limit(0)``."""
+    import csv
+
+    from impala_base_to_cdw_sizing_spark.plans.pipeline import prepare_query_history
+    from impala_base_to_cdw_sizing_spark.sources.files import read_query_history_csv
+    from tests.test_replay_cli import HEADER, ROWS
+
+    path = tmp_path / "history.csv"
+    with path.open("w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(HEADER)
+        w.writerows(ROWS)
+    return prepare_query_history(read_query_history_csv(spark, str(path)))
+
+
+@pytest.mark.parametrize("case", ["sf_small", "replay_no_skip_route", "nothing_pruned"])
+def test_sink_counts_equal_rows_written(spark, tmp_path: Path, case):
+    """Each returned count, observed on its write, equals the data rows in
+    that sink's directory; an empty route returns 0 without blocking."""
+    import threading
+
+    from impala_base_to_cdw_sizing_spark.config import SizingParams
+    from impala_base_to_cdw_sizing_spark.operators.classify import classify
+
+    if case == "replay_no_skip_route":
+        qh, params = _replay_history(spark, tmp_path), DEFAULT_PARAMS
+    else:
+        qh = query_history_from_events(spark, SF_SMALL)
+        # above every query's demand: no pruned row
+        params = SizingParams(pod_limit=10**9) if case == "nothing_pruned" else DEFAULT_PARAMS
+    res = run_sizing(qh, params)
+    dirs = {k: tmp_path / k for k in ("main", "pruned", "skipped")}
+    outcome: dict = {}
+
+    def write():
+        try:
+            outcome["counts"] = write_sizing_outputs(
+                kept=res.classified_kept,
+                pruned=classify(res.routed.pruned),
+                skipped=res.routed.skipped,
+                output_cols=["query_id", "pool", "min_executor_pod", "recommended_tsize"],
+                main_path=str(dirs["main"]),
+                pruned_path=str(dirs["pruned"]),
+                skipped_path=str(dirs["skipped"]),
+            )
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            outcome["error"] = e
+
+    writer = threading.Thread(target=write, daemon=True)
+    writer.start()
+    writer.join(timeout=300)
+    assert not writer.is_alive(), "write_sizing_outputs blocked"
+    if "error" in outcome:
+        raise outcome["error"]
+    counts = outcome["counts"]
+    assert counts == {
+        "kept": _csv_rows(dirs["main"]),
+        "pruned": _csv_rows(dirs["pruned"]),
+        "skipped": _text_rows(dirs["skipped"]),
+    }
+    assert counts["kept"] > 0
+    if case == "replay_no_skip_route":
+        assert counts["skipped"] == 0 and counts["pruned"] == 1
+    if case == "nothing_pruned":
+        assert counts["pruned"] == 0 and not dirs["pruned"].exists()
 
 
 def test_report_values_and_render(spark):

@@ -62,7 +62,7 @@ def test_sweep_matches_brute_force(spark):
     for seed in (1, 7, 42):
         rows = _random_kept(60, seed)
         kept = spark.createDataFrame(rows, KEPT_SCHEMA)
-        maxima = sweep_maxima(running_sums(explode_events(kept))).collect()[0]
+        maxima = sweep_maxima(explode_events(kept)).collect()[0]
         assert maxima.max_concurrent_queries == brute_force_max_concurrency(rows)
 
 
@@ -93,10 +93,7 @@ def python_running_sums(rows) -> list[tuple]:
     return out
 
 
-def test_segmented_equals_global(spark):
-    """The segmented sweep (per-bucket windows + carry-in) equals one
-    global running sum exactly, on input with many tied timestamps spread
-    over most of the buckets."""
+def _tied_rows() -> list[tuple]:
     rng = random.Random(99)
     rows = []
     for i in range(300):
@@ -112,6 +109,14 @@ def test_segmented_equals_global(spark):
                 round(rng.uniform(0, 10), 2), round(rng.uniform(0, 120), 2),
             )
         )
+    return rows
+
+
+def test_segmented_equals_global(spark):
+    """The segmented sweep (per-bucket windows + carry-in) equals one
+    global running sum exactly, on input with many tied timestamps spread
+    over most of the buckets."""
+    rows = _tied_rows()
     expect = python_running_sums(rows)
     ts = [e[1] for e in expect]
     assert len(set(ts)) < len(ts) // 4  # heavily tied
@@ -138,3 +143,18 @@ def test_end_events_cancel_to_zero(spark):
     assert last.run_queries == 0
     for m in ("run_pods", "run_cache", "run_mem", "run_cpu", "run_spill"):
         assert getattr(last, m) == 0.0, m
+
+
+def test_maxima_equal_global_running_maxima(spark):
+    """The per-bucket maxima equal the maxima of one global running sum
+    over the start events, and the max-pods timestamp is the latest event
+    holding the largest ``run_pods`` (``SWEEP_MAXIMA_SQL``'s order)."""
+    rows = _tied_rows()
+    starts = [e for e in python_running_sums(rows) if e[2] > 0]
+    want = (
+        max(e[3] for e in starts),
+        *[max(e[4 + i] for e in starts) for i in range(len(MEASURES))],
+        max(starts, key=lambda e: (e[4], e[-1]))[1],
+    )
+    kept = spark.createDataFrame(rows, KEPT_SCHEMA)
+    assert tuple(sweep_maxima(explode_events(kept)).collect()[0]) == want

@@ -71,7 +71,6 @@ def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
     collect_report_values(res, DEFAULT_PARAMS)
     elapsed = round(time.perf_counter() - t0, 3)
     res.routed.derived.unpersist()
-    res.summary.unpersist()
 
     def _parts(p: str) -> int:
         d = Path(p)
