@@ -241,13 +241,13 @@ _SIZING_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # rotating tier with ZERO slack, and every declared name is
 # driver-verified at least once per three rounds. 114 is the tiling
 # capacity: promoting a 115th rotating name breaks the guarantee
-# (test_extra_tier's coverage assert + its hypothesis tiling property
-# will fail), so further promotion requires a 4-round contract. The 16
+# (tests/test_rotation.py's coverage assert + its hypothesis tiling
+# property will fail), so further promotion requires a 4-round contract. The 16
 # names the r9 sample rotated out lead the canonical order, so the
 # round-10 window started with them. Contract history: 2-round/76
 # names r11-r12; widened r13 after verifying all 38 promotions at
-# sf0.01 (every name keeps pytest-tier oracle coverage every slow-tier
-# run regardless of rotation slot).
+# sf0.01 (tools/compare_oracle.py checks every name regardless of
+# rotation slot).
 _ROTATION_HEAD: tuple[str, ...] = (
     "rel_tpch_q3_topk", "rel_tpch_q5_star", "rel_tpch_q7_volume",
     "rel_tpch_q4_exists", "rel_tpch_q6_pushdown", "rel_tpch_q13_histogram",
@@ -330,9 +330,8 @@ def canonical_query_order() -> list[str]:
         list(_SIZING_QUERIES) + head + [n for n in ext if n not in set(head)]
     )
     consumers = {
-        "graph_ppr", "graph_pagerank", "graph_pagerank_conserving",
+        "graph_ppr", "graph_pagerank_conserving",
         "graph_triangles", "dedup_hybrid", "dedup_components",
-        "dedup_cluster_rep",
         # r13 promotion: the incremental (new-vs-corpus) dedup reads the
         # same plan-keyed sigs cache via _band_frame(_MH_FULL)
         "dedup_incremental",
@@ -488,20 +487,3 @@ def oracle_sql() -> dict[str, str]:
         base[n] = ext[n]
     return base
 
-
-# --- pytest-verified extra tier (NOT part of the driver contract) -------------
-# Companion queries (metric views, per-op views, variants with their own
-# oracle) live here and are oracle-checked by
-# tests/test_extra_tier.py with the same Spark-vs-DuckDB comparator
-# (tools/compare_oracle.py). The strongest flagships are hoisted into the
-# declared tier via queries_ext.PROMOTED (r8 verdict task 1) — queries()
-# above therefore reports 11 sizing rows, then the promoted flagships,
-# then the long-standing declared extensions.
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return queries_ext.extra_queries()
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    return queries_ext.extra_oracle_sql()

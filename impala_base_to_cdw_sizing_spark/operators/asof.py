@@ -240,54 +240,9 @@ def q_asof_view_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ASOF_NEAREST = """
-WITH tagged AS (
-  SELECT user_id, event_id, epoch_ns(ts) AS tns, 1 AS side
-  FROM events WHERE event_type = 'purchase'
-  UNION ALL
-  SELECT user_id, event_id, epoch_ns(ts) AS tns, 0 AS side
-  FROM events WHERE event_type = 'view'
-),
-back AS (
-  SELECT user_id, event_id, tns, side,
-    LAST_VALUE(CASE WHEN side = 0 THEN event_id END IGNORE NULLS)
-      OVER w AS b_id,
-    LAST_VALUE(CASE WHEN side = 0 THEN tns END IGNORE NULLS) OVER w AS b_ts
-  FROM tagged
-  WINDOW w AS (PARTITION BY user_id ORDER BY tns ASC, side ASC, event_id ASC
-               ROWS UNBOUNDED PRECEDING)
-),
-fwd AS (
-  SELECT user_id, event_id, side,
-    LAST_VALUE(CASE WHEN side = 0 THEN event_id END IGNORE NULLS)
-      OVER w AS f_id,
-    LAST_VALUE(CASE WHEN side = 0 THEN tns END IGNORE NULLS) OVER w AS f_ts
-  FROM tagged
-  WINDOW w AS (PARTITION BY user_id ORDER BY tns DESC, side ASC, event_id DESC
-               ROWS UNBOUNDED PRECEDING)
-)
-SELECT b.user_id, b.event_id AS purchase_id,
-  CASE WHEN b_id IS NULL THEN f_id WHEN f_id IS NULL THEN b_id
-    WHEN b.tns - b_ts <= f_ts - b.tns THEN b_id ELSE f_id END AS view_id,
-  CASE WHEN b_id IS NULL AND f_id IS NULL THEN CAST(NULL AS STRING)
-    WHEN b_id IS NULL THEN 'forward' WHEN f_id IS NULL THEN 'backward'
-    WHEN b.tns - b_ts <= f_ts - b.tns THEN 'backward'
-    ELSE 'forward' END AS direction,
-  CASE WHEN b_id IS NULL THEN f_ts - b.tns WHEN f_id IS NULL
-    THEN b_ts - b.tns WHEN b.tns - b_ts <= f_ts - b.tns THEN b_ts - b.tns
-    ELSE f_ts - b.tns END AS delta_ns
-FROM back b JOIN fwd f
-  ON b.user_id = f.user_id AND b.event_id = f.event_id AND f.side = 1
-WHERE b.side = 1
-"""
-
-
 def register_all() -> None:
     register("asof_view_before_purchase", q_asof_view_before_purchase, SQL_ASOF)
 
-    from .queries_ext import register_extra
-
-    register_extra(
+    register(
         "asof_view_after_purchase", q_asof_view_after_purchase, SQL_ASOF_FORWARD
     )
-    register_extra("asof_view_nearest", q_asof_view_nearest, SQL_ASOF_NEAREST)

@@ -37,18 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
-from .similarity import (
-    DIM,
-    DUCK_DOT,
-    DUCK_EMB,
-    N_QUERIES,
-    SQL_COSINE_TOPK,
-    TOP_K,
-    _emb,
-    _recall_vs_exact,
-    q_cosine_topk,
-)
+from .queries_ext import register
+from .similarity import DIM, DUCK_EMB, N_QUERIES, TOP_K, _emb
 
 _HALF = DIM // 2  # 32 dims per packed word
 
@@ -151,166 +141,5 @@ SELECT q_id, rank, c_id AS neighbor_id, hamming FROM (
 """
 
 
-def q_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion: fraction of the exact cosine top-3 the binary
-    scan returns — the acceptance number for the 64x-compressed first
-    stage (compare sim_sq8_recall's 8x point and sim_pq_recall's
-    trained 64x point on the same fixture)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_binary_hamming(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-SQL_BINARY_RECALL = f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_BINARY_HAMMING.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
-_OVERSAMPLE = 8 * TOP_K  # binary stage keeps 40 candidates per query
-_DUCK_NORM2 = DUCK_DOT.format(a="v", b="v")
-_DUCK_DOT_QC = DUCK_DOT.format(a="q.v", b="c.v")
-
-
-def q_binary_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production two-stage shape: binary Hamming scan keeps an
-    oversampled candidate set (8x the final k — the 16-byte index does
-    the heavy scan), then the exact cosine kernel re-ranks ONLY those
-    candidates. The float work drops from corpus-size to 40 rows per
-    query regardless of corpus size — the ``sim_pq_refine`` pattern on
-    the cheaper first stage."""
-    packed = _packed(spark, sf_dir)
-    q = packed.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS q_id", "w_lo AS q_lo", "w_hi AS q_hi"
-    )
-    cand = packed.selectExpr("vec_id AS c_id", "w_lo AS c_lo", "w_hi AS c_hi")
-    w_h = Window.partitionBy("q_id").orderBy(
-        F.col("hamming").asc(), F.col("c_id").asc()
-    )
-    shortlist = (
-        F.broadcast(q)
-        .crossJoin(cand)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "hamming",
-            F.expr(
-                "CAST(bit_count(q_lo ^ c_lo) + bit_count(q_hi ^ c_hi)"
-                " AS BIGINT)"
-            ),
-        )
-        .withColumn("hrk", F.row_number().over(w_h))
-        .filter(F.col("hrk") <= _OVERSAMPLE)
-        .select("q_id", "c_id")
-    )
-    emb = _emb(spark, sf_dir).withColumn(
-        "norm2", F.expr("aggregate(zip_with(v, v, (x, y) -> x * y),"
-                        " CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-    )
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).selectExpr(
-        "vec_id AS q_id", "v AS qv", "norm2 AS q_norm2"
-    )
-    cv = emb.selectExpr("vec_id AS c_id", "v AS cv", "norm2 AS c_norm2")
-    rescored = (
-        shortlist.join(F.broadcast(qv), "q_id")
-        .join(cv, "c_id")
-        .withColumn(
-            "cosine",
-            F.expr(
-                "aggregate(zip_with(qv, cv, (x, y) -> x * y),"
-                " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-            )
-            / F.sqrt(F.col("q_norm2") * F.col("c_norm2")),
-        )
-    )
-    w_c = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("c_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_c).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"), "cosine")
-    )
-
-
-SQL_BINARY_REFINE = f"""
-WITH {_SQL_PACKED},
-shortlist AS (
-  SELECT q_id, c_id FROM (
-    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        ORDER BY CAST(bit_count(xor(q.w_lo, c.w_lo))
-          + bit_count(xor(q.w_hi, c.w_hi)) AS BIGINT) ASC,
-          c.vec_id ASC) AS hrk
-    FROM packed q JOIN packed c
-      ON q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
-  ) WHERE hrk <= {_OVERSAMPLE}
-),
-normed AS (
-  SELECT vec_id, v, {_DUCK_NORM2} AS norm2 FROM emb
-),
-rescored AS (
-  SELECT s.q_id, s.c_id,
-    {_DUCK_DOT_QC} / sqrt(q.norm2 * c.norm2) AS cosine
-  FROM shortlist s
-  JOIN normed q ON q.vec_id = s.q_id
-  JOIN normed c ON c.vec_id = s.c_id
-)
-SELECT q_id, rank, c_id AS neighbor_id, cosine FROM (
-  SELECT q_id, c_id, cosine,
-    ROW_NUMBER() OVER (PARTITION BY q_id
-      ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM rescored
-) WHERE rank <= {TOP_K}
-"""
-
-
-def q_binary_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the two-stage binary+rerank pipeline vs the exact
-    top-3 — the number that justifies shipping the 64x-compressed scan
-    (contrast ``sim_binary_recall``: same index, no re-rank)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_binary_refine(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-SQL_BINARY_REFINE_RECALL = f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_BINARY_REFINE.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
 def register_all() -> None:
-    register_extra("sim_binary_hamming", q_binary_hamming, SQL_BINARY_HAMMING)
-    register_extra("sim_binary_recall", q_binary_recall, SQL_BINARY_RECALL)
-    register_extra("sim_binary_refine", q_binary_refine, SQL_BINARY_REFINE)
-    register_extra(
-        "sim_binary_refine_recall",
-        q_binary_refine_recall,
-        SQL_BINARY_REFINE_RECALL,
-    )
+    register("sim_binary_hamming", q_binary_hamming, SQL_BINARY_HAMMING)

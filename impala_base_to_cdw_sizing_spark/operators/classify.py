@@ -3,7 +3,7 @@
 The reference's ``get_tsize`` (``impala_query_sizing.py:71-84``) ceils its
 input and linearly scans a range-keyed dict. Here it is one ANSI ``CASE``
 text, :func:`tsize_case_sql`, generated from ``SIZE_BUCKET_ROWS``. Spark
-parses it with ``F.expr`` (:func:`tsize_expr`, :func:`classify`) and the
+parses it (:func:`classify`) and the
 DuckDB oracle embeds it (:func:`classify_cte`), so both engines evaluate
 the same text: a pure expression inside whole-stage codegen, zero
 shuffle, zero join. This is the 100 TB path.
@@ -22,7 +22,7 @@ shipped in the dimension table, never used by the sizing pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import SIZE_BUCKET_ROWS, size_buckets
@@ -42,12 +42,6 @@ def tsize_case_sql(x: str, dim: str = "pods") -> str:
         for lo, hi, label in _buckets(dim)
     )
     return f"(CASE {whens} ELSE NULL END)"
-
-
-def tsize_expr(x: str, dim: str = "pods") -> Column:
-    """:func:`tsize_case_sql` as a Spark Column: one parse on the JVM
-    instead of a when-chain built call by call from the driver."""
-    return F.expr(tsize_case_sql(x, dim))
 
 
 # output label → the pod-demand column it classifies

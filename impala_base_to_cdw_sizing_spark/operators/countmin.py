@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from .hashes import UHASH_COEFFS, uhash_expr
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import (
     DUCK_SHINGLES,
     DUCK_TOKENS,
@@ -248,5 +248,5 @@ WHERE rank <= {_HH_TOPK} OR exact_n > n_g / CAST({_HH_CAP} AS DOUBLE)
 
 
 def register_all() -> None:
-    register_extra("sketch_countmin_topk", q_countmin_heavy_hitters, SQL_COUNTMIN)
-    register_extra("sketch_heavyhitters_global", q_hh_global_batch, SQL_HH_GLOBAL)
+    register("sketch_countmin_topk", q_countmin_heavy_hitters, SQL_COUNTMIN)
+    register("sketch_heavyhitters_global", q_hh_global_batch, SQL_HH_GLOBAL)

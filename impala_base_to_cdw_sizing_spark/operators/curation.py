@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .kmeans import _assign, _cte_chain, _emb_norm, trained_centroids
-from .queries_ext import register_extra
+from .queries_ext import register
 from .segmented import ntile_expr, segmented_cumsum, segmented_row_number
 from .similarity import DUCK_DOT, SPARK_DOT
 from .text import DUCK_TOKENS, SPARK_TOKENS, duck_charfold, spark_charfold
@@ -552,72 +552,6 @@ def q_select_budget_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_select_budget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-aware budget selection — the composition a production
-    curation run actually wants: admit docs by quality until the budget
-    of EFFECTIVE tokens is spent, where a doc's effective cost is
-    ``n_tokens × soft-dedup mass`` (``q_dedup_soft``'s 1/n_copies
-    micro-weight). A text duplicated 7× costs its cluster one document's
-    tokens in total, so near-duplicate floods cannot eat the budget —
-    "pay for unique information, not bytes". Costs are exact BIGINT
-    micro-token units; the cumulative selection is
-    :func:`segmented.segmented_cumsum` over the same quality buckets as
-    ``q_select_budget_segmented``, gated by the DuckDB oracle's
-    sequential window."""
-    from .text import q_dedup_soft
-
-    weights = q_dedup_soft(spark, sf_dir).select("doc_id", "weight_micro")
-    scored = (
-        _spark_quality_frame(spark, sf_dir)
-        .join(weights, "doc_id")
-        .withColumn("bucket", _quality_bucket(16))
-        .withColumn(
-            "cost_micro", (F.col("n_tokens") * F.col("weight_micro")).cast("long")
-        )
-    )
-    budget = scored.agg(
-        F.floor(F.sum("cost_micro") * _BUDGET_FRAC).cast("long").alias("budget")
-    )
-    return (
-        segmented_cumsum(
-            scored, "bucket", _quality_order(),
-            {"cum_cost_micro": F.col("cost_micro")},
-        )
-        .crossJoin(F.broadcast(budget))
-        .selectExpr(
-            "doc_id", "n_tokens", "weight_micro", "quality_score",
-            "cum_cost_micro", "cum_cost_micro <= budget AS selected",
-        )
-    )
-
-
-def _sql_select_budget_dedup() -> str:
-    from .text import SQL_DEDUP_SOFT
-
-    return f"""
-WITH {_duck_quality_cte().strip()},
-soft AS ({SQL_DEDUP_SOFT.strip()}),
-costed AS (
-  SELECT q.doc_id, q.n_tokens, s.weight_micro, q.quality_score,
-    CAST(q.n_tokens * s.weight_micro AS BIGINT) AS cost_micro
-  FROM quality q JOIN soft s ON q.doc_id = s.doc_id
-),
-budget AS (
-  SELECT CAST(floor(SUM(cost_micro) * {_BUDGET_FRAC}) AS BIGINT) AS budget
-  FROM costed
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, weight_micro,
-  quality_score,
-  CAST(SUM(cost_micro) OVER (ORDER BY quality_score DESC, doc_id ASC
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-    AS cum_cost_micro,
-  CAST(SUM(cost_micro) OVER (ORDER BY quality_score DESC, doc_id ASC
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-    <= budget AS selected
-FROM costed, budget
-"""
-
-
 # --- quality strata ---------------------------------------------------------------
 
 _N_STRATA = 10
@@ -672,22 +606,17 @@ GROUP BY stratum
 
 
 def register_all() -> None:
-    register_extra("dedup_semantic", q_dedup_semantic, _sql_dedup_semantic())
-    register_extra("dedup_hybrid", q_dedup_hybrid, _sql_dedup_hybrid())
+    register("dedup_semantic", q_dedup_semantic, _sql_dedup_semantic())
+    register("dedup_hybrid", q_dedup_hybrid, _sql_dedup_hybrid())
     # the segmented decomposition IS the operator (r4 verdict #6, r7
     # verdict #1); each oracle runs the one-window DuckDB form, so the
     # two-phase bit-equality is oracle-gated.
-    register_extra(
+    register(
         "sample_importance", q_sample_importance_segmented, SQL_SAMPLE_IMPORTANCE
     )
-    register_extra(
+    register(
         "corpus_select_budget", q_select_budget_segmented, _sql_select_budget()
     )
-    register_extra(
-        "corpus_select_budget_dedup",
-        q_select_budget_dedup,
-        _sql_select_budget_dedup(),
-    )
-    register_extra(
+    register(
         "corpus_quality_strata", q_quality_strata_segmented, _sql_quality_strata()
     )

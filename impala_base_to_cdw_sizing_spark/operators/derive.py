@@ -27,19 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..config import SizingParams
+from ..config import DEFAULT_PARAMS, SizingParams
 from ..functions import ceil_long_sql, round2_sql
-
-# columns added by derive(), in output order
-DERIVED_COLUMNS = [
-    "duration_sec", "query_sla_sec", "min_parallelism",
-    "avg_vcores", "avg_mem", "avg_data", "avg_data_rate", "avg_spill",
-    "pod_cache_raw", "min_exec_pod_cache",
-    "pod_mem_raw", "min_exec_pod_mem",
-    "pod_cpu_raw", "min_exec_pod_cpu",
-    "pod_spill_raw", "min_exec_pod_spill",
-    "min_executor_pod_raw", "min_executor_pod",
-]
 
 
 def _derived_exprs(params: SizingParams, d: str) -> list[tuple[str, str]]:
@@ -78,6 +67,10 @@ def _derived_exprs(params: SizingParams, d: str) -> list[tuple[str, str]]:
         ("min_executor_pod_raw", pod_raw),
         ("min_executor_pod", ceil_long_sql(pod_raw)),
     ]
+
+
+# columns added by derive(), in output order
+DERIVED_COLUMNS = [n for n, _ in _derived_exprs(DEFAULT_PARAMS, "")]
 
 
 def derive(df: DataFrame, params: SizingParams) -> DataFrame:

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.files import load_events
-from .queries_ext import register_extra
+from .queries_ext import register
 
 _WEEK_NS = 7 * 24 * 3600 * 1_000_000_000
 
@@ -71,34 +71,6 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             " + CAST((purchase_ns IS NOT NULL) AS INT) AS stage_reached",
         )
     )
-
-
-SQL_FUNNEL_STEPS = """
-WITH ev AS (SELECT user_id, event_type, epoch_ns(ts) AS ns FROM events),
-views AS (
-  SELECT user_id, MIN(ns) AS view_ns FROM ev
-  WHERE event_type = 'view' GROUP BY user_id
-),
-clicks AS (
-  SELECT e.user_id, MIN(e.ns) AS click_ns
-  FROM ev e JOIN views v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ns > v.view_ns
-  GROUP BY e.user_id
-),
-purchases AS (
-  SELECT e.user_id, MIN(e.ns) AS purchase_ns
-  FROM ev e JOIN clicks c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ns > c.click_ns
-  GROUP BY e.user_id
-)
-SELECT u.user_id, v.view_ns, c.click_ns, p.purchase_ns,
-  CAST((v.view_ns IS NOT NULL) AS INT) + CAST((c.click_ns IS NOT NULL) AS INT)
-    + CAST((p.purchase_ns IS NOT NULL) AS INT) AS stage_reached
-FROM (SELECT DISTINCT user_id FROM ev) u
-LEFT JOIN views v ON u.user_id = v.user_id
-LEFT JOIN clicks c ON u.user_id = c.user_id
-LEFT JOIN purchases p ON u.user_id = p.user_id
-"""
 
 
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,23 +132,6 @@ def q_hourly_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"n * n_hours * {_SPIKE_DEN} > total * {_SPIKE_NUM} AS is_spike",
         )
     )
-
-
-SQL_HOURLY_SPIKES = f"""
-WITH hourly AS (
-  SELECT event_type, (epoch_ns(ts) // 1000000) // 3600000 * 3600000 AS hour_ms,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-per_type AS (
-  SELECT event_type, CAST(SUM(n) AS BIGINT) AS total,
-    CAST(COUNT(*) AS BIGINT) AS n_hours
-  FROM hourly GROUP BY 1
-)
-SELECT h.hour_ms, h.event_type, h.n,
-  h.n * p.n_hours * {_SPIKE_DEN} > p.total * {_SPIKE_NUM} AS is_spike
-FROM hourly h JOIN per_type p ON h.event_type = p.event_type
-"""
 
 
 # --- SCD2 interval reconstruction -------------------------------------------------
@@ -298,42 +253,6 @@ def q_hourly_spikes_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_HOURLY_SPIKES_MAD = """
-WITH hourly AS (
-  SELECT event_type, (epoch_ns(ts) // 1000000) // 3600000 * 3600000 AS hour_ms,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-med AS (
-  SELECT event_type, n AS med FROM (
-    SELECT event_type, n,
-      ROW_NUMBER() OVER (PARTITION BY event_type
-        ORDER BY n ASC, hour_ms ASC) AS rn,
-      COUNT(*) OVER (PARTITION BY event_type) AS cnt
-    FROM hourly
-  ) WHERE rn = (cnt + 1) // 2
-),
-dev AS (
-  SELECT h.event_type, h.hour_ms, abs(h.n - m.med) AS dev
-  FROM hourly h JOIN med m ON h.event_type = m.event_type
-),
-mad AS (
-  SELECT event_type, dev AS mad FROM (
-    SELECT event_type, dev,
-      ROW_NUMBER() OVER (PARTITION BY event_type
-        ORDER BY dev ASC, hour_ms ASC) AS rn,
-      COUNT(*) OVER (PARTITION BY event_type) AS cnt
-    FROM dev
-  ) WHERE rn = (cnt + 1) // 2
-)
-SELECT h.hour_ms, h.event_type, h.n, m.med, d.mad,
-  h.n > m.med + 3 * d.mad AS is_spike
-FROM hourly h
-JOIN med m ON h.event_type = m.event_type
-JOIN mad d ON h.event_type = d.event_type
-"""
-
-
 _BAND_MS = 60_000  # time-proximity window: |t_click - t_error| <= 60 s
 
 
@@ -349,7 +268,7 @@ def q_interval_join_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense integer key instead of |A|x|B| comparisons — the same
     banding that makes the stream-stream interval join's state
     bounded, applied to the batch plan. ``tests/test_plan_audit``-class
-    check: zero CartesianProduct (asserted for the whole extra tier).
+    check: zero CartesianProduct (asserted for the whole registry).
     The oracle states the range condition directly (DuckDB's IEJoin
     handles non-equi)."""
     ev = load_events(spark, sf_dir).selectExpr(
@@ -433,37 +352,6 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CHANGEPOINT_CUSUM = """
-WITH hourly AS (
-  SELECT event_type, (epoch_ns(ts) // 1000000) // 3600000 * 3600000 AS hour_ms,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-cusum AS (
-  SELECT event_type, hour_ms, n_hours, total,
-    n_hours * prefix - k * total AS c_scaled
-  FROM (
-    SELECT event_type, hour_ms,
-      CAST(SUM(n) OVER (PARTITION BY event_type ORDER BY hour_ms
-        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS prefix,
-      CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        ORDER BY hour_ms) AS BIGINT) AS k,
-      CAST(SUM(n) OVER (PARTITION BY event_type) AS BIGINT) AS total,
-      CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_hours
-    FROM hourly
-  )
-)
-SELECT event_type, hour_ms AS cp_hour_ms,
-  abs(c_scaled) AS cusum_abs_scaled, n_hours, total
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-    ORDER BY abs(c_scaled) DESC, hour_ms ASC) AS rn
-  FROM cusum
-) WHERE rn = 1
-ORDER BY event_type
-"""
-
-
 def q_hourly_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type linear trend of the hourly rate — closed-form OLS with
     EXACT integer sufficient statistics. x is the hour index from each
@@ -501,35 +389,6 @@ def q_hourly_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(sy AS DOUBLE) / n_hours"
         " - slope * (CAST(sx AS DOUBLE) / n_hours) AS intercept",
     )
-
-
-SQL_HOURLY_TREND_OLS = """
-WITH hourly AS (
-  SELECT event_type, epoch_ns(ts) // 1000000 // 3600000 AS hr,
-    CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2
-),
-base AS (SELECT event_type, MIN(hr) AS hr0 FROM hourly GROUP BY 1),
-xy AS (
-  SELECT event_type, CAST(hr - hr0 AS BIGINT) AS x, y
-  FROM hourly JOIN base USING (event_type)
-),
-sums AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_hours,
-    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-    CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(x * x) AS BIGINT) AS sxx
-  FROM xy GROUP BY 1
-)
-SELECT event_type, n_hours, sy, slope,
-  CAST(sy AS DOUBLE) / n_hours - slope * (CAST(sx AS DOUBLE) / n_hours)
-    AS intercept
-FROM (
-  SELECT *, CASE WHEN n_hours * sxx - sx * sx = 0 THEN NULL
-    ELSE CAST(n_hours * sxy - sx * sy AS DOUBLE)
-      / CAST(n_hours * sxx - sx * sx AS DOUBLE) END AS slope
-  FROM sums
-)
-"""
 
 
 def q_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,42 +438,6 @@ def q_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "day", "hod", "n", "baseline", "resid",
         "mad", "resid > 3 * mad AS is_anomaly",
     )
-
-
-SQL_SEASONAL_RESIDUALS = """
-WITH cells AS (
-  SELECT event_type, epoch_ns(ts) // 1000000 // 86400000 AS day,
-    (epoch_ns(ts) // 1000000 // 3600000) % 24 AS hod,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2, 3
-),
-base AS (
-  SELECT event_type, hod, n AS baseline FROM (
-    SELECT event_type, hod, day, n,
-      ROW_NUMBER() OVER (PARTITION BY event_type, hod
-        ORDER BY n ASC, day ASC) AS rn,
-      COUNT(*) OVER (PARTITION BY event_type, hod) AS cnt
-    FROM cells
-  ) WHERE rn = (cnt + 1) // 2
-),
-resid AS (
-  SELECT c.event_type, c.day, c.hod, c.n, b.baseline,
-    c.n - b.baseline AS resid
-  FROM cells c JOIN base b ON c.event_type = b.event_type AND c.hod = b.hod
-),
-mad AS (
-  SELECT event_type, hod, adev AS mad FROM (
-    SELECT event_type, hod, day, abs(resid) AS adev,
-      ROW_NUMBER() OVER (PARTITION BY event_type, hod
-        ORDER BY abs(resid) ASC, day ASC) AS rn,
-      COUNT(*) OVER (PARTITION BY event_type, hod) AS cnt
-    FROM resid
-  ) WHERE rn = (cnt + 1) // 2
-)
-SELECT r.event_type, r.day, r.hod, r.n, r.baseline, r.resid, m.mad,
-  r.resid > 3 * m.mad AS is_anomaly
-FROM resid r JOIN mad m ON r.event_type = m.event_type AND r.hod = m.hod
-"""
 
 
 _WF_NS = 24 * 3600 * 1_000_000_000  # windowFunnel horizon: 24 h
@@ -734,23 +557,11 @@ FROM hist, (SELECT SUM(n_users) AS n_total FROM hist) t
 
 
 def register_all() -> None:
-    register_extra("rel_scd2_intervals", q_scd2_intervals, SQL_SCD2_INTERVALS)
-    register_extra("rel_hourly_trend_ols", q_hourly_trend_ols, SQL_HOURLY_TREND_OLS)
-    register_extra(
-        "rel_seasonal_residuals", q_seasonal_residuals, SQL_SEASONAL_RESIDUALS
-    )
-    register_extra(
-        "rel_changepoint_cusum", q_changepoint_cusum, SQL_CHANGEPOINT_CUSUM
-    )
-    register_extra(
+    register("rel_scd2_intervals", q_scd2_intervals, SQL_SCD2_INTERVALS)
+    register(
         "rel_interval_join_banded",
         q_interval_join_banded,
         SQL_INTERVAL_JOIN_BANDED,
     )
-    register_extra(
-        "rel_hourly_spikes_mad", q_hourly_spikes_mad, SQL_HOURLY_SPIKES_MAD
-    )
-    register_extra("rel_funnel_steps", q_funnel_steps, SQL_FUNNEL_STEPS)
-    register_extra("rel_funnel_window", q_funnel_window, SQL_FUNNEL_WINDOW)
-    register_extra("rel_retention_cohorts", q_retention_cohorts, SQL_RETENTION_COHORTS)
-    register_extra("rel_hourly_spikes", q_hourly_spikes, SQL_HOURLY_SPIKES)
+    register("rel_funnel_window", q_funnel_window, SQL_FUNNEL_WINDOW)
+    register("rel_retention_cohorts", q_retention_cohorts, SQL_RETENTION_COHORTS)

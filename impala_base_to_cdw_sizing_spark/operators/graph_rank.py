@@ -3,11 +3,11 @@ style quality signal web-crawl curation pipelines attach to documents
 (connectivity-based importance, used alongside content quality scores
 when ranking a crawl frontier or weighting training data).
 
-``graph_pagerank``: 3 unrolled power iterations of damped PageRank over
-the symmetric MinHash near-dup graph (the same est_jaccard ≥ 0.5 edge
-cut ``dedup_components`` clusters). All arithmetic is INTEGER from end
-to end, so both engines agree bit-for-bit with no float-summation order
-dependence:
+``graph_pagerank_conserving``: 3 unrolled power iterations of damped
+PageRank over the symmetric MinHash near-dup graph (the same
+est_jaccard ≥ 0.5 edge cut ``dedup_components`` clusters). All
+arithmetic is INTEGER from end to end, so both engines agree
+bit-for-bit with no float-summation order dependence:
 
 - ranks live in nano-units, ``r0 = 10^9 div N``;
 - each edge u→v contributes ``(85 * r_u) div (100 * outdeg_u)``
@@ -15,15 +15,13 @@ dependence:
 - ``r' = (15 * 10^9) div (100 * N) + Σ contributions`` — a bigint sum,
   order-independent.
 
-Two variants: ``graph_pagerank`` (the fast path — isolated docs hold
-the teleport base rank and their damped mass leaks, fine when the
-consumer wants a centrality ORDERING) and ``graph_pagerank_conserving``
-(adds the dangling-mass redistribution term, one broadcast 1-row agg
-per round, rank sum EXACTLY 10⁹ nano-units after every round with a
-pinned remainder policy). Fixed-horizon iterations are the intended shape: curation
-wants a stable score, not a fixpoint certificate — 3 damped rounds
-already separate hubs from leaves on near-dup graphs, and the oracle
-replays the identical unrolled chain (pattern: ``kmeans_clusters``).
+A dangling-mass redistribution term (one broadcast 1-row agg per
+round) keeps the rank sum EXACTLY 10⁹ nano-units after every round,
+with a pinned remainder policy. Fixed-horizon iterations are the
+intended shape: curation wants a stable score, not a fixpoint
+certificate — 3 damped rounds already separate hubs from leaves on
+near-dup graphs, and the oracle replays the identical unrolled chain
+(pattern: ``kmeans_clusters``).
 
 Scale: per iteration one join (ranks × edges, both keyed on doc) + one
 sum aggregation — the classic distributed PageRank step. Rounds are a
@@ -35,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .smallplan import small_plan_mode
 from .text import _minhash_sql, q_dedup_minhash
 from ..sources.files import read_input
@@ -45,76 +43,14 @@ _N_ITERS = 3
 _DAMP_NUM, _DAMP_DEN = 85, 100  # 0.85 as an exact ratio
 
 
-def pagerank_ranks(
+def pagerank_ranks_conserving(
     edges: DataFrame, docs: DataFrame, n_iters: int = _N_ITERS
 ) -> DataFrame:
     """Exact-integer damped power iteration over ``edges`` (directed
     (doc_a → doc_b); pass both directions for undirected graphs) and
     ``docs`` (one ``doc_id`` per node) → (doc_id, rank_nano, outdeg).
     Ties in rank are real ties (equal integers), so the consumer's
-    ordering is deterministic without a float epsilon."""
-    edges = edges.cache()
-    outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
-    nodes = docs.join(
-        outdeg, docs.doc_id == outdeg.doc_a, "left"
-    ).select(
-        "doc_id", F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg")
-    ).cache()
-    n_docs = nodes.count()  # driver scalar: one count, reused each round
-    if n_docs == 0:
-        # empty corpus: empty ranks, not a ZeroDivisionError mid-plan
-        return nodes.selectExpr(
-            "doc_id", "CAST(0 AS BIGINT) AS rank_nano", "outdeg"
-        )
-    base = (15 * _NANO) // (_DAMP_DEN * n_docs)
-
-    ranks = nodes.select(
-        "doc_id", F.lit(_NANO // n_docs).cast("long").alias("rank_nano")
-    )
-    # Small-graph fast path (r15, guide §1.2/§2.4): the unrolled
-    # n_iters-round plan executes at the final localCheckpoint, and with
-    # AQE on every per-round shuffle becomes its own re-optimized query
-    # stage — pure re-planning overhead on sub-5k-row frames. The count
-    # materializes the cache (work round 1 would pay anyway) and gates
-    # small_plan_mode; at real scale the gate never fires.
-    n_edges = edges.count()
-    with small_plan_mode(edges.sparkSession, n_edges):
-        for _ in range(n_iters):
-            contrib = (
-                edges.join(ranks, edges.doc_a == ranks.doc_id)
-                .join(nodes.select(F.col("doc_id").alias("src"), "outdeg"),
-                      edges.doc_a == F.col("src"))
-                .selectExpr(
-                    "doc_b AS doc_id",
-                    f"({_DAMP_NUM} * rank_nano) div ({_DAMP_DEN} * outdeg) AS c",
-                )
-                .groupBy("doc_id")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                nodes.join(contrib, "doc_id", "left")
-                .selectExpr(
-                    "doc_id",
-                    f"CAST({base} + coalesce(in_sum, 0) AS BIGINT) AS rank_nano",
-                )
-            )
-        out = nodes.join(ranks, "doc_id").select(
-            "doc_id", "rank_nano", "outdeg"
-        )
-        # materialize before releasing the cached inputs the plan
-        # references (the dedup_components pattern): a long-lived session
-        # running the full registry must not accumulate per-query storage
-        # memory. Inside the gate: this action executes the whole loop.
-        out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
-
-
-def pagerank_ranks_conserving(
-    edges: DataFrame, docs: DataFrame, n_iters: int = _N_ITERS
-) -> DataFrame:
-    """Mass-conserving twin of :func:`pagerank_ranks`: the rank sum is
+    ordering is deterministic without a float epsilon. The rank sum is
     EXACTLY 10⁹ nano-units after every round. Per round, the leaked
     mass L = 10⁹ − Σ(base + in_sum) — dangling-node damped mass plus
     every truncating-division remainder — is measured with one global
@@ -124,7 +60,8 @@ def pagerank_ranks_conserving(
     remainder policy is pinned — deterministic, integer-exact, and
     mirrored by the oracle — rather than hidden in float round-off.
     The init is conserving too (10⁹ div N each, remainder to the lowest
-    id). Cost over the leaky variant: one broadcast 1-row agg per round."""
+    id). Cost over a plain power iteration: one broadcast 1-row agg per
+    round."""
     edges = edges.cache()
     outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
     nodes = docs.join(
@@ -145,9 +82,9 @@ def pagerank_ranks_conserving(
         f"CAST({_NANO // n_docs} + CASE WHEN doc_id = min_doc"
         f" THEN {_NANO % n_docs} ELSE 0 END AS BIGINT) AS rank_nano",
     )
-    # r15: same small-graph fast path as pagerank_ranks — here each
-    # round's pre-checkpoint executes inside the gate, so every round's
-    # shuffles skip the per-stage AQE re-planning
+    # r15: small-graph fast path — each round's pre-checkpoint executes
+    # inside the gate, so every round's shuffles skip the per-stage AQE
+    # re-planning
     n_edges = edges.count()
     with small_plan_mode(edges.sparkSession, n_edges):
         for _ in range(n_iters):
@@ -190,19 +127,6 @@ def pagerank_ranks_conserving(
     edges.unpersist()
     nodes.unpersist()
     return out
-
-
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = (
-        q_dedup_minhash(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    docs = read_input(spark, sf_dir, "documents").select("doc_id")
-    return pagerank_ranks(edges, docs)
 
 
 def q_graph_pagerank_conserving(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,31 +174,6 @@ def _sql_contrib(prev: str) -> str:
     JOIN nodes src ON e.doc_a = src.doc_id
     GROUP BY 1
   )"""
-
-
-def _sql_graph_pagerank() -> str:
-    head = (
-        _sql_head()
-        + ",\nrank0 AS MATERIALIZED (SELECT doc_id, (SELECT r0 FROM consts) AS rank_nano FROM nodes)"
-    )
-    its = []
-    prev = "rank0"
-    for i in range(1, _N_ITERS + 1):
-        its.append(f"""
-rank{i} AS MATERIALIZED (
-  SELECT n.doc_id,
-    CAST((SELECT base FROM consts) + COALESCE(s.in_sum, 0) AS BIGINT)
-      AS rank_nano
-  FROM nodes n LEFT JOIN {_sql_contrib(prev)} s ON n.doc_id = s.doc_id
-)""")
-        prev = f"rank{i}"
-    return (
-        head + "," + ",".join(its)
-        + f"""
-SELECT n.doc_id, r.rank_nano, n.outdeg
-FROM nodes n JOIN {prev} r ON n.doc_id = r.doc_id
-"""
-    )
 
 
 def _sql_graph_pagerank_conserving() -> str:
@@ -401,14 +300,15 @@ def ppr_ranks(
     edges: DataFrame, docs: DataFrame, n_iters: int = _N_ITERS
 ) -> DataFrame:
     """Personalized PageRank: same exact-integer damped power iteration
-    as :func:`pagerank_ranks`, but the teleport vector is concentrated
-    on a SEED set (``docs`` must carry ``is_seed`` 0/1) — "importance
-    relative to these documents", the seeded-relevance form crawl
-    curation uses to expand a trusted set. Init puts the full 10⁹
+    as :func:`pagerank_ranks_conserving`, but the teleport vector is
+    concentrated on a SEED set (``docs`` must carry ``is_seed`` 0/1) —
+    "importance relative to these documents", the seeded-relevance form
+    crawl curation uses to expand a trusted set. Init puts the full 10⁹
     nano-units uniformly on seeds (non-seeds start at 0); each round's
     teleport base ``(15·10⁹) div (100·|S|)`` lands only on seeds.
     Everything else — truncating-division contributions, order-free
-    BIGINT sums, leaky-variant semantics — is shared arithmetic."""
+    BIGINT sums — is shared arithmetic; dangling mass is not
+    redistributed."""
     edges = edges.cache()
     outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
     nodes = docs.join(
@@ -429,8 +329,8 @@ def ppr_ranks(
         f"CAST(CASE WHEN is_seed = 1 THEN {_NANO // n_seeds}"
         " ELSE 0 END AS BIGINT) AS rank_nano",
     )
-    # r15: same small-graph fast path as pagerank_ranks (the unrolled
-    # plan executes at the final localCheckpoint, inside the gate)
+    # r15: small-graph fast path (the unrolled plan executes at the
+    # final localCheckpoint, inside the gate)
     n_edges = edges.count()
     with small_plan_mode(edges.sparkSession, n_edges):
         for _ in range(n_iters):
@@ -527,11 +427,10 @@ FROM nodes n JOIN {prev} r ON n.doc_id = r.doc_id
 
 
 def register_all() -> None:
-    register_extra("graph_triangles", q_graph_triangles, _sql_graph_triangles())
-    register_extra("graph_pagerank", q_graph_pagerank, _sql_graph_pagerank())
-    register_extra(
+    register("graph_triangles", q_graph_triangles, _sql_graph_triangles())
+    register(
         "graph_pagerank_conserving",
         q_graph_pagerank_conserving,
         _sql_graph_pagerank_conserving(),
     )
-    register_extra("graph_ppr", q_graph_ppr, _sql_graph_ppr())
+    register("graph_ppr", q_graph_ppr, _sql_graph_ppr())

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..sources.files import load_events
 from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
-from .queries_ext import register_extra
+from .queries_ext import register
 
 _DAY_NS = 86_400_000_000_000
 
@@ -246,4 +246,4 @@ FROM mix_h
 
 
 def register_all() -> None:
-    register_extra("rel_entropy_jsd", q_entropy_jsd, SQL_ENTROPY_JSD)
+    register("rel_entropy_jsd", q_entropy_jsd, SQL_ENTROPY_JSD)

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register, register_extra
+from .queries_ext import register
 from .similarity import DIM, DUCK_DOT, DUCK_EMB, N_QUERIES, SPARK_DOT
 from ..memo import MEMO
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
@@ -365,4 +365,4 @@ SELECT q_id, cell_id, rank, c_id AS neighbor_id, cosine FROM (
 
 def register_all() -> None:
     register("kmeans_clusters", q_kmeans_assignments, _kmeans_sql())
-    register_extra("sim_ivf_trained", q_ivf_trained, _ivf_trained_sql())
+    register("sim_ivf_trained", q_ivf_trained, _ivf_trained_sql())

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
@@ -177,6 +177,6 @@ FROM (
 
 
 def register_all() -> None:
-    register_extra(
+    register(
         "text_bigram_perplexity", q_bigram_perplexity, SQL_BIGRAM_PERPLEXITY
     )

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from ..sources.files import load_events
 
 # backslash-free on purpose: Spark SQL string literals eat unknown
@@ -113,4 +113,4 @@ FROM picked WHERE rn_asc = 1
 
 
 def register_all() -> None:
-    register_extra("rel_golden_record", q_golden_record, SQL_GOLDEN_RECORD)
+    register("rel_golden_record", q_golden_record, SQL_GOLDEN_RECORD)

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .hashes import UHASH_COEFFS, uhash_expr
 from .sampling import _KNUTH, _M32  # the one shared deterministic coin
 from .text import DUCK_TOKENS, SPARK_TOKENS
@@ -318,10 +318,6 @@ def _spark_positions(h: str) -> str:
     return _positions(h, "array({pos})")
 
 
-def _duck_positions(h: str) -> str:
-    return _positions(h, "[{pos}]")
-
-
 def q_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe EVERY document against a Bloom filter built over the
     corpus half (even doc_ids). Members (even ids) must all hit — the
@@ -384,40 +380,8 @@ def q_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_BLOOM = f"""
-WITH docs AS (
-  SELECT doc_id, {DUCK_DIGEST} AS digest FROM documents
-),
-corpus AS (SELECT doc_id, digest FROM docs WHERE doc_id % 2 = 0),
-probes AS (SELECT doc_id, digest FROM docs),
-bloom AS (
-  SELECT pos // 32 AS word_idx, bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS word
-  FROM (SELECT unnest({_duck_positions('digest')}) AS pos FROM corpus)
-  GROUP BY 1
-),
-probe_bits AS (
-  SELECT doc_id, digest, pos // 32 AS word_idx, CAST(pos % 32 AS INT) AS bit
-  FROM (SELECT doc_id, digest, unnest({_duck_positions('digest')}) AS pos
-        FROM probes)
-),
-hits AS (
-  SELECT doc_id, digest,
-    SUM(CAST(COALESCE((word >> bit) % 2, 0) AS INT)) = {len(_BLOOM_HASHES)}
-      AS bloom_hit
-  FROM probe_bits LEFT JOIN bloom USING (word_idx)
-  GROUP BY doc_id, digest
-)
-SELECT h.doc_id, h.bloom_hit,
-  (c.digest IS NOT NULL) AS exact_dup,
-  (h.bloom_hit AND c.digest IS NULL) AS false_positive
-FROM hits h
-LEFT JOIN (SELECT DISTINCT digest FROM corpus) c ON h.digest = c.digest
-"""
-
-
 def register_all() -> None:
-    register_extra("mix_sources", q_mix_sources, SQL_MIX_SOURCES)
-    register_extra(
+    register("mix_sources", q_mix_sources, SQL_MIX_SOURCES)
+    register(
         "mix_sources_temperature", q_mix_sources_temperature, SQL_MIX_TEMPERATURE
     )
-    register_extra("dedup_bloom", q_dedup_bloom, SQL_DEDUP_BLOOM)

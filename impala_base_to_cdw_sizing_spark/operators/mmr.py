@@ -8,7 +8,7 @@ the top-10 shortlist maximizing
 
     λ·rel(c) − (1−λ)·max_{s∈selected} sim(c, s),   λ = 1/2
 
-The greedy loop is a FIXED 5-round unroll (the ``graph_pagerank``
+The greedy loop is a FIXED 5-round unroll (the ``graph_pagerank_conserving``
 pattern: bounded iteration count ⇒ both engines replay the identical
 chain; no driver-side loop, no collect): each round joins the
 remaining shortlist (≤10 rows/query) against the selected set
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .similarity import (
     DUCK_DOT,
     DUCK_EMB,
@@ -125,8 +125,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "redundancy",
             )
         )
-        # truncate lineage each round (the graph_pagerank pattern): the
-        # unrolled chain references `selected` three times per round
+        # truncate lineage each round (the graph_pagerank_conserving
+        # pattern): the unrolled chain references `selected` three times per round
         # (anti-join, penalty join, union), so without a checkpoint the
         # plan grows ~3^k — 294 exchanges for k=5 on a ≤10-row/query
         # frame, all planner overhead. `selected` is ≤ k rows/query.
@@ -138,7 +138,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mmr_sql() -> str:
     """The oracle: the identical 5-round greedy chain as unrolled CTEs
-    (the ``graph_pagerank`` SQL-builder pattern)."""
+    (the ``graph_pagerank_conserving`` SQL-builder pattern)."""
     rounds = []
     prev = "selset1"
     for k in range(2, _MMR_K + 1):
@@ -200,4 +200,4 @@ FROM {prev}
 
 
 def register_all() -> None:
-    register_extra("sim_mmr_rerank", q_mmr_rerank, _mmr_sql())
+    register("sim_mmr_rerank", q_mmr_rerank, _mmr_sql())

@@ -418,46 +418,6 @@ def _dhash_bmp(payload: bytes) -> str:
     return f"{h:016x}"
 
 
-def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image dedup by perceptual hash — the multimodal twin of
-    ``dedup_exact``: identical-LOOKING media dedups even when container
-    bytes differ (re-encode, metadata changes). Pipeline: synthesize a
-    real BMP per doc (``with_bmp_payload``), dHash it through the REAL
-    container parse in an Arrow ``mapInPandas`` kernel, hash-group the
-    64-bit perceptual hashes.
-
-    The oracle never sees the container: it recomputes every sampled
-    luma FROM THE SOURCE BYTES (the BMP raster is the doc's UTF-8 bytes
-    tiled — ASCII corpus, so ``ascii(substring(text, k+1, 1))`` is byte
-    k) and assembles the same 64 gradient bits in SQL. Parity therefore
-    cross-validates the entire encode → parse → sample → hash chain
-    against an independent from-source derivation — the strongest form
-    of the ``mm_decode_stub`` oracle-replay pattern.
-
-    Scale: payloads and hashes are one Arrow-batched narrow map (no
-    shuffle); the dedup is one 8-byte-key groupBy. Near-dup (hamming
-    ≤ k) banding composes exactly like ``dedup_simhash``'s 4x16-bit
-    band tables over the same 64 bits."""
-    docs = read_input(spark, sf_dir, "documents", ROWS_PER_TASK_HEAVY)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "phash": pdf["payload"].map(_dhash_bmp),
-                }
-            )
-
-    hashed = with_bmp_payload(docs).mapInPandas(
-        _batches, "doc_id long, phash string"
-    )
-    return hashed.groupBy("phash").agg(
-        F.min("doc_id").alias("keep_id"),
-        F.count("*").alias("n_copies"),
-    )
-
-
 # hamming near-dup over the perceptual hashes: 4 bands of 16 bits —
 # two near-identical images (hamming <= _PH_HAM_MAX) must agree on at
 # least one band whenever their flipped bits miss one of the 4 bands
@@ -585,17 +545,6 @@ lum AS (
 halves AS (
   SELECT doc_id, {halves[0]} AS hi, {halves[1]} AS lo FROM lum
 )"""
-
-
-def _phash_sql() -> str:
-    return f"""
-WITH {_phash_halves_ctes()},
-hashes AS (
-  SELECT doc_id, printf('%08x%08x', hi, lo) AS phash FROM halves
-)
-SELECT phash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-FROM hashes GROUP BY phash
-"""
 
 
 def _phash_neardup_sql() -> str:
@@ -730,14 +679,10 @@ FROM sums
 """
 
 
-
 def register_all() -> None:
     register("mm_meta", q_mm_meta, SQL_MM_META)
     register("mm_decode_stub", q_mm_decode, SQL_MM_DECODE)
-    from .queries_ext import register_extra
-
-    register_extra("mm_phash_dedup", q_mm_phash_dedup, _phash_sql())
-    register_extra(
+    register(
         "mm_phash_neardup", q_mm_phash_neardup, _phash_neardup_sql()
     )
-    register_extra("mm_resize", q_mm_resize, _resize_sql())
+    register("mm_resize", q_mm_resize, _resize_sql())

@@ -7,8 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .aggregates import dsum, dsum_sql
-from .queries_ext import register, register_extra
+from .aggregates import dsum_sql
+from .queries_ext import register
 from .segmented import ntile_expr, segmented_cumsum, segmented_row_number
 from ..sources.files import ROWS_PER_TASK_COLLAPSING, read_input
 
@@ -356,76 +356,6 @@ FROM interp GROUP BY l_returnflag
 """
 
 
-# --- window navigation functions ----------------------------------------------------
-
-
-def q_window_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first/last/nth_value, ntile, percent_rank, cume_dist over one
-    deterministic partition order."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") <= 2)
-    w = Window.partitionBy("l_suppkey").orderBy(
-        F.col("l_orderkey").asc(), F.col("l_linenumber").asc()
-    )
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return li.select(
-        "l_suppkey", "l_orderkey", "l_linenumber",
-        F.first("l_orderkey").over(wfull).alias("first_ok"),
-        F.last("l_orderkey").over(wfull).alias("last_ok"),
-        F.nth_value("l_orderkey", 3).over(wfull).alias("third_ok"),
-        F.ntile(4).over(w).cast("long").alias("quartile"),
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-    )
-
-
-SQL_WINDOW_NAVIGATION = """
-SELECT l_suppkey, l_orderkey, l_linenumber,
-  FIRST_VALUE(l_orderkey) OVER wf AS first_ok,
-  LAST_VALUE(l_orderkey) OVER wf AS last_ok,
-  NTH_VALUE(l_orderkey, 3) OVER wf AS third_ok,
-  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-  PERCENT_RANK() OVER w AS pct_rank,
-  CUME_DIST() OVER w AS cume
-FROM lineitem
-WHERE l_suppkey <= 2
-WINDOW
-  w AS (PARTITION BY l_suppkey ORDER BY l_orderkey ASC, l_linenumber ASC),
-  wf AS (PARTITION BY l_suppkey ORDER BY l_orderkey ASC, l_linenumber ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-"""
-
-
-# --- ordered array aggregation ---------------------------------------------------------
-
-
-def q_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """collect_list + sort + join — emitted as a delimited string so the
-    array content is hash-comparable across engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.array_join(
-            F.sort_array(F.collect_set("l_linestatus")), ","
-        ).alias("statuses"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_set("l_suppkey")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("suppliers"),
-    )
-
-
-SQL_ARRAY_AGG = """
-SELECT l_returnflag,
-  array_to_string(list_sort(list(DISTINCT l_linestatus)), ',') AS statuses,
-  array_to_string(
-    list_transform(list_sort(list(DISTINCT l_suppkey)), x -> CAST(x AS VARCHAR)),
-    ',') AS suppliers
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
 # --- correlated scalar subquery ----------------------------------------------------
 
 
@@ -458,150 +388,6 @@ WHERE c_acctbal > (
   WHERE i.c_mktsegment = outer_c.c_mktsegment
 )
 """
-
-
-# --- RANGE window frame (value-range sliding aggregate) --------------------------
-
-_30D_MS = 30 * 86_400_000
-
-
-def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-30-day per-customer order stats via a RANGE frame — the
-    frame boundary is a VALUE offset on the ordering column, not a row
-    count, so ties (same-day orders) are all peers of each other and the
-    result is deterministic without a tiebreak. The rolling sum runs in
-    DECIMAL so frame-internal addition order can't produce float drift
-    against the oracle."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_totalprice",
-        F.unix_millis(F.col("o_orderdate").cast("timestamp")).alias(
-            "orderdate_ms"
-        ),
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("orderdate_ms")
-        .rangeBetween(-_30D_MS, 0)
-    )
-    return orders.select(
-        "o_custkey", "o_orderkey", "orderdate_ms",
-        F.count("*").over(w).alias("n_orders_30d"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .over(w)
-        .cast("double")
-        .alias("spend_30d"),
-    )
-
-
-SQL_WINDOW_RANGE_FRAME = f"""
-SELECT o_custkey, o_orderkey, epoch_ms(o_orderdate) AS orderdate_ms,
-  COUNT(*) OVER w AS n_orders_30d,
-  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER w AS STRING) AS DOUBLE) AS spend_30d
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch_ms(o_orderdate)
-  RANGE BETWEEN {_30D_MS} PRECEDING AND CURRENT ROW)
-"""
-
-
-# --- upsert / snapshot merge (SCD apply without a table format) -------------------
-
-
-def q_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply a change batch (upserts + deletes) to a snapshot — the MERGE
-    INTO shape, expressed as a full outer join + per-row resolution so it
-    needs no transactional table format. Derived deterministically from
-    ``orders``: base = keys not ≡0 (mod 3); changes = keys ≡0 (mod 2)
-    with a 10% price bump, of which keys ≡0 (mod 7) are deletes. At
-    scale this is one co-partitioned shuffle join on the merge key (or
-    zero shuffles off bucketed tables — tests/test_bucketing.py)."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    base = orders.filter(F.col("o_orderkey") % 3 != 0)
-    changes = orders.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey",
-        (F.col("o_totalprice") * 1.1).alias("new_price"),
-        (F.col("o_orderkey") % 7 == 0).alias("is_delete"),
-    )
-    merged = base.alias("b").join(
-        changes.alias("c"), "o_orderkey", "full_outer"
-    )
-    return (
-        merged.filter(~F.coalesce("is_delete", F.lit(False)))
-        .select(
-            "o_orderkey",
-            F.coalesce("new_price", F.col("o_totalprice")).alias("price"),
-            F.when(
-                F.col("new_price").isNotNull()
-                & F.col("o_totalprice").isNotNull(),
-                "updated",
-            )
-            .when(F.col("new_price").isNotNull(), "inserted")
-            .otherwise("unchanged")
-            .alias("row_state"),
-        )
-    )
-
-
-SQL_UPSERT_SNAPSHOT = """
-WITH base AS (
-  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0
-),
-changes AS (
-  SELECT o_orderkey, o_totalprice * 1.1 AS new_price,
-    (o_orderkey % 7 = 0) AS is_delete
-  FROM orders WHERE o_orderkey % 2 = 0
-)
-SELECT COALESCE(b.o_orderkey, c.o_orderkey) AS o_orderkey,
-  COALESCE(c.new_price, b.o_totalprice) AS price,
-  CASE WHEN c.new_price IS NOT NULL AND b.o_totalprice IS NOT NULL THEN 'updated'
-       WHEN c.new_price IS NOT NULL THEN 'inserted'
-       ELSE 'unchanged' END AS row_state
-FROM base b FULL OUTER JOIN changes c ON b.o_orderkey = c.o_orderkey
-WHERE NOT COALESCE(c.is_delete, FALSE)
-"""
-
-
-# --- row provenance via metadata columns ----------------------------------------
-
-
-def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level provenance without a lineage system: every scan exposes
-    its source file through the hidden ``_metadata`` struct (DuckDB:
-    ``filename=true``), so per-file row accounting — the audit a
-    quarantine/backfill pipeline starts from — is a plain aggregation.
-    The multi-file case (per-file counts over a partitioned write) is
-    exercised in tests/test_catalog_formats.py; this registered form
-    audits three tables in one union."""
-    parts = []
-    for name in ("lineitem", "orders", "customer"):
-        parts.append(
-            _t(spark, sf_dir, name)
-            .select(F.col("_metadata.file_name").alias("file_name"))
-            .groupBy("file_name")
-            .agg(F.count("*").alias("n_rows"))
-            .withColumn("table_name", F.lit(name))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("table_name", "file_name", "n_rows")
-
-
-def _provenance_sql() -> str:
-    # The comparator's pre-registered views hide the source path, so the
-    # oracle pins the fixture layout's known single file per table
-    # (<table>.parquet) and verifies the counts — the Spark side is the
-    # one genuinely reading the hidden ``_metadata`` column, which is
-    # the behavior under test.
-    blocks = " UNION ALL ".join(
-        f"""
-  SELECT '{name}' AS table_name, '{name}.parquet' AS file_name,
-    COUNT(*) AS n_rows
-  FROM {name}"""
-        for name in ("lineitem", "orders", "customer")
-    )
-    return f"SELECT * FROM ({blocks})"
 
 
 # --- mergeable distinct-count sketches (HLL rollup) ------------------------------
@@ -667,250 +453,6 @@ SELECT e.event_type, e.exact_users, r.sum_daily_exact, r.n_days,
 FROM (SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
       FROM ev GROUP BY 1) e
 JOIN rolled r USING (event_type)
-"""
-
-
-# --- mergeable quantile rollup (equi-width histogram) ------------------------------
-
-_QHIST_BINS = 32
-
-
-def q_histogram_rollup_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quantile counterpart of ``rel_hll_rollup``: exact percentiles
-    cannot roll up (a global sort re-reads everything), so each day keeps
-    a ``_QHIST_BINS``-bin equi-width histogram of ``value`` and the
-    rollup MERGES histograms by summing bin counts — sketches are read,
-    events are re-scanned never. The median estimate from the merged
-    histogram (upper edge of the bin where cumulative mass crosses 1/2)
-    is then compared against the true lower median; the estimate's error
-    is mathematically < one bin width, emitted as the always-true
-    ``err_lt_width`` witness column.
-
-    Everything runs in integer micro-units (value quantized once,
-    bin = (v - vmin) DIV width with width an integer), so the estimate,
-    the exact median, and the error bound are bit-identical across
-    engines — no tolerance anywhere."""
-    from ..sources.files import load_events
-
-    ev = load_events(spark, sf_dir).selectExpr(
-        "event_type",
-        "(ts div 1000000000) div 86400 AS day",
-        "CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v",
-    )
-    stats = ev.groupBy("event_type").agg(
-        F.min("v").alias("vmin"),
-        F.max("v").alias("vmax"),
-        F.count("*").alias("n"),
-    )
-    binned = ev.join(F.broadcast(stats), "event_type").selectExpr(
-        "event_type", "day", "n", "vmin",
-        f"(vmax - vmin) DIV {_QHIST_BINS} + 1 AS width",
-        f"(v - vmin) DIV ((vmax - vmin) DIV {_QHIST_BINS} + 1) AS bin",
-    )
-    daily = binned.groupBy(
-        "event_type", "day", "bin", "n", "vmin", "width"
-    ).agg(F.count("*").alias("cnt"))
-    rolled = daily.groupBy("event_type", "bin", "n", "vmin", "width").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    est = (
-        rolled.withColumn("cum", F.sum("cnt").over(wcum))
-        .filter(F.col("cum") * 2 >= F.col("n"))
-        .groupBy("event_type", "n", "vmin", "width")
-        .agg(F.min("bin").alias("med_bin"))
-        .selectExpr(
-            "event_type", "n", "width",
-            "vmin + (med_bin + 1) * width - 1 AS est_p50_micro",
-        )
-    )
-    wmed = Window.partitionBy("event_type").orderBy("v", "day")
-    exact = (
-        ev.withColumn("rn", F.row_number().over(wmed))
-        .join(F.broadcast(stats.select("event_type", "n")), "event_type")
-        .filter(F.col("rn") == F.expr("(n + 1) DIV 2"))
-        .groupBy("event_type")
-        .agg(F.min("v").alias("exact_p50_micro"))
-    )
-    return est.join(exact, "event_type").selectExpr(
-        "event_type", "n", "est_p50_micro", "exact_p50_micro",
-        "abs(est_p50_micro - exact_p50_micro) < width AS err_lt_width",
-    )
-
-
-SQL_HISTOGRAM_ROLLUP = f"""
-WITH ev AS (
-  SELECT event_type, (epoch_ns(ts) // 1000000000) // 86400 AS day,
-    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v
-  FROM events
-),
-stats AS (
-  SELECT event_type, MIN(v) AS vmin, MAX(v) AS vmax,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM ev GROUP BY 1
-),
-binned AS (
-  SELECT e.event_type, e.day, s.n, s.vmin,
-    (s.vmax - s.vmin) // {_QHIST_BINS} + 1 AS width,
-    (e.v - s.vmin) // ((s.vmax - s.vmin) // {_QHIST_BINS} + 1) AS bin
-  FROM ev e JOIN stats s USING (event_type)
-),
-daily AS (
-  SELECT event_type, day, bin, n, vmin, width, COUNT(*) AS cnt
-  FROM binned GROUP BY 1, 2, 3, 4, 5, 6
-),
-rolled AS (
-  SELECT event_type, bin, n, vmin, width, CAST(SUM(cnt) AS BIGINT) AS cnt
-  FROM daily GROUP BY 1, 2, 3, 4, 5
-),
-est AS (
-  SELECT event_type, n, width,
-    vmin + (MIN(bin) + 1) * width - 1 AS est_p50_micro
-  FROM (
-    SELECT *, SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-    FROM rolled
-  ) WHERE cum * 2 >= n
-  GROUP BY event_type, n, vmin, width
-),
-exact AS (
-  SELECT event_type, MIN(v) AS exact_p50_micro FROM (
-    SELECT e.event_type, e.v, s.n,
-      ROW_NUMBER() OVER (PARTITION BY e.event_type ORDER BY e.v, e.day) AS rn
-    FROM ev e JOIN stats s USING (event_type)
-  ) WHERE rn = (n + 1) // 2
-  GROUP BY event_type
-)
-SELECT e.event_type, e.n, e.est_p50_micro, x.exact_p50_micro,
-  abs(e.est_p50_micro - x.exact_p50_micro) < e.width AS err_lt_width
-FROM est e JOIN exact x USING (event_type)
-"""
-
-
-# --- calendar semantics -----------------------------------------------------------
-
-
-def q_calendar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar arithmetic where engine conventions genuinely differ,
-    aligned explicitly (UTC session pinned in session.py):
-
-    - ISO day-of-week: Spark ``dayofweek`` is 1=Sunday, DuckDB ``dow``
-      is 0=Sunday — both normalize to ISO 1=Monday..7=Sunday;
-    - ISO week number (both engines implement ISO-8601 here);
-    - month-end clamping: +1 month from Jan 31 must land on the last
-      day of February in BOTH engines (Spark ``add_months``, DuckDB
-      ``date + INTERVAL``);
-    - ``date_trunc`` to month, surfaced as exact epoch millis.
-
-    Aggregated per (year, quarter) so the output is a small stable
-    frame while every order's date flows through the expressions."""
-    orders = _t(spark, sf_dir, "orders").selectExpr(
-        "o_orderkey",
-        "CAST(o_orderdate AS DATE) AS d",
-    )
-    per_day = orders.selectExpr(
-        "CAST(year(d) AS BIGINT) AS yr",
-        "CAST(quarter(d) AS BIGINT) AS qtr",
-        "((dayofweek(d) + 5) % 7) + 1 AS iso_dow",
-        "weekofyear(d) AS iso_week",
-        "unix_millis(CAST(date_trunc('month', d) AS TIMESTAMP)) AS month_start_ms",
-        "CAST(day(add_months(d, 1)) AS BIGINT) AS day_next_month",
-    )
-    return per_day.groupBy("yr", "qtr").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("iso_dow").alias("sum_iso_dow"),
-        F.sum("iso_week").alias("sum_iso_week"),
-        F.min("month_start_ms").alias("first_month_ms"),
-        F.max("month_start_ms").alias("last_month_ms"),
-        F.sum("day_next_month").alias("sum_day_next_month"),
-    )
-
-
-SQL_CALENDAR_FUNCS = """
-WITH per_day AS (
-  SELECT
-    CAST(year(d) AS BIGINT) AS yr,
-    CAST(quarter(d) AS BIGINT) AS qtr,
-    CAST(isodow(d) AS BIGINT) AS iso_dow,
-    CAST(weekofyear(d) AS BIGINT) AS iso_week,
-    epoch_ms(CAST(date_trunc('month', d) AS TIMESTAMP)) AS month_start_ms,
-    CAST(day(d + INTERVAL 1 MONTH) AS BIGINT) AS day_next_month
-  FROM (SELECT CAST(o_orderdate AS DATE) AS d FROM orders)
-)
-SELECT yr, qtr, CAST(COUNT(*) AS BIGINT) AS n,
-  CAST(SUM(iso_dow) AS BIGINT) AS sum_iso_dow,
-  CAST(SUM(iso_week) AS BIGINT) AS sum_iso_week,
-  MIN(month_start_ms) AS first_month_ms,
-  MAX(month_start_ms) AS last_month_ms,
-  CAST(SUM(day_next_month) AS BIGINT) AS sum_day_next_month
-FROM per_day
-GROUP BY yr, qtr
-"""
-
-
-# --- NULL semantics ---------------------------------------------------------------
-
-
-def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NULL-handling contract over a deterministically nulled column —
-    the fixtures carry no NULLs, so every other query's null paths are
-    structurally dead; this one makes them live. ``o_custkey % 7 == 3``
-    rows get a NULL price via NULLIF, then per order-priority:
-
-    - COUNT(*) vs COUNT(col) (nulls counted vs skipped),
-    - SUM/MIN ignoring NULLs (and their behavior on all-present groups),
-    - COALESCE fallback totals,
-    - null-SAFE equality counts (Spark ``<=>`` ≡ DuckDB
-      ``IS NOT DISTINCT FROM``) against a second nullable column —
-      the operator pair whose agreement is worth proving, since plain
-      ``=`` returns NULL and silently drops rows from a filter."""
-    orders = _t(spark, sf_dir, "orders").selectExpr(
-        "o_orderpriority",
-        "CASE WHEN o_custkey % 7 = 3 THEN CAST(NULL AS DOUBLE)"
-        " ELSE o_totalprice END AS price",
-        "CASE WHEN o_custkey % 11 = 3 THEN CAST(NULL AS DOUBLE)"
-        " ELSE o_totalprice END AS price2",
-    )
-    return orders.groupBy("o_orderpriority").agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.count("price").cast("long").alias("n_present"),
-        dsum(F.col("price")).alias("sum_present"),
-        F.min("price").alias("min_present"),
-        dsum(F.coalesce("price", F.lit(0.0))).alias("sum_coalesced"),
-        F.sum(F.col("price").eqNullSafe(F.col("price2")).cast("long")).alias(
-            "n_nullsafe_eq"
-        ),
-        F.sum((F.col("price") == F.col("price2")).cast("long")).alias(
-            "n_plain_eq"  # NULL comparisons fall out of the sum entirely
-        ),
-    )
-
-
-SQL_NULL_SEMANTICS = f"""
-WITH o AS (
-  SELECT o_orderpriority,
-    CASE WHEN o_custkey % 7 = 3 THEN CAST(NULL AS DOUBLE)
-         ELSE o_totalprice END AS price,
-    CASE WHEN o_custkey % 11 = 3 THEN CAST(NULL AS DOUBLE)
-         ELSE o_totalprice END AS price2
-  FROM orders
-)
-SELECT o_orderpriority,
-  CAST(COUNT(*) AS BIGINT) AS n_rows,
-  CAST(COUNT(price) AS BIGINT) AS n_present,
-  {dsum_sql('price')} AS sum_present,
-  MIN(price) AS min_present,
-  {dsum_sql('COALESCE(price, 0.0)')} AS sum_coalesced,
-  CAST(SUM(CASE WHEN price IS NOT DISTINCT FROM price2 THEN 1 ELSE 0 END)
-    AS BIGINT) AS n_nullsafe_eq,
-  CAST(SUM(CASE WHEN price = price2 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_plain_eq
-FROM o
-GROUP BY o_orderpriority
 """
 
 
@@ -988,49 +530,6 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-
-
-def _sql_incremental_rollup() -> str:
-    from .aggregates import dec_to_double_sql
-
-    mmin = _MERGE_MIN.format(a="min_s", b="min_d")
-    mmax = _MERGE_MAX.format(a="max_s", b="max_d")
-    return f"""
-WITH e AS (SELECT event_type, epoch_ns(ts) AS ts, value FROM events),
-snap AS (
-  SELECT event_type, COUNT(*) AS n_s,
-    SUM(CAST(value AS DECIMAL(38,6))) AS sum_s,
-    MIN(value) AS min_s, MAX(value) AS max_s
-  FROM e WHERE ts < {_INC_CUT_NS} GROUP BY 1
-),
-delta AS (
-  SELECT event_type, COUNT(*) AS n_d,
-    SUM(CAST(value AS DECIMAL(38,6))) AS sum_d,
-    MIN(value) AS min_d, MAX(value) AS max_d
-  FROM e WHERE ts >= {_INC_CUT_NS} GROUP BY 1
-),
-full_agg AS (
-  SELECT event_type, COUNT(*) AS n_f,
-    SUM(CAST(value AS DECIMAL(38,6))) AS sum_f,
-    MIN(value) AS min_f, MAX(value) AS max_f
-  FROM e GROUP BY 1
-),
-merged AS (
-  SELECT coalesce(s.event_type, d.event_type) AS event_type,
-    coalesce(n_s, 0) + coalesce(n_d, 0) AS n,
-    CAST(coalesce(sum_s, CAST(0 AS DECIMAL(38,6)))
-      + coalesce(sum_d, CAST(0 AS DECIMAL(38,6))) AS DECIMAL(38,6))
-      AS sum_dec,
-    {mmin} AS min_v, {mmax} AS max_v
-  FROM snap s FULL OUTER JOIN delta d ON s.event_type = d.event_type
-)
-SELECT event_type, n, {dec_to_double_sql('sum_dec')} AS sum_value,
-  min_v, max_v,
-  CAST(n = n_f AND sum_dec = sum_f AND min_v = min_f
-    AND max_v = max_f AS BIGINT) AS consistent
-FROM merged JOIN full_agg USING (event_type)
-ORDER BY event_type
-"""
 
 
 # --- distribution drift (population stability index) -------------------------------
@@ -1475,19 +974,6 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_MODE_PER_GROUP = """
-SELECT o_orderstatus, o_orderpriority AS mode_priority, n AS mode_n
-FROM (
-  SELECT o_orderstatus, o_orderpriority, n, ROW_NUMBER() OVER (
-    PARTITION BY o_orderstatus ORDER BY n DESC, o_orderpriority ASC) AS rk
-  FROM (
-    SELECT o_orderstatus, o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n
-    FROM orders GROUP BY 1, 2
-  )
-) WHERE rk = 1
-"""
-
-
 _ABC_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
 _ABC_DUCK_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
 _ABC_BUCKET_CENTS = 1_000_000  # $10k revenue buckets
@@ -1557,33 +1043,6 @@ def pareto_classes(rev: "DataFrame") -> "DataFrame":
             " ELSE 'C' END AS abc_class",
         )
     )
-
-
-SQL_PARETO_ABC = f"""
-WITH rev AS (
-  SELECT o_custkey, CAST(SUM({_ABC_DUCK_CENTS}) AS BIGINT) AS rev
-  FROM orders GROUP BY 1
-),
-cum AS (
-  SELECT o_custkey, rev,
-    CAST(SUM(rev) OVER (ORDER BY rev DESC, o_custkey ASC
-      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-    CAST(SUM(rev) OVER () AS BIGINT) AS total
-  FROM rev
-),
-classed AS (
-  SELECT o_custkey, rev,
-    CASE WHEN cum * 100 <= total * 80 THEN 'A'
-      WHEN cum * 100 <= total * 95 THEN 'B'
-      ELSE 'C' END AS abc_class,
-    total
-  FROM cum
-)
-SELECT abc_class, CAST(COUNT(*) AS BIGINT) AS n_customers,
-  CAST(SUM(rev) AS BIGINT) AS class_rev_cents,
-  CAST(SUM(rev) AS DOUBLE) / CAST(MAX(total) AS DOUBLE) AS rev_share
-FROM classed GROUP BY 1
-"""
 
 
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1708,34 +1167,6 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_LORENZ_DECILES = f"""
-WITH rev AS (
-  SELECT o_custkey, CAST(SUM({_ABC_DUCK_CENTS}) AS BIGINT) AS rev
-  FROM orders GROUP BY 1
-),
-tiled AS (
-  SELECT rev, CAST(NTILE(10) OVER (ORDER BY rev ASC, o_custkey ASC)
-    AS BIGINT) AS decile
-  FROM rev
-),
-per_tile AS (
-  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
-    CAST(SUM(rev) AS BIGINT) AS tile_rev
-  FROM tiled GROUP BY 1
-),
-cum AS (
-  SELECT a.decile, CAST(SUM(b.tile_rev) AS BIGINT) AS cum_rev
-  FROM per_tile a JOIN per_tile b ON b.decile <= a.decile
-  GROUP BY 1
-),
-grand AS (SELECT CAST(SUM(tile_rev) AS BIGINT) AS total FROM per_tile)
-SELECT decile, n_customers, tile_rev, cum_rev,
-  CAST(tile_rev AS DOUBLE) / CAST(total AS DOUBLE) AS tile_share,
-  CAST(cum_rev AS DOUBLE) / CAST(total AS DOUBLE) AS cum_share
-FROM per_tile JOIN cum USING (decile), grand
-"""
-
-
 def register_all() -> None:
     register("rel_correlated_subquery", q_correlated_subquery, SQL_CORRELATED)
     register("rel_exact_percentiles", q_exact_percentiles, SQL_EXACT_PERCENTILES)
@@ -1748,35 +1179,15 @@ def register_all() -> None:
     # case of rel_grouping_sets, PIVOT is demonstrated end-to-end by the
     # flagship sizing_size_matrix, array_agg by rel_scalar_funcs'
     # collection functions + text's collect paths
-    register_extra("rel_window_navigation", q_window_navigation, SQL_WINDOW_NAVIGATION)
-    register_extra("rel_array_agg", q_array_agg, SQL_ARRAY_AGG)
-    register_extra("rel_pivot", q_pivot, SQL_PIVOT)
-    register_extra("rel_unpivot", q_unpivot, SQL_UNPIVOT)
-    register_extra("rel_mode_per_group", q_mode_per_group, SQL_MODE_PER_GROUP)
-    register_extra("rel_pareto_abc", q_pareto_abc, SQL_PARETO_ABC)
-    register_extra("rel_gini", q_gini, SQL_GINI)
-    register_extra("rel_lorenz_deciles", q_lorenz_deciles, SQL_LORENZ_DECILES)
-    register_extra("rel_cube", q_cube, SQL_CUBE)
-    register_extra(
-        "rel_window_range_frame", q_window_range_frame, SQL_WINDOW_RANGE_FRAME
-    )
-    register_extra("rel_upsert_snapshot", q_upsert_snapshot, SQL_UPSERT_SNAPSHOT)
-    register_extra("rel_hll_rollup", q_hll_rollup, SQL_HLL_ROLLUP)
-    register_extra(
-        "rel_histogram_rollup_quantile",
-        q_histogram_rollup_quantile,
-        SQL_HISTOGRAM_ROLLUP,
-    )
-    register_extra("rel_null_semantics", q_null_semantics, SQL_NULL_SEMANTICS)
-    register_extra("rel_calendar_funcs", q_calendar_funcs, SQL_CALENDAR_FUNCS)
-    register_extra("rel_skyline", q_skyline, SQL_SKYLINE)
-    register_extra(
-        "rel_incremental_rollup", q_incremental_rollup, _sql_incremental_rollup()
-    )
-    register_extra(
+    register("rel_pivot", q_pivot, SQL_PIVOT)
+    register("rel_unpivot", q_unpivot, SQL_UNPIVOT)
+    register("rel_gini", q_gini, SQL_GINI)
+    register("rel_cube", q_cube, SQL_CUBE)
+    register("rel_hll_rollup", q_hll_rollup, SQL_HLL_ROLLUP)
+    register("rel_skyline", q_skyline, SQL_SKYLINE)
+    register(
         "rel_incremental_join_view",
         q_incremental_join_view,
         _sql_incremental_join_view(),
     )
-    register_extra("rel_drift_psi", q_drift_psi, _sql_drift_psi())
-    register_extra("rel_file_provenance", q_file_provenance, _provenance_sql())
+    register("rel_drift_psi", q_drift_psi, _sql_drift_psi())

@@ -1,5 +1,5 @@
 """Principal direction of the embedding cloud — power iteration over the
-centered covariance, unrolled like ``kmeans_clusters``/``graph_pagerank``
+centered covariance, unrolled like ``kmeans_clusters``/``graph_pagerank_conserving``
 so even this iterative linear-algebra op is DuckDB-oracle-checkable.
 
 The covariance matrix is never materialized (64x64 would be fine here,
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .similarity import DUCK_DOT, SPARK_DOT
 from ..sources.files import read_input
 
@@ -323,23 +323,6 @@ def _sql_pca_topk_ctes() -> list[str]:
     return c1_parts + parts
 
 
-def _sql_pca_topk() -> str:
-    prev = f"x2{_PCA_ROUNDS}"
-    return (
-        "WITH " + ",\n".join(_sql_pca_topk_ctes()) + f"""
-SELECT CAST(1 AS BIGINT) AS component, CAST(u.p - 1 AS BIGINT) AS pos,
-  v.xn1[u.p] AS loading_nano,
-  CAST(floor(v.nrm1 / w.n * 1000000.0 + 0.5) AS BIGINT) AS lambda_micro,
-  o.ortho_nano
-FROM v1 v, nrow w, ortho o, UNNEST(range(1, {DIM} + 1)) AS u(p)
-UNION ALL
-SELECT CAST(2 AS BIGINT), CAST(u.p - 1 AS BIGINT), x.xn[u.p],
-  CAST(floor(x.nrm / w.n * 1000000.0 + 0.5) AS BIGINT), o.ortho_nano
-FROM {prev} x, nrow w, ortho o, UNNEST(range(1, {DIM} + 1)) AS u(p)
-"""
-    )
-
-
 def q_emb_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA whitening in the top-2 principal subspace: each vector's
     coordinates along v1/v2, scaled by 1/sqrt(lambda_k) so both output
@@ -391,6 +374,5 @@ FROM cent c, v1 v, {prev} x, nrow w
 
 
 def register_all() -> None:
-    register_extra("emb_pca_power", q_pca_power, _sql_pca_power())
-    register_extra("emb_pca_topk", q_pca_topk, _sql_pca_topk())
-    register_extra("emb_whitening", q_emb_whitening, _sql_emb_whitening())
+    register("emb_pca_power", q_pca_power, _sql_pca_power())
+    register("emb_whitening", q_emb_whitening, _sql_emb_whitening())

@@ -20,7 +20,7 @@ Everything threshold-shaped is INTEGER arithmetic at τ = 1/2:
 The reported ``jaccard`` double is display-only; no float ever decides
 membership, so the result set is bit-identical cross-engine.
 
-``dedup_prefixfilter_stats`` measures WHY the operator exists: the
+tests/test_ppjoin.py measures WHY the operator exists: the
 prefix index generates orders of magnitude fewer candidate pairs than
 the df≤50 inverted index (`dedup_ngram_jaccard`'s generator) on the
 same corpus, while missing nothing above τ. Scale shape: the df join
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_SHINGLES, DUCK_TOKENS, SPARK_SHINGLES, SPARK_TOKENS, _docs
 
 # tau = 1/2: catches the corpus's injected near-dup pairs (J >= 0.8)
@@ -160,83 +160,5 @@ WHERE 3 * n_common >= n_a + n_b
 """
 
 
-def q_prefixfilter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row pruning report: prefix-index candidates vs the df≤50
-    inverted-index baseline vs verified results. The prune ratio is the
-    at-scale argument for the operator (fewer pairs ever materialize)."""
-    sh = _sh(spark, sf_dir)
-    n_prefix = _candidates(_prefix(sh)).count()
-    n_result = q_prefixfilter(spark, sf_dir).count()
-    exploded = sh.selectExpr("doc_id", "explode(shingles) AS shingle")
-    rare = (
-        exploded.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= 50)
-        .select("shingle")
-    )
-    ex_r = exploded.join(rare, "shingle")
-    a, b = ex_r.alias("a"), ex_r.alias("b")
-    n_baseline = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
-    return spark.createDataFrame(
-        [(int(n_prefix), int(n_baseline), int(n_result))],
-        "n_prefix_candidates BIGINT, n_baseline_candidates BIGINT,"
-        " n_result_pairs BIGINT",
-    ).selectExpr(
-        "n_prefix_candidates",
-        "n_baseline_candidates",
-        "n_result_pairs",
-        "CAST(n_prefix_candidates AS DOUBLE)"
-        " / CAST(n_baseline_candidates AS DOUBLE) AS candidate_ratio",
-    )
-
-
-SQL_PREFIXFILTER_STATS = f"""
-WITH {_SQL_COMMON},
-verified AS (
-  SELECT doc_a FROM (
-    SELECT c.doc_a,
-      CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT)
-        AS n_common,
-      CAST(len(sa.shingles) AS BIGINT) AS n_a,
-      CAST(len(sb.shingles) AS BIGINT) AS n_b
-    FROM cand c
-    JOIN sh sa ON sa.doc_id = c.doc_a
-    JOIN sh sb ON sb.doc_id = c.doc_b
-  ) WHERE 3 * n_common >= n_a + n_b
-),
-rare AS (SELECT shingle FROM dfreq WHERE df <= 50),
-ex_r AS (
-  SELECT e.doc_id, e.shingle FROM exploded e JOIN rare USING (shingle)
-),
-baseline AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM ex_r a JOIN ex_r b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-)
-SELECT n_prefix_candidates, n_baseline_candidates, n_result_pairs,
-  CAST(n_prefix_candidates AS DOUBLE)
-    / CAST(n_baseline_candidates AS DOUBLE) AS candidate_ratio
-FROM (
-  SELECT
-    (SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_prefix_candidates,
-    (SELECT CAST(COUNT(*) AS BIGINT) FROM baseline)
-      AS n_baseline_candidates,
-    (SELECT CAST(COUNT(*) AS BIGINT) FROM verified) AS n_result_pairs
-)
-"""
-
-
 def register_all() -> None:
-    register_extra("dedup_prefixfilter", q_prefixfilter, SQL_PREFIXFILTER)
-    register_extra(
-        "dedup_prefixfilter_stats", q_prefixfilter_stats, SQL_PREFIXFILTER_STATS
-    )
+    register("dedup_prefixfilter", q_prefixfilter, SQL_PREFIXFILTER)

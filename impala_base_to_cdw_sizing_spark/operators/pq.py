@@ -23,10 +23,9 @@ map. Determinism: normalization, sub-space folds, and the 8-term ADC sum
 all run in fixed index order in both engines; argmin code assignment
 tie-breaks on the lowest code via lexicographic struct/ROW min.
 
-Accuracy is measured, not asserted: ``sim_pq_recall`` reports recall@3
-vs the exact cosine top-3 (the ``sim_lsh_recall`` pattern), and
-``tests/test_pq.py`` pins codes in range, the 64x compression ratio,
-and the ADC-vs-exact rank agreement on the self-match.
+Accuracy is measured, not assumed: ``tests/test_pq.py`` pins codes in
+range, the 64x compression ratio, the ADC-vs-exact rank agreement on
+the self-match, and a recall@3 floor against the exact cosine top-3.
 """
 
 from __future__ import annotations
@@ -34,16 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
-from .similarity import (
-    DUCK_DOT,
-    N_QUERIES,
-    SPARK_DOT,
-    SQL_COSINE_TOPK,
-    _emb,
-    _recall_vs_exact,
-    q_cosine_topk,
-)
+from .queries_ext import register
+from .similarity import DUCK_DOT, N_QUERIES, SPARK_DOT, _emb
 
 _M = 8  # subspaces
 _SUBD = 8  # dims per subspace (8 x 8 = 64)
@@ -129,15 +120,9 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.join(codes, "vec_id").localCheckpoint(eager=True)
 
 
-def _adc_scored(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    """Every (query, candidate) pair with its ADC score — the shared
-    core of the ADC-only, refined, and multi-probe searches. With
-    ``nprobe > 1`` the QUERY side fans out to its ``nprobe``
-    highest-inner-product coarse cells (the ``sim_ivf_multiprobe``
-    shape); candidates stay routed by their single home cell, so each
-    candidate can appear in at most one probed cell and the pair set
-    for ``nprobe = n`` is a superset of ``nprobe = 1``'s, bounded by
-    ``n×`` the single-probe candidate budget."""
+def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every (query, candidate) pair of the query's home cell with its
+    ADC score."""
     emb = _normalized(spark, sf_dir)
     index = _pq_index(spark, sf_dir)
     seeds = emb.filter(F.col("vec_id") < _K).selectExpr("vec_id AS code", "v AS sv")
@@ -163,27 +148,7 @@ def _adc_scored(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
             ]
         )
     )
-    if nprobe == 1:
-        q = luts.join(
-            index.selectExpr("vec_id AS q_id", "cell_id"), "q_id"
-        )
-    else:
-        cellseeds = emb.filter(F.col("vec_id") < _N_CELLS).selectExpr(
-            "vec_id AS cell_id", "v AS cv"
-        )
-        wprobe = Window.partitionBy("q_id").orderBy(
-            F.col("ip").desc(), F.col("cell_id").asc()
-        )
-        qcells = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .selectExpr("vec_id AS q_id", "v AS qv")
-            .crossJoin(F.broadcast(cellseeds))
-            .withColumn("ip", F.expr(SPARK_DOT.format(a="qv", b="cv")))
-            .withColumn("r", F.row_number().over(wprobe))
-            .filter(F.col("r") <= nprobe)
-            .select("q_id", "cell_id")
-        )
-        q = luts.join(qcells, "q_id")
+    q = luts.join(index.selectExpr("vec_id AS q_id", "cell_id"), "q_id")
     adc = " + ".join(
         f"element_at(lut{m}, CAST(c{m} + 1 AS INT))" for m in range(_M)
     )
@@ -194,21 +159,6 @@ def _adc_scored(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
     )
 
 
-def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ search: ADC top-3 per query within the query's coarse cell.
-    Output ``(q_id, rank, neighbor_id, adc_ip)`` — ``adc_ip`` is the
-    quantized inner product (the ranking key), not the exact cosine."""
-    scored = _adc_scored(spark, sf_dir)
-    wtop = Window.partitionBy("q_id").orderBy(
-        F.col("adc_ip").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wtop).cast("long"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"), "adc_ip")
-    )
-
-
 _REFINE_R = 32  # ADC shortlist size fed to the exact re-rank
 
 
@@ -216,29 +166,14 @@ def q_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF-PQ shape (FAISS ``IndexRefine``): ADC shortlists
     the top ``_REFINE_R`` candidates per query from the compressed index,
     then ONLY those rows read their raw vectors for an exact cosine
-    re-rank of the top-3. Chosen by measurement (``sim_pq_refine_recall``
-    vs ``sim_pq_recall``): ADC-only recall@3 is 0.27/0.40 at
-    sf0.001/sf0.01 on this corpus (random embeddings have no cluster
-    structure, so 16-code quantization noise swamps the thin cosine
-    margins), R=32 refinement lifts it to 0.93/0.80 — the single-probe
-    coarse-cell ceiling (``sim_ivf_recall``). At scale the refine step
-    reads R x n_queries raw vectors instead of the whole corpus: the
-    scan stays on the 8-byte codes."""
-    return _refined(spark, sf_dir, nprobe=1)
-
-
-def _refined(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
-    """ADC shortlist → exact re-rank. The shortlist is taken PER PROBED
-    CELL (top ``_REFINE_R`` by ADC within each ``(q_id, cell_id)``) —
-    the classic IVF-PQ scan shape (per-list candidates, then merge).
-    Two properties follow: the candidate budget is exactly
-    ``nprobe × _REFINE_R`` per query, and the home cell's shortlist is
-    always a subset of the multi-probe shortlist, so the exact re-rank
-    sees a superset of the single-probe pool and recall@k can only
-    rise (a global top-R over the pooled cells loses BOTH properties:
-    ADC noise from extra cells can evict home-cell candidates —
-    measured: recall fell 0.93 → 0.80 with a pooled shortlist)."""
-    scored = _adc_scored(spark, sf_dir, nprobe=nprobe)
+    re-rank of the top-3. Chosen by measurement: ADC-only recall@3 is
+    0.27/0.40 at sf0.001/sf0.01 on this corpus (random embeddings have
+    no cluster structure, so 16-code quantization noise swamps the thin
+    cosine margins), R=32 refinement lifts it to 0.93/0.80 — the
+    single-probe coarse-cell ceiling (``tests/test_pq.py`` pins the
+    floor). At scale the refine step reads R x n_queries raw vectors
+    instead of the whole corpus: the scan stays on the 8-byte codes."""
+    scored = _adc_scored(spark, sf_dir)
     wadc = Window.partitionBy("q_id", "cell_id").orderBy(
         F.col("adc_ip").desc(), F.col("c_id").asc()
     )
@@ -267,21 +202,7 @@ def _refined(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     )
 
 
-_PQ_NPROBE = 4  # matched to sim_ivf_multiprobe's measured knob
-
-
-def q_pq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full production composition (r5 verdict #4): IVF multi-probe
-    (``_PQ_NPROBE`` cells per query) × PQ ADC shortlist × exact re-rank.
-    ``sim_pq_refine``'s measured recall (0.93/0.80) was capped by the
-    single-probe coarse cell — the true neighbor sometimes lives in
-    another cell, and no amount of in-cell refinement can recover it.
-    Probing 4 cells removes exactly that ceiling at ≤4× the candidate
-    budget (pinned structurally in tests/test_pq.py)."""
-    return _refined(spark, sf_dir, nprobe=_PQ_NPROBE)
-
-
-def _sql_adc_cte(nprobe: int = 1) -> str:
+def _sql_adc_cte() -> str:
     d2_cols = ",\n    ".join(
         f"{_duck_sub('n.v', 's.sv', m, 'd2')} AS d{m}" for m in range(_M)
     )
@@ -340,7 +261,7 @@ qcells AS (
       PARTITION BY n.vec_id
       ORDER BY {DUCK_DOT.format(a='n.v', b='s.cv')} DESC, s.cell_id ASC) AS r
     FROM n, cellseeds s WHERE n.vec_id < {N_QUERIES}
-  ) WHERE r <= {nprobe}
+  ) WHERE r <= 1
 ),
 qside AS (
   SELECT l.*, qc.cell_id FROM luts l JOIN qcells qc ON qc.q_id = l.q_id
@@ -351,20 +272,9 @@ scored AS (
 )"""
 
 
-def _sql_pq_ann() -> str:
+def _sql_pq_refine() -> str:
     return f"""
-{_sql_adc_cte()}
-SELECT q_id, rank, c_id AS neighbor_id, adc_ip FROM (
-  SELECT q_id, c_id, adc_ip, ROW_NUMBER() OVER (
-    PARTITION BY q_id ORDER BY adc_ip DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {_TOPK}
-"""
-
-
-def _sql_pq_refine(nprobe: int = 1) -> str:
-    return f"""
-{_sql_adc_cte(nprobe)},
+{_sql_adc_cte()},
 short AS (
   SELECT q_id, c_id FROM (
     SELECT q_id, c_id, ROW_NUMBER() OVER (
@@ -387,62 +297,6 @@ SELECT q_id, rank, c_id AS neighbor_id, cosine FROM (
 """
 
 
-def q_pq_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the multi-probe refined IVF-PQ search — the number
-    that shows the single-probe cell ceiling removed (tests pin it ≥
-    ``sim_pq_refine_recall`` on both fixture corpora)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_pq_multiprobe(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the ADC-only IVF-PQ search vs the exact cosine top-3 —
-    the number that tells you what the 64x index compression costs on
-    THIS corpus (compare with ``sim_ivf_recall``, which isolates the
-    coarse quantizer: the gap between the two is the PQ quantization
-    loss, and ``sim_pq_refine_recall`` shows what refinement buys back)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_pq_ann(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def q_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the refined IVF-PQ search — ``tests/test_pq.py`` pins
-    that it dominates the ADC-only number on both test corpora."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_pq_refine(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def _sql_recall(ann_sql: str) -> str:
-    return f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({ann_sql.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
 # --- trained subspace codebooks (per-subspace Lloyd) -------------------------
 #
 # The fixed-seed codebook above is training-free; real IVFPQ trains each
@@ -454,7 +308,7 @@ FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
 # computation (the kmeans.py pattern, one more key column). Init is the
 # SAME fixed seeds the static codebook uses, so Lloyd's monotone
 # convergence guarantees per-subspace distortion can only fall — the
-# claim `sim_pq_trained` emits per subspace and `tests/test_pq.py` pins.
+# claim `q_pq_trained` reports per subspace and `tests/test_pq.py` pins.
 
 _TRAIN_ITERS = 2
 
@@ -550,100 +404,5 @@ def q_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_sub_dot(a: str, b: str) -> str:
-    return DUCK_DOT.format(a=a, b=b)
-
-
-def _sql_sub_iteration(prev: str, i: int) -> str:
-    return f"""
-sassign{i} AS (
-  SELECT vec_id, m, sv, sn, code, d2 FROM (
-    SELECT s.vec_id, s.m, s.sv, s.sn, c.code,
-      s.sn + {_sql_sub_dot('c.cv', 'c.cv')} - 2 * {_sql_sub_dot('s.sv', 'c.cv')} AS d2,
-      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-        s.sn + {_sql_sub_dot('c.cv', 'c.cv')}
-          - 2 * {_sql_sub_dot('s.sv', 'c.cv')} ASC, c.code ASC) AS r
-    FROM sub s JOIN {prev} c ON s.m = c.m
-  ) WHERE r = 1
-),
-scent{i} AS (
-  SELECT m, code, list(mn ORDER BY pos) AS cv
-  FROM (
-    SELECT m, code, pos,
-      CAST(SUM(CAST(x_nano AS DECIMAL(38,0))) AS DOUBLE) / {_NANO} / COUNT(*) AS mn
-    FROM (
-      SELECT a.m, a.code, CAST(i AS INTEGER) AS pos,
-        CAST(floor(a.sv[i] * {_NANO} + 0.5) AS BIGINT) AS x_nano
-      FROM sassign{i} a, (SELECT unnest(range(1, {_SUBD} + 1)) AS i)
-    ) GROUP BY m, code, pos
-  ) GROUP BY m, code
-)"""
-
-
-def _sql_pq_trained() -> str:
-    parts = [
-        "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0 FROM embeddings)",
-        f"""n AS (
-  SELECT vec_id,
-    list_transform(v0, x -> x / sqrt({DUCK_DOT.format(a='v0', b='v0')})) AS v
-  FROM emb
-)""",
-        f"""sub AS (
-  SELECT vec_id, m, sv, {_sql_sub_dot('sv', 'sv')} AS sn FROM (
-    SELECT vec_id, CAST(u.m AS BIGINT) AS m,
-      v[(u.m * {_SUBD} + 1):(u.m * {_SUBD} + {_SUBD})] AS sv
-    FROM n, UNNEST(range(0, {_M})) AS u(m)
-  )
-)""",
-        f"scent0 AS (SELECT m, vec_id AS code, sv AS cv FROM sub WHERE vec_id < {_K})",
-    ]
-    prev = "scent0"
-    for i in range(1, _TRAIN_ITERS + 1):
-        parts.append(_sql_sub_iteration(prev, i).strip())
-        prev = f"scent{i}"
-    final_assign = f"""
-sfinal AS (
-  SELECT vec_id, m, code, d2 FROM (
-    SELECT s.vec_id, s.m, c.code,
-      s.sn + {_sql_sub_dot('c.cv', 'c.cv')} - 2 * {_sql_sub_dot('s.sv', 'c.cv')} AS d2,
-      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-        s.sn + {_sql_sub_dot('c.cv', 'c.cv')}
-          - 2 * {_sql_sub_dot('s.sv', 'c.cv')} ASC, c.code ASC) AS r
-    FROM sub s JOIN {prev} c ON s.m = c.m
-  ) WHERE r = 1
-)"""
-    parts.append(final_assign.strip())
-    return (
-        "WITH " + ",\n".join(parts) + """
-SELECT s.m, s.n_vectors, s.d_seed_micro, t.d_trained_micro,
-  t.d_trained_micro <= s.d_seed_micro AS improved
-FROM (
-  SELECT m, COUNT(*) AS n_vectors,
-    CAST(SUM(CAST(floor(d2 * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-      AS d_seed_micro
-  FROM sassign1 GROUP BY m
-) s JOIN (
-  SELECT m, CAST(SUM(CAST(floor(d2 * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-      AS d_trained_micro
-  FROM sfinal GROUP BY m
-) t ON s.m = t.m
-"""
-    )
-
-
 def register_all() -> None:
-    register_extra("sim_pq_ann", q_pq_ann, _sql_pq_ann())
-    register_extra("sim_pq_refine", q_pq_refine, _sql_pq_refine())
-    register_extra("sim_pq_recall", q_pq_recall, _sql_recall(_sql_pq_ann()))
-    register_extra(
-        "sim_pq_refine_recall", q_pq_refine_recall, _sql_recall(_sql_pq_refine())
-    )
-    register_extra("sim_pq_trained", q_pq_trained, _sql_pq_trained())
-    register_extra(
-        "sim_pq_multiprobe", q_pq_multiprobe, _sql_pq_refine(_PQ_NPROBE)
-    )
-    register_extra(
-        "sim_pq_multiprobe_recall",
-        q_pq_multiprobe_recall,
-        _sql_recall(_sql_pq_refine(_PQ_NPROBE)),
-    )
+    register("sim_pq_refine", q_pq_refine, _sql_pq_refine())

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .segmented import ntile_expr, segmented_row_number
 from ..sources.files import read_input
 
@@ -98,35 +98,6 @@ def q_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS (col_name, n_nulls, min_value, max_value, min_num, max_num,"
         " exact_ndv, ndv_within_10pct)",
     )
-
-
-def _analyze_sql() -> str:
-    selects = []
-    for c, fam in _PROFILE_COLS:
-        if fam == "str":
-            bounds = (
-                f"CAST(MIN({c}) AS VARCHAR) AS min_value,"
-                f" CAST(MAX({c}) AS VARCHAR) AS max_value,"
-                " CAST(NULL AS DOUBLE) AS min_num,"
-                " CAST(NULL AS DOUBLE) AS max_num"
-            )
-        else:
-            bounds = (
-                "CAST(NULL AS VARCHAR) AS min_value,"
-                " CAST(NULL AS VARCHAR) AS max_value,"
-                f" CAST(MIN({c}) AS DOUBLE) AS min_num,"
-                f" CAST(MAX({c}) AS DOUBLE) AS max_num"
-            )
-        selects.append(
-            f"""
-  SELECT (SELECT COUNT(*) FROM orders) AS n_rows, '{c}' AS col_name,
-    CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-    {bounds},
-    COUNT(DISTINCT {c}) AS exact_ndv,
-    CAST(1 AS BIGINT) AS ndv_within_10pct
-  FROM orders"""
-        )
-    return f"SELECT * FROM ({' UNION ALL '.join(selects)})"
 
 
 _N_BUCKETS = 8
@@ -200,9 +171,8 @@ GROUP BY bucket
 
 
 def register_all() -> None:
-    register_extra("rel_analyze_stats", q_analyze_stats, _analyze_sql())
     # segmented (r7 verdict #1) against the one-window NTILE oracle, so
     # the two-phase bit-equality is oracle-gated
-    register_extra(
+    register(
         "rel_equidepth_histogram", q_equidepth_histogram_segmented, SQL_EQUIDEPTH
     )

@@ -1,7 +1,7 @@
-"""Extended query registry: generic OLAP coverage (joins, top-k, set ops,
+"""Query registry: generic OLAP coverage (joins, top-k, set ops,
 grouping) and the training-data-pipeline operators (dedup, similarity,
-text analysis, multimodal). Filled in as operators land; kept separate so
-``__spark_entry__`` stays a thin contract file.
+text analysis, multimodal). Each provider module calls :func:`register`
+at load; kept separate so ``__spark_entry__`` stays a thin contract file.
 """
 
 from __future__ import annotations
@@ -13,22 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
 
-# Secondary tier: oracle-verified by pytest (tests/test_extra_tier.py runs
-# the same Spark-vs-DuckDB comparator), but NOT part of the declared
-# driver contract — near-duplicate formulations (a second dialect of the
-# same oracle, metric companions of an operator already checked) live here
-# to keep every *distinct* operator family inside the driver-checked set.
-_EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-_EXTRA_ORACLES: dict[str, str] = {}
-
-# Flagships promoted from the extra tier into the declared driver contract
-# (r8 verdict task 1): the strongest LLM-pipeline operators move under the
-# driver's hard CORRECTNESS gate. They stay registered via register_extra()
-# in their home modules; queries()/oracle_sql() hoist them and
-# extra_queries()/extra_oracle_sql() exclude them, so each name lives in
-# exactly one tier. Order here IS report order (right after the 11 sizing
-# rows), keeping the promoted names inside the first 50 rows even if the
-# driver report truncates.
+# Flagships that lead the registry: queries()/oracle_sql() list these
+# names first, in this order, then every other registered name in
+# registration order. __spark_entry__ builds its canonical and rotated
+# orders from that list.
 PROMOTED: tuple[str, ...] = (
     # r13 (r12 verdict task 3): the declared tier adopts a THREE-round
     # rotation contract (114 rotating names = 3 windows of 38, zero
@@ -127,14 +115,6 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str |
         _ORACLES[name] = sql
 
 
-def register_extra(
-    name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str | None
-) -> None:
-    _EXTRA_QUERIES[name] = fn
-    if sql is not None:
-        _EXTRA_ORACLES[name] = sql
-
-
 _LOADED = False
 
 
@@ -184,10 +164,8 @@ def _load_providers() -> None:
 
     from . import (
         curation,
-        custom_agg,
         funnels,
         graph_rank,
-        ingest_quality,
         lm_quality,
         pca,
         pq,
@@ -198,15 +176,13 @@ def _load_providers() -> None:
     skew.register_all()
     pq.register_all()
     pca.register_all()
-    custom_agg.register_all()
-    ingest_quality.register_all()
     curation.register_all()
     graph_rank.register_all()
     funnels.register_all()
     sq.register_all()
     lm_quality.register_all()
 
-    from . import basket, binary_ann, infotheory, selection, mdm, mmr, phrase_search, ppjoin, rake, retrieval, sequences, sketch_sets, stats_tests, zipf
+    from . import binary_ann, infotheory, selection, mdm, mmr, ppjoin, rake, retrieval, sequences, sketch_sets, zipf
 
     retrieval.register_all()
     sketch_sets.register_all()
@@ -214,12 +190,9 @@ def _load_providers() -> None:
     mdm.register_all()
     binary_ann.register_all()
     ppjoin.register_all()
-    phrase_search.register_all()
-    stats_tests.register_all()
     rake.register_all()
     zipf.register_all()
     mmr.register_all()
-    basket.register_all()
     selection.register_all()
     infotheory.register_all()
 
@@ -233,31 +206,21 @@ def _check_promoted(registry: dict, kind: str) -> None:
         raise RuntimeError(
             f"promoted names not registered as {kind}: {missing} — "
             "every name in queries_ext.PROMOTED must stay registered via "
-            "register_extra() in its home module"
+            "register() in its home module"
         )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _promoted_first(registry: dict, kind: str) -> dict:
     _load_providers()
-    _check_promoted(_EXTRA_QUERIES, "extra queries")
-    out = {name: _EXTRA_QUERIES[name] for name in PROMOTED}
-    out.update(_QUERIES)
+    _check_promoted(registry, kind)
+    out = {name: registry[name] for name in PROMOTED}
+    out.update(registry)
     return out
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _promoted_first(_QUERIES, "queries")
 
 
 def oracle_sql() -> dict[str, str]:
-    _load_providers()
-    _check_promoted(_EXTRA_ORACLES, "extra oracles")
-    out = {name: _EXTRA_ORACLES[name] for name in PROMOTED}
-    out.update(_ORACLES)
-    return out
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _load_providers()
-    return {k: v for k, v in _EXTRA_QUERIES.items() if k not in PROMOTED}
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    _load_providers()
-    return {k: v for k, v in _EXTRA_ORACLES.items() if k not in PROMOTED}
+    return _promoted_first(_ORACLES, "oracles")

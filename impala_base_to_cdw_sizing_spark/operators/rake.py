@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_TOKENS, SPARK_TOKENS, _docs
 
 _STOP = ("the", "a")
@@ -162,4 +162,4 @@ SELECT * FROM ranked ORDER BY score_micro DESC, phrase ASC LIMIT {_TOP}
 
 
 def register_all() -> None:
-    register_extra("text_rake_keywords", q_rake_keywords, SQL_RAKE_KEYWORDS)
+    register("text_rake_keywords", q_rake_keywords, SQL_RAKE_KEYWORDS)

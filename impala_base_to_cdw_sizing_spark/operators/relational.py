@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .aggregates import dsum, dsum_sql
-from .queries_ext import register, register_extra
+from .queries_ext import register
 from ..sources.files import read_input
 
 
@@ -531,70 +531,7 @@ GROUP BY user_id
 """
 
 
-# --- epoch-aligned tumbling window ------------------------------------------------
-
-
-def q_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _load_events(spark, sf_dir)
-    hour_ms = F.expr("(ts div 1000000) div 3600000 * 3600000")
-    return (
-        ev.withColumn("hour_ms", hour_ms)
-        .groupBy("hour_ms", "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("sum_value"))
-    )
-
-
-SQL_HOURLY = f"""
-SELECT (epoch_ns(ts) // 1000000) // 3600000 * 3600000 AS hour_ms,
-  event_type, COUNT(*) AS n, {dsum_sql('value')} AS sum_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
 # --- TPC-H Q10/Q18/Q19 adaptations (columns limited to the testdata schema) ------
-
-
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q10 returned-item revenue: which customers returned the most value
-    in a quarter. Fact-fact join on orderkey, broadcast dims, decimal
-    revenue sum, deterministic top-20."""
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
-        & (F.col("o_orderdate") < F.to_timestamp(F.lit("1996-04-01")))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-SQL_Q10 = f"""
-SELECT c_custkey, c_name, c_acctbal, n_name,
-  {dsum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1996-04-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
 
 
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,19 +605,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
             "revenue"
         ),
     )
-
-
-SQL_Q19 = f"""
-SELECT COUNT(*) AS n_lines,
-  {dsum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#7' AND p_size BETWEEN 10 AND 30
-       AND l_quantity BETWEEN 10 AND 35)
-   OR (p_brand = 'Brand#13' AND p_size BETWEEN 20 AND 50
-       AND l_quantity BETWEEN 20 AND 50)
-"""
 
 
 # --- semi-structured: schema'd JSON extraction -----------------------------------
@@ -789,10 +713,7 @@ def register_all() -> None:
     # pytest-verified tier (driver report caps at 50 rows): ROLLUP is the
     # special case of rel_grouping_sets; the hourly time-bucket agg is
     # covered by events_rollup_cascade's cascading time grains
-    register_extra("rel_rollup", q_rollup, SQL_ROLLUP)
-    register_extra("rel_hourly_window", q_hourly, SQL_HOURLY)
-    register_extra("rel_json_props", q_json_props, SQL_JSON_PROPS)
-    register_extra("rel_gapfill_hourly", q_gapfill_hourly, SQL_GAPFILL_HOURLY)
-    register_extra("rel_tpch_q10_returns", q_tpch_q10, SQL_Q10)
-    register_extra("rel_tpch_q18_having", q_tpch_q18, SQL_Q18)
-    register_extra("rel_tpch_q19_disjunct", q_tpch_q19, SQL_Q19)
+    register("rel_rollup", q_rollup, SQL_ROLLUP)
+    register("rel_json_props", q_json_props, SQL_JSON_PROPS)
+    register("rel_gapfill_hourly", q_gapfill_hourly, SQL_GAPFILL_HOURLY)
+    register("rel_tpch_q18_having", q_tpch_q18, SQL_Q18)

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
 from .lm_quality import _DUCK_BIGRAMS, _SPARK_BIGRAMS
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
@@ -286,20 +286,6 @@ def q_fuzzy_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FUZZY = f"""
-WITH names AS (
-  SELECT DISTINCT c_name,
-    substring(c_name, 1, length(c_name) - {_FUZZY_BLOCK_TAIL}) AS blk
-  FROM customer
-)
-SELECT a.c_name AS name_a, b.c_name AS name_b,
-  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-FROM names a JOIN names b ON a.blk = b.blk AND a.c_name < b.c_name
-WHERE levenshtein(a.c_name, b.c_name) <= {_FUZZY_MAX_DIST}
-"""
-
-
 def register_all() -> None:
-    register_extra("text_bm25_topk", q_bm25_topk, _sql_bm25())
-    register_extra("text_pmi_collocations", q_pmi_collocations, _sql_pmi())
-    register_extra("rel_fuzzy_join_blocked", q_fuzzy_join_blocked, _SQL_FUZZY)
+    register("text_bm25_topk", q_bm25_topk, _sql_bm25())
+    register("text_pmi_collocations", q_pmi_collocations, _sql_pmi())

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register, register_extra
+from .queries_ext import register
 from .segmented import segmented_cumsum
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import read_input
@@ -393,46 +393,13 @@ def q_sample_reservoir_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_sample_reservoir_dedup() -> str:
-    from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
-    from .text import SQL_DEDUP_SOFT
-
-    return f"""
-WITH soft AS ({SQL_DEDUP_SOFT.strip()})
-SELECT doc_id, n_chars, weight_micro, ln_micro,
-  CAST(ln_micro AS DOUBLE) / CAST(w AS DOUBLE) AS race_key
-FROM (
-  SELECT doc_id, n_chars, weight_micro, w, {_DET_LN_W} AS ln_micro FROM (
-    SELECT doc_id, n_chars, weight_micro, w, z, {_DET_LN_Z2} AS z2 FROM (
-      SELECT doc_id, n_chars, weight_micro, w, {_DET_LN_Z} AS z FROM (
-        SELECT doc_id, n_chars, weight_micro, w, {_DET_LN_Y} AS y FROM (
-          SELECT d.doc_id, d.n_chars, s.weight_micro,
-            d.n_chars * s.weight_micro AS w,
-            CAST({_RES_M} + 1 AS DOUBLE)
-              / CAST((d.doc_id * {_KNUTH}) % {_RES_M} + 1 AS DOUBLE) AS ratio
-          FROM documents d JOIN soft s ON d.doc_id = s.doc_id
-        )
-      )
-    )
-  )
-)
-ORDER BY race_key ASC, doc_id ASC
-LIMIT {_RES_K}
-"""
-
-
 def register_all() -> None:
     register("sample_stratified", q_sample_stratified, SQL_SAMPLE_STRATIFIED)
     register("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES)
     register("corpus_decontaminate", q_decontaminate, _decontaminate_sql())
-    register_extra("sample_split", q_sample_split, SQL_SAMPLE_SPLIT)
+    register("sample_split", q_sample_split, SQL_SAMPLE_SPLIT)
     # the single-pass oracle gates the merge identity
     # reservoir(∪ days) = merge(per-day reservoirs)
-    register_extra(
+    register(
         "sample_reservoir_merged", q_sample_reservoir_merged, _sql_sample_reservoir()
-    )
-    register_extra(
-        "sample_reservoir_dedup",
-        q_sample_reservoir_dedup,
-        _sql_sample_reservoir_dedup(),
     )

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .segmented import bucket_carry
 from ..sources.files import read_input
 
@@ -164,31 +164,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_WEIGHTED_MEDIAN = """
-WITH c AS (
-  SELECT CAST(l_extendedprice * 100 AS BIGINT) AS cents,
-    CAST(l_quantity AS BIGINT) AS w
-  FROM lineitem
-),
-tot AS (
-  SELECT CAST(SUM(w) AS BIGINT) AS w_total,
-    (CAST(SUM(w) AS BIGINT) + 1) // 2 AS threshold
-  FROM c
-),
-run AS (
-  SELECT cents,
-    SUM(w) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS cw
-  FROM c
-)
-SELECT w_total, threshold,
-  CAST(MIN(cents) AS BIGINT) AS median_cents,
-  CAST(MIN(cents) AS DOUBLE) / 100.0 AS weighted_median
-FROM run CROSS JOIN tot
-WHERE cw >= threshold
-GROUP BY 1, 2
-"""
-
-
 # --- grouped two-pass median (late r9) ---------------------------------------
 
 
@@ -250,38 +225,5 @@ def q_group_median_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_GROUP_MEDIAN_TWOPASS = """
-WITH c AS (
-  SELECT l_returnflag AS grp,
-    CAST(l_extendedprice * 100 AS BIGINT) AS cents
-  FROM lineitem
-),
-tot AS (
-  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n FROM c GROUP BY 1
-),
-ks AS (
-  SELECT grp, n, (n + 1) // 2 AS k1, (n + 2) // 2 AS k2 FROM tot
-),
-ranked AS (
-  SELECT grp, cents,
-    ROW_NUMBER() OVER (PARTITION BY grp ORDER BY cents) AS rk
-  FROM c
-)
-SELECT r.grp, ks.n, ks.k1, ks.k2,
-  CAST(MIN(CASE WHEN rk = k1 THEN cents END) AS BIGINT) AS v_lo_cents,
-  CAST(MAX(CASE WHEN rk = k2 THEN cents END) AS BIGINT) AS v_hi_cents,
-  CAST(MIN(CASE WHEN rk = k1 THEN cents END)
-     + MAX(CASE WHEN rk = k2 THEN cents END) AS DOUBLE) / 200.0 AS median
-FROM ranked r JOIN ks ON ks.grp = r.grp
-WHERE rk = k1 OR rk = k2
-GROUP BY 1, 2, 3, 4
-"""
-
-
 def register_all() -> None:
-    register_extra("rel_median_twopass", q_median_twopass, SQL_MEDIAN_TWOPASS)
-    register_extra("rel_weighted_median", q_weighted_median, SQL_WEIGHTED_MEDIAN)
-    register_extra(
-        "rel_group_median_twopass", q_group_median_twopass,
-        SQL_GROUP_MEDIAN_TWOPASS,
-    )
+    register("rel_median_twopass", q_median_twopass, SQL_MEDIAN_TWOPASS)

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .relational import _GAP_NS
 from ..sources.files import load_events
 
@@ -150,29 +150,6 @@ def q_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EWMA_HOURLY = f"""
-WITH hourly AS (
-  SELECT event_type, CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) AS hr,
-    CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-),
-contrib AS (
-  SELECT event_type, hr + o.lag AS hr,
-    n_events * (CAST(1 AS BIGINT) << ({_EWMA_LAGS - 1} - o.lag)) AS wx,
-    (CAST(1 AS BIGINT) << ({_EWMA_LAGS - 1} - o.lag)) AS w
-  FROM hourly, UNNEST(range(0, {_EWMA_LAGS})) AS o(lag)
-),
-sums AS (
-  SELECT event_type, hr, CAST(SUM(wx) AS BIGINT) AS num,
-    CAST(SUM(w) AS BIGINT) AS den
-  FROM contrib GROUP BY 1, 2
-)
-SELECT event_type, hr, n_events, num, den,
-  CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS ewma
-FROM hourly JOIN sums USING (event_type, hr)
-"""
-
-
 def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact CUMULATIVE distinct users per (event_type, day) — growth
     accounting's "total audience to date". The naive plan carries a
@@ -227,52 +204,11 @@ def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CUMULATIVE_DISTINCT = """
-WITH ev AS (
-  SELECT event_type, user_id,
-    CAST(epoch_ns(ts) // 86400000000000 AS BIGINT) AS day
-  FROM events
-),
-active AS (
-  SELECT event_type, day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_active
-  FROM ev GROUP BY 1, 2
-),
-first_touch AS (
-  SELECT event_type, user_id, MIN(day) AS first_day
-  FROM ev GROUP BY 1, 2
-),
-news AS (
-  SELECT event_type, first_day AS day, CAST(COUNT(*) AS BIGINT) AS n_new
-  FROM first_touch GROUP BY 1, 2
-),
-cum AS (
-  SELECT d.event_type, d.day, CAST(SUM(n.n_new) AS BIGINT) AS cum_distinct
-  FROM (SELECT event_type, day FROM active) d
-  JOIN news n ON n.event_type = d.event_type AND n.day <= d.day
-  GROUP BY 1, 2
-)
-SELECT event_type, day, n_active,
-  COALESCE(n_new, CAST(0 AS BIGINT)) AS n_new, cum_distinct
-FROM active
-LEFT JOIN news USING (event_type, day)
-JOIN cum USING (event_type, day)
-"""
-
-
 def register_all() -> None:
-    register_extra(
+    register(
         "rel_markov_transitions", q_markov_transitions, SQL_MARKOV_TRANSITIONS
     )
-    register_extra("rel_ewma_hourly", q_ewma_hourly, SQL_EWMA_HOURLY)
-    register_extra(
-        "rel_cumulative_distinct", q_cumulative_distinct, SQL_CUMULATIVE_DISTINCT
-    )
     # segmented (r9 skewed gate), gated by the sequential DuckDB oracle
-    register_extra(
-        "rel_session_stats", q_session_stats_segmented, SQL_SESSION_STATS
-    )
-    register_extra("rel_rolling_median", q_rolling_median, SQL_ROLLING_MEDIAN)
-    register_extra("rel_acf_hourly", q_acf_hourly, SQL_ACF_HOURLY)
 
 
 def q_session_stats_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,24 +350,6 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ROLLING_MEDIAN = f"""
-WITH daily AS (
-  SELECT event_type,
-    CAST(epoch_ns(ts) // {86_400_000_000_000} AS BIGINT) AS day,
-    CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, day, n_events,
-  CAST(COUNT(*) OVER w AS BIGINT) AS n_in_window,
-  CAST(median(n_events) OVER w AS DOUBLE) AS rolling_median
-FROM daily
-WINDOW w AS (
-  PARTITION BY event_type ORDER BY day
-  RANGE BETWEEN {_MEDIAN_WINDOW_DAYS - 1} PRECEDING AND CURRENT ROW
-)
-"""
-
-
 # --- lag-k autocorrelation (late r9) -----------------------------------------
 
 _ACF_MAX_LAG = 12
@@ -507,43 +425,3 @@ def q_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lag")
     )
-
-
-SQL_ACF_HOURLY = f"""
-WITH hourly AS (
-  SELECT CAST(epoch_ns(ts) // {3_600_000_000_000} AS BIGINT) AS hr,
-    CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-span AS (
-  SELECT MIN(hr) AS hr_min, MAX(hr) AS hr_max FROM hourly
-),
-grid AS (
-  SELECT g.hr, CAST(coalesce(h.c, 0) AS BIGINT) AS c
-  FROM (SELECT UNNEST(range(hr_min, hr_max + 1)) AS hr FROM span) g
-  LEFT JOIN hourly h ON h.hr = g.hr
-),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s
-  FROM grid
-),
-d AS (
-  SELECT hr, CAST(n * c - s AS DECIMAL(19,0)) AS d
-  FROM grid CROSS JOIN tot
-),
-den AS (SELECT SUM(d * d) AS den_dec FROM d),
-lagged AS (
-  SELECT o.lag,
-    SUM(dl.d * dc.d) AS num_dec,
-    CAST(COUNT(*) AS BIGINT) AS n_pairs
-  FROM d dl
-  CROSS JOIN (SELECT UNNEST(range(1, {_ACF_MAX_LAG + 1})) AS lag) o
-  JOIN d dc ON dc.hr = dl.hr + o.lag
-  GROUP BY 1
-)
-SELECT lag, n_pairs,
-  CAST(CAST(num_dec AS STRING) AS DOUBLE)
-    / CAST(CAST(den_dec AS STRING) AS DOUBLE) AS r_acf
-FROM lagged CROSS JOIN den
-ORDER BY lag
-"""

@@ -12,7 +12,7 @@ Three tiers:
   per-bucket candidate cap, exact cosine re-rank of the deduplicated
   set. Same structure as ``BucketedRandomProjectionLSH
   .approxSimilarityJoin`` plus the banding/cap hardening it lacks;
-  recall measured by ``sim_lsh_recall``.
+  recall against the exact top-3 is pinned in tests/test_multiprobe.py.
 - :func:`q_label_centroids` — vector aggregation: per-label mean vector
   via posexplode + integer micro-unit sums (long-form output).
 
@@ -173,9 +173,7 @@ def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OR-banded ANN: candidates from a union of 4 band-table collisions
     (queries uncapped, candidate side bucket-capped), exact cosine
     re-rank of the deduplicated candidate set. ``n_bands_hit`` records
-    how many band tables voted for the pair — the multi-probe signal.
-    Recall vs exact top-k is measured by the extra-tier
-    ``sim_lsh_recall`` companion (the measure-don't-guess loop)."""
+    how many band tables voted for the pair — the multi-probe signal."""
     emb = _emb(spark, sf_dir).withColumn(
         "norm2", F.expr(SPARK_DOT.format(a="v", b="v"))
     )
@@ -309,8 +307,8 @@ def q_lsh_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables and capped candidate side as :func:`q_lsh_ann`, but each
     query probes its band bucket AND the bucket across its weakest
     hyperplane — ≤2x the candidate pairs for strictly-superset recall
-    (``sim_lsh_mp_recall`` measures it; the plain/probed candidate
-    budget comparison is pinned in tests/test_multiprobe.py)."""
+    (the recall gain and the plain/probed candidate budget are pinned
+    in tests/test_multiprobe.py)."""
     emb = _emb(spark, sf_dir).withColumn(
         "norm2", F.expr(SPARK_DOT.format(a="v", b="v"))
     )
@@ -389,108 +387,6 @@ SELECT q_id, rank, c_id AS neighbor_id, n_probe_hits, cosine FROM (
     ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
   FROM scored
 ) WHERE rank <= 3
-"""
-
-
-def q_lsh_mp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion for the multi-probe ANN — read next to
-    ``sim_lsh_recall``: the delta is what the second probe per band
-    buys at ≤2x the candidate budget."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_lsh_ann_multiprobe(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def _sql_lsh_mp_recall() -> str:
-    return f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({_sql_lsh_ann_multiprobe().strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
-def _recall_vs_exact(exact3: DataFrame, ann3: DataFrame) -> DataFrame:
-    """recall@3 of an ANN candidate set vs the exact top-3 (shared by the
-    LSH and IVF recall companions)."""
-    n_hits = exact3.join(ann3, ["q_id", "neighbor_id"]).agg(
-        F.count("*").alias("n_hits")
-    )
-    n_exact = exact3.agg(F.count("*").alias("n_exact"))
-    return n_exact.crossJoin(n_hits).selectExpr(
-        "n_exact", "n_hits",
-        "CAST(n_hits AS DOUBLE) / n_exact AS recall_at3",
-    )
-
-
-def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion for the OR-banded ANN: fraction of the exact
-    cosine top-3 (from :func:`q_cosine_topk`) that the banded search
-    returns. One row: exact count, ANN hit count, recall@3 — the number
-    that justifies (or indicts) the band/cap parameters before a 100 TB
-    run (pattern: ``dedup_minhash_accuracy``)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_lsh_ann(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion for the fixed-seed IVF: an IVF search can only
-    ever see candidates in the query's own cell, so recall quantifies
-    the quantizer's cost directly (nprobe=1 equivalent). Compare against
-    ``sim_lsh_recall`` to choose the ANN plan for a given corpus."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_ivf_ann(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-SQL_LSH_RECALL = f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_LSH_ANN.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-# the IVF twin needs SQL_IVF_ANN, defined below — assembled lazily in
-# register_all to keep source order readable
-_SQL_IVF_RECALL_TEMPLATE = """
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({topk}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({ivf})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
 """
 
 
@@ -714,131 +610,6 @@ SELECT q_id, cell_id, rank, c_id AS neighbor_id, cosine FROM (
 """
 
 
-# --- IVF multi-probe (nprobe = _NPROBE) -------------------------------------------------
-
-_NPROBE = 4
-
-
-def q_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF search probing the query's ``_NPROBE`` nearest cells instead
-    of one — the standard IVF recall knob (candidates grow ~nprobe×;
-    a miss now needs the true neighbor outside ALL probed cells),
-    symmetric with the LSH side's query-directed second probe.
-    Candidates stay routed by their single home cell; only queries fan
-    out. Measured on the fixtures: nprobe 1 → 0.933 recall@3 at
-    sf0.01, nprobe 2-3 unchanged (the miss lay 4 cells out), nprobe 4
-    → 1.0 — the measure-don't-guess loop that sets the knob. At
-    production cell counts (thousands) nprobe=4 still cuts candidates
-    by ~cells/4."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "norm2", F.expr(SPARK_DOT.format(a="v", b="v"))
-    )
-    seeds = emb.filter(F.col("vec_id") < _N_CELLS).selectExpr(
-        "vec_id AS cell_id", "v AS sv", "norm2 AS s_norm2"
-    )
-    from pyspark.sql import Window
-
-    dists = emb.crossJoin(F.broadcast(seeds)).withColumn(
-        "dist2",
-        F.col("norm2") + F.col("s_norm2")
-        - 2 * F.expr(SPARK_DOT.format(a="v", b="sv")),
-    )
-    wcell = Window.partitionBy("vec_id").orderBy(
-        F.col("dist2").asc(), F.col("cell_id").asc()
-    )
-    ranked = dists.withColumn("r", F.row_number().over(wcell))
-    cand = (
-        ranked.filter(F.col("r") == 1)
-        .selectExpr("vec_id AS c_id", "v AS cv", "norm2 AS c_norm2", "cell_id")
-    )
-    q = (
-        ranked.filter((F.col("r") <= _NPROBE) & (F.col("vec_id") < N_QUERIES))
-        .selectExpr("vec_id AS q_id", "v AS qv", "norm2 AS q_norm2", "cell_id")
-    )
-    scored = (
-        q.join(cand, "cell_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "cosine",
-            F.expr(SPARK_DOT.format(a="qv", b="cv"))
-            / F.sqrt(F.col("q_norm2") * F.col("c_norm2")),
-        )
-    )
-    wtop = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("c_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wtop).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"), "cosine")
-    )
-
-
-SQL_IVF_MULTIPROBE = f"""
-WITH emb AS ({DUCK_EMB}),
-normed AS (
-  SELECT vec_id, v, {DUCK_DOT.format(a='v', b='v')} AS norm2 FROM emb
-),
-seeds AS (
-  SELECT vec_id AS cell_id, v AS sv, norm2 AS s_norm2
-  FROM normed WHERE vec_id < {_N_CELLS}
-),
-ranked AS (
-  SELECT vec_id, v, norm2, cell_id,
-    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
-      norm2 + s_norm2 - 2 * sdot ASC, cell_id ASC) AS r
-  FROM (
-    SELECT n.vec_id, n.v, n.norm2, s.cell_id, s.s_norm2,
-      {DUCK_DOT.format(a='n.v', b='s.sv')} AS sdot
-    FROM normed n, seeds s
-  )
-),
-cand AS (SELECT vec_id AS c_id, v AS cv, norm2 AS c_norm2, cell_id
-         FROM ranked WHERE r = 1),
-q AS (SELECT vec_id AS q_id, v AS qv, norm2 AS q_norm2, cell_id
-      FROM ranked WHERE r <= {_NPROBE} AND vec_id < {N_QUERIES}),
-scored AS (
-  SELECT q.q_id, c.c_id,
-    {DUCK_DOT.format(a='q.qv', b='c.cv')} / sqrt(q.q_norm2 * c.c_norm2)
-      AS cosine
-  FROM q JOIN cand c ON q.cell_id = c.cell_id AND q.q_id <> c.c_id
-)
-SELECT q_id, rank, c_id AS neighbor_id, cosine FROM (
-  SELECT q_id, c_id, cosine,
-    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-def q_ivf_mp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion — read next to ``sim_ivf_recall``: the delta is
-    what the second probed cell buys."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_ivf_multiprobe(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-def _sql_ivf_mp_recall() -> str:
-    return f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_IVF_MULTIPROBE.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
 # --- vectorized Pandas-UDF cosine (the Arrow path) ------------------------------
 
 
@@ -933,46 +704,6 @@ WHERE {DUCK_DOT.format(a='a.v', b='b.v')} / sqrt(a.norm2 * b.norm2)
 """
 
 
-# --- embedding normalization + int8 quantization ----------------------------
-
-
-def q_emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2-normalize every embedding and symmetric-quantize each component
-    to int8 (round-half-up of unit·127) — the storage/transfer form a
-    serving or training pipeline writes after embedding. Long-form output
-    (vec_id, dim, unit, q8) so the oracle compares scalar-by-scalar.
-    Pure map stage: posexplode + arithmetic in codegen, no shuffle; at
-    100 TB this pipelines with the parquet scan."""
-    emb = _emb(spark, sf_dir).withColumn(
-        "norm2", F.expr(SPARK_DOT.format(a="v", b="v"))
-    )
-    # nullif guard: an all-zero embedding has norm2 = 0 — its unit/q8
-    # rows are NULL by explicit contract in both dialects, not by
-    # relying on matching divide-by-zero behavior
-    return emb.select(
-        "vec_id", "norm2", F.posexplode("v").alias("dim", "x")
-    ).selectExpr(
-        "vec_id",
-        "CAST(dim AS BIGINT) AS dim",
-        "x / sqrt(nullif(norm2, CAST(0 AS DOUBLE))) AS unit",
-        "CAST(floor(x / sqrt(nullif(norm2, CAST(0 AS DOUBLE))) * 127 + 0.5)"
-        " AS BIGINT) AS q8",
-    )
-
-
-SQL_EMB_NORMALIZE = f"""
-WITH emb AS ({DUCK_EMB}),
-normed AS (
-  SELECT vec_id, v, {DUCK_DOT.format(a='v', b='v')} AS norm2 FROM emb
-)
-SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim,
-  v[i] / sqrt(nullif(norm2, CAST(0 AS DOUBLE))) AS unit,
-  CAST(floor(v[i] / sqrt(nullif(norm2, CAST(0 AS DOUBLE))) * 127 + 0.5)
-    AS BIGINT) AS q8
-FROM normed, (SELECT unnest(range(1, {DIM + 1})) AS i)
-"""
-
-
 # --- random projection (Johnson-Lindenstrauss sign matrix) -----------------------
 
 RP_DIM = 16
@@ -1005,8 +736,8 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies its own 1/sqrt(RP_DIM). The projection is a pure
     zero-shuffle map; each output dim is an ordered left fold, so both
     engines accumulate in identical order and the doubles hash-match
-    exactly. Companion `sim_rp_cosines` quantifies the distortion
-    against exact cosines."""
+    exactly. :func:`q_rp_cosines` quantifies the distortion against
+    exact cosines."""
     cols = ["vec_id", "label"]
     exprs = []
     for i in range(RP_DIM):
@@ -1056,7 +787,7 @@ def q_rp_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = both.selectExpr("vec_id AS a_id", "v AS av", "p AS ap")
     b = both.selectExpr("vec_id AS b_id", "v AS bv", "p AS bp")
     # broadcast the 5-row side: a bare non-equi inner join would plan a
-    # CartesianProduct (the one the extra-tier plan sweep caught);
+    # CartesianProduct (the one the registry plan sweep caught);
     # BroadcastNestedLoopJoin is the sanctioned small-side form
     pairs = a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
     cos_o = (
@@ -1075,33 +806,6 @@ def q_rp_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{cos_p} AS cos_proj",
         f"abs(({cos_o}) - ({cos_p})) AS abs_err",
     )
-
-
-def _rp_cosines_sql() -> str:
-    cos_o = (
-        f"{DUCK_DOT.format(a='a.v', b='b.v')} / "
-        f"(sqrt({DUCK_DOT.format(a='a.v', b='a.v')})"
-        f" * sqrt({DUCK_DOT.format(a='b.v', b='b.v')}))"
-    )
-    cos_p = (
-        f"{DUCK_DOT.format(a='a.p', b='b.p')} / "
-        f"(sqrt({DUCK_DOT.format(a='a.p', b='a.p')})"
-        f" * sqrt({DUCK_DOT.format(a='b.p', b='b.p')}))"
-    )
-    rp_cols = ", ".join(f"r{i:02d}" for i in range(RP_DIM))
-    return f"""
-WITH projected AS ({_rp_sql()}),
-q AS (
-  SELECT e.vec_id, e.v, [{rp_cols}] AS p
-  FROM ({DUCK_EMB}) e JOIN projected USING (vec_id)
-  WHERE e.vec_id < {N_QUERIES}
-)
-SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-  {cos_o} AS cos_orig,
-  {cos_p} AS cos_proj,
-  abs(({cos_o}) - ({cos_p})) AS abs_err
-FROM q a JOIN q b ON a.vec_id < b.vec_id
-"""
 
 
 # --- hard-negative mining (contrastive training pairs) -----------------------------
@@ -1237,29 +941,14 @@ FROM neg LEFT JOIN pos USING (a_id)
 
 
 def register_all() -> None:
-    from .queries_ext import register_extra
-
     register("dedup_embedding_cosine", q_dedup_embedding_cosine, SQL_DEDUP_EMB_COSINE)
     register("sim_cosine_topk", q_cosine_topk, SQL_COSINE_TOPK)
     register("sim_lsh_ann", q_lsh_ann, SQL_LSH_ANN)
     register("sim_ivf_ann", q_ivf_ann, SQL_IVF_ANN)
     register("emb_label_centroids", q_label_centroids, SQL_LABEL_CENTROIDS)
-    register_extra("emb_normalize", q_emb_normalize, SQL_EMB_NORMALIZE)
-    register_extra("sim_lsh_recall", q_lsh_recall, SQL_LSH_RECALL)
-    register_extra(
+    register(
         "sim_lsh_ann_multiprobe", q_lsh_ann_multiprobe, _sql_lsh_ann_multiprobe()
     )
-    register_extra("sim_lsh_mp_recall", q_lsh_mp_recall, _sql_lsh_mp_recall())
-    register_extra("sim_ivf_multiprobe", q_ivf_multiprobe, SQL_IVF_MULTIPROBE)
-    register_extra("sim_ivf_mp_recall", q_ivf_mp_recall, _sql_ivf_mp_recall())
-    register_extra(
-        "sim_ivf_recall",
-        q_ivf_recall,
-        _SQL_IVF_RECALL_TEMPLATE.format(
-            topk=SQL_COSINE_TOPK.strip(), ivf=SQL_IVF_ANN.strip()
-        ),
-    )
-    register_extra("emb_random_projection", q_random_projection, _rp_sql())
-    register_extra("emb_outliers", q_emb_outliers, SQL_EMB_OUTLIERS)
-    register_extra("sim_rp_cosines", q_rp_cosines, _rp_cosines_sql())
-    register_extra("emb_hard_negatives", q_hard_negatives, SQL_HARD_NEGATIVES)
+    register("emb_random_projection", q_random_projection, _rp_sql())
+    register("emb_outliers", q_emb_outliers, SQL_EMB_OUTLIERS)
+    register("emb_hard_negatives", q_hard_negatives, SQL_HARD_NEGATIVES)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from ..sources.files import load_events
 
 _KNUTH = 2654435761
@@ -305,46 +305,6 @@ def kmv_sliding_from_sketch(sketch: DataFrame) -> DataFrame:
         f" ELSE CAST(({_SLIDE_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)"
         f" / CAST(kth_hash AS DOUBLE) END AS est_distinct_24h",
     )
-
-
-SQL_KMV_SLIDING = f"""
-WITH ev AS (
-  SELECT event_type, {_DUCK_HOUR} AS hr,
-    (user_id * {_KNUTH}) % {_KMV_M} AS h
-  FROM events
-),
-hourly_hashes AS (SELECT DISTINCT event_type, hr, h FROM ev),
-sketch AS (
-  SELECT event_type, hr, h FROM (
-    SELECT event_type, hr, h, ROW_NUMBER() OVER (
-      PARTITION BY event_type, hr ORDER BY h) AS rn
-    FROM hourly_hashes
-  ) WHERE rn <= {_SLIDE_K}
-),
-hours AS (SELECT DISTINCT event_type, hr AS target_hr FROM hourly_hashes),
-fanned AS (
-  SELECT DISTINCT s.event_type, s.hr + o.off AS target_hr, s.h
-  FROM sketch s, UNNEST(range(0, {_SLIDE_HOURS})) AS o(off)
-  JOIN hours t ON t.event_type = s.event_type
-    AND t.target_hr = s.hr + o.off
-),
-merged AS (
-  SELECT event_type, target_hr, h FROM (
-    SELECT event_type, target_hr, h, ROW_NUMBER() OVER (
-      PARTITION BY event_type, target_hr ORDER BY h) AS rn
-    FROM fanned
-  ) WHERE rn <= {_SLIDE_K}
-)
-SELECT event_type, target_hr, sketch_n, kth_hash,
-  CASE WHEN sketch_n < {_SLIDE_K} THEN CAST(sketch_n AS DOUBLE)
-    ELSE CAST(({_SLIDE_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)
-      / CAST(kth_hash AS DOUBLE) END AS est_distinct_24h
-FROM (
-  SELECT event_type, target_hr, CAST(COUNT(*) AS BIGINT) AS sketch_n,
-    CAST(MAX(h) AS BIGINT) AS kth_hash
-  FROM merged GROUP BY 1, 2
-)
-"""
 
 
 def q_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,84 +580,6 @@ def q_kmv_newusers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_KMV_NEWUSERS = f"""
-WITH ev AS (
-  SELECT {_DUCK_DAY} AS day, user_id, (user_id * {_KNUTH}) % {_KMV_M} AS h
-  FROM events
-),
-hashes AS (SELECT DISTINCT day, h FROM ev),
-sketch AS (
-  SELECT day, h FROM (
-    SELECT day, h, ROW_NUMBER() OVER (PARTITION BY day ORDER BY h) AS rk
-    FROM hashes
-  ) WHERE rk <= {_KMV_K}
-),
-days AS (SELECT DISTINCT day FROM sketch),
-pairs AS (
-  SELECT a.day AS da, b.day AS db
-  FROM days a JOIN days b ON b.day = a.day + 1
-),
-rows_ab AS (
-  SELECT p.da, p.db, s.h, 1 AS in_a, 0 AS in_b
-  FROM pairs p JOIN sketch s ON s.day = p.da
-  UNION ALL
-  SELECT p.da, p.db, s.h, 0 AS in_a, 1 AS in_b
-  FROM pairs p JOIN sketch s ON s.day = p.db
-),
-merged AS (
-  SELECT da, db, h, MAX(in_a) AS in_a, MAX(in_b) AS in_b
-  FROM rows_ab GROUP BY 1, 2, 3
-),
-topk AS (
-  SELECT da, db, h, in_a, in_b FROM (
-    SELECT da, db, h, in_a, in_b, ROW_NUMBER() OVER (
-      PARTITION BY da, db ORDER BY h) AS rk
-    FROM merged
-  ) WHERE rk <= {_KMV_K}
-),
-est AS (
-  SELECT da, db, CAST(COUNT(*) AS BIGINT) AS union_sketch_n,
-    CAST(MAX(h) AS BIGINT) AS kth_hash,
-    CAST(SUM(in_b * (1 - in_a)) AS BIGINT) AS b_only_n
-  FROM topk GROUP BY 1, 2
-),
-users AS (SELECT DISTINCT day, user_id FROM ev),
-per_day AS (
-  SELECT day, CAST(COUNT(*) AS BIGINT) AS n_users FROM users GROUP BY 1
-),
-inter AS (
-  SELECT a.day AS da, b.day AS db, CAST(COUNT(*) AS BIGINT) AS inter_n
-  FROM users a JOIN users b ON a.user_id = b.user_id AND b.day = a.day + 1
-  GROUP BY 1, 2
-),
-exact AS (
-  SELECT p.da, p.db, na.n_users AS na, nb.n_users AS nb,
-    COALESCE(i.inter_n, CAST(0 AS BIGINT)) AS inter_n
-  FROM pairs p
-  JOIN per_day na ON na.day = p.da
-  JOIN per_day nb ON nb.day = p.db
-  LEFT JOIN inter i ON i.da = p.da AND i.db = p.db
-)
-SELECT da, db, union_sketch_n, b_only_n, exact_new, exact_union, est_new,
-  abs(est_new - exact_new) <= 0.25 * exact_union AS within_tol
-FROM (
-  SELECT da, db, union_sketch_n, b_only_n, exact_new, exact_union,
-    CAST(b_only_n AS DOUBLE) / CAST(union_sketch_n AS DOUBLE)
-      * union_est AS est_new
-  FROM (
-    SELECT e.da, e.db, e.union_sketch_n, e.b_only_n,
-      x.nb - x.inter_n AS exact_new,
-      x.na + x.nb - x.inter_n AS exact_union,
-      CASE WHEN e.union_sketch_n < {_KMV_K}
-        THEN CAST(e.union_sketch_n AS DOUBLE)
-        ELSE CAST(({_KMV_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)
-          / CAST(e.kth_hash AS DOUBLE) END AS union_est
-    FROM est e JOIN exact x ON e.da = x.da AND e.db = x.db
-  )
-)
-"""
-
-
 def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TUPLE-sketch join-size estimation — the sketch tier applied to
     the engine's home problem, SIZING: predict the output cardinality
@@ -795,80 +677,7 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_JOIN_CARDINALITY = f"""
-WITH counts AS (
-  SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS c,
-    (user_id * {_KNUTH}) % {_KMV_M} AS h
-  FROM events GROUP BY 1, 2
-),
-sketch AS (
-  SELECT event_type, h, c FROM (
-    SELECT event_type, h, c, ROW_NUMBER() OVER (
-      PARTITION BY event_type ORDER BY h) AS rk
-    FROM counts
-  ) WHERE rk <= {_KMV_K}
-),
-types AS (SELECT DISTINCT event_type FROM sketch),
-pairs AS (
-  SELECT a.event_type AS ta, b.event_type AS tb
-  FROM types a JOIN types b ON a.event_type < b.event_type
-),
-rows_ab AS (
-  SELECT p.ta, p.tb, s.h, s.c AS ca, CAST(NULL AS BIGINT) AS cb
-  FROM pairs p JOIN sketch s ON s.event_type = p.ta
-  UNION ALL
-  SELECT p.ta, p.tb, s.h, CAST(NULL AS BIGINT) AS ca, s.c AS cb
-  FROM pairs p JOIN sketch s ON s.event_type = p.tb
-),
-merged AS (
-  SELECT ta, tb, h, MAX(ca) AS ca, MAX(cb) AS cb
-  FROM rows_ab GROUP BY 1, 2, 3
-),
-topk AS (
-  SELECT ta, tb, h, ca, cb FROM (
-    SELECT ta, tb, h, ca, cb, ROW_NUMBER() OVER (
-      PARTITION BY ta, tb ORDER BY h) AS rk
-    FROM merged
-  ) WHERE rk <= {_KMV_K}
-),
-est AS (
-  SELECT ta, tb, CAST(COUNT(*) AS BIGINT) AS union_sketch_n,
-    CAST(MAX(h) AS BIGINT) AS kth_hash,
-    CAST(SUM(CASE WHEN ca IS NOT NULL AND cb IS NOT NULL
-      THEN ca * cb ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sum_prod
-  FROM topk GROUP BY 1, 2
-),
-exact AS (
-  SELECT a.event_type AS ta, b.event_type AS tb,
-    CAST(SUM(a.c * b.c) AS BIGINT) AS exact_join_n
-  FROM counts a JOIN counts b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT ta, tb, union_sketch_n, sum_prod, exact_join_n, est_join_n,
-  abs(est_join_n - exact_join_n) <= 0.30 * exact_join_n AS within_tol
-FROM (
-  SELECT ta, tb, union_sketch_n, sum_prod, exact_join_n,
-    CAST(sum_prod AS DOUBLE) * union_est
-      / CAST(union_sketch_n AS DOUBLE) AS est_join_n
-  FROM (
-    SELECT e.ta, e.tb, e.union_sketch_n, e.sum_prod, x.exact_join_n,
-      CASE WHEN e.union_sketch_n < {_KMV_K}
-        THEN CAST(e.union_sketch_n AS DOUBLE)
-        ELSE CAST(({_KMV_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)
-          / CAST(e.kth_hash AS DOUBLE) END AS union_est
-    FROM est e JOIN exact x ON e.ta = x.ta AND e.tb = x.tb
-  )
-)
-"""
-
-
 def register_all() -> None:
-    register_extra("sketch_bitmap_rollup", q_bitmap_rollup, SQL_BITMAP_ROLLUP)
-    register_extra("sketch_kmv_distinct", q_kmv_distinct, SQL_KMV_DISTINCT)
-    register_extra("sketch_kmv_sliding", q_kmv_sliding, SQL_KMV_SLIDING)
-    register_extra("sketch_kmv_jaccard", q_kmv_jaccard, SQL_KMV_JACCARD)
-    register_extra("sketch_kmv_newusers", q_kmv_newusers, SQL_KMV_NEWUSERS)
-    register_extra(
-        "sketch_join_cardinality", q_join_cardinality, SQL_JOIN_CARDINALITY
-    )
+    register("sketch_bitmap_rollup", q_bitmap_rollup, SQL_BITMAP_ROLLUP)
+    register("sketch_kmv_distinct", q_kmv_distinct, SQL_KMV_DISTINCT)
+    register("sketch_kmv_jaccard", q_kmv_jaccard, SQL_KMV_JACCARD)

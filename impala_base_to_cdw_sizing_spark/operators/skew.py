@@ -101,46 +101,7 @@ FROM events e JOIN dim d USING (event_type)
 """
 
 
-def q_diag_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew DIAGNOSIS companion to the salting utilities: per-key row
-    counts with each key's share of the table and its ratio to the mean
-    key load. ``skew_ratio`` is exactly the multiplier by which the hot
-    key's reducer outweighs the average one in a key-partitioned
-    shuffle — the number that decides whether to reach for
-    :func:`salted_agg`/:func:`salted_join` (rule of thumb: ratio > ~4
-    with large absolute counts ⇒ salt). One aggregation plus a 1-row
-    broadcast; runs at any scale."""
-    from ..sources.files import load_events
-
-    ev = load_events(spark, sf_dir)
-    per_key = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    totals = per_key.agg(
-        F.sum("n").alias("total_n"), F.count("*").alias("n_keys")
-    )
-    return per_key.crossJoin(F.broadcast(totals)).selectExpr(
-        "event_type", "n",
-        "CAST(n AS DOUBLE) / total_n AS share",
-        "CAST(n AS DOUBLE) * n_keys / total_n AS skew_ratio",
-        "CAST(CAST(n AS DOUBLE) * n_keys / total_n > 4.0 AS BIGINT)"
-        " AS needs_salting",
-    )
-
-
-SQL_DIAG_KEY_SKEW = """
-WITH per_key AS (
-  SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type
-),
-totals AS (SELECT SUM(n) AS total_n, COUNT(*) AS n_keys FROM per_key)
-SELECT event_type, n,
-  CAST(n AS DOUBLE) / total_n AS share,
-  CAST(n AS DOUBLE) * n_keys / total_n AS skew_ratio,
-  CAST(CAST(n AS DOUBLE) * n_keys / total_n > 4.0 AS BIGINT) AS needs_salting
-FROM per_key, totals
-"""
-
-
 def register_all() -> None:
-    from .queries_ext import register_extra
+    from .queries_ext import register
 
-    register_extra("skew_join_hot", q_skew_join_hot, _sql_skew_join_hot())
-    register_extra("diag_key_skew", q_diag_key_skew, SQL_DIAG_KEY_SKEW)
+    register("skew_join_hot", q_skew_join_hot, _sql_skew_join_hot())

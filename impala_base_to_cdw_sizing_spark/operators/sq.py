@@ -33,19 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
-from .similarity import (
-    DIM,
-    DUCK_DOT,
-    DUCK_EMB,
-    N_QUERIES,
-    SPARK_DOT,
-    SQL_COSINE_TOPK,
-    TOP_K,
-    _emb,
-    _recall_vs_exact,
-    q_cosine_topk,
-)
+from .queries_ext import register
+from .similarity import DIM, DUCK_DOT, DUCK_EMB, N_QUERIES, SPARK_DOT, TOP_K, _emb
 
 # code = floor((x - lo) / rng * 255 + 0.5), constant dims code to 0
 _SPARK_CODES = (
@@ -171,35 +160,5 @@ SELECT q_id, rank, c_id AS neighbor_id, approx_cosine FROM (
 """
 
 
-def q_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall companion: fraction of the exact cosine top-3 the SQ8
-    search returns — the acceptance number for swapping 8x-smaller codes
-    into the scan (compare against ``sim_pq_recall``'s 64x/ADC point on
-    the same fixture)."""
-    exact3 = (
-        q_cosine_topk(spark, sf_dir)
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id")
-    )
-    ann3 = q_sq8_ann(spark, sf_dir).select("q_id", "neighbor_id")
-    return _recall_vs_exact(exact3, ann3)
-
-
-SQL_SQ8_RECALL = f"""
-WITH exact3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_COSINE_TOPK.strip()}) WHERE rank <= 3
-),
-ann3 AS (
-  SELECT q_id, neighbor_id FROM ({SQL_SQ8_ANN.strip()})
-)
-SELECT
-  (SELECT COUNT(*) FROM exact3) AS n_exact,
-  COUNT(*) AS n_hits,
-  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM exact3) AS recall_at3
-FROM exact3 JOIN ann3 USING (q_id, neighbor_id)
-"""
-
-
 def register_all() -> None:
-    register_extra("sim_sq8_ann", q_sq8_ann, SQL_SQ8_ANN)
-    register_extra("sim_sq8_recall", q_sq8_recall, SQL_SQ8_RECALL)
+    register("sim_sq8_ann", q_sq8_ann, SQL_SQ8_ANN)

@@ -44,7 +44,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
 from ..sources.files import read_input, load_events
 
 _MICRO = 1_000_000
@@ -148,64 +147,6 @@ def chi2_from_cells(spark: SparkSession, cells: DataFrame) -> DataFrame:
     )
 
 
-_SQL_CRIT = " UNION ALL ".join(
-    f"SELECT CAST({df} AS BIGINT) AS dof, CAST({c} AS DOUBLE) AS crit_05"
-    for df, c in sorted(_CHI2_CRIT_05.items())
-)
-
-SQL_CHI2_INDEPENDENCE = f"""
-WITH ev AS (
-  SELECT event_type,
-    CAST((epoch_ns(ts) // 3600000000000) % 24 AS BIGINT) AS hod
-  FROM events
-),
-cells AS (
-  SELECT event_type, hod, CAST(COUNT(*) AS BIGINT) AS obs
-  FROM ev GROUP BY 1, 2
-),
-margins_r AS (SELECT event_type, SUM(obs) AS row_n FROM cells GROUP BY 1),
-margins_c AS (SELECT hod, SUM(obs) AS col_n FROM cells GROUP BY 1),
-joined AS (
-  SELECT c.event_type, c.hod, c.obs,
-    (c.obs * c.obs * CAST({_MICRO} AS BIGINT)) // (r.row_n * cc.col_n)
-      AS q1_micro
-  FROM cells c
-  JOIN margins_r r USING (event_type)
-  JOIN margins_c cc USING (hod)
-),
-summary AS (
-  SELECT n_total, n_types, n_hods,
-    (n_types - 1) * (n_hods - 1) AS dof,
-    sum_q1_micro * n_total - n_total * CAST({_MICRO} AS BIGINT)
-      AS chi2_micro,
-    n_cells * n_total AS err_micro
-  FROM (
-    SELECT CAST(SUM(obs) AS BIGINT) AS n_total,
-      CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
-      CAST(COUNT(DISTINCT hod) AS BIGINT) AS n_hods,
-      CAST(COUNT(*) AS BIGINT) AS n_cells,
-      CAST(SUM(q1_micro) AS BIGINT) AS sum_q1_micro
-    FROM joined
-  )
-),
-crit AS ({_SQL_CRIT})
-SELECT n_total, n_types, n_hods, dof, chi2, chi2_err_bound, crit_05,
-  CASE WHEN crit_05 IS NULL THEN NULL
-    WHEN chi2_micro > CAST(floor(crit_05 * {_MICRO} + 0.5) AS BIGINT)
-      THEN TRUE
-    WHEN chi2_micro + err_micro
-        <= CAST(floor(crit_05 * {_MICRO} + 0.5) AS BIGINT)
-      THEN FALSE
-    ELSE NULL END AS reject_independence_05
-FROM (
-  SELECT n_total, n_types, n_hods, dof, chi2_micro, err_micro,
-    CAST(chi2_micro AS DOUBLE) / {_MICRO}.0 AS chi2,
-    CAST(err_micro AS DOUBLE) / {_MICRO}.0 AS chi2_err_bound
-  FROM summary
-) LEFT JOIN crit USING (dof)
-"""
-
-
 # Benford first-digit probabilities log10(1+1/d), micro-quantized
 _BENFORD_MICRO = {
     1: 301030, 2: 176091, 3: 124939, 4: 96910, 5: 79181,
@@ -297,49 +238,6 @@ def benford_from_digit_counts(
     )
 
 
-_SQL_BENFORD_PROBS = " UNION ALL ".join(
-    f"SELECT '{d}' AS digit, CAST({p} AS BIGINT) AS p_micro"
-    for d, p in sorted(_BENFORD_MICRO.items())
-)
-
-SQL_BENFORD_DIGITS = f"""
-WITH counts AS (
-  SELECT substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING),
-    1, 1) AS digit,
-    CAST(COUNT(*) AS BIGINT) AS n_obs
-  FROM orders GROUP BY 1
-),
-probs AS ({_SQL_BENFORD_PROBS}),
-per_digit AS (
-  SELECT p.digit, COALESCE(c.n_obs, CAST(0 AS BIGINT)) AS n_obs,
-    (t.n_total * p.p_micro) // 1000000 AS n_expected
-  FROM probs p
-  LEFT JOIN counts c USING (digit)
-  CROSS JOIN (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_total FROM counts) t
-),
-contrib AS (
-  SELECT digit, n_obs, n_expected,
-    ((n_obs - n_expected) * (n_obs - n_expected) * 1000) // n_expected
-      AS contrib_milli
-  FROM per_digit
-)
-SELECT digit, n_obs, n_expected, contrib_milli,
-  CAST(t.chi2_milli AS DOUBLE) / 1000.0 AS chi2,
-  CAST(t.chi2_milli AS DOUBLE) / 1000.0 > {_CHI2_CRIT_05_DF8}
-    AS reject_benford_05
-FROM contrib,
-  (SELECT CAST(SUM(contrib_milli) AS BIGINT) AS chi2_milli FROM contrib) t
-"""
-
-
-def register_all() -> None:
-    register_extra(
-        "rel_chi2_independence", q_chi2_independence, SQL_CHI2_INDEPENDENCE
-    )
-    register_extra("rel_benford_digits", q_benford_digits, SQL_BENFORD_DIGITS)
-    register_extra("rel_cramers_v", q_cramers_v, SQL_CRAMERS_V)
-
-
 # --- Cramér's V effect size (late r9) ----------------------------------------
 
 
@@ -367,14 +265,3 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sqrt((chi2 + chi2_err_bound) / CAST(n_total"
         " * least(n_types - 1, n_hods - 1) AS DOUBLE)) AS cramers_v_upper",
     )
-
-
-SQL_CRAMERS_V = f"""
-SELECT n_total, dof, chi2,
-  least(n_types - 1, n_hods - 1) AS min_rc,
-  sqrt(chi2 / CAST(n_total * least(n_types - 1, n_hods - 1)
-    AS DOUBLE)) AS cramers_v,
-  sqrt((chi2 + chi2_err_bound) / CAST(n_total
-    * least(n_types - 1, n_hods - 1) AS DOUBLE)) AS cramers_v_upper
-FROM ({SQL_CHI2_INDEPENDENCE})
-"""

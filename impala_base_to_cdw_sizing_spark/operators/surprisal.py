@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
@@ -113,4 +113,4 @@ GROUP BY doc_id
 
 
 def register_all() -> None:
-    register_extra("text_unigram_surprisal", q_unigram_surprisal, SQL_UNIGRAM_SURPRISAL)
+    register("text_unigram_surprisal", q_unigram_surprisal, SQL_UNIGRAM_SURPRISAL)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries_ext import register, register_extra
+from .queries_ext import register
 from .smallplan import small_plan_mode
 from ..memo import MEMO
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
@@ -237,43 +237,6 @@ FROM documents
 _BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Piece-vocabulary head: tokenize every doc with the BPE-ish regex
-    pre-tokenizer and return the 20 most frequent pieces with counts and
-    document frequency — the first table a tokenizer-training run
-    materializes. One explode + one groupBy; deterministic (count desc,
-    piece asc) ordering."""
-    pieces = (
-        _docs(spark, sf_dir)
-        .selectExpr(
-            "doc_id",
-            f"explode(regexp_extract_all(text, '{_BPE_RE}', 0)) AS piece",
-        )
-    )
-    return (
-        pieces.groupBy("piece")
-        .agg(
-            F.count("*").alias("n"),
-            F.countDistinct("doc_id").alias("doc_freq"),
-        )
-        .orderBy(F.col("n").desc(), F.col("piece").asc())
-        .limit(20)
-        .selectExpr("piece", "n", "doc_freq")
-    )
-
-
-SQL_BPE_VOCAB = f"""
-SELECT piece, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS doc_freq
-FROM (
-  SELECT doc_id, unnest(regexp_extract_all(text, '{_BPE_RE}')) AS piece
-  FROM documents
-)
-GROUP BY piece
-ORDER BY n DESC, piece ASC
-LIMIT 20
-"""
-
-
 # --- BPE: iterative pair merges ---------------------------------------------------
 #
 # The actual BPE training loop (Sennrich et al. 2016, arXiv:1508.07909
@@ -295,109 +258,6 @@ LIMIT 20
 #   starts is even (a merge consumes i+1, invalidating the next start).
 # The pure-Python reference in tests/test_bpe_merges.py differential-
 # tests both against the textbook loop.
-
-_N_MERGES = 3
-
-
-def _bpe_trained(spark: SparkSession, sf_dir: str):
-    """Run the ``_N_MERGES`` training rounds; returns ``(words, rounds)``
-    where ``words`` is the piece vocabulary with its post-merge symbol
-    arrays and ``rounds`` the per-round merge-table rows."""
-    words = (
-        _docs(spark, sf_dir)
-        .selectExpr(f"explode(regexp_extract_all(text, '{_BPE_RE}', 0)) AS piece")
-        .groupBy("piece")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .selectExpr("piece", "cnt", "regexp_extract_all(piece, '.', 0) AS syms")
-    )
-    rounds = []
-    for i in range(1, _N_MERGES + 1):
-        pairs = (
-            words.filter(F.expr("size(syms) >= 2"))
-            .selectExpr(
-                "cnt",
-                "explode(transform(sequence(0, size(syms) - 2), j ->"
-                " struct(element_at(syms, j + 1) AS l,"
-                " element_at(syms, j + 2) AS r))) AS p",
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("cnt").cast("long").alias("pair_n"))
-        )
-        best = (
-            pairs.orderBy(F.col("pair_n").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .selectExpr("l", "r", "concat(l, r) AS m", "pair_n")
-            # 1-row materialization per round: keeps the next round's
-            # plan from embedding this round's argmax pipeline twice
-            .localCheckpoint(eager=True)
-        )
-        rounds.append(
-            best.selectExpr(
-                f"CAST({i} AS BIGINT) AS round",
-                "l AS lhs", "r AS rhs", "m AS merged", "pair_n",
-            )
-        )
-        words = words.crossJoin(F.broadcast(best)).selectExpr(
-            "piece", "cnt",
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) ->"
-            " CASE WHEN size(acc) > 0 AND element_at(acc, -1) = l AND s = r"
-            " THEN concat(slice(acc, 1, size(acc) - 1), array(m))"
-            " ELSE concat(acc, array(s)) END) AS syms",
-        )
-    return words, rounds
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_N_MERGES`` unrolled BPE merge rounds over the piece vocabulary:
-    (round, lhs, rhs, merged, pair_n) — the trained merge table, the
-    artifact a BPE trainer actually emits."""
-    _, rounds = _bpe_trained(spark, sf_dir)
-    out = rounds[0]
-    for r in rounds[1:]:
-        out = out.unionByName(r)
-    return out
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the trained merge table to encode every document:
-    ``(doc_id, n_pieces, n_syms_before, n_syms_after, compression)``.
-
-    The tokenizer-apply shape at 100 TB: merges are applied ONCE per
-    DISTINCT piece (the vocabulary, a tiny frame), and documents join
-    their pieces to the encoded vocab — corpus bytes only flow through
-    one regexp extract + one groupBy + one equi-join on the piece
-    string, never through the merge fold itself. ``n_syms_before`` is
-    the character count of the piece stream (BPE's round-0 symbols);
-    ``compression`` is the fraction of symbols remaining after
-    ``_N_MERGES`` merges."""
-    words, _ = _bpe_trained(spark, sf_dir)
-    vocab = words.selectExpr(
-        "piece",
-        "CAST(length(piece) AS BIGINT) AS n_before",
-        "CAST(size(syms) AS BIGINT) AS n_after",
-    )
-    doc_pieces = (
-        _docs(spark, sf_dir)
-        .selectExpr(
-            "doc_id",
-            f"explode(regexp_extract_all(text, '{_BPE_RE}', 0)) AS piece",
-        )
-        .groupBy("doc_id", "piece")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    return (
-        doc_pieces.join(F.broadcast(vocab), "piece")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").cast("long").alias("n_pieces"),
-            F.sum(F.col("n") * F.col("n_before")).cast("long").alias("n_syms_before"),
-            F.sum(F.col("n") * F.col("n_after")).cast("long").alias("n_syms_after"),
-        )
-        .selectExpr(
-            "doc_id", "n_pieces", "n_syms_before", "n_syms_after",
-            "n_syms_after / CAST(n_syms_before AS DOUBLE) AS compression",
-        )
-    )
 
 
 def _bpe_merge_round_sql(i: int) -> str:
@@ -443,49 +303,6 @@ w{i} AS MATERIALIZED (
   WHERE NOT dropped
   GROUP BY piece, cnt
 )"""
-
-
-def _bpe_cte_prefix() -> str:
-    parts = [
-        f"""w0 AS MATERIALIZED (
-  SELECT piece, cnt, regexp_extract_all(piece, '.') AS syms
-  FROM (
-    SELECT piece, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM (SELECT unnest(regexp_extract_all(text, '{_BPE_RE}')) AS piece
-          FROM documents)
-    GROUP BY piece
-  )
-)"""
-    ]
-    parts += [_bpe_merge_round_sql(i).strip() for i in range(1, _N_MERGES + 1)]
-    return "WITH " + ",\n".join(parts)
-
-
-def _sql_bpe_merges() -> str:
-    selects = " UNION ALL ".join(
-        f"SELECT CAST({i} AS BIGINT) AS round, l AS lhs, r AS rhs, m AS merged,"
-        f" pair_n FROM b{i}"
-        for i in range(1, _N_MERGES + 1)
-    )
-    return _bpe_cte_prefix() + "\n" + selects
-
-
-def _sql_bpe_encode() -> str:
-    return f"""{_bpe_cte_prefix()},
-docp AS (
-  SELECT doc_id, piece, CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT doc_id, unnest(regexp_extract_all(text, '{_BPE_RE}')) AS piece
-        FROM documents)
-  GROUP BY doc_id, piece
-)
-SELECT doc_id,
-  CAST(SUM(n) AS BIGINT) AS n_pieces,
-  CAST(SUM(n * len(piece)) AS BIGINT) AS n_syms_before,
-  CAST(SUM(n * len(syms)) AS BIGINT) AS n_syms_after,
-  SUM(n * len(syms)) / CAST(SUM(n * len(piece)) AS DOUBLE) AS compression
-FROM docp JOIN w{_N_MERGES} USING (piece)
-GROUP BY doc_id
-"""
 
 
 # --- BPE: convergent training (driver loop, r5 verdict #3) -------------------------
@@ -748,9 +565,9 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality stats + language-ID + token counts + fingerprint as a
     single zero-shuffle map over ``documents`` — the shape a 100 TB
     per-document profiling pass wants (one scan, all features, pure
-    codegen expressions). The four standalone formulations remain in the
-    pytest-verified extra tier; this query is their driver-checked
-    umbrella (same expression constants, so they cannot drift)."""
+    codegen expressions). The standalone ``text_stats``, ``text_langid``,
+    ``text_token_count`` and ``text_fingerprint`` rows use the same
+    expression constants, so they cannot drift."""
     return (
         _docs(spark, sf_dir)
         .withColumn("tokens", F.expr(SPARK_TOKENS))
@@ -959,31 +776,6 @@ def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "ch.chunk_idx", "ch.tok_start",
                 "ch.n_chunk_tokens", "ch.chunk_hash")
     )
-
-
-def _chunk_overlap_sql() -> str:
-    c, s = _OCHUNK_SIZE, _OCHUNK_STRIDE
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {DUCK_TOKENS} AS tokens,
-    greatest(1, CAST(ceil((len({DUCK_TOKENS}) - {c}) / {s}.0) AS BIGINT) + 1)
-      AS n_chunks
-  FROM documents
-),
-chunks AS (
-  SELECT doc_id,
-    unnest(list_transform(range(0, n_chunks), i -> {{
-      'chunk_idx': i,
-      'tok_start': i * {s},
-      'n_chunk_tokens': CAST(len(tokens[i * {s} + 1:i * {s} + {c}]) AS BIGINT),
-      'chunk_hash': md5(array_to_string(tokens[i * {s} + 1:i * {s} + {c}], ' '))
-    }})) AS ch
-  FROM toks
-)
-SELECT doc_id, ch.chunk_idx AS chunk_idx, ch.tok_start AS tok_start,
-  ch.n_chunk_tokens AS n_chunk_tokens, ch.chunk_hash AS chunk_hash
-FROM chunks
-"""
 
 
 def _chunks_sql() -> str:
@@ -1345,9 +1137,8 @@ def _mh_params(n: int) -> list[tuple[int, int]]:
 # Declared signature: 64 permutations in 16 bands of 4 — a production-
 # shaped sketch (est_jaccard granularity 1/64; band S-curve threshold
 # (1/16)^(1/4) ≈ 0.50, matched to the components edge cut at 0.5). The
-# round-1 8-perm / 4-band toy signature survives as the oracle-cheap
-# extra-tier twin `dedup_minhash_small`; dedup_minhash_accuracy
-# characterizes both S-curves against exact Jaccard.
+# round-1 8-perm / 4-band toy signature survives as the cheap signature
+# the streaming near-dup tests band with.
 _MH_FULL = (_mh_params(64), 16)
 _MH_SMALL = ([(2, 1), (3, 7), (5, 13), (7, 31), (11, 101), (13, 257), (17, 523), (19, 1019)], 4)
 
@@ -1438,10 +1229,6 @@ def _minhash_pairs(
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_pairs(spark, sf_dir, *_MH_FULL)
-
-
-def q_dedup_minhash_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_pairs(spark, sf_dir, *_MH_SMALL)
 
 
 def _duck_band_rows(params: list[tuple[int, int]], n_bands: int) -> str:
@@ -1683,75 +1470,6 @@ SELECT doc_id, rank, term, tf, score FROM (
     PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
   FROM scored
 ) WHERE rank <= 3
-"""
-
-
-# --- sketch accuracy: MinHash estimate vs true Jaccard ---------------------------
-
-
-def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measure both MinHash sketches against ground truth: join each
-    signature's banded candidates (``est_jaccard``) with the exact
-    shingle-Jaccard on the pairs both produce, and summarize the error.
-    One row: candidate/matched counts and mean/max absolute error for
-    the declared 64-perm/16-band signature (``_full``) and the 8-perm
-    toy twin (``_small``) side by side — the banding S-curve
-    characterization the sketch parameters are chosen from.
-
-    This is the 'measure, don't guess' query for sketch parameters —
-    at scale you run it on a sample to pick bands/rows before the full
-    pass. Reuses the cached candidate pipelines.
-    """
-    from .aggregates import dsum
-
-    true = q_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
-
-    def _metrics(est: DataFrame, tag: str) -> DataFrame:
-        joined = est.join(true, ["doc_a", "doc_b"])
-        err = F.abs(F.col("est_jaccard") - F.col("jaccard"))
-        matched = joined.agg(
-            F.count("*").alias(f"n_matched_{tag}"),
-            (dsum(err) / F.count("*")).alias(f"mean_abs_err_{tag}"),
-            F.max(err).alias(f"max_abs_err_{tag}"),
-        )
-        n_cand = est.agg(F.count("*").alias(f"n_candidates_{tag}"))
-        return n_cand.crossJoin(matched)
-
-    full = _metrics(
-        q_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b", "est_jaccard"),
-        "full",
-    )
-    small = _metrics(
-        q_dedup_minhash_small(spark, sf_dir).select("doc_a", "doc_b", "est_jaccard"),
-        "small",
-    )
-    return full.crossJoin(small)
-
-
-def _minhash_accuracy_sql() -> str:
-    from .aggregates import dsum_sql
-
-    def _block(cand_sql: str, tag: str) -> str:
-        return f"""
-m_{tag} AS (
-  SELECT
-    (SELECT COUNT(*) FROM cand_{tag}) AS n_candidates_{tag},
-    COUNT(*) AS n_matched_{tag},
-    {dsum_sql('abs(est_jaccard - jaccard)')} / COUNT(*) AS mean_abs_err_{tag},
-    MAX(abs(est_jaccard - jaccard)) AS max_abs_err_{tag}
-  FROM (
-    SELECT c.est_jaccard, t.jaccard
-    FROM cand_{tag} c JOIN truth t USING (doc_a, doc_b)
-  )
-)"""
-
-    return f"""
-WITH cand_full AS ({_minhash_sql_for(*_MH_FULL).strip()}),
-cand_small AS ({_minhash_sql_for(*_MH_SMALL).strip()}),
-truth AS ({SQL_NGRAM_JACCARD.strip()}),
-{_block('cand_full', 'full')},
-{_block('cand_small', 'small')}
-SELECT * FROM m_full CROSS JOIN m_small
 """
 
 
@@ -2194,35 +1912,6 @@ def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _substring_scrub_sql() -> str:
-    return f"""
-WITH span_rows AS ({_substring_spans_sql().strip()}),
-spans AS (
-  SELECT doc_id,
-    list({{'s': span_start, 'e': span_end}}) AS spans
-  FROM span_rows GROUP BY doc_id
-),
-docs_t AS (
-  SELECT doc_id, {DUCK_TOKENS} AS tokens FROM documents
-),
-kept AS (
-  SELECT d.doc_id, d.tokens,
-    CAST(len(d.tokens) AS BIGINT) AS n_tokens,
-    CASE WHEN s.spans IS NULL THEN range(1, len(d.tokens) + 1)
-      ELSE list_filter(range(1, len(d.tokens) + 1),
-        i -> len(list_filter(s.spans, sp -> i >= sp.s AND i <= sp.e)) = 0)
-    END AS kept
-  FROM docs_t d LEFT JOIN spans s ON d.doc_id = s.doc_id
-)
-SELECT doc_id, n_tokens,
-  CAST(len(kept) AS BIGINT) AS n_kept,
-  n_tokens - len(kept) AS n_removed,
-  md5(coalesce(array_to_string(list_transform(kept, i -> tokens[i]), ' '),
-    '')) AS cleaned_hash
-FROM kept
-"""
-
-
 def q_dedup_soft_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soft dedup over NEAR-duplicate clusters: ``dedup_soft_weights``
     gives exact-copy clusters 1/n mass; this op applies the same
@@ -2243,20 +1932,6 @@ def q_dedup_soft_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS weight_micro",
         "CAST(doc_id = cluster AS BIGINT) AS is_canonical",
     )
-
-
-def _soft_fuzzy_sql() -> str:
-    return f"""
-WITH labels AS ({_components_sql().strip()}),
-sizes AS (
-  SELECT cluster, CAST(COUNT(*) AS BIGINT) AS cluster_size
-  FROM labels GROUP BY 1
-)
-SELECT doc_id, cluster, cluster_size,
-  CAST(floor(1000000.0 / cluster_size + 0.5) AS BIGINT) AS weight_micro,
-  CAST(doc_id = cluster AS BIGINT) AS is_canonical
-FROM labels JOIN sizes USING (cluster)
-"""
 
 
 # --- Gopher-style repetition / quality filters ------------------------------
@@ -2378,49 +2053,6 @@ FROM (
     FROM (SELECT doc_id, {DUCK_TOKENS} AS tokens FROM documents)
   )
 )
-"""
-
-
-# --- duplicate-cluster representative selection -----------------------------
-
-
-def q_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document selection over the near-dup clusters: within
-    each :func:`q_dedup_components` cluster keep the longest document
-    (token count; doc_id breaks ties) — the "which copy survives dedup"
-    decision a corpus pipeline makes after clustering. One window over
-    the cluster key on top of the components labels; clusters are small
-    (near-dup groups), so no skew concern."""
-    from pyspark.sql import Window
-
-    labels = q_dedup_components(spark, sf_dir)
-    sized = labels.join(
-        _docs(spark, sf_dir).selectExpr(
-            "doc_id", f"CAST(size({SPARK_TOKENS}) AS BIGINT) AS n_tokens"
-        ),
-        "doc_id",
-    )
-    w = Window.partitionBy("cluster").orderBy(
-        F.col("n_tokens").desc(), F.col("doc_id").asc()
-    )
-    return sized.withColumn("is_rep", F.row_number().over(w) == 1).select(
-        "doc_id", "cluster", "n_tokens", "is_rep"
-    )
-
-
-def _cluster_rep_sql() -> str:
-    return f"""
-WITH comp AS (
-{_components_sql()}
-), sized AS (
-  SELECT c.doc_id, c.cluster,
-    CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens
-  FROM comp c JOIN documents d ON c.doc_id = d.doc_id
-)
-SELECT doc_id, cluster, n_tokens,
-  ROW_NUMBER() OVER (
-    PARTITION BY cluster ORDER BY n_tokens DESC, doc_id ASC) = 1 AS is_rep
-FROM sized
 """
 
 
@@ -2655,39 +2287,26 @@ def register_all() -> None:
     # standalone text-analysis formulations are the per-op views of
     # text_profile (same expression constants); minhash_accuracy is a
     # metric companion of the driver-checked dedup_minhash
-    register_extra("text_stats", q_text_stats, SQL_TEXT_STATS)
-    register_extra("text_langid", q_text_langid, _langid_sql())
-    register_extra("text_token_count", q_token_count, SQL_TOKEN_COUNT)
-    register_extra("text_bpe_vocab", q_bpe_vocab, SQL_BPE_VOCAB)
-    register_extra("text_bpe_merges", q_bpe_merges, _sql_bpe_merges())
-    register_extra("text_bpe_encode", q_bpe_encode, _sql_bpe_encode())
-    register_extra(
+    register("text_stats", q_text_stats, SQL_TEXT_STATS)
+    register("text_langid", q_text_langid, _langid_sql())
+    register("text_token_count", q_token_count, SQL_TOKEN_COUNT)
+    register(
         "text_bpe_merges_converged",
         q_bpe_merges_converged,
         _sql_bpe_merges_converged(),
     )
-    register_extra(
+    register(
         "text_bpe_encode_converged",
         q_bpe_encode_converged,
         _sql_bpe_encode_converged(),
     )
-    register_extra("text_fingerprint", q_fingerprint, SQL_FINGERPRINT)
-    register_extra("dedup_minhash_accuracy", q_minhash_accuracy, _minhash_accuracy_sql())
-    register_extra(
-        "dedup_minhash_small", q_dedup_minhash_small, _minhash_sql_for(*_MH_SMALL)
-    )
-    register_extra("text_quality_gopher", q_quality_gopher, SQL_QUALITY_GOPHER)
-    register_extra("dedup_cluster_rep", q_cluster_rep, _cluster_rep_sql())
-    register_extra("dedup_incremental", q_dedup_incremental, _incremental_sql())
-    register_extra("dedup_chunks", q_dedup_chunks, _chunks_sql())
-    register_extra("text_chunk_overlap", q_chunk_overlap, _chunk_overlap_sql())
-    register_extra("dedup_soft_weights", q_dedup_soft, SQL_DEDUP_SOFT)
-    register_extra("dedup_soft_fuzzy", q_dedup_soft_fuzzy, _soft_fuzzy_sql())
-    register_extra(
-        "dedup_substring_scrub", q_substring_scrub, _substring_scrub_sql()
-    )
-    register_extra("dedup_substring", q_dedup_substring, _substring_sql())
-    register_extra(
+    register("text_fingerprint", q_fingerprint, SQL_FINGERPRINT)
+    register("text_quality_gopher", q_quality_gopher, SQL_QUALITY_GOPHER)
+    register("dedup_incremental", q_dedup_incremental, _incremental_sql())
+    register("dedup_chunks", q_dedup_chunks, _chunks_sql())
+    register("dedup_soft_weights", q_dedup_soft, SQL_DEDUP_SOFT)
+    register("dedup_substring", q_dedup_substring, _substring_sql())
+    register(
         "dedup_substring_spans", q_dedup_substring_spans, _substring_spans_sql()
     )
-    register_extra("dedup_containment", q_ngram_containment, SQL_NGRAM_CONTAINMENT)
+    register("dedup_containment", q_ngram_containment, SQL_NGRAM_CONTAINMENT)

@@ -20,19 +20,19 @@ Float determinism: every unordered SUM runs in DECIMAL(38,6)
 from those exact sums, so cross-engine equality comparisons on the
 derived doubles are exact, not tolerance-based.
 
-All twelve register in the pytest-verified extra tier (the driver's
-declared report is capped at 50 rows and holds one entry per operator
-family; these are additional *compositions* of already-declared join/agg/
-subquery operators).
+Only Q9 is registered (``rel_tpch_q9_profit``, with its DuckDB
+oracle). The other eleven are additional *compositions* of
+already-declared join/agg/subquery operators, pinned for non-vacuity and
+plan shape by ``tests/test_tpch_gap.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregates import dsum, dsum_sql
-from .queries_ext import register_extra
+from .queries_ext import register
 from ..sources.files import read_input
 
 
@@ -52,13 +52,6 @@ def _psup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("ps_supplycost"))
     )
-
-
-SQL_PSUP = """
-  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-    MIN(l_extendedprice / l_quantity) AS ps_supplycost
-  FROM lineitem GROUP BY 1, 2
-"""
 
 
 # --- Q2: minimum-cost supplier (correlated MIN subquery over a join chain) -------
@@ -105,26 +98,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q2 = f"""
-WITH psup AS ({SQL_PSUP})
-SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
-  ps_supplycost AS supplycost
-FROM part, psup, supplier, nation, region
-WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey
-  AND p_size = 15
-  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-  AND r_name = 'EUROPE'
-  AND ps_supplycost = (
-    SELECT MIN(i.ps_supplycost)
-    FROM psup i, supplier s2, nation n2, region r2
-    WHERE i.ps_partkey = p_partkey AND s2.s_suppkey = i.ps_suppkey
-      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
-      AND r2.r_name = 'EUROPE')
-ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
-LIMIT 100
-"""
-
-
 # --- Q8: market share (conditional share of a decimal-sum volume) ----------------
 
 
@@ -161,32 +134,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("mkt_share", F.col("nation_volume") / F.col("total_volume"))
     )
-
-
-SQL_Q8 = f"""
-SELECT o_year,
-  {dsum_sql("CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0.0 END")}
-    AS nation_volume,
-  {dsum_sql('volume')} AS total_volume,
-  {dsum_sql("CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0.0 END")}
-    / {dsum_sql('volume')} AS mkt_share
-FROM (
-  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-    l_extendedprice * (1 - l_discount) AS volume,
-    n2.n_name AS supp_nation
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-  WHERE r_name = 'AMERICA'
-    AND o_orderdate >= TIMESTAMP '1996-01-01'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-)
-GROUP BY o_year
-"""
 
 
 # --- Q9: product-line profit by nation and year ----------------------------------
@@ -265,24 +212,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q11 = f"""
-WITH per_part AS (
-  SELECT l_partkey, {dsum_sql('l_extendedprice * (1 - l_discount)')} AS part_value
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'
-  GROUP BY l_partkey
-)
-SELECT l_partkey, part_value
-FROM per_part
-WHERE part_value > 1.5 * (
-  SELECT CAST(CAST(SUM(CAST(part_value AS DECIMAL(38,6))) AS STRING) AS DOUBLE) / COUNT(*)
-  FROM per_part)
-"""
-
-
 # --- Q12: late shipments by priority class (two-level conditional counts) --------
 
 
@@ -308,20 +237,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q12 = """
-SELECT l_linestatus,
-  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-       THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l_shipdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > o_orderdate
-GROUP BY l_linestatus
-"""
-
-
 # --- Q14: promotion revenue share (conditional share, single join) ---------------
 
 
@@ -344,19 +259,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
             "promo_pct", 100.0 * F.col("promo_revenue") / F.col("total_revenue")
         )
     )
-
-
-SQL_Q14 = f"""
-SELECT
-  {dsum_sql("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
-    AS promo_revenue,
-  {dsum_sql('l_extendedprice * (1 - l_discount)')} AS total_revenue,
-  100.0 * {dsum_sql("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}
-    / {dsum_sql('l_extendedprice * (1 - l_discount)')} AS promo_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-  AND l_shipdate < TIMESTAMP '1997-10-01'
-"""
 
 
 # --- Q15: top supplier (view + equality against its own MAX) ---------------------
@@ -387,21 +289,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp), F.col("supplier_no") == supp.s_suppkey)
         .select("s_suppkey", "s_name", "s_acctbal", "total_revenue")
     )
-
-
-SQL_Q15 = f"""
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-    {dsum_sql('l_extendedprice * (1 - l_discount)')} AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY 1
-)
-SELECT s_suppkey, s_name, s_acctbal, total_revenue
-FROM supplier JOIN revenue ON s_suppkey = supplier_no
-WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-"""
 
 
 # --- Q16: supplier counts by part attribute (NOT-IN + count distinct) ------------
@@ -440,20 +327,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q16 = """
-SELECT p_brand, p_type, p_size,
-  COUNT(DISTINCT ps_suppkey) AS supplier_cnt
-FROM (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-      FROM lineitem) pairs
-JOIN part ON ps_partkey = p_partkey
-WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-  AND ps_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-"""
-
-
 # --- Q17: small-quantity revenue (correlated AVG against the same fact) ----------
 
 
@@ -481,21 +354,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_lines"),
         )
     )
-
-
-SQL_Q17 = f"""
-SELECT {dsum_sql('l_extendedprice')} / 7.0 AS avg_yearly,
-  COUNT(*) AS n_lines
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN (
-  SELECT l_partkey AS ap_key,
-    {dsum_sql('l_quantity')} / COUNT(*) AS avg_qty
-  FROM lineitem GROUP BY 1
-) a ON l_partkey = ap_key
-WHERE p_brand = 'Brand#5' AND p_size < 25
-  AND l_quantity < 0.3 * avg_qty
-"""
 
 
 # --- Q20: dominant suppliers (nested semi-join chain) ----------------------------
@@ -545,32 +403,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q20 = f"""
-WITH li98 AS (
-  SELECT l_partkey, l_suppkey, l_quantity
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-    AND l_shipdate < TIMESTAMP '1999-01-01'
-    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-),
-per_ps AS (
-  SELECT l_partkey, l_suppkey, {dsum_sql('l_quantity')} AS supp_qty
-  FROM li98 GROUP BY 1, 2
-),
-per_part AS (
-  SELECT l_partkey AS tp_key, {dsum_sql('l_quantity')} AS part_qty
-  FROM li98 GROUP BY 1
-)
-SELECT s_suppkey, s_name, s_acctbal
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'EUROPE'
-  AND s_suppkey IN (
-    SELECT l_suppkey FROM per_ps JOIN per_part ON l_partkey = tp_key
-    WHERE supp_qty > 0.3 * part_qty)
-"""
-
-
 # --- Q21: suppliers who kept orders waiting (EXISTS + NOT EXISTS self-joins) -----
 
 
@@ -606,29 +438,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("numwait").desc(), F.col("s_name").asc())
         .limit(20)
     )
-
-
-SQL_Q21 = """
-WITH per_os AS (
-  SELECT l_orderkey, l_suppkey,
-    MAX(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS failed
-  FROM lineitem
-  WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F')
-  GROUP BY 1, 2
-),
-per_order AS (
-  SELECT l_orderkey AS ok, COUNT(*) AS n_supp, SUM(failed) AS n_failed
-  FROM per_os GROUP BY 1
-)
-SELECT s_name, COUNT(*) AS numwait
-FROM per_os
-JOIN per_order ON l_orderkey = ok
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE failed = 1 AND n_supp > 1 AND n_failed = 1
-GROUP BY s_name
-ORDER BY numwait DESC, s_name ASC
-LIMIT 20
-"""
 
 
 # --- Q22: idle high-balance customers (anti join + scalar AVG subquery) ----------
@@ -668,32 +477,5 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_Q22 = f"""
-WITH in_codes AS (
-  SELECT c_custkey, c_acctbal, CAST(c_nationkey % 10 AS BIGINT) AS cntrycode
-  FROM customer WHERE c_nationkey % 10 IN (1, 3, 5, 7)
-)
-SELECT cntrycode, COUNT(*) AS numcust, {dsum_sql('c_acctbal')} AS totacctbal
-FROM in_codes
-WHERE c_acctbal > (
-  SELECT {dsum_sql('c_acctbal')} / COUNT(*) FROM in_codes WHERE c_acctbal > 0)
-  AND NOT EXISTS (
-    SELECT 1 FROM orders
-    WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-07-01')
-GROUP BY cntrycode
-"""
-
-
 def register_all() -> None:
-    register_extra("rel_tpch_q2_mincost", q_tpch_q2, SQL_Q2)
-    register_extra("rel_tpch_q8_share", q_tpch_q8, SQL_Q8)
-    register_extra("rel_tpch_q9_profit", q_tpch_q9, SQL_Q9)
-    register_extra("rel_tpch_q11_threshold", q_tpch_q11, SQL_Q11)
-    register_extra("rel_tpch_q12_latecounts", q_tpch_q12, SQL_Q12)
-    register_extra("rel_tpch_q14_promo", q_tpch_q14, SQL_Q14)
-    register_extra("rel_tpch_q15_topview", q_tpch_q15, SQL_Q15)
-    register_extra("rel_tpch_q16_notin", q_tpch_q16, SQL_Q16)
-    register_extra("rel_tpch_q17_corravg", q_tpch_q17, SQL_Q17)
-    register_extra("rel_tpch_q20_nested", q_tpch_q20, SQL_Q20)
-    register_extra("rel_tpch_q21_quantifiers", q_tpch_q21, SQL_Q21)
-    register_extra("rel_tpch_q22_idle", q_tpch_q22, SQL_Q22)
+    register("rel_tpch_q9_profit", q_tpch_q9, SQL_Q9)

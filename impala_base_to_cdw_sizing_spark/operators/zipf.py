@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
-from .queries_ext import register_extra
+from .queries_ext import register
 from .text import DUCK_SHINGLES, DUCK_TOKENS, SPARK_SHINGLES, SPARK_TOKENS, _docs
 
 _TOP = 100
@@ -228,71 +228,5 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _heaps_sql() -> str:
-    def det_ln(src: str, keep: str, out: str, from_t: str) -> str:
-        return f"""(
-    SELECT {keep}, {_DET_LN_W} AS {out} FROM (
-      SELECT {keep}, z, {_DET_LN_Z2} AS z2 FROM (
-        SELECT {keep}, {_DET_LN_Z} AS z FROM (
-          SELECT {keep}, {_DET_LN_Y} AS y FROM (
-            SELECT {keep}, CAST({src} AS DOUBLE) AS ratio FROM {from_t}
-          )
-        )
-      )
-    )
-  )"""
-
-    x = det_ln("n_docs", "decile, n_docs, vocab", "x_micro", "pts")
-    y = det_ln("vocab", "decile, n_docs, vocab, x_micro", "y_micro", "xs")
-    return f"""
-WITH bounds AS (SELECT MIN(doc_id) AS lo, MAX(doc_id) AS hi FROM documents),
-thresholds AS (
-  SELECT d.decile, b.lo - 1 + ((b.hi - b.lo + 1) * d.decile) // {_HEAPS_POINTS} AS t
-  FROM (SELECT unnest(range(1, {_HEAPS_POINTS} + 1)) AS decile) d, bounds b
-),
-first_touch AS (
-  SELECT shingle, MIN(doc_id) AS first_doc FROM (
-    SELECT doc_id, unnest({DUCK_SHINGLES}) AS shingle
-    FROM (SELECT doc_id, {DUCK_TOKENS} AS tokens FROM documents)
-  ) GROUP BY 1
-),
-vocab AS (
-  SELECT th.decile, CAST(COUNT(*) AS BIGINT) AS vocab
-  FROM first_touch f JOIN thresholds th ON f.first_doc <= th.t
-  GROUP BY 1
-),
-ndocs AS (
-  SELECT th.decile, CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM documents d JOIN thresholds th ON d.doc_id <= th.t
-  GROUP BY 1
-),
-pts AS (
-  SELECT decile, n_docs, vocab FROM vocab JOIN ndocs USING (decile)
-),
-xs AS {x},
-ys AS {y},
-sums AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-    CAST(SUM(x_micro) AS BIGINT) AS sx,
-    CAST(SUM(y_micro) AS BIGINT) AS sy,
-    CAST(SUM(x_micro * y_micro) AS BIGINT) AS sxy,
-    CAST(SUM(x_micro * x_micro) AS BIGINT) AS sxx,
-    CAST(SUM(y_micro * y_micro) AS BIGINT) AS syy
-  FROM ys
-),
-fit AS (
-  SELECT
-    CAST(n * sxy - sx * sy AS DOUBLE)
-      / CAST(n * sxx - sx * sx AS DOUBLE) AS beta,
-    CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
-      / (CAST(n * sxx - sx * sx AS DOUBLE)
-      * CAST(n * syy - sy * sy AS DOUBLE)) AS r2
-  FROM sums
-)
-SELECT decile, n_docs, vocab, beta, r2 FROM pts, fit
-"""
-
-
 def register_all() -> None:
-    register_extra("text_zipf_fit", q_zipf_fit, _zipf_sql())
-    register_extra("text_heaps_fit", q_heaps_fit, _heaps_sql())
+    register("text_zipf_fit", q_zipf_fit, _zipf_sql())

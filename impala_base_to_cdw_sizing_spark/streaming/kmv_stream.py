@@ -1,5 +1,5 @@
 """Streaming hourly KMV sketch maintenance — the stream twin of
-``sketch_kmv_sliding``.
+``sketch_sets.q_kmv_sliding``.
 
 A live pipeline cannot re-scan history to answer "distinct users in the
 trailing 24 h": it maintains one k-minimum-values sketch per

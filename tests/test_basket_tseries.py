@@ -1,5 +1,5 @@
-"""Pure-Python replication tests for the late-r9 trio: basket lift,
-exact rolling median, lag-k autocorrelation.
+"""Pure-Python replication tests for exact rolling median and lag-k
+autocorrelation (late r9), and the two-pass medians.
 
 Each test recomputes the operator from the raw parquet with Python
 integers (exact, order-free) and demands BIT-EQUAL doubles from the
@@ -16,7 +16,6 @@ from collections import defaultdict
 import duckdb
 import pytest
 
-from impala_base_to_cdw_sizing_spark.operators.basket import q_basket_lift
 from impala_base_to_cdw_sizing_spark.operators.sequences import (
     _ACF_MAX_LAG,
     _MEDIAN_WINDOW_DAYS,
@@ -36,38 +35,6 @@ def _events():
     ).fetchall()
     con.close()
     return rows
-
-
-def test_basket_lift_replicates_exact_integer_counts(spark):
-    rows = _events()
-    baskets = defaultdict(set)
-    for user_id, ts_ns, etype in rows:
-        baskets[(user_id, ts_ns // _DAY_NS)].add(etype)
-    n_baskets = len(baskets)
-    item_n = defaultdict(int)
-    pair_n = defaultdict(int)
-    for items in baskets.values():
-        for it in items:
-            item_n[it] += 1
-        s = sorted(items)
-        for i, a in enumerate(s):
-            for b in s[i + 1:]:
-                pair_n[(a, b)] += 1
-    got = {
-        (r["item_a"], r["item_b"]): r
-        for r in q_basket_lift(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(pair_n)
-    for (a, b), r in got.items():
-        na, nb, nab = item_n[a], item_n[b], pair_n[(a, b)]
-        assert (r["n_a"], r["n_b"], r["n_ab"], r["n_baskets"]) == (
-            na, nb, nab, n_baskets,
-        )
-        # float(int)/float(int): both conversions and the division are
-        # correctly rounded IEEE ops — replicates the plan bit-for-bit
-        assert r["lift"] == float(n_baskets * nab) / float(na * nb)
-        assert r["support"] == float(nab) / float(n_baskets)
-        assert r["conf_a_to_b"] == float(nab) / float(na)
 
 
 def _py_rolling_median(daily: dict) -> dict:

@@ -10,10 +10,20 @@ import re
 
 from impala_base_to_cdw_sizing_spark.operators.text import (
     _BPE_RE,
-    _N_MERGES,
-    q_bpe_merges,
+    _BPE_TARGET_MERGES,
+    _bpe_trained_converged,
+    q_bpe_merges_converged,
 )
 from tests.conftest import SF_SMALL
+
+_N_MERGES = 3
+
+
+def _fixed_merges(spark, sf_dir: str, n_merges: int = _N_MERGES) -> list[tuple]:
+    """The driver loop run for exactly ``n_merges`` rounds: a stop
+    threshold of 1 only ends training when no pair is left."""
+    _, merges = _bpe_trained_converged(spark, sf_dir, target=n_merges, min_pair_n=1)
+    return merges
 
 
 def _bpe_reference(texts: list[str], n_merges: int):
@@ -49,16 +59,12 @@ def test_bpe_merges_match_reference_on_corpus(spark):
         .collect()
     ]
     expect, _ = _bpe_reference(texts, _N_MERGES)
-    got = sorted(
-        (r.round, r.lhs, r.rhs, r.merged, r.pair_n)
-        for r in q_bpe_merges(spark, SF_SMALL).collect()
-    )
-    assert got == expect
+    assert sorted(_fixed_merges(spark, SF_SMALL)) == expect
 
 
 def test_bpe_merged_token_absent_from_round0(spark):
-    rows = q_bpe_merges(spark, SF_SMALL).collect()
-    assert len(rows) == _N_MERGES
+    rows = q_bpe_merges_converged(spark, SF_SMALL).collect()
+    assert len(rows) == _BPE_TARGET_MERGES
     # round-0 symbols are single characters; every merge mints a token
     # that could not exist before its round
     for r in rows:
@@ -81,37 +87,34 @@ def test_bpe_greedy_overlap_and_iteration(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "documents.parquet")
     )
-    got = {r.round: r for r in q_bpe_merges(spark, str(tmp_path)).collect()}
+    merges = _fixed_merges(spark, str(tmp_path))
+    got = {m[0]: m[1:] for m in merges}
     # round 1: (c,c) and (d,d) tie at 3 pairs x 5 pieces; lexical
     # tie-break picks (c,c); greedy left-to-right gives [cc, cc]
-    assert (got[1].lhs, got[1].rhs, got[1].merged) == ("c", "c", "cc")
-    assert got[1].pair_n == 3 * 5
+    assert got[1] == ("c", "c", "cc", 3 * 5)
     # round 2: (cc,cc)=5 < (d,d)=15 — the d run merges next
-    assert (got[2].lhs, got[2].rhs, got[2].merged) == ("d", "d", "dd")
-    assert got[2].pair_n == 15
+    assert got[2] == ("d", "d", "dd", 15)
     # round 3: (cc,cc) and (dd,dd) tie at 5; lexical pick (cc,cc) —
     # a pair BOTH of whose symbols were minted in round 1 and are
     # absent from the round-0 single-char inventory
-    assert (got[3].lhs, got[3].rhs, got[3].merged) == ("cc", "cc", "cccc")
-    assert got[3].pair_n == 5
+    assert got[3] == ("cc", "cc", "cccc", 5)
     # matches the reference loop end-to-end too
     expect, _ = _bpe_reference(["cccc dddd"] * 5, _N_MERGES)
-    assert sorted(
-        (r.round, r.lhs, r.rhs, r.merged, r.pair_n) for r in got.values()
-    ) == expect
+    assert sorted(merges) == expect
 
 
 def test_bpe_encode_matches_reference_per_doc(spark):
     """Differential test of the tokenizer-apply: per-doc symbol counts
-    under the trained merges must equal the pure-Python encode."""
-    from impala_base_to_cdw_sizing_spark.operators.text import q_bpe_encode
+    under the trained merges must equal the pure-Python encode (on this
+    corpus the trainer runs its full target, no early stop)."""
+    from impala_base_to_cdw_sizing_spark.operators.text import q_bpe_encode_converged
 
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .select("doc_id", "text")
         .collect()
     )
-    _, words = _bpe_reference([r.text for r in docs], _N_MERGES)
+    _, words = _bpe_reference([r.text for r in docs], _BPE_TARGET_MERGES)
     expect = {}
     for r in docs:
         pieces = re.findall(_BPE_RE, r.text)
@@ -122,10 +125,10 @@ def test_bpe_encode_matches_reference_per_doc(spark):
         expect[r.doc_id] = (len(pieces), before, after)
     got = {
         r.doc_id: (r.n_pieces, r.n_syms_before, r.n_syms_after)
-        for r in q_bpe_encode(spark, SF_SMALL).collect()
+        for r in q_bpe_encode_converged(spark, SF_SMALL).collect()
     }
     assert got == expect
-    out = q_bpe_encode(spark, SF_SMALL).toPandas()
+    out = q_bpe_encode_converged(spark, SF_SMALL).toPandas()
     assert (out.n_syms_after <= out.n_syms_before).all()
     assert (out.n_syms_after < out.n_syms_before).any()  # merges bite
 

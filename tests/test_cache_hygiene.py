@@ -1,8 +1,7 @@
 """Registry-session cache hygiene (r4 verdict #5): a long-lived session
 running registered queries must not accumulate storage memory. The
-twice-read materializations inside sketch_countmin_topk, mix_sources,
-and rel_tpch_q15_topview are localCheckpoints (GC-scoped), not cache()
-entries; the plan-keyed caches that remain (the shared MinHash signature
+twice-read materializations inside sketch_countmin_topk and mix_sources
+are localCheckpoints (GC-scoped), not cache() entries; the plan-keyed caches that remain (the shared MinHash signature
 pipeline) must be REUSED across runs, not duplicated."""
 
 from __future__ import annotations
@@ -23,10 +22,8 @@ def _cached_plans(spark) -> int:
 
 def test_converted_queries_leave_no_cache_entries(spark):
     spark.catalog.clearCache()
-    # union of tiers: sketch_countmin_topk and mix_sources were promoted
-    # to the declared tier in r11
-    qs = {**ent.queries(), **ent.extra_queries()}
-    for name in ["sketch_countmin_topk", "mix_sources", "rel_tpch_q15_topview"]:
+    qs = ent.queries()
+    for name in ["sketch_countmin_topk", "mix_sources"]:
         qs[name](spark, SF_SMALL).collect()
     assert _cached_plans(spark) == 0, (
         "twice-read materializations must be GC-scoped localCheckpoints, "
@@ -77,8 +74,7 @@ def test_no_query_unpersists_an_unmaterialized_cache(spark):
     spark.catalog.clearCache()
     DataFrame.unpersist = checked_unpersist
     try:
-        qs = {**ent.queries(), **ent.extra_queries()}
-        for name, fn in qs.items():
+        for name, fn in ent.queries().items():
             current["name"] = name
             fn(spark, SF_SMALL)  # construction only — that is where
             # the r5 dead-cache defects fired their unpersist calls
@@ -99,10 +95,9 @@ def test_r8_segmented_and_prefixfilter_leave_no_cache_entries(spark):
     life of the session. They are now GC-scoped localCheckpoints; running
     each query end-to-end must leave the CacheManager empty."""
     spark.catalog.clearCache()
-    qs = {**ent.queries(), **ent.extra_queries()}
+    qs = ent.queries()
     for name in [
         "dedup_prefixfilter",
-        "dedup_prefixfilter_stats",
         "rel_equidepth_histogram",
         "sample_importance",
     ]:
@@ -119,13 +114,11 @@ def test_plan_keyed_caches_are_flat_across_repeat_runs(spark):
     run of the same query must hit the same entry, so the cache-entry
     count is identical after run 1 and run 2 — flat, not growing."""
     spark.catalog.clearCache()
-    # union of tiers: graph_pagerank_conserving was promoted to the
-    # declared tier in r11
-    qs = {**ent.queries(), **ent.extra_queries()}
-    qs["graph_pagerank"](spark, SF_SMALL).collect()
-    after_first = _cached_plans(spark)
-    qs["graph_pagerank"](spark, SF_SMALL).collect()
+    qs = ent.queries()
     qs["graph_pagerank_conserving"](spark, SF_SMALL).collect()
+    after_first = _cached_plans(spark)
+    qs["graph_pagerank_conserving"](spark, SF_SMALL).collect()
+    qs["graph_ppr"](spark, SF_SMALL).collect()
     after_repeat = _cached_plans(spark)
     assert after_repeat == after_first, (
         f"cache entries grew across repeat runs: {after_first} -> {after_repeat}"

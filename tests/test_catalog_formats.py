@@ -1,4 +1,4 @@
-"""SQL catalog, multi-format replay sources, lakehouse gating, golden hash."""
+"""SQL catalog, multi-format replay sources, golden hash."""
 
 from __future__ import annotations
 
@@ -8,10 +8,6 @@ import pytest
 
 from impala_base_to_cdw_sizing_spark import catalog
 from impala_base_to_cdw_sizing_spark.sources.files import read_query_history
-from impala_base_to_cdw_sizing_spark.sources.lakehouse import (
-    LakehouseUnavailable,
-    read_delta,
-)
 
 from tests.conftest import SF_SMALL
 
@@ -59,11 +55,6 @@ def _write_sample_csv(tmp_path) -> str:
         "1.5,2.5,0.0,12.0,QUERY,5,2\n"
     )
     return str(p)
-
-
-def test_lakehouse_gated_with_clear_error(spark):
-    with pytest.raises(LakehouseUnavailable, match="Delta Lake"):
-        read_delta(spark, "/tmp/nowhere")
 
 
 # Golden regression: the flagship derive output at sf0.001 is pinned by

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.operators.classify import (
     classify_range_join,
-    tsize_expr,
+    tsize_case_sql,
 )
 
 
@@ -22,7 +22,7 @@ def test_bucket_edges_match_reference(spark):
     df = spark.createDataFrame([(x,) for x, _ in cases], "x double")
     got = {
         r.x: r.label
-        for r in df.select("x", tsize_expr("x").alias("label")).collect()
+        for r in df.select("x", F.expr(tsize_case_sql("x")).alias("label")).collect()
     }
     for x, want in cases:
         assert got[x] == want, f"x={x}: got {got[x]}, want {want}"
@@ -30,7 +30,7 @@ def test_bucket_edges_match_reference(spark):
 
 def test_when_chain_equals_range_join(spark):
     df = spark.range(0, 1200).select((F.col("id") / 3.0).alias("x"))
-    chain = df.select("x", tsize_expr("x").alias("a"))
+    chain = df.select("x", F.expr(tsize_case_sql("x")).alias("a"))
     joined = classify_range_join(df, "x", out_col="b")
     merged = chain.join(joined, "x")
     mismatches = merged.filter(

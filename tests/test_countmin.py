@@ -1,5 +1,5 @@
 """Behavioral pins for the count-min sketch (parity runs in
-test_extra_tier): the one-sided error guarantee is structural — an
+tools/compare_oracle.py): the one-sided error guarantee is structural — an
 estimate can NEVER be below the true count — and the fixture's sketch
 must actually collide somewhere or the overestimate accounting is
 untested.

@@ -1,5 +1,5 @@
 """Behavioral pins for the curation operators (oracle parity runs in
-test_extra_tier): parity alone can't catch a vacuous query, so each
+tools/compare_oracle.py): parity alone can't catch a vacuous query, so each
 operator must demonstrably DO its job on the fixture."""
 
 from __future__ import annotations
@@ -148,27 +148,21 @@ def test_quality_strata_partition_the_corpus(spark):
     assert rows[0].q_lo >= rows[-1].q_hi
 
 
-def test_select_budget_dedup_on_duplicated_corpus(spark, tmp_path):
+def test_soft_weights_on_duplicated_corpus(spark, tmp_path):
     """The static corpora carry ZERO exact duplicates, so the dedup
     discount never bites in the registry parity runs — this fixture
     synthesizes a 10-copy flood and (1) runs the FULL oracle comparison
-    on it (dedup semantics oracle-gated on data where they matter),
-    (2) asserts the flood cluster pays for one document's tokens in
-    total, not ten."""
+    of ``dedup_soft_weights`` on it (dedup semantics oracle-gated on data
+    where they matter), (2) asserts the flood cluster carries one
+    document's mass in total, not ten."""
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import duckdb
 
+    import __spark_entry__ as ent
     from tools.compare_oracle import compare_frames
-
-    from impala_base_to_cdw_sizing_spark.operators.curation import (
-        q_select_budget_dedup,
-    )
-    from impala_base_to_cdw_sizing_spark.operators.queries_ext import (
-        extra_oracle_sql,
-    )
 
     def _con(sf_dir):
         con = duckdb.connect()
@@ -188,21 +182,17 @@ def test_select_budget_dedup_on_duplicated_corpus(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{p}/documents.parquet")
 
-    out = q_select_budget_dedup(spark, p)
+    out = ent.queries()["dedup_soft_weights"](spark, p)
     issues = compare_frames(
-        "corpus_select_budget_dedup",
+        "dedup_soft_weights",
         out.toPandas(),
-        _con(p).execute(
-            extra_oracle_sql()["corpus_select_budget_dedup"]
-        ).fetch_df(),
+        _con(p).execute(ent.oracle_sql()["dedup_soft_weights"]).fetch_df(),
     )
     assert not issues, issues
 
     got = {r.doc_id: r for r in out.collect()}
     flood = [got[d] for d in range(10)]
     assert all(r.weight_micro == 100_000 for r in flood)
-    n_tok = flood[0].n_tokens
-    cluster_cost = sum(r.n_tokens * r.weight_micro for r in flood)
-    assert cluster_cost == n_tok * 1_000_000  # the cluster pays ONCE
+    assert sum(r.weight_micro for r in flood) == 1_000_000  # the cluster counts ONCE
     uniq = [r for d, r in got.items() if d >= 10]
     assert all(r.weight_micro == 1_000_000 for r in uniq)

@@ -1,71 +1,14 @@
-"""Adversarial checks for rel_expectations_report and
-rel_incremental_join_view: the report's counting logic is proven on a
-corpus with INJECTED violations of every constraint class (the clean
-synthetic tables pass everything, so parity alone never shows the
-counters bite), and the join-view witness is asserted TRUE with both
-sides of the snapshot/delta cut genuinely populated."""
+"""Adversarial check for rel_incremental_join_view: the join-view
+witness is asserted TRUE with both sides of the snapshot/delta cut
+genuinely populated."""
 
 from __future__ import annotations
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-from impala_base_to_cdw_sizing_spark.operators.ingest_quality import (
-    q_expectations_report,
-)
 from impala_base_to_cdw_sizing_spark.operators.olap_extra import (
     _IVM_CUT,
     q_incremental_join_view,
 )
 from tests.conftest import SF_SMALL
-
-
-def test_expectations_clean_corpus_all_pass(spark):
-    rows = {r.constraint_name: r for r in q_expectations_report(spark, SF_SMALL).collect()}
-    assert len(rows) == 6
-    assert all(r.passed and r.n_violations == 0 for r in rows.values())
-    assert all(r.n_checked > 0 for r in rows.values())
-
-
-def test_expectations_count_injected_violations_exactly(spark, tmp_path):
-    import datetime as dt
-
-    d0 = dt.datetime(1995, 6, 1)
-    orders = {
-        "o_orderkey": [1, 2, 3, 3, 4, 5],          # key 3 duplicated (2 rows)
-        "o_custkey": [10, 10, 99, 11, 11, 98],     # 99, 98 are orphans
-        "o_orderstatus": ["F"] * 6,
-        "o_totalprice": [10.0, -5.0, 20.0, 0.0, 30.0, 40.0],  # -5 and 0 violate
-        "o_orderdate": [d0, None, d0, d0, None, d0],          # 2 nulls
-        "o_orderpriority": ["1-URGENT"] * 6,
-    }
-    lineitem = {
-        "l_orderkey": [1, 1, 2, 777],   # 777 is an orphan
-        "l_partkey": [1, 2, 3, 4],
-        "l_suppkey": [1, 1, 1, 1],
-        "l_linenumber": [1, 2, 1, 1],
-        "l_quantity": [1.0, 50.0, 0.0, 51.0],  # 0 and 51 violate
-    }
-    customer = {"c_custkey": [10, 11], "c_name": ["a", "b"], "c_nationkey": [0, 1]}
-    for name, data in [("orders", orders), ("lineitem", lineitem), ("customer", customer)]:
-        pq.write_table(pa.table(data), f"{tmp_path}/{name}.parquet")
-
-    got = {
-        r.constraint_name: r
-        for r in q_expectations_report(spark, str(tmp_path)).collect()
-    }
-    expect = {
-        "orders_custkey_references_customer": (6, 2),
-        "lineitem_orderkey_references_orders": (4, 1),
-        "orders_totalprice_positive": (6, 2),
-        "orders_orderdate_not_null": (6, 2),
-        "orders_orderkey_unique": (6, 2),  # both rows of the dup key count
-        "lineitem_quantity_in_1_50": (4, 2),
-    }
-    for name, (checked, viol) in expect.items():
-        r = got[name]
-        assert (r.n_checked, r.n_violations) == (checked, viol), name
-        assert r.passed is False, name
 
 
 def test_join_view_ivm_witness_holds_with_real_delta(spark):
@@ -78,31 +21,3 @@ def test_join_view_ivm_witness_holds_with_real_delta(spark):
     n_old = orders.filter(F.col("o_orderdate") < _IVM_CUT).count()
     n_new = orders.filter(F.col("o_orderdate") >= _IVM_CUT).count()
     assert n_old > 0 and n_new > 0
-
-
-def test_zorder_audit_rectangles_beat_single_column_layout(spark):
-    """Structural property of the audit itself: with 16 files over a
-    2^16-square keyspace, the Morton layout's files cover ~1/4 x 1/4
-    rectangles (each dimension's span ~ M/4), while the by-date layout
-    leaves every file spanning essentially the FULL custkey range — the
-    quantified reason a custkey predicate skips most z-order files and
-    zero by-date files."""
-    from impala_base_to_cdw_sizing_spark.operators.ingest_quality import (
-        _Z_AUDIT_BITS,
-        q_zorder_audit,
-    )
-
-    M = 1 << _Z_AUDIT_BITS
-    rows = q_zorder_audit(spark, SF_SMALL).collect()
-    z = [r for r in rows if r.layout == "zorder"]
-    d = [r for r in rows if r.layout == "by_date"]
-    assert z and d
-    # every z-file is a compact rectangle: both spans well under half
-    # the keyspace (the 16-file Morton split bounds each at ~M/4)
-    assert all(r.cust_span <= M // 2 and r.day_span <= M // 2 for r in z)
-    # by-date files are full-width in the OTHER dimension
-    assert max(r.cust_span for r in d) > 0.9 * M
-    # and the z layout's average custkey span is several times tighter
-    avg_z = sum(r.cust_span for r in z) / len(z)
-    avg_d = sum(r.cust_span for r in d) / len(d)
-    assert avg_z * 2 < avg_d

@@ -1,5 +1,5 @@
-"""Behavioral pins for funnel/retention (oracle parity in
-test_extra_tier): the strict ordering must actually bind, and the
+"""Behavioral pins for funnel/retention (oracle parity of the
+registered rows in tools/compare_oracle.py): the strict ordering must actually bind, and the
 retention triangle must be self-consistent."""
 
 from __future__ import annotations

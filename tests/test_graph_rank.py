@@ -1,42 +1,42 @@
-"""Behavioral pins for graph_pagerank (oracle parity runs in
-test_extra_tier): centrality must actually separate hubs from leaves
-and handle isolated docs per the documented contract."""
+"""Behavioral pins for graph_pagerank_conserving (oracle parity runs in
+the declared registry): centrality must actually separate hubs from
+leaves and handle isolated docs per the documented contract."""
 
 from __future__ import annotations
 
 from impala_base_to_cdw_sizing_spark.operators.graph_rank import (
     _NANO,
-    pagerank_ranks,
-    q_graph_pagerank,
+    pagerank_ranks_conserving,
+    q_graph_pagerank_conserving,
 )
 from tests.conftest import SF_SMALL
 
 
 def test_pagerank_corpus_invariants(spark):
-    rows = q_graph_pagerank(spark, SF_SMALL).collect()
+    rows = q_graph_pagerank_conserving(spark, SF_SMALL).collect()
     assert len(rows) == 500
-    n = len(rows)
-    base = (15 * _NANO) // (100 * n)
-    isolated = [r for r in rows if r.outdeg == 0]
-    connected = [r for r in rows if r.outdeg > 0]
+    min_doc = min(r.doc_id for r in rows)
+    isolated = [r for r in rows if r.outdeg == 0 and r.doc_id != min_doc]
+    connected = [r for r in rows if r.outdeg > 0 and r.doc_id != min_doc]
     assert isolated and connected, "fixture needs both populations"
     # documented contract: isolated docs hold exactly the teleport base
-    assert all(r.rank_nano == base for r in isolated)
+    # plus the uniform share of the leaked mass — one value for all
+    (iso_rank,) = {r.rank_nano for r in isolated}
     # every connected doc receives at least one contribution on top
-    assert all(r.rank_nano > base for r in connected)
-    # truncation only ever loses mass: total stays under the unit budget
-    assert sum(r.rank_nano for r in rows) <= _NANO
+    assert all(r.rank_nano > iso_rank for r in connected)
+    # the conserving variant redistributes every leaked nano-unit
+    assert sum(r.rank_nano for r in rows) == _NANO
 
 
 def test_pagerank_degenerate_graphs(spark):
     empty_docs = spark.createDataFrame([], "doc_id long")
     empty_edges = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert pagerank_ranks(empty_edges, empty_docs).count() == 0
+    assert pagerank_ranks_conserving(empty_edges, empty_docs).count() == 0
     one = spark.createDataFrame([(7,)], "doc_id long")
-    rows = pagerank_ranks(empty_edges, one).collect()
+    rows = pagerank_ranks_conserving(empty_edges, one).collect()
     assert len(rows) == 1
-    # single isolated doc: full teleport base at N=1
-    assert rows[0].rank_nano == (15 * _NANO) // 100
+    # single isolated doc: it holds the whole unit of mass
+    assert rows[0].rank_nano == _NANO
     assert rows[0].outdeg == 0
 
 
@@ -53,23 +53,19 @@ def test_pagerank_hub_outranks_leaves_on_star(spark):
     docs = spark.createDataFrame(
         [(i,) for i in range(n_leaves + 1)], "doc_id long"
     )
-    got = {r.doc_id: r for r in pagerank_ranks(edges, docs).collect()}
+    got = {r.doc_id: r for r in pagerank_ranks_conserving(edges, docs).collect()}
     hub, leaves = got[0], [got[i] for i in range(1, n_leaves + 1)]
     assert hub.outdeg == n_leaves
     assert all(hub.rank_nano > 2 * l.rank_nano for l in leaves)
-    # leaves are symmetric: identical integer ranks, no float fuzz
+    # leaves are symmetric: identical integer ranks, no float fuzz (the
+    # hub is the min doc, so the remainder policy leaves them all alone)
     assert len({l.rank_nano for l in leaves}) == 1
 
 
 def test_pagerank_conserving_sums_to_unit_every_round(spark):
-    """The conserving twin's defining invariant: rank mass is EXACTLY
-    10^9 nano-units after every round — init, 1, 2, and 3 iterations —
-    on a graph with dangling nodes (where the leaky variant sheds ~85%
-    of the dangling share per round)."""
-    from impala_base_to_cdw_sizing_spark.operators.graph_rank import (
-        pagerank_ranks_conserving,
-    )
-
+    """The defining invariant: rank mass is EXACTLY 10^9 nano-units
+    after every round — init, 1, 2, and 3 iterations — on a graph with
+    dangling nodes (whose damped mass a plain power iteration sheds)."""
     # 2-clique {0,1} plus dangling docs 2..6 (no out-edges at all)
     edges = spark.createDataFrame(
         [(0, 1), (1, 0)], "doc_a long, doc_b long"
@@ -79,25 +75,11 @@ def test_pagerank_conserving_sums_to_unit_every_round(spark):
         rows = pagerank_ranks_conserving(edges, docs, n_iters=iters).collect()
         total = sum(r.rank_nano for r in rows)
         assert total == 10**9, f"iters={iters}: sum {total}"
-    # and the leaky variant on the same graph really does leak
-    from impala_base_to_cdw_sizing_spark.operators.graph_rank import (
-        pagerank_ranks,
-    )
-
-    leaky_total = sum(
-        r.rank_nano for r in pagerank_ranks(edges, docs, n_iters=3).collect()
-    )
-    assert leaky_total < 10**9
 
 
 def test_pagerank_conserving_preserves_ordering(spark):
     """Uniform redistribution is ordering-neutral away from the pinned
-    remainder node: the conserving ranks must order the star hub above
-    its leaves exactly like the leaky variant."""
-    from impala_base_to_cdw_sizing_spark.operators.graph_rank import (
-        pagerank_ranks_conserving,
-    )
-
+    remainder node: the star hub still ranks above its leaves."""
     n_leaves = 12
     pairs = [(0, i) for i in range(1, n_leaves + 1)]
     edges = spark.createDataFrame(

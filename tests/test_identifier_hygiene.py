@@ -61,10 +61,6 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 _ALIAS = re.compile(r"\bAS\s+([A-Za-z_][A-Za-z_0-9]*)", re.IGNORECASE)
 
 
-def _all_oracles() -> dict[str, str]:
-    oracles = dict(ent.oracle_sql())
-    oracles.update(ent.extra_oracle_sql())
-    return oracles
 
 
 def sql_case_collisions(sql: str, aliases_only: bool = False) -> dict[str, set[str]]:
@@ -87,7 +83,7 @@ def sql_case_collisions(sql: str, aliases_only: bool = False) -> dict[str, set[s
 def test_oracle_sql_alias_case_collisions():
     bad = {
         name: hits
-        for name, sql in _all_oracles().items()
+        for name, sql in ent.oracle_sql().items()
         if (hits := sql_case_collisions(sql, aliases_only=True))
     }
     assert not bad, bad
@@ -96,7 +92,7 @@ def test_oracle_sql_alias_case_collisions():
 def test_oracle_sql_identifier_case_collisions():
     bad = {
         name: hits
-        for name, sql in _all_oracles().items()
+        for name, sql in ent.oracle_sql().items()
         if (hits := sql_case_collisions(sql))
     }
     assert not bad, bad
@@ -129,10 +125,8 @@ def plan_output_case_collisions(df) -> dict[str, set[str]]:
 # release gate re-runs it; the default tier keeps the per-family and
 # declared-tier guards
 def test_registry_plans_have_no_case_colliding_attributes(spark):
-    reg = dict(ent.queries())
-    reg.update(ent.extra_queries())
     bad = {}
-    for name, fn in sorted(reg.items()):
+    for name, fn in sorted(ent.queries().items()):
         hits = plan_output_case_collisions(fn(spark, SF_SMALL))
         if hits:
             bad[name] = hits

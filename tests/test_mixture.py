@@ -1,4 +1,4 @@
-"""Behavioral pins for mixture.py (oracle parity runs in test_extra_tier).
+"""Behavioral pins for mixture.py (oracle parity of the registered rows runs in tools/compare_oracle.py).
 
 Parity alone can't catch a vacuous query — both engines happily agree on
 all-false output. These tests pin the semantics: the Bloom filter's

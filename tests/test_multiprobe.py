@@ -1,7 +1,8 @@
 """Query-directed multi-probe LSH: the second probe per band (across
 the least-confident hyperplane) must buy measurably higher recall within
 a structurally-bounded ≤2x candidate budget — measured, not assumed
-(VERDICT r3 item 7)."""
+(VERDICT r3 item 7). Recall is measured against the exact top-3
+(``tests.conftest.ann_recall_at3``)."""
 
 from __future__ import annotations
 
@@ -14,10 +15,10 @@ from impala_base_to_cdw_sizing_spark.operators.similarity import (
     _capped_spark,
     _emb,
     _probed_queries_spark,
-    q_lsh_mp_recall,
-    q_lsh_recall,
+    q_lsh_ann,
+    q_lsh_ann_multiprobe,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, ann_recall_at3
 
 
 def _candidate_pairs(spark, probes, capped) -> int:
@@ -32,12 +33,12 @@ def _candidate_pairs(spark, probes, capped) -> int:
 
 @pytest.mark.slow  # re-tiered r15: driver gate = fast tier; this test's coverage stays in the release gate (pytest -m "")
 def test_multiprobe_improves_recall_within_2x_candidates(spark):
-    plain = q_lsh_recall(spark, SF_SMALL).first()
-    mp = q_lsh_mp_recall(spark, SF_SMALL).first()
-    # strictly better recall on this corpus (0.47 -> 0.80 measured), and
-    # never worse by construction (probe set is a superset)
-    assert mp["recall_at3"] > plain["recall_at3"]
-    assert mp["n_hits"] >= plain["n_hits"]
+    plain = ann_recall_at3(spark, SF_SMALL, q_lsh_ann(spark, SF_SMALL))
+    mp = ann_recall_at3(spark, SF_SMALL, q_lsh_ann_multiprobe(spark, SF_SMALL))
+    # strictly better recall on this corpus, and never worse by
+    # construction (probe set is a superset); floor measured 0.80
+    assert mp > plain
+    assert mp >= 0.8, mp
 
     emb = _emb(spark, SF_SMALL)
     banded = _banded_spark(emb)
@@ -55,37 +56,14 @@ def test_multiprobe_improves_recall_within_2x_candidates(spark):
     assert n_mp <= 2 * n_plain, (n_plain, n_mp)
 
 
-def test_ivf_multiprobe_never_loses_recall(spark):
-    """nprobe=4's candidate set is a superset of nprobe=1's (the home
-    cell is always rank 1), so recall can only rise; on this corpus it
-    must also strictly cover everything single-probe found."""
-    from impala_base_to_cdw_sizing_spark.operators.similarity import (
-        q_ivf_ann,
-        q_ivf_multiprobe,
-    )
+def test_ivf_trained_recall_floor(spark):
+    """The IVF search over the trained coarse quantizer
+    (``sim_ivf_trained``) recovers most of the exact top-3 (measured
+    0.87 at sf0.001)."""
+    from impala_base_to_cdw_sizing_spark.operators.kmeans import q_ivf_trained
 
-    single = {
-        (r.q_id, r.neighbor_id) for r in q_ivf_ann(spark, SF_SMALL).collect()
-    }
-    multi = {
-        (r.q_id, r.neighbor_id)
-        for r in q_ivf_multiprobe(spark, SF_SMALL).collect()
-    }
-    # both return top-3 per query; every neighbor the single-probe
-    # search ranked is at least REACHABLE by multi-probe, so the
-    # multi-probe top-3 is at least as close: any pair multi kept and
-    # single kept must agree, and multi can only swap in closer ones
-    assert len(multi) == len(single)
-    # multi-probe finds everything exact-in-cell found or better: each
-    # single-probe neighbor either survives or was displaced by a
-    # strictly better (higher-cosine) candidate — verify via cosine sums
-    by_q = {}
-    for r in q_ivf_ann(spark, SF_SMALL).collect():
-        by_q.setdefault(r.q_id, 0.0)
-        by_q[r.q_id] += r.cosine
-    for r in q_ivf_multiprobe(spark, SF_SMALL).collect():
-        by_q[r.q_id] -= r.cosine
-    assert all(delta <= 1e-12 for delta in by_q.values()), by_q
+    recall = ann_recall_at3(spark, SF_SMALL, q_ivf_trained(spark, SF_SMALL))
+    assert recall >= 0.8, recall
 
 
 def test_multiprobe_probes_are_exactly_two_per_band(spark):

@@ -54,32 +54,17 @@ def test_no_row_udfs_or_cartesians_anywhere(spark):
     assert not bloated, f"plan blowup (exchanges > 64): {bloated}"
 
 
-@pytest.mark.slow  # full-registry plan sweep (~2 min alone) — the
-# release gate re-runs it; the default tier keeps the per-family and
-# declared-tier guards
-def test_extra_tier_has_no_row_udfs_or_cartesians(spark):
-    """The same hygiene bar for the pytest-verified tier: none of the 90
-    extra queries may plan a row-at-a-time Python UDF or a cartesian
-    product (broadcast nested-loop is the sanctioned small-side form).
-    Queries that execute jobs during construction (localCheckpoint
-    rounds) still end in a final plan — audited here like any other."""
-    offenders = {}
-    arrow_users = set()
-    audited = 0
-    for name, fn in ent.extra_queries().items():
-        plan = fn(spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.slow  # the iterative queries run jobs while they build
+def test_iterative_queries_have_no_row_udfs_or_cartesians(spark):
+    """The same hygiene bar for the queries :func:`_audits` skips: they
+    execute jobs during construction (localCheckpoint rounds) but still
+    end in a final plan, audited here like any other."""
+    for name in sorted(_ITERATIVE):
+        plan = ent.queries()[name](spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
         a = audit_plan(plan)
-        audited += 1
-        if a["python_eval"] > 0 or a["cartesian"] > 0:
-            offenders[name] = a
-        if a["arrow_eval"] > 0:
-            arrow_users.add(name)
+        assert a["python_eval"] == 0 and a["cartesian"] == 0, (name, a)
+        assert a["arrow_eval"] == 0, (name, a)
         spark.catalog.clearCache()
-    assert audited >= 85
-    assert not offenders, offenders
-    # vectorized Arrow only where documented: the grouped-agg UDAF and
-    # the multimodal decode family
-    assert arrow_users <= {"agg_grouped_median"}, arrow_users
 
 
 @pytest.mark.slow  # re-tiered r15: driver gate = fast tier; this test's coverage stays in the release gate (pytest -m "")
@@ -128,14 +113,14 @@ def test_iterative_per_round_plans_stay_bounded(spark):
         )
         return orig(self, eager)
 
-    qs = {**ent.queries(), **ent.extra_queries()}
+    qs = ent.queries()
     DataFrame.localCheckpoint = audited
     try:
         for name in [
             "sim_mmr_rerank",
             "dedup_components",
             "dedup_hybrid",
-            "graph_pagerank",
+            "graph_pagerank_conserving",
             "graph_ppr",
         ]:
             current["name"] = name
@@ -148,7 +133,7 @@ def test_iterative_per_round_plans_stay_bounded(spark):
     # per-round frame checkpoint — nothing for this hook to see there)
     assert set(per_round) == {
         "sim_mmr_rerank", "dedup_components", "dedup_hybrid",
-        "graph_pagerank", "graph_ppr",
+        "graph_pagerank_conserving", "graph_ppr",
     }, sorted(per_round)
     # … and every intra-round plan stays bounded. The graph queries
     # checkpoint once at the END of a 3-round linear lineage whose plan
@@ -156,7 +141,7 @@ def test_iterative_per_round_plans_stay_bounded(spark):
     # includes its child plan) at every reference — the string count is
     # ~202 while the executed shuffle count is ~15, so they get their own
     # pin (measured 202; a 3^k blowup would be thousands).
-    final_ckpt = {"graph_pagerank", "graph_ppr"}
+    final_ckpt = {"graph_pagerank_conserving", "graph_ppr"}
     offenders = {
         n: rounds for n, rounds in per_round.items()
         if any(r > (256 if n in final_ckpt else 64) for r in rounds)
@@ -170,8 +155,7 @@ def test_materialized_shared_subplans_serve_from_checkpoint(spark):
     SHOW the materialized scan (``Scan ExistingRDD``) — proving the
     multi-read pipeline is served from the materialization, not
     recomputed per read (the dead-cache failure mode)."""
-    # substring dedup was promoted to the declared tier in r9
-    qs = {**ent.queries(), **ent.extra_queries()}
+    qs = ent.queries()
     for name in ["dedup_containment", "dedup_substring", "dedup_substring_spans"]:
         plan = qs[name](spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
         a = audit_plan(plan)

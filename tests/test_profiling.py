@@ -1,5 +1,5 @@
-"""Behavioral pins for the ANALYZE stats pass (parity runs in
-test_extra_tier). The min/max bug class this guards: casting to string
+"""Behavioral pins for the ANALYZE stats pass (the ANALYZE
+pass has no registered oracle). The min/max bug class this guards: casting to string
 BEFORE aggregating makes numeric bounds lexicographic, and a mirrored
 oracle agrees with the wrong answer — so the true bounds are recomputed
 here independently and compared as numbers.

@@ -9,7 +9,9 @@ import math
 from hypothesis import given, settings, strategies as st
 
 import pytest
-from impala_base_to_cdw_sizing_spark.operators.classify import tsize_expr
+from pyspark.sql import functions as F
+
+from impala_base_to_cdw_sizing_spark.operators.classify import tsize_case_sql
 from impala_base_to_cdw_sizing_spark.schemas import SIZE_BUCKET_ROWS
 
 _POD_BUCKETS = [(lo, hi, lab) for d, lo, hi, lab in SIZE_BUCKET_ROWS if d == "pods"]
@@ -49,7 +51,7 @@ def test_tsize_expr_matches_python_model(spark):
         df = _SPARK.createDataFrame([(x,) for x in xs], "x double")
         got = [
             r.label
-            for r in df.select(tsize_expr("x").alias("label")).collect()
+            for r in df.select(F.expr(tsize_case_sql("x")).alias("label")).collect()
         ]
         want = [model_get_tsize(x) for x in xs]
         assert got == want

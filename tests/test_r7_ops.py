@@ -11,7 +11,7 @@ import math
 import duckdb
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, ann_recall_at3
 
 
 def _det_ln(ratio: float) -> int:
@@ -129,11 +129,7 @@ def test_sq8_codes_bounded_and_recall_high(spark):
     from impala_base_to_cdw_sizing_spark.operators.similarity import (
         q_cosine_topk,
     )
-    from impala_base_to_cdw_sizing_spark.operators.sq import (
-        _coded,
-        q_sq8_ann,
-        q_sq8_recall,
-    )
+    from impala_base_to_cdw_sizing_spark.operators.sq import _coded, q_sq8_ann
 
     coded = _coded(spark, SF_SMALL).collect()
     for r in coded:
@@ -153,8 +149,8 @@ def test_sq8_codes_bounded_and_recall_high(spark):
     assert overlap, "approx top-k shares pairs with exact top-k"
     for a, e in overlap:
         assert abs(a - e) < 0.01
-    rec = q_sq8_recall(spark, SF_SMALL).collect()[0]
-    assert rec.recall_at3 >= 0.8
+    # measured 0.93 against the exact top-3
+    assert ann_recall_at3(spark, SF_SMALL, q_sq8_ann(spark, SF_SMALL)) >= 0.8
 
 
 # --- text_bigram_perplexity -------------------------------------------------------
@@ -646,6 +642,29 @@ def test_banded_interval_join_equals_direct(spark):
     assert set(got) == direct
     assert direct, "window must be non-vacuous on the fixture"
     assert all(abs(d) <= _BAND_MS for *_ids, d in got)
+
+
+# --- dedup_minhash accuracy --------------------------------------------------------
+
+
+def test_minhash_estimate_tracks_exact_jaccard(spark):
+    """The 64-permutation signature's estimate against the exact shingle
+    Jaccard (``dedup_ngram_jaccard``): every banded candidate is a real
+    shingle-sharing pair, and the error stays within the sketch's
+    resolution (measured mean 0.019 and max 0.054 on both corpora)."""
+    from tests.conftest import SF_ORACLE
+    from impala_base_to_cdw_sizing_spark.operators.text import (
+        q_dedup_minhash,
+        q_ngram_jaccard,
+    )
+
+    for sf in (SF_SMALL, SF_ORACLE):
+        est = {(r.doc_a, r.doc_b): r.est_jaccard for r in q_dedup_minhash(spark, sf).collect()}
+        exact = {(r.doc_a, r.doc_b): r.jaccard for r in q_ngram_jaccard(spark, sf).collect()}
+        assert est and set(est) <= set(exact), sf
+        err = [abs(e - exact[k]) for k, e in est.items()]
+        assert sum(err) / len(err) <= 0.03, (sf, err)
+        assert max(err) <= 0.07, (sf, err)
 
 
 # --- graph_triangles --------------------------------------------------------------

@@ -158,10 +158,8 @@ def test_registry_primaries_have_no_global_window(spark):
     """
     import __spark_entry__ as ent
 
-    reg = dict(ent.queries())
-    reg.update(ent.extra_queries())
     offenders = {}
-    for name, fn in sorted(reg.items()):
+    for name, fn in sorted(ent.queries().items()):
         if name in _BOUNDED_INPUT_WINDOWS:
             continue
         n = global_window_count(fn(spark, SF_SMALL))

@@ -1,7 +1,7 @@
 """Semantics of the cross-document substring dedup (ExactSubstr class,
 arXiv:2107.06499): the span-union accounting and the cross-doc-only rule
 are pinned on a synthesized corpus where the right answers are computable
-by hand — the corpus-level oracle parity lives in test_extra_tier."""
+by hand — the corpus-level oracle parity lives in tools/compare_oracle.py."""
 
 from __future__ import annotations
 

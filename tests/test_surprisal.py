@@ -1,5 +1,5 @@
 """Behavioral pins for the unigram-surprisal filter (parity runs in
-test_extra_tier): the filter must actually separate boilerplate and
+tools/compare_oracle.py): the filter must actually separate boilerplate and
 gibberish tails, which the uniform synthetic corpus cannot show — so the
 tails are synthesized here, the same approach as the Gopher-rule
 non-vacuity tests.

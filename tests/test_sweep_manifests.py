@@ -4,8 +4,8 @@ The ANSI-mode sweep and the shuffle-width/core-count sweep are only
 evidence for the queries they actually ran. The r9 registry grew past
 both sweeps' last recorded runs (ANSI at 213, width at 215, registry at
 223) without anything failing — silently. These tests make registry
-growth loud: every name registered in EITHER tier must appear in the
-last recorded manifest of BOTH sweeps, and both manifests must be
+growth loud: every registered name must appear in the last recorded
+manifest of BOTH sweeps, and both manifests must be
 all-green. Adding a query without re-running the sweeps fails here.
 
 Regenerate with:
@@ -28,7 +28,7 @@ REPO = Path(__file__).resolve().parent.parent
 def _registry_names() -> set[str]:
     import __spark_entry__ as ent
 
-    return set(ent.queries()) | set(ent.extra_queries())
+    return set(ent.queries())
 
 
 def _load(name: str) -> dict:

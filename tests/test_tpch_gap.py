@@ -1,10 +1,9 @@
 """Non-vacuity pins for the TPC-H gap queries (tpch_gap.py).
 
-The oracle parity test (test_extra_tier) proves Spark ≡ DuckDB, but an
-overtightened predicate would let both engines agree on ZERO rows — a
+An overtightened predicate would let a query return ZERO rows — a
 trivially-green query that exercises nothing. Every adapted query was
-tuned to return rows at BOTH sf0.001 (this test / the extra tier) and
-sf0.01 (the probe scale); this pins the sf0.001 half.
+tuned to return rows at BOTH sf0.001 (this test) and sf0.01 (the probe
+scale); this pins the sf0.001 half.
 """
 
 from __future__ import annotations

@@ -25,8 +25,7 @@ _FLOAT_ADJACENT = [
     "rel_gini",                # DECIMAL(38) rank×cents products
     "rel_exact_percentiles",   # exact rank selection
     "text_zipf_fit",           # det-ln OLS (16-sqrt + atanh chain)
-    "text_heaps_fit",          # det-ln OLS over first-touch deciles
-    "graph_pagerank",          # integer nano-unit power iteration
+    "graph_pagerank_conserving",  # integer nano-unit power iteration
     "sample_importance",       # segmented rank + quantized scores
     "sketch_kmv_distinct",     # k-smallest-hash merge
     "emb_pca_power",           # nano-unit power iteration

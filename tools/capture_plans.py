@@ -42,10 +42,9 @@ def main() -> int:
     from impala_base_to_cdw_sizing_spark.session import build_spark
 
     spark = build_spark("capture-plans", data_dir=sf_dir)
-    registry = dict(ent.queries())
-    registry.update(ent.extra_queries())
+    registry = ent.queries()
     if not names:
-        names = list(ent.queries())
+        names = list(registry)
     out_dir = Path(__file__).resolve().parent.parent / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
     rc = 0

@@ -6,13 +6,15 @@ row count, column names, and exact values (column-name-sorted,
 row-sorted) — strictly stronger than the driver's order-insensitive
 value hash, so passing here implies passing there.
 
-Usage: python tools/compare_oracle.py [--extra | --all] [--ansi]
+Usage: python tools/compare_oracle.py [--all] [--ansi]
        [--partitions=N] [--master=local[N]] [--manifest=PATH]
        [--sample=N] [--seed=S]
        [sf_dir] [query_name ...]
+``--all`` checks every declared name (the default when no query name is
+given; the sweep manifests are recorded with it).
 ``--sample=N --seed=S`` checks a deterministic random subset of N names
-from the selected tier (r10 verdict #8: a <5-min judge spot-check of the
-extra tier, e.g. ``--extra --sample=10 --seed=42``). The subset is
+(r10 verdict #8: a <5-min judge spot-check, e.g.
+``--sample=10 --seed=42``). The subset is
 ``random.Random(S).sample(sorted(names), N)`` — reproducible from the
 seed alone, independent of registration order.
 ``--manifest`` writes a JSON record of exactly which names were checked
@@ -20,8 +22,6 @@ seed alone, independent of registration order.
 manifest; tests/test_sweep_manifests.py fails if any registered query
 is missing from it, so registry growth forces a sweep re-run), stamped
 with the checked-out commit and the UTC start time of the run.
-``--extra`` checks the pytest-verified extra tier (extra_queries()) instead
-of the declared contract; ``--all`` checks both tiers in one session.
 ``--ansi`` runs Spark with spark.sql.ansi.enabled=true (r8 verdict #3:
 the integer micro/nano arithmetic rides close to 2^63 — under default
 non-ANSI Spark an overflow wraps SILENTLY; ANSI mode turns every wrap
@@ -123,8 +123,6 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -
 
 def main() -> int:
     raw = sys.argv[1:]
-    extra = "--extra" in raw
-    both = "--all" in raw
     ansi = "--ansi" in raw
     partitions = None
     master = None
@@ -133,7 +131,7 @@ def main() -> int:
     seed = 0
     args = []
     for a in raw:
-        if a in ("--extra", "--all", "--ansi"):
+        if a in ("--all", "--ansi"):
             continue
         if a.startswith("--partitions="):
             partitions = int(a.split("=", 1)[1])
@@ -145,6 +143,8 @@ def main() -> int:
             sample_n = int(a.split("=", 1)[1])
         elif a.startswith("--seed="):
             seed = int(a.split("=", 1)[1])
+        elif a.startswith("--"):
+            raise SystemExit(f"unknown option {a}")
         else:
             args.append(a)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
@@ -163,13 +163,7 @@ def main() -> int:
         extra_conf=extra_conf,
     )
     con = duck_connection(sf_dir)
-    if both:
-        qs = {**ent.queries(), **ent.extra_queries()}
-        oracles = {**ent.oracle_sql(), **ent.extra_oracle_sql()}
-    elif extra:
-        qs, oracles = ent.extra_queries(), ent.extra_oracle_sql()
-    else:
-        qs, oracles = ent.queries(), ent.oracle_sql()
+    qs, oracles = ent.queries(), ent.oracle_sql()
 
     if sample_n is not None:
         if manifest_path is not None:

@@ -1,6 +1,6 @@
 """Wall + Spark-job-count probe for iterative queries (r15).
 
-Times each named declared/extra query with the noop sink and counts the
+Times each named declared query with the noop sink and counts the
 jobs each rep schedules (setJobGroup + statusTracker), printing one JSON
 line with per-rep ``walls`` and ``jobs`` lists. Every rep starts cold:
 the Spark cache and every in-process memo are cleared first, so the
@@ -29,8 +29,7 @@ def main() -> None:
 
     spark = build_spark("job-count-probe", data_dir=sf_dir)
     sc = spark.sparkContext
-    registry = dict(ent.extra_queries())
-    registry.update(ent.queries())
+    registry = ent.queries()
     names = sys.argv[1:]
     missing = set(names) - set(registry)
     if missing:

@@ -49,15 +49,8 @@ def main() -> int:
     from impala_base_to_cdw_sizing_spark.session import build_spark
 
     spark = build_spark("plan-audit")
-    # declared tier by default; naming an extra-tier query audits it too
-    registry = dict(ent.queries())
-    for k, v in ent.extra_queries().items():
-        registry.setdefault(k, v)
-    for name, fn in registry.items():
-        if only:
-            if name not in only:
-                continue
-        elif name not in ent.queries():
+    for name, fn in ent.queries().items():
+        if only and name not in only:
             continue
         try:
             df = fn(spark, sf_dir)

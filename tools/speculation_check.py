@@ -58,7 +58,7 @@ def main() -> int:
     import __spark_entry__ as ent
     from impala_base_to_cdw_sizing_spark.session import build_spark
 
-    registry = {**ent.queries(), **ent.extra_queries()}
+    registry = ent.queries()
 
     spec = build_spark(
         "speculation-race",

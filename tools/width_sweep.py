@@ -51,8 +51,7 @@ def run_config(
 
     spark = build_spark(f"width-sweep-{label}", **opts)
     con = duck_connection(sf_dir)
-    qs = {**ent.queries(), **ent.extra_queries()}
-    oracles = {**ent.oracle_sql(), **ent.extra_oracle_sql()}
+    qs, oracles = ent.queries(), ent.oracle_sql()
     if only:
         qs = {n: qs[n] for n in sorted(only)}
     ok, failed = 0, []
