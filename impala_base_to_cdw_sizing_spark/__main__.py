@@ -39,6 +39,8 @@ def main(argv: list[str] | None = None) -> int:
         print("ERROR: set input_file (EP2 replay) or cm_url (EP1 API mode)")
         return 1
 
+    from pyspark.errors import PySparkException
+
     from .plans.pipeline import prepare_query_history, run_api_sizing
 
     if params.input_file:
@@ -48,8 +50,17 @@ def main(argv: list[str] | None = None) -> int:
         # a deterministic shuffle-free seq (xxhash64(query_id)) so replay
         # and API ingest order ties identically regardless of input
         # partitioning
-        qh = prepare_query_history(read_query_history_csv(spark, params.input_file))
-        result = run_sizing(qh, params)
+        try:
+            qh = prepare_query_history(read_query_history_csv(spark, params.input_file))
+            result = run_sizing(qh, params)
+        except PySparkException as e:
+            # the reader raises on a malformed field and run_sizing's
+            # eager sweep pass reads every derive input, so the error
+            # surfaces here, before any sink is written; its first line
+            # names the field and value, the rest is the JVM stack
+            reason = str(e).strip().splitlines()[0]
+            print(f"ERROR: reading replay input {params.input_file} failed: {reason}")
+            return 1
     else:
         spark = build_spark("sizing-api")
         try:

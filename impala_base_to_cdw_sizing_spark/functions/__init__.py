@@ -45,12 +45,8 @@ def round2_py(x: float | None) -> float | None:
     return math.floor(x * 100.0 + 0.5) / 100.0
 
 
-def ceil_long(c: Column) -> Column:
-    """``int(math.ceil(x))`` (``impala_query_sizing.py:72,236,241,...``) —
-    Spark ``ceil`` already returns LongType; oracle side must
-    ``CAST(ceil(x) AS BIGINT)`` since DuckDB's ceil returns DOUBLE."""
-    return F.ceil(c).cast("long")
-
-
 def ceil_long_sql(x: str) -> str:
+    """``int(math.ceil(x))`` (``impala_query_sizing.py:72,236,241,...``)
+    as SQL text for both engines: the CAST is needed because DuckDB's
+    ceil returns DOUBLE (Spark's already returns BIGINT)."""
     return f"CAST(ceil({x}) AS BIGINT)"

@@ -1,11 +1,11 @@
 """Count-min sketch over corpus 3-gram shingles + heavy-hitter verification.
 
-Completes the classic sketch trio alongside ``dedup_bloom`` (membership)
-and ``rel_hll_rollup`` (distinct count): count-min answers "how often
-does X occur?" from a fixed d×w counter table, however large the stream.
-The build is the same distributed shape as the Bloom bitmap: each token
-occurrence explodes to d (row, col) cells, one ``groupBy`` with map-side
-combine collapses them — the sketch is d·w rows total (4·1024 here),
+The frequency sketch next to ``rel_hll_rollup`` (distinct count):
+count-min answers "how often does X occur?" from a fixed d×w counter
+table, however large the stream. The build is one distributed shape:
+each token occurrence explodes to d (row, col) cells, one ``groupBy``
+with map-side combine collapses them — the sketch is d·w rows total
+(4·1024 here),
 broadcastable, and mergeable across partitions/days by cell-wise
 addition (sums commute — unlike exact top-k state).
 
@@ -45,8 +45,7 @@ from .text import (
 )
 
 _CM_W = 1024  # columns per row
-# row hashes from the shared audited family (hashes.py) — same
-# coefficients as the Bloom filter by documented choice
+# row hashes from the shared audited family (hashes.py)
 _CM_ROWS = UHASH_COEFFS
 _TOP_K = 20
 

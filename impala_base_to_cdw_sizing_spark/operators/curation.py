@@ -268,7 +268,6 @@ SELECT doc_id, MIN(r) AS cluster FROM reach GROUP BY doc_id
 
 _DSIR_BUCKETS = 1024
 _TARGET_LANG = "en"
-_MICRO = 1_000_000.0
 _KEEP_FRAC = 0.25
 
 

@@ -1,13 +1,13 @@
 """Event-sequence analytics over ``events`` — funnel conversion and
 retention cohorts, the two workhorse product-analytics queries a
 warehouse engine is expected to answer (and the reference's event
-stream makes natural).
+stream makes natural), plus SCD2 intervals and a banded interval join.
 
-- ``rel_funnel_steps``: ordered view → click → purchase conversion per
-  user. Each stage is the earliest qualifying event STRICTLY after the
-  previous stage's timestamp — the order-sensitive definition (a
-  purchase before your first view does not convert), which is what
-  separates a funnel from three independent existence checks.
+- ``rel_funnel_window``: the time-bounded view → click → purchase
+  funnel (ClickHouse ``windowFunnel`` semantics). Each stage must
+  follow the previous one within 24 h, and the funnel may start at any
+  view — the order-sensitive definition, which is what separates a
+  funnel from three independent existence checks.
 - ``rel_retention_cohorts``: weekly cohort retention — users grouped
   by first-seen week, counted in each subsequent week they were
   active. The (cohort, offset, n_users) long form is the standard
@@ -18,11 +18,10 @@ Determinism: all timestamps are exact epoch-nanos integers
 integer floor-divisions, and stage timestamps are MINs — no floats
 anywhere.
 
-Scale: the funnel is three user-keyed aggregations chained by
-broadcast-joinable per-user scalars (each stage's frame is one row per
-user — far smaller than the event table); retention is two
-aggregations (first-seen, distinct user-week) and one join keyed on
-user_id. No windows, no self-join of the raw event table.
+Scale: the funnel joins are user_id equi-joins with range predicates
+(fan-out only within one user's events) and collapse per (user, start)
+at once; retention is two aggregations (first-seen, distinct user-week)
+and one join keyed on user_id.
 """
 
 from __future__ import annotations
@@ -34,43 +33,6 @@ from ..sources.files import load_events
 from .queries_ext import register
 
 _WEEK_NS = 7 * 24 * 3600 * 1_000_000_000
-
-
-def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(user_id, view_ns, click_ns, purchase_ns, stage_reached): the
-    strictly-ordered 3-step funnel; later stages are NULL when the
-    funnel stalls, stage_reached counts completed steps."""
-    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("view_ns"))
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .join(views, "user_id")
-        .filter(F.col("ts") > F.col("view_ns"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("click_ns"))
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(clicks, "user_id")
-        .filter(F.col("ts") > F.col("click_ns"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("purchase_ns"))
-    )
-    users = ev.select("user_id").distinct()
-    return (
-        users.join(views, "user_id", "left")
-        .join(clicks, "user_id", "left")
-        .join(purchases, "user_id", "left")
-        .selectExpr(
-            "user_id", "view_ns", "click_ns", "purchase_ns",
-            "CAST((view_ns IS NOT NULL) AS INT) + CAST((click_ns IS NOT NULL) AS INT)"
-            " + CAST((purchase_ns IS NOT NULL) AS INT) AS stage_reached",
-        )
-    )
 
 
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,38 +62,6 @@ SELECT f.cohort_week, e.week - f.cohort_week AS week_offset,
 FROM ev e JOIN first f ON e.user_id = f.user_id
 GROUP BY 1, 2
 """
-
-
-# --- hourly spike detection -------------------------------------------------------
-
-_SPIKE_NUM, _SPIKE_DEN = 3, 2  # spike = count > 1.5x the hourly mean
-
-
-def q_hourly_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(hour_ms, event_type, n, is_spike): hours whose per-type event
-    count exceeds 1.5x that type's hourly mean — the drift/incident
-    flag an ingestion pipeline watches. The threshold comparison is
-    cross-multiplied into pure integers (n * n_hours * DEN > total *
-    NUM), so there is no float mean, no epsilon, and no rounding to
-    diverge on; the mean's denominator counts only OBSERVED hours for
-    that type (gap-fill first — rel_gapfill_hourly — to count silence
-    against the mean instead)."""
-    ev = load_events(spark, sf_dir).selectExpr(
-        "event_type", "(ts div 1000000) div 3600000 * 3600000 AS hour_ms"
-    )
-    hourly = ev.groupBy("event_type", "hour_ms").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    per_type = hourly.groupBy("event_type").agg(
-        F.sum("n").alias("total"), F.count("*").alias("n_hours")
-    )
-    return (
-        hourly.join(F.broadcast(per_type), "event_type")
-        .selectExpr(
-            "hour_ms", "event_type", "n",
-            f"n * n_hours * {_SPIKE_DEN} > total * {_SPIKE_NUM} AS is_spike",
-        )
-    )
 
 
 # --- SCD2 interval reconstruction -------------------------------------------------
@@ -202,57 +132,6 @@ FROM per_run
 """
 
 
-def q_hourly_spikes_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust spike detection: flag hours where the per-type count
-    exceeds ``median + 3 * MAD`` — the robust-statistics upgrade of
-    ``rel_hourly_spikes``'s mean threshold. A real incident (one huge
-    hour) inflates a mean enough to mask smaller spikes, but cannot
-    move a median; MAD (median absolute deviation) is the matching
-    robust spread. Both are LOWER medians picked by rank arithmetic
-    (``rn = (cnt+1) div 2`` over a deterministic (value, hour) order),
-    so every quantity stays an exact integer and the flag has no float,
-    no epsilon, and no cross-engine hazard. Two windows per type over
-    hour-count rows (thousands, not events) — negligible at any event
-    volume."""
-    from pyspark.sql import Window
-
-    hourly = (
-        load_events(spark, sf_dir)
-        .selectExpr(
-            "event_type",
-            "(ts div 1000000) div 3600000 * 3600000 AS hour_ms",
-        )
-        .groupBy("event_type", "hour_ms")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-
-    def lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(
-            F.col(col).asc(), F.col("hour_ms").asc()
-        )
-        wall = Window.partitionBy("event_type")
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .withColumn("cnt", F.count("*").over(wall))
-            .filter(F.expr("rn = (cnt + 1) div 2"))
-            .selectExpr("event_type", f"{col} AS {out}")
-        )
-
-    med = lower_median(hourly, "n", "med")
-    dev = hourly.join(F.broadcast(med), "event_type").selectExpr(
-        "event_type", "hour_ms", "abs(n - med) AS dev"
-    )
-    mad = lower_median(dev, "dev", "mad")
-    return (
-        hourly.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
-        .selectExpr(
-            "hour_ms", "event_type", "n", "med", "mad",
-            "n > med + 3 * mad AS is_spike",
-        )
-    )
-
-
 _BAND_MS = 60_000  # time-proximity window: |t_click - t_error| <= 60 s
 
 
@@ -302,155 +181,15 @@ FROM ev e JOIN ev c
 """
 
 
-def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WHERE the hourly rate shifted, per event_type — CUSUM changepoint
-    localization, the complement of the spike detectors (a spike is one
-    bad hour; a changepoint is a new regime). For counts x_1..x_T the
-    cumulative deviation from a flat rate is ``C_k = sum_{i<=k} x_i -
-    k*S/T``; the changepoint estimate is ``argmax_k |C_k|``. Scaling by
-    T (``T*prefix - k*S``) keeps every quantity an exact BIGINT — no
-    float mean, no epsilon, ties to the earliest hour. One ordered
-    prefix-sum window per type over HOUR-COUNT rows (not events) + a
-    1-row argmax window; both tiny at any event volume."""
-    from pyspark.sql import Window
-
-    hourly = (
-        load_events(spark, sf_dir)
-        .selectExpr(
-            "event_type",
-            "(ts div 1000000) div 3600000 * 3600000 AS hour_ms",
-        )
-        .groupBy("event_type", "hour_ms")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    word = Window.partitionBy("event_type").orderBy("hour_ms").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy("event_type")
-    word_rn = Window.partitionBy("event_type").orderBy("hour_ms")
-    cusum = (
-        hourly.withColumn("prefix", F.sum("n").over(word))
-        .withColumn("k", F.row_number().over(word_rn).cast("long"))
-        .withColumn("total", F.sum("n").over(wall))
-        .withColumn("n_hours", F.count("*").over(wall))
-        .selectExpr(
-            "event_type", "hour_ms", "n_hours", "total",
-            "n_hours * prefix - k * total AS c_scaled",
-        )
-    )
-    warg = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("c_scaled")).desc(), F.col("hour_ms").asc()
-    )
-    return (
-        cusum.withColumn("rn", F.row_number().over(warg))
-        .filter(F.col("rn") == 1)
-        .selectExpr(
-            "event_type", "hour_ms AS cp_hour_ms",
-            "abs(c_scaled) AS cusum_abs_scaled", "n_hours", "total",
-        )
-        .orderBy("event_type")
-    )
-
-
-def q_hourly_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type linear trend of the hourly rate — closed-form OLS with
-    EXACT integer sufficient statistics. x is the hour index from each
-    type's first hour (small integers), y the hourly count; n·Σxy−Σx·Σy
-    and n·Σxx−Σx² are exact BIGINTs (hours and counts keep every
-    product far under 2⁶³), so the slope is ONE correctly-rounded
-    double division — bit-equal cross-engine, the det-ln philosophy
-    applied to regression. The intercept reuses the slope with an
-    identical expression tree on both engines. Two partial aggregates
-    over hour-count rows; no window at all."""
-    hourly = (
-        load_events(spark, sf_dir)
-        .selectExpr("event_type", "(ts div 1000000) div 3600000 AS hr")
-        .groupBy("event_type", "hr")
-        .agg(F.count("*").cast("long").alias("y"))
-    )
-    base = hourly.groupBy("event_type").agg(F.min("hr").alias("hr0"))
-    xy = hourly.join(F.broadcast(base), "event_type").selectExpr(
-        "event_type", "CAST(hr - hr0 AS BIGINT) AS x", "y"
-    )
-    sums = xy.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_hours"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    return sums.selectExpr(
-        "event_type", "n_hours", "sx", "sy",
-        "CASE WHEN n_hours * sxx - sx * sx = 0 THEN NULL"
-        " ELSE CAST(n_hours * sxy - sx * sy AS DOUBLE)"
-        " / CAST(n_hours * sxx - sx * sx AS DOUBLE) END AS slope",
-    ).selectExpr(
-        "event_type", "n_hours", "sy", "slope",
-        "CAST(sy AS DOUBLE) / n_hours"
-        " - slope * (CAST(sx AS DOUBLE) / n_hours) AS intercept",
-    )
-
-
-def q_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonality-aware anomaly detection: baseline = per
-    (event_type, hour-of-day) LOWER MEDIAN of the daily counts (exact
-    rank arithmetic — no float), residual = count − its slot's
-    baseline, flag cells where residual > 3 × the slot family's MAD.
-    A recurring rush hour is BASELINE here, not an anomaly — the
-    upgrade over rel_hourly_spikes_mad, whose single per-type median
-    flags every busy-season hour. All medians are lower medians picked
-    by ``rn = (cnt+1) div 2`` over deterministic orders; every quantity
-    is an exact integer, so the flag carries no epsilon. Windows
-    partition by (event_type, hod) — thousands of small partitions."""
-    from pyspark.sql import Window
-
-    cells = (
-        load_events(spark, sf_dir)
-        .selectExpr(
-            "event_type",
-            "(ts div 1000000) div 86400000 AS day",
-            "((ts div 1000000) div 3600000) % 24 AS hod",
-        )
-        .groupBy("event_type", "day", "hod")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-
-    def slot_lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
-        w = Window.partitionBy("event_type", "hod").orderBy(
-            F.col(col).asc(), F.col("day").asc()
-        )
-        wall = Window.partitionBy("event_type", "hod")
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .withColumn("cnt", F.count("*").over(wall))
-            .filter(F.expr("rn = (cnt + 1) div 2"))
-            .selectExpr("event_type", "hod", f"{col} AS {out}")
-        )
-
-    base = slot_lower_median(cells, "n", "baseline")
-    resid = cells.join(F.broadcast(base), ["event_type", "hod"]).selectExpr(
-        "event_type", "day", "hod", "n", "baseline",
-        "n - baseline AS resid",
-    )
-    dev = resid.selectExpr("event_type", "hod", "day", "abs(resid) AS adev")
-    mad = slot_lower_median(dev, "adev", "mad")
-    return resid.join(F.broadcast(mad), ["event_type", "hod"]).selectExpr(
-        "event_type", "day", "hod", "n", "baseline", "resid",
-        "mad", "resid > 3 * mad AS is_anomaly",
-    )
-
-
 _WF_NS = 24 * 3600 * 1_000_000_000  # windowFunnel horizon: 24 h
 
 
 def q_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-BOUNDED funnel (ClickHouse ``windowFunnel`` semantics) —
-    the piece ``rel_funnel_steps`` deliberately lacks: that operator
-    chains from each user's EARLIEST view with no deadline; here the
+    """Time-BOUNDED funnel (ClickHouse ``windowFunnel`` semantics): the
     chain view → click → purchase must complete within 24 h of the
-    view, and the funnel may start at ANY view (the earliest-start
-    greedy misses funnels that only complete from a later attempt —
-    at sf0.01 the two operators genuinely disagree). Per start, taking
+    view, and the funnel may start at ANY view (an earliest-start
+    greedy misses funnels that only complete from a later attempt).
+    Per start, taking
     the EARLIEST valid next step is exchange-argument optimal (it can
     only leave more room for the remaining steps), so two
     min-aggregated within-user joins compute the exact max depth.

@@ -1,12 +1,10 @@
 """Shared universal-hash family for the sketch operators.
 
-``dedup_bloom`` (mixture.py) and ``sketch_countmin_topk`` (countmin.py)
-deliberately draw their row/position hashes from ONE family: the same
-prime modulus and the same four (a, b) coefficient pairs, applied as
-``((a * (h % P) + b) % P) % width``. Reducing ``h`` mod P FIRST keeps
-``a * h'`` far below signed-64 overflow (a ≤ 13, h' < 2^30) — the
-overflow guard lives here once, not per sketch. The sharing is a
-documented choice (one audited family), not an accident; a sketch that
+``sketch_countmin_topk`` (countmin.py) draws its row hashes from ONE
+audited family: a prime modulus and four (a, b) coefficient pairs,
+applied as ``((a * (h % P) + b) % P) % width``. Reducing ``h`` mod P
+FIRST keeps ``a * h'`` far below signed-64 overflow (a ≤ 13, h' < 2^30)
+— the overflow guard lives here once, not per sketch. A sketch that
 needs independence from these picks different coefficients explicitly.
 """
 

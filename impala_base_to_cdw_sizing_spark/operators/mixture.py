@@ -1,6 +1,4 @@
-"""Corpus mixture rebalancing and Bloom-filter membership dedup.
-
-Two more training-data-pipeline operators over ``documents``:
+"""Corpus mixture rebalancing over ``documents``.
 
 - **domain-mixture resampling** (``mix_sources``): pretraining corpora
   are blended to TARGET proportions per source/domain, not ingested
@@ -9,25 +7,15 @@ Two more training-data-pipeline operators over ``documents``:
   deterministic keep-rate toward an equal-share token budget, and
   subsamples each source at its rate with the same Knuth-hash coin the
   stratified sampler uses — reproducible anywhere, no RNG state.
-- **Bloom membership dedup** (``dedup_bloom``): the steady-state "have
-  we seen this document?" check against a corpus too large to semi-join
-  per batch. The corpus's exact digests compress into a k-hash m-bit
-  Bloom bitmap, built DISTRIBUTED as a (word_idx → 32-bit word) table
-  via ``bit_or`` aggregation — ~m/32 rows regardless of corpus size,
-  broadcastable to every probe task. Probes join on word index and test
-  bits; the query also reports the measured false-positive outcome per
-  probe by comparing against the exact digest semi-join.
+- **temperature sampling** (``mix_sources_temperature``): the same
+  per-source summary with targets proportional to a tempered power of
+  each source's token share.
 
 Scale notes: the mixture plan is one aggregate + one broadcast join over
-a single corpus scan (rates are a per-source scalar table). The Bloom
-build is one explode + one ``bit_or`` shuffle keyed on word index — the
-bitmap table is m/32 rows however big the corpus is (at 100 TB size m to
-~10 bits per corpus digest; the table stays at kilobytes per million
-bits). Neither operator ever self-joins the corpus.
-
-Both engines compute the identical 60-bit document digest
-(first 15 hex chars of md5 → BIGINT), so every rate, bit position, and
-bitmap word is bit-equal across Spark and the DuckDB oracle.
+a single corpus scan (rates are a per-source scalar table); it never
+self-joins the corpus. Rates come from exact integer token counts (the
+temperature weights are square roots quantized to integer micro-units),
+so they are bit-equal across Spark and the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -36,13 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries_ext import register
-from .hashes import UHASH_COEFFS, uhash_expr
 from .sampling import _KNUTH, _M32  # the one shared deterministic coin
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import read_input
-
-SPARK_DIGEST = "CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)"
-DUCK_DIGEST = "CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT)"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,8 +166,6 @@ FROM rates r LEFT JOIN kept k ON r.source = k.source
 # integer micro-units so the normalizing SUM is an exact integer, never
 # an order-dependent float sum.
 
-_TEMP_ALPHA = 0.5  # realized as sqrt(); do not change without re-deriving
-
 
 def q_mix_sources_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mixture summary under temperature sampling: target_i ∝
@@ -291,93 +273,6 @@ SELECT r.source, r.n_docs, r.avail_tokens, r.target_tokens, r.keep_rate,
   r.temp_share / r.raw_share > 1.0 AS boosted
 FROM rates r LEFT JOIN kept k ON r.source = k.source
 """
-
-
-# --- Bloom-filter membership dedup -----------------------------------------------
-
-# Filter sized so the fixture corpus (250 digests × 4 hashes ≈ 1000 set
-# bits of 2048) yields a few-percent false-positive rate at BOTH the
-# sf0.001 and sf0.01 fixtures — small enough that FPs OCCUR and the
-# false_positive accounting is exercised, not vacuously zero.
-# Production sizing: m ≈ 10 bits per corpus digest.
-_BLOOM_M = 1 << 11  # bits in the filter
-# position hashes come from the shared audited family (hashes.py) —
-# the overflow guard and coefficients live there once
-_BLOOM_HASHES = UHASH_COEFFS
-
-
-def _positions(h: str, wrap: str) -> str:
-    pos = ", ".join(
-        f"CAST({uhash_expr(h, a, b, _BLOOM_M)} AS BIGINT)"
-        for a, b in _BLOOM_HASHES
-    )
-    return wrap.format(pos=pos)
-
-
-def _spark_positions(h: str) -> str:
-    return _positions(h, "array({pos})")
-
-
-def q_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe EVERY document against a Bloom filter built over the
-    corpus half (even doc_ids). Members (even ids) must all hit — the
-    filter's no-false-negative guarantee, pinned in tests; non-members
-    mostly miss. Per probe doc: ``bloom_hit`` (all k bits set),
-    ``exact_dup`` (digest really present), ``false_positive`` (Bloom
-    said yes, digests say no — the sketch's measured error, nonzero by
-    construction at the fixture's fill factor).
-
-    The bitmap lives as a (word_idx, word) table: positions pack 32 bits
-    per word, built with one ``bit_or`` aggregation; probes equi-join on
-    word_idx (broadcast: the whole table is m/32 rows) and a probe hits
-    iff all k of its bits are set."""
-    docs = _docs(spark, sf_dir).selectExpr(
-        "doc_id", f"{SPARK_DIGEST} AS digest"
-    )
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    probes = docs
-
-    # shiftleft/shiftright, not the << >> operators: the operator
-    # spellings only parse on Spark 4+, the functions since 1.5
-    bloom = (
-        corpus.selectExpr(f"explode({_spark_positions('digest')}) AS pos")
-        .selectExpr(
-            "pos div 32 AS word_idx",
-            "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT)) AS bit",
-        )
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(bit)").alias("word"))
-    )
-    probe_bits = probes.selectExpr(
-        "doc_id", "digest", f"explode({_spark_positions('digest')}) AS pos"
-    ).selectExpr("doc_id", "digest", "pos div 32 AS word_idx", "CAST(pos % 32 AS INT) AS bit")
-    hits = (
-        probe_bits.join(F.broadcast(bloom), "word_idx", "left")
-        .selectExpr(
-            "doc_id", "digest",
-            "CAST(coalesce(shiftright(word, bit) % 2, 0) AS INT) AS bit_set",
-        )
-        .groupBy("doc_id", "digest")
-        .agg((F.sum("bit_set") == len(_BLOOM_HASHES)).alias("bloom_hit"))
-    )
-    # The exact-dup join exists to MEASURE the Bloom filter's false
-    # positives; it is corpus-sized, so no broadcast hint (at 100 TB the
-    # whole point of the Bloom bitmap is to avoid this join — production
-    # probes would stop at bloom_hit and only verify hits)
-    corpus_digests = corpus.select("digest").distinct().withColumn(
-        "_present", F.lit(True)
-    )
-    return (
-        hits.join(corpus_digests, "digest", "left")
-        .select(
-            "doc_id",
-            "bloom_hit",
-            F.coalesce("_present", F.lit(False)).alias("exact_dup"),
-            (F.col("bloom_hit") & ~F.coalesce("_present", F.lit(False))).alias(
-                "false_positive"
-            ),
-        )
-    )
 
 
 def register_all() -> None:

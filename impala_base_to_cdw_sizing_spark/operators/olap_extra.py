@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from .aggregates import dsum_sql
 from .queries_ext import register
-from .segmented import ntile_expr, segmented_cumsum, segmented_row_number
+from .segmented import segmented_row_number
 from ..sources.files import ROWS_PER_TASK_COLLAPSING, read_input
 
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -462,75 +462,6 @@ JOIN rolled r USING (event_type)
 # "already rolled up" history, the rest is the newly-arrived partition
 _INC_CUT_NS = 1_705_795_200_000_000_000
 
-# null-safe two-sided min/max merge — written once, used verbatim in
-# both dialects (Spark's least() skips NULLs but DuckDB's returns NULL,
-# so the explicit CASE is the portable form)
-_MERGE_MIN = (
-    "CASE WHEN {a} IS NULL THEN {b} WHEN {b} IS NULL THEN {a}"
-    " ELSE least({a}, {b}) END"
-)
-_MERGE_MAX = (
-    "CASE WHEN {a} IS NULL THEN {b} WHEN {b} IS NULL THEN {a}"
-    " ELSE greatest({a}, {b}) END"
-)
-
-
-def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental rollup maintenance — the algebraic-merge contract a
-    100 TB warehouse depends on, as a query with its own proof.
-
-    History (events before the cut) is aggregated once; the new
-    partition is aggregated alone; the published rollup is the MERGE of
-    the two states (counts add, decimal sums add exactly, min/max
-    combine null-safely) — history is never rescanned. The operator
-    emits the merged rollup per event_type PLUS a ``consistent``
-    witness comparing every merged figure against a full recompute, so
-    the mergeability claim is checked row-by-row in both engines, not
-    asserted. Decimal sums merge BEFORE the double conversion: merging
-    after (double + double of per-part sums) is where real pipelines
-    silently drift from their recompute.
-
-    Scale: three partial-agg passes over disjoint slices (the recompute
-    pass exists only for the witness; production drops it), merge join
-    on the group key, event_type cardinality rows out."""
-    from ..sources.files import load_events
-
-    e = load_events(spark, sf_dir)
-    DEC = "decimal(38,6)"
-
-    def agg(df: DataFrame, tag: str) -> DataFrame:
-        return df.groupBy("event_type").agg(
-            F.count("*").cast("long").alias(f"n_{tag}"),
-            F.sum(F.col("value").cast(DEC)).alias(f"sum_{tag}"),
-            F.min("value").alias(f"min_{tag}"),
-            F.max("value").alias(f"max_{tag}"),
-        )
-    snap = agg(e.filter(F.col("ts") < _INC_CUT_NS), "s")
-    delta = agg(e.filter(F.col("ts") >= _INC_CUT_NS), "d")
-    full = agg(e, "f")
-    merged = (
-        snap.join(delta, "event_type", "full_outer")
-        .selectExpr(
-            "event_type",
-            "coalesce(n_s, 0) + coalesce(n_d, 0) AS n",
-            f"CAST(coalesce(sum_s, CAST(0 AS {DEC}))"
-            f" + coalesce(sum_d, CAST(0 AS {DEC})) AS {DEC}) AS sum_dec",
-            _MERGE_MIN.format(a="min_s", b="min_d") + " AS min_v",
-            _MERGE_MAX.format(a="max_s", b="max_d") + " AS max_v",
-        )
-    )
-    return (
-        merged.join(full, "event_type")
-        .selectExpr(
-            "event_type", "n",
-            "CAST(sum_dec AS DOUBLE) AS sum_value",
-            "min_v", "max_v",
-            "CAST(n = n_f AND sum_dec = sum_f AND min_v = min_f"
-            " AND max_v = max_f AS BIGINT) AS consistent",
-        )
-        .orderBy("event_type")
-    )
-
 
 # --- distribution drift (population stability index) -------------------------------
 
@@ -726,9 +657,10 @@ _IVM_CUT = "1996-01-01"
 
 def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN-view maintenance — the materialized-view
-    algebra ``rel_incremental_rollup`` proves for plain rollups,
-    extended to an aggregate over a join: the view is per-nation order
-    counts and decimal revenue over ``orders ⋈ customer``. An
+    algebra of incremental rollups (merge the snapshot aggregate with
+    the aggregate of the delta), extended to an aggregate over a join:
+    the view is per-nation order counts and decimal revenue over
+    ``orders ⋈ customer``. An
     insert-only delta of orders (orderdate ≥ the cut) maintains the
     view as ``V_new = merge(V_old, agg(ΔA ⋈ B))`` — the ΔA⋈B term of
     the classic delta-join rule (the A⋈ΔB term is zero for a
@@ -949,106 +881,14 @@ SQL_UNPIVOT = f"""
 """
 
 
-def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MODE per group with a pinned tie policy — the aggregate ANSI
-    SQL:2023 added (and DuckDB ships) that Spark lacks as a builtin:
-    most frequent o_orderpriority per o_orderstatus, ties broken by the
-    SMALLEST value (both engines' native mode() leaves ties
-    implementation-defined, so neither is used — the rank form makes
-    the tie deterministic and cross-engine)."""
-    orders = _t(spark, sf_dir, "orders")
-    counts = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("n").desc(), F.col("o_orderpriority").asc()
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .selectExpr(
-            "o_orderstatus",
-            "o_orderpriority AS mode_priority",
-            "n AS mode_n",
-        )
-    )
-
-
 _ABC_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
 _ABC_DUCK_CENTS = "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
 _ABC_BUCKET_CENTS = 1_000_000  # $10k revenue buckets
 
 
-def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto / ABC inventory classification — customers split into
-    A (first 80% of cumulative revenue), B (80-95%), C (tail) — the
-    classic global-cumulative-share query, computed with the segmented
-    decomposition (`segmented.py`): revenue is quantized into
-    ordering-consistent $10k buckets (negated so ascending bucket =
-    descending revenue), the running sum windows PARTITION BY bucket,
-    and earlier-bucket revenue arrives as a broadcast triangular carry
-    — exact BIGINT cents everywhere (floor(x*100+0.5) is the house
-    rounding rule), class cuts as integer comparisons
-    (cum·100 ≤ total·80), zero global windows. Output: 3-row class
-    summary with exact revenue and one display-division share."""
-    rev = (
-        # r15: collapsing consumer — the per-customer partial agg folds
-        # 10x before the first exchange, so the scan is read unfanned
-        # (measured: gini 0.98->0.60, pareto 1.39->0.92, lorenz
-        # 1.71->1.17 s at sf0.1)
-        _t_collapsing(spark, sf_dir, "orders")
-        .selectExpr("o_custkey", f"{_ABC_CENTS} AS cents")
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-    )
-    classed = pareto_classes(rev)
-    return classed.groupBy("abc_class").agg(
-        F.count("*").cast("long").alias("n_customers"),
-        F.sum("rev").cast("long").alias("class_rev_cents"),
-        F.max("total").cast("long").alias("total_cents"),
-    ).selectExpr(
-        "abc_class",
-        "n_customers",
-        "class_rev_cents",
-        "CAST(class_rev_cents AS DOUBLE) / CAST(total_cents AS DOUBLE)"
-        " AS rev_share",
-    )
-
-
-def pareto_classes(rev: "DataFrame") -> "DataFrame":
-    """Per-customer (o_custkey, rev, cum, total, abc_class) via the
-    segmented decomposition — split out (the ``chi2_from_cells``
-    pattern) so the hypothesis fuzz can pit the segmented cumulative
-    sum against a sequential Python computation on arbitrary revenue
-    multisets, not just this corpus."""
-    rev = rev.withColumn(
-        "bucket", F.expr(f"-(rev DIV {_ABC_BUCKET_CENTS})").cast("long")
-    )
-    grand = rev.agg(F.sum("rev").cast("long").alias("total"))
-    return (
-        segmented_cumsum(
-            rev,
-            "bucket",
-            [F.col("rev").desc(), F.col("o_custkey").asc()],
-            {"cum": F.col("rev")},
-        )
-        .crossJoin(F.broadcast(grand))
-        .selectExpr(
-            "o_custkey",
-            "rev",
-            "cum",
-            "total",
-            "CASE WHEN cum * 100 <= total * 80 THEN 'A'"
-            " WHEN cum * 100 <= total * 95 THEN 'B'"
-            " ELSE 'C' END AS abc_class",
-        )
-    )
-
-
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of customer revenue — the inequality summary
-    that pairs with ``rel_pareto_abc``'s classification: with revenues
-    sorted ASCENDING and 1-based ranks i,
+    """Gini coefficient of customer revenue — the inequality summary:
+    with revenues sorted ASCENDING and 1-based ranks i,
     G = 2·Σ(i·xᵢ)/(n·Σxᵢ) − (n+1)/n. Ranks come from
     ``segmented_row_number`` (ordering-consistent revenue buckets +
     triangular carry — no global window); Σ(i·xᵢ) is computed as
@@ -1059,8 +899,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         # r15: collapsing consumer — the per-customer partial agg folds
         # 10x before the first exchange, so the scan is read unfanned
-        # (measured: gini 0.98->0.60, pareto 1.39->0.92, lorenz
-        # 1.71->1.17 s at sf0.1)
+        # (measured: 0.98->0.60 s at sf0.1)
         _t_collapsing(spark, sf_dir, "orders")
         .selectExpr("o_custkey", f"{_ABC_CENTS} AS cents")
         .groupBy("o_custkey")
@@ -1111,60 +950,6 @@ SELECT n, CAST(s0 AS STRING) AS total_cents,
     - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE) AS gini
 FROM sums
 """
-
-
-def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz-curve deciles — the curve behind ``rel_gini``'s scalar:
-    customers in ascending revenue order split into 10 equal-count
-    tiles, each reporting its exact revenue mass and cumulative share.
-    Ranks come from ``segmented_row_number``; the tile assignment is
-    ``ntile_expr`` — the closed-form SQL-standard NTILE from a global
-    rank, O(1) per row, no window at all; the cumulative share is a
-    10-row triangular carry. Everything is BIGINT cents until the two
-    display divisions."""
-    rev = (
-        # r15: collapsing consumer — the per-customer partial agg folds
-        # 10x before the first exchange, so the scan is read unfanned
-        # (measured: gini 0.98->0.60, pareto 1.39->0.92, lorenz
-        # 1.71->1.17 s at sf0.1)
-        _t_collapsing(spark, sf_dir, "orders")
-        .selectExpr("o_custkey", f"{_ABC_CENTS} AS cents")
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-        .withColumn(
-            "bucket", F.expr(f"rev DIV {_ABC_BUCKET_CENTS}").cast("long")
-        )
-    )
-    ranked = segmented_row_number(
-        rev, [F.col("rev").asc(), F.col("o_custkey").asc()], out="grank"
-    )
-    n_total = ranked.agg(F.count("*").cast("long").alias("n"))
-    tiled = ranked.crossJoin(F.broadcast(n_total)).selectExpr(
-        "rev", f"CAST({ntile_expr('grank', 'n', 10)} AS BIGINT) AS decile"
-    )
-    per_tile = tiled.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n_customers"),
-        F.sum("rev").cast("long").alias("tile_rev"),
-    )
-    a, b = per_tile.alias("a"), per_tile.alias("b")
-    cum = (
-        a.join(F.broadcast(b), F.col("b.decile") <= F.col("a.decile"))
-        .groupBy(F.col("a.decile").alias("decile"))
-        .agg(F.sum("b.tile_rev").cast("long").alias("cum_rev"))
-    )
-    grand = per_tile.agg(F.sum("tile_rev").cast("long").alias("total"))
-    return (
-        per_tile.join(cum, "decile")
-        .crossJoin(F.broadcast(grand))
-        .selectExpr(
-            "decile",
-            "n_customers",
-            "tile_rev",
-            "cum_rev",
-            "CAST(tile_rev AS DOUBLE) / CAST(total AS DOUBLE) AS tile_share",
-            "CAST(cum_rev AS DOUBLE) / CAST(total AS DOUBLE) AS cum_share",
-        )
-    )
 
 
 def register_all() -> None:

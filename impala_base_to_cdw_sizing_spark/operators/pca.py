@@ -140,54 +140,6 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-``_PCA_K`` principal directions by deflation (r5 verdict #6):
-    component 1 is the plain power chain; component 2 power-iterates
-    with a Gram–Schmidt re-orthogonalization against component 1 INSIDE
-    every round (not just at the end), so quantization noise cannot
-    re-grow a v1 contribution between rounds. Output ``(component, pos,
-    loading_nano, lambda_micro, ortho_nano)`` — ``ortho_nano`` is the
-    witness: |v1·v2| in nano units, pinned ≤ a few units in tests (the
-    two stored directions are orthogonal to integer precision)."""
-    cent = _centered(spark, sf_dir).localCheckpoint(eager=True)
-    n_frame = cent.agg(F.count("*").alias("n"))
-    x1 = _e_basis(spark, 0)
-    for _ in range(_PCA_ROUNDS):
-        x1 = _power_round(cent, x1, None)
-    # small frame, read by every comp-2 round + the witness — pin it
-    x1 = x1.selectExpr("xn AS xn1", "nrm AS nrm1").localCheckpoint(eager=True)
-    x2 = _e_basis(spark, 1)
-    for _ in range(_PCA_ROUNDS):
-        x2 = _power_round(cent, x2, x1)
-    # CAST to DOUBLE before dividing: a bare `p / 1000000000.0` is
-    # DECIMAL division in Spark, and the decimal×decimal product
-    # overflows precision 38 → scale silently truncates to 6 digits
-    both = x1.crossJoin(x2.selectExpr("xn AS xn2", "nrm AS nrm2")).withColumn(
-        "ortho_nano",
-        F.expr(
-            f"CAST(floor(abs(aggregate(zip_with(xn1, xn2, (p, q) ->"
-            f" (CAST(p AS DOUBLE) / {_NANO}) * (CAST(q AS DOUBLE) / {_NANO})),"
-            f" CAST(0 AS DOUBLE),"
-            f" (acc, t) -> acc + t)) * {_NANO} + 0.5) AS BIGINT)"
-        ),
-    )
-    out = both.crossJoin(F.broadcast(n_frame)).selectExpr(
-        "stack(2, CAST(1 AS BIGINT), xn1, nrm1, CAST(2 AS BIGINT), xn2, nrm2)"
-        " AS (component, xn, nrm)",
-        "ortho_nano",
-        "n",
-    )
-    return out.selectExpr(
-        "component",
-        "posexplode(xn) AS (pos, loading_nano)",
-        "CAST(floor(nrm / n * 1000000.0 + 0.5) AS BIGINT) AS lambda_micro",
-        "ortho_nano",
-    ).selectExpr(
-        "component", "CAST(pos AS BIGINT) AS pos", "loading_nano",
-        "lambda_micro", "ortho_nano",
-    )
-
-
 def _sql_pca_round(prev: str, i: int) -> str:
     return f"""
 dots{i} AS (
@@ -214,8 +166,8 @@ x{i} AS (
 def _sql_pca_ctes() -> tuple[list[str], str]:
     """Component-1 power-iteration chain as ``(cte_parts, final_select)``.
 
-    ``_sql_pca_power`` joins the two; ``_sql_pca_topk`` reuses only the
-    CTE parts and appends the deflated component-2 chain (r6 ADVICE:
+    ``_sql_pca_power`` joins the two; ``_sql_pca_topk_ctes`` reuses only
+    the CTE parts and appends the deflated component-2 chain (r6 ADVICE:
     composing from shared parts replaces the old string-split on the
     final SELECT's literal text, which broke on any cosmetic edit).
     """
@@ -295,8 +247,8 @@ x2{i} AS (
 
 def _sql_pca_topk_ctes() -> list[str]:
     """Full two-component CTE chain (component-1 parts + deflated
-    component-2 parts + the ortho witness) — shared by ``_sql_pca_topk``
-    and the whitening projection."""
+    component-2 parts + the ortho witness) — the base of the whitening
+    projection."""
     c1_parts, _ = _sql_pca_ctes()
     x2_0 = "[" + ", ".join(
         "CAST(1000000000 AS BIGINT)" if d == 1 else "CAST(0 AS BIGINT)"

@@ -297,112 +297,5 @@ SELECT q_id, rank, c_id AS neighbor_id, cosine FROM (
 """
 
 
-# --- trained subspace codebooks (per-subspace Lloyd) -------------------------
-#
-# The fixed-seed codebook above is training-free; real IVFPQ trains each
-# subspace's codebook with k-means. Instead of 8 separate Lloyd chains,
-# the vectors explode into (vec_id, m, sub-vector) rows and ONE unrolled
-# chain runs with the subspace id as part of every key: assignment
-# windows partition by (vec_id, m), centroid recompute groups by
-# (m, code, pos) — 8 independent 8-dim k-means as a single grouped
-# computation (the kmeans.py pattern, one more key column). Init is the
-# SAME fixed seeds the static codebook uses, so Lloyd's monotone
-# convergence guarantees per-subspace distortion can only fall — the
-# claim `q_pq_trained` reports per subspace and `tests/test_pq.py` pins.
-
-_TRAIN_ITERS = 2
-
-
-def _sub_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _normalized(spark, sf_dir).selectExpr(
-        "vec_id", "v",
-        f"explode(sequence(0, {_M - 1})) AS m",
-    ).selectExpr(
-        "vec_id", "m",
-        f"slice(v, m * {_SUBD} + 1, {_SUBD}) AS sv",
-    ).withColumn("sn", F.expr(SPARK_DOT.format(a="sv", b="sv")))
-
-
-def _sub_assign(sub: DataFrame, cent: DataFrame) -> DataFrame:
-    dists = (
-        sub.join(F.broadcast(cent), "m")
-        .withColumn(
-            "d2",
-            F.col("sn")
-            + F.expr(SPARK_DOT.format(a="cv", b="cv"))
-            - 2 * F.expr(SPARK_DOT.format(a="sv", b="cv")),
-        )
-    )
-    w = Window.partitionBy("vec_id", "m").orderBy(
-        F.col("d2").asc(), F.col("code").asc()
-    )
-    return (
-        dists.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select("vec_id", "m", "sv", "sn", "code", "d2")
-    )
-
-
-_NANO = 1_000_000_000.0
-
-
-def _sub_recompute(assigned: DataFrame) -> DataFrame:
-    exploded = assigned.select(
-        "m", "code", F.posexplode("sv").alias("pos", "x")
-    ).withColumn("x_nano", F.floor(F.col("x") * _NANO + 0.5).cast("long"))
-    means = (
-        exploded.groupBy("m", "code", "pos")
-        .agg(
-            F.sum(F.col("x_nano").cast("decimal(38,0)")).alias("s"),
-            F.count("*").alias("n"),
-        )
-        .selectExpr("m", "code", "pos", f"CAST(s AS DOUBLE) / {_NANO} / n AS mn")
-    )
-    return means.groupBy("m", "code").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(pos, mn))), p -> p.mn)"
-        ).alias("cv")
-    )
-
-
-def q_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-subspace quantization distortion of the fixed-seed codebook vs
-    the Lloyd-trained one (``_TRAIN_ITERS`` unrolled rounds from the same
-    seeds): ``(m, n_vectors, d_seed_micro, d_trained_micro, improved)``.
-    ``improved`` is Lloyd's monotone-convergence guarantee materialized
-    as a column — training from an init can never worsen that init's
-    total distortion."""
-    # read 2 + _TRAIN_ITERS times (seed assignment, each round, final
-    # assignment) — materialize once, GC-scoped
-    sub = _sub_rows(spark, sf_dir).localCheckpoint(eager=True)
-    cent = sub.filter(F.col("vec_id") < _K).selectExpr(
-        "m", "vec_id AS code", "sv AS cv"
-    )
-    seed_assign = _sub_assign(sub, cent)
-    trained = cent
-    for _ in range(_TRAIN_ITERS):
-        trained = _sub_recompute(_sub_assign(sub, trained))
-    trained_assign = _sub_assign(sub, trained)
-
-    def _distortion(assigned: DataFrame, col: str) -> DataFrame:
-        return assigned.groupBy("m").agg(
-            F.count("*").alias("n_vectors"),
-            F.sum(
-                F.floor(F.col("d2") * 1_000_000.0 + 0.5).cast("long")
-            ).alias(col),
-        )
-
-    seed_d = _distortion(seed_assign, "d_seed_micro")
-    trained_d = _distortion(trained_assign, "d_trained_micro").drop("n_vectors")
-    return (
-        seed_d.join(trained_d, "m")
-        .selectExpr(
-            "CAST(m AS BIGINT) AS m", "n_vectors",
-            "d_seed_micro", "d_trained_micro",
-            "d_trained_micro <= d_seed_micro AS improved",
-        )
-    )
-
-
 def register_all() -> None:
     register("sim_pq_refine", q_pq_refine, _sql_pq_refine())

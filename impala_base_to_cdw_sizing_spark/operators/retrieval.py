@@ -1,10 +1,9 @@
-"""Retrieval & record-linkage operators (r8): BM25 scoring, PMI
-collocation mining, and an entity-resolution fuzzy join — three operator
-classes a training-data platform needs that the registry lacked
-(lexical search over the corpus, collocation statistics for tokenizer /
-phrase-vocabulary work, and fuzzy entity matching for metadata joins).
+"""Retrieval operators (r8): BM25 scoring and PMI collocation mining —
+two operator classes a training-data platform needs (lexical search over
+the corpus, collocation statistics for tokenizer / phrase-vocabulary
+work).
 
-All three follow the repo's determinism and scale contracts:
+Both follow the repo's determinism and scale contracts:
 
 - ``text_bm25_topk``: Okapi BM25 (Robertson/Sparck Jones; the public
   formulation, e.g. Robertson & Zaragoza 2009) of a fixed probe-query
@@ -24,15 +23,6 @@ All three follow the repo's determinism and scale contracts:
   |ln ratio| ≤ ~16.6 — both hold to ~e^16 bigram tokens; past that the
   ratio decomposes into ln-sums of smaller exact ratios (documented,
   not needed at any tested sf).
-- ``rel_fuzzy_join_blocked``: blocked fuzzy self-join over DISTINCT
-  customer names — prefix blocking (all but the last 2 chars) bounds
-  every block at ~100 candidates, then ``levenshtein() <= 1`` inside
-  the block: the standard ER blocking shape (pairs are
-  Σ|block|² ≤ 100·n, linear in names, never all-pairs). Distinct
-  names first: entity resolution deduplicates the ENTITY table, and it
-  also keeps the operator honest on the derived key-strided sfN sets
-  (copies repeat names; without the distinct the block sizes — and the
-  pair count — would scale with the copy count squared).
 """
 
 from __future__ import annotations
@@ -251,39 +241,6 @@ SELECT prev, cur, c12, {_DET_LN_W} AS pmi_micro FROM (
   )
 )
 """
-
-
-# --- entity-resolution fuzzy join -------------------------------------------------
-
-_FUZZY_MAX_DIST = 1
-_FUZZY_BLOCK_TAIL = 2  # block on all but the last N chars
-
-
-def q_fuzzy_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    names = (
-        read_input(spark, sf_dir, "customer")
-        .select("c_name")
-        .distinct()
-        .withColumn(
-            "blk",
-            F.expr(
-                f"substring(c_name, 1, length(c_name) - {_FUZZY_BLOCK_TAIL})"
-            ),
-        )
-    )
-    a, b = names.alias("a"), names.alias("b")
-    return (
-        a.join(b, "blk")
-        .filter(F.col("a.c_name") < F.col("b.c_name"))
-        .select(
-            F.col("a.c_name").alias("name_a"),
-            F.col("b.c_name").alias("name_b"),
-            F.levenshtein(F.col("a.c_name"), F.col("b.c_name")).cast(
-                "long"
-            ).alias("dist"),
-        )
-        .filter(F.col("dist") <= _FUZZY_MAX_DIST)
-    )
 
 
 def register_all() -> None:

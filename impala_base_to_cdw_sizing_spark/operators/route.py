@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SizingParams
+from .derive import derive
 
 
 def accepted_filter(df: DataFrame, params: SizingParams) -> DataFrame:
@@ -68,14 +69,13 @@ class RoutedPlan:
     # re-deriving the source)
 
 
-def route(df: DataFrame, params: SizingParams, derive_fn) -> RoutedPlan:
-    """Full D1→D2→derive→D3 fan-out. ``derive_fn`` is
-    ``operators.derive.derive`` (injected to avoid an import cycle)."""
+def route(df: DataFrame, params: SizingParams) -> RoutedPlan:
+    """Full D1→D2→derive→D3 fan-out."""
     filtered = accepted_filter(df, params)
     with_metrics, skipped = skip_split(filtered)
     # cached for the kept/pruned fan-out + downstream aggregates;
     # lifetime: the EP2 pipeline run — released by the caller's
     # clearCache (CLI/harness) or session end
-    derived = derive_fn(with_metrics, params).cache()
+    derived = derive(with_metrics, params).cache()
     kept, pruned = prune_split(derived, params)
     return RoutedPlan(skipped=skipped, kept=kept, pruned=pruned, derived=derived)

@@ -347,52 +347,6 @@ LIMIT {_RES_K}
 """
 
 
-def q_sample_reservoir_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production sampler: weighted reservoir where the weight is
-    ``n_chars * soft_dedup_weight`` — document length discounted by the
-    1/n duplicate-cluster mass of :func:`~.text.q_dedup_soft`. A text
-    duplicated 7x gets 7 entries of 1/7 mass each, so the CLUSTER has
-    one document's expected representation while any copy can win —
-    exactly the no-hard-delete dedup contract a training sampler wants.
-    Same exponential-race construction as ``sample_reservoir_merged`` (shared
-    deterministic ln, one correctly-rounded division, global top-k);
-    the combined weight stays an exact BIGINT (micro-char units)."""
-    from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
-    from .text import q_dedup_soft
-
-    weights = q_dedup_soft(spark, sf_dir).select("doc_id", "weight_micro")
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", "n_chars")
-        .join(weights, "doc_id")
-        .selectExpr(
-            "doc_id", "n_chars", "weight_micro",
-            "n_chars * weight_micro AS w",
-            f"(doc_id * {_KNUTH}) % {_RES_M} AS h",
-        )
-        .selectExpr(
-            "doc_id", "n_chars", "weight_micro", "w",
-            f"CAST({_RES_M} + 1 AS DOUBLE) / CAST(h + 1 AS DOUBLE) AS ratio",
-        )
-        .selectExpr("doc_id", "n_chars", "weight_micro", "w", f"{_DET_LN_Y} AS y")
-        .selectExpr("doc_id", "n_chars", "weight_micro", "w", f"{_DET_LN_Z} AS z")
-        .selectExpr(
-            "doc_id", "n_chars", "weight_micro", "w", "z",
-            f"{_DET_LN_Z2} AS z2",
-        )
-        .selectExpr(
-            "doc_id", "n_chars", "weight_micro", "w",
-            f"{_DET_LN_W} AS ln_micro",
-        )
-        .selectExpr(
-            "doc_id", "n_chars", "weight_micro", "ln_micro",
-            "CAST(ln_micro AS DOUBLE) / CAST(w AS DOUBLE) AS race_key",
-        )
-        .orderBy(F.col("race_key").asc(), F.col("doc_id").asc())
-        .limit(_RES_K)
-    )
-
-
 def register_all() -> None:
     register("sample_stratified", q_sample_stratified, SQL_SAMPLE_STRATIFIED)
     register("pack_sequences", q_pack_sequences, SQL_PACK_SEQUENCES)

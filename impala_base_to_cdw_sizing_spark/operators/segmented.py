@@ -130,7 +130,6 @@ def sessionize_flags(
     ev: DataFrame,
     gap_ns: int,
     span_ns: int = _SESS_SPAN_NS,
-    with_session_id: bool = False,
 ) -> DataFrame:
     """Skew-proof session-boundary flags (r9: the skewed scale gate
     measured the single ``Window.partitionBy(user_id)`` lag jumping from
@@ -147,60 +146,31 @@ def sessionize_flags(
     horizon/span rows per user (≈5 here) regardless of how hot the
     user is. All arithmetic is integer ns, so the flags are bit-equal
     to the single per-user window — pinned by the one-window DuckDB
-    oracles of ``rel_sessionize`` and ``rel_session_stats``.
-
-    With ``with_session_id=True`` the 1-based per-user session id is
-    added the same two-phase way: local running flag-sum plus the
-    carried count of sessions in earlier buckets.
+    oracle of ``rel_sessionize``.
 
     Input needs columns ``user_id, ts, event_id`` (ts: epoch nanos).
-    Output adds ``new_session`` (and optionally ``session_id``).
+    Output adds ``new_session``.
     """
     b = ev.withColumn("bucket", F.expr(f"ts DIV {span_ns}"))
     w_local = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
     w_user = Window.partitionBy("user_id").orderBy("bucket")
 
-    # one pass over the events frame: local lag + the per-bucket facts
-    # the carry needs (first/last ts, count of strictly-local gaps) — so
-    # ALL cross-bucket arithmetic runs on the tiny summary frame and the
-    # events frame is joined exactly once.
+    # one pass over the events frame: local lag + the per-bucket last ts
+    # the carry needs — so ALL cross-bucket arithmetic runs on the tiny
+    # summary frame and the events frame is joined exactly once.
     # the locally-lagged frame feeds both the bucket summary and the
     # carry join; the subplans are identical so Spark reuses the shuffle
     # exchange, and the window itself is cheap at week granularity —
     # keeping the plan fully lazy (no checkpoint side effects at query
     # construction).
     loc = b.withColumn("_prev_local", F.lag("ts").over(w_local))
-    gap_local = (
-        F.col("_prev_local").isNotNull()
-        & (F.col("ts") - F.col("_prev_local") > gap_ns)
-    ).cast("long")
-    summ = loc.groupBy("user_id", "bucket").agg(
-        F.min("ts").alias("_bmin"),
-        F.max("ts").alias("_bmax"),
-        F.sum(gap_local).alias("_nlocal"),
-    )
     carry = (
-        summ.withColumn("_carry_ts", F.lag("_bmax").over(w_user))
-        .withColumn(
-            "_first_new",
-            (
-                F.col("_carry_ts").isNull()
-                | (F.col("_bmin") - F.col("_carry_ts") > gap_ns)
-            ).cast("long"),
-        )
-        .withColumn("_n_new", F.col("_nlocal") + F.col("_first_new"))
-        .withColumn(
-            "_carry_n",
-            F.coalesce(
-                F.sum("_n_new").over(
-                    w_user.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("user_id", "bucket", "_carry_ts", "_carry_n")
+        loc.groupBy("user_id", "bucket")
+        .agg(F.max("ts").alias("_bmax"))
+        .withColumn("_carry_ts", F.lag("_bmax").over(w_user))
+        .select("user_id", "bucket", "_carry_ts")
     )
-    flagged = (
+    return (
         loc.join(carry, ["user_id", "bucket"])
         .withColumn("_prev", F.coalesce(F.col("_prev_local"), F.col("_carry_ts")))
         .withColumn(
@@ -208,21 +178,7 @@ def sessionize_flags(
             (F.col("_prev").isNull() | (F.col("ts") - F.col("_prev") > gap_ns))
             .cast("long"),
         )
-        .drop("_prev_local", "_carry_ts", "_prev")
-    )
-    if not with_session_id:
-        return flagged.drop("bucket", "_carry_n")
-    return (
-        flagged.withColumn(
-            "_local_cum",
-            F.sum("new_session").over(
-                w_local.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .withColumn(
-            "session_id", (F.col("_carry_n") + F.col("_local_cum")).cast("long")
-        )
-        .drop("_local_cum", "_carry_n", "bucket")
+        .drop("_prev_local", "_carry_ts", "_prev", "bucket")
     )
 
 

@@ -736,7 +736,7 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies its own 1/sqrt(RP_DIM). The projection is a pure
     zero-shuffle map; each output dim is an ordered left fold, so both
     engines accumulate in identical order and the doubles hash-match
-    exactly. :func:`q_rp_cosines` quantifies the distortion against
+    exactly. ``tests/test_surprisal.py`` measures the distortion against
     exact cosines."""
     cols = ["vec_id", "label"]
     exprs = []
@@ -764,47 +764,6 @@ def _rp_sql() -> str:
     return (
         f"WITH emb AS ({DUCK_EMB})\n"
         "SELECT vec_id, label, " + ",\n  ".join(exprs) + "\nFROM emb"
-    )
-
-
-def q_rp_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JL distortion, measured: for every query-vector pair, the exact
-    cosine in the original 64-dim space next to the cosine in the 16-dim
-    projection. Both are ordered-fold doubles — the oracle reproduces the
-    values exactly, so the distortion numbers themselves are the
-    oracle-checked output (no tolerance flags needed)."""
-    proj = q_random_projection(spark, sf_dir).filter(
-        F.col("vec_id") < N_QUERIES
-    )
-    rp_cols = [f"r{i:02d}" for i in range(RP_DIM)]
-    proj = proj.selectExpr(
-        "vec_id", f"array({', '.join(rp_cols)}) AS p"
-    )
-    orig = _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES).select(
-        "vec_id", "v"
-    )
-    both = orig.join(proj, "vec_id")
-    a = both.selectExpr("vec_id AS a_id", "v AS av", "p AS ap")
-    b = both.selectExpr("vec_id AS b_id", "v AS bv", "p AS bp")
-    # broadcast the 5-row side: a bare non-equi inner join would plan a
-    # CartesianProduct (the one the registry plan sweep caught);
-    # BroadcastNestedLoopJoin is the sanctioned small-side form
-    pairs = a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
-    cos_o = (
-        f"{SPARK_DOT.format(a='av', b='bv')} / "
-        f"(sqrt({SPARK_DOT.format(a='av', b='av')})"
-        f" * sqrt({SPARK_DOT.format(a='bv', b='bv')}))"
-    )
-    cos_p = (
-        f"{SPARK_DOT.format(a='ap', b='bp')} / "
-        f"(sqrt({SPARK_DOT.format(a='ap', b='ap')})"
-        f" * sqrt({SPARK_DOT.format(a='bp', b='bp')}))"
-    )
-    return pairs.selectExpr(
-        "a_id", "b_id",
-        f"{cos_o} AS cos_orig",
-        f"{cos_p} AS cos_proj",
-        f"abs(({cos_o}) - ({cos_p})) AS abs_err",
     )
 
 

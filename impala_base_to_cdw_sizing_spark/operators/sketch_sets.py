@@ -6,8 +6,8 @@ histogram-quantile) did not yet cover.
 - ``sketch_bitmap_rollup``: per (event_type, day) a 60-bit membership
   bitmap of ``user_id % 60`` slots, built two ways in one query —
   directly from rows, and by OR-merging the per-hour bitmaps — with the
-  merge ≡ recompute witness as an output column (the
-  ``rel_incremental_rollup`` pattern applied to bitmap indexes; BIT_OR
+  merge ≡ recompute witness as an output column (the incremental-rollup
+  pattern applied to bitmap indexes; BIT_OR
   is the canonical mergeable bitmap aggregate, one BIGINT per group at
   any scale). ``bit_count`` gives the slot-occupancy estimate the way
   bitmap indexes answer membership cardinality.
@@ -476,205 +476,6 @@ FROM (
   FROM est e JOIN exact x ON e.da = x.da AND e.db = x.db
 )
 """
-
-
-def q_kmv_newusers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV DIFFERENCE cardinality — day-over-day NEW active users
-    |B \\ A| for every consecutive day pair, completing the sketch
-    algebra trio (union = ``sketch_kmv_distinct``'s merge, intersection
-    / Jaccard = ``sketch_kmv_jaccard``, difference = here).
-
-    Estimator choice matters: subtracting two independent cardinality
-    estimates (U_est − A_est) compounds their ~1/√k errors into a
-    difference that can exceed the quantity itself when days overlap
-    heavily (ours do, J ≈ 0.8). Instead the union-top-k sketch is used
-    as a UNIFORM SAMPLE of the union (the theta-sketch trick): the
-    fraction of union-top-k hashes present in B but not A is a binomial
-    proportion with σ = √(q(1−q)/k) — so
-    ``est_new = (b_only / k) · U_est`` inherits the tight proportion
-    error, not the subtraction blow-up. Exact |B \\ A| (one user_id
-    equi-join on the two days) rides along; the witness is
-    |est − exact| ≤ 0.25 · exact_union (≈5σ at k=64).
-
-    Scale shape: identical to ``q_kmv_jaccard`` (days × k sketches,
-    consecutive-pair fan-out is days · k) — the exact twin is the
-    witness, not the production path."""
-    ev = load_events(spark, sf_dir).selectExpr(
-        f"{_DAY} AS day", "user_id", f"(user_id * {_KNUTH}) % {_KMV_M} AS h"
-    )
-    hashes = ev.select("day", "h").distinct()
-    w = Window.partitionBy("day").orderBy("h")
-    sketch = (
-        hashes.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KMV_K)
-        .select("day", "h")
-        .localCheckpoint()
-    )
-    days = sketch.select("day").distinct()
-    pairs = days.selectExpr("day AS da").join(
-        days.selectExpr("day AS db"), F.expr("db = da + 1")
-    )
-    rows_a = pairs.join(
-        sketch.selectExpr("day AS da", "h"), "da"
-    ).selectExpr("da", "db", "h", "1 AS in_a", "0 AS in_b")
-    rows_b = pairs.join(
-        sketch.selectExpr("day AS db", "h"), "db"
-    ).selectExpr("da", "db", "h", "0 AS in_a", "1 AS in_b")
-    merged = (
-        rows_a.unionByName(rows_b)
-        .groupBy("da", "db", "h")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    w_pair = Window.partitionBy("da", "db").orderBy("h")
-    topk = merged.withColumn("rk", F.row_number().over(w_pair)).filter(
-        F.col("rk") <= _KMV_K
-    )
-    est = topk.groupBy("da", "db").agg(
-        F.count("*").cast("long").alias("union_sketch_n"),
-        F.max("h").cast("long").alias("kth_hash"),
-        F.sum(F.expr("in_b * (1 - in_a)")).cast("long").alias("b_only_n"),
-    )
-    users = ev.select("day", "user_id").distinct().localCheckpoint()
-    per_day = users.groupBy("day").agg(
-        F.count("*").cast("long").alias("n_users")
-    )
-    inter = (
-        users.selectExpr("day AS da", "user_id")
-        .join(users.selectExpr("day AS db", "user_id"), "user_id")
-        .filter(F.expr("db = da + 1"))
-        .groupBy("da", "db")
-        .agg(F.count("*").cast("long").alias("inter_n"))
-    )
-    exact = (
-        pairs.join(per_day.selectExpr("day AS da", "n_users AS na"), "da")
-        .join(per_day.selectExpr("day AS db", "n_users AS nb"), "db")
-        .join(inter, ["da", "db"], "left")
-        .selectExpr(
-            "da", "db", "na", "nb",
-            "coalesce(inter_n, CAST(0 AS BIGINT)) AS inter_n",
-        )
-    )
-    return (
-        est.join(exact, ["da", "db"])
-        .selectExpr(
-            "da", "db", "union_sketch_n", "b_only_n",
-            "nb - inter_n AS exact_new",
-            "na + nb - inter_n AS exact_union",
-            # union sketch not full => it IS the union: proportion exact
-            f"CASE WHEN union_sketch_n < {_KMV_K}"
-            "  THEN CAST(union_sketch_n AS DOUBLE)"
-            f" ELSE CAST(({_KMV_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)"
-            "  / CAST(kth_hash AS DOUBLE) END AS union_est",
-        )
-        .selectExpr(
-            "da", "db", "union_sketch_n", "b_only_n", "exact_new",
-            "exact_union",
-            "CAST(b_only_n AS DOUBLE) / CAST(union_sketch_n AS DOUBLE)"
-            " * union_est AS est_new",
-        )
-        .selectExpr(
-            "da", "db", "union_sketch_n", "b_only_n", "exact_new",
-            "exact_union", "est_new",
-            "abs(est_new - exact_new) <= 0.25 * exact_union AS within_tol",
-        )
-    )
-
-
-def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TUPLE-sketch join-size estimation — the sketch tier applied to
-    the engine's home problem, SIZING: predict the output cardinality
-    of the user_id equi-join between every pair of event_type subsets
-    WITHOUT running the join. |A ⋈ B| = Σ_u cA(u)·cB(u); the KMV
-    sketch keeps the per-user COUNT alongside each retained hash (the
-    DataSketches "tuple sketch" extension of the theta sketch), the
-    union-top-k is a uniform k/U sample of the union key space, so
-
-        est = (Σ_{h ∈ topk ∩ A ∩ B} cA·cB) · U_est / k
-
-    inverse-probability-scales the sampled products. When the union
-    sketch is not full it IS the key universe and the formula collapses
-    to the exact sum (U_est = n = union_sketch_n). Measured accuracy on
-    this corpus: worst 6.3% (sf0.01) / 9.8% (sf0.1) relative error —
-    the witness pins |est − exact| ≤ 0.30·exact (~4σ). The exact join
-    size rides along as the witness, computed from the per-(type,user)
-    count frame — never by materializing the join.
-
-    Scale shape: counts are one partial agg; sketches are types × k
-    rows WITH one BIGINT summary each; pair work is O(k) per pair. At
-    100 TB this is how an optimizer prices a join without touching it.
-    """
-    ev = load_events(spark, sf_dir).selectExpr("event_type", "user_id")
-    counts = (
-        ev.groupBy("event_type", "user_id")
-        .agg(F.count("*").cast("long").alias("c"))
-        .selectExpr(
-            "event_type", "user_id", "c",
-            f"(user_id * {_KNUTH}) % {_KMV_M} AS h",
-        )
-        .localCheckpoint()  # read by the sketch path AND the exact twin
-    )
-    w = Window.partitionBy("event_type").orderBy("h")
-    sketch = (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KMV_K)
-        .select("event_type", "h", "c")
-    )
-    types = sketch.select("event_type").distinct()
-    pairs = types.selectExpr("event_type AS ta").join(
-        types.selectExpr("event_type AS tb"), F.col("ta") < F.col("tb")
-    )
-    rows_a = pairs.join(
-        sketch.selectExpr("event_type AS ta", "h", "c AS ca"), "ta"
-    ).selectExpr("ta", "tb", "h", "ca", "CAST(NULL AS BIGINT) AS cb")
-    rows_b = pairs.join(
-        sketch.selectExpr("event_type AS tb", "h", "c AS cb"), "tb"
-    ).selectExpr("ta", "tb", "h", "CAST(NULL AS BIGINT) AS ca", "cb")
-    merged = (
-        rows_a.unionByName(rows_b)
-        .groupBy("ta", "tb", "h")
-        .agg(F.max("ca").alias("ca"), F.max("cb").alias("cb"))
-    )
-    w_pair = Window.partitionBy("ta", "tb").orderBy("h")
-    topk = merged.withColumn("rk", F.row_number().over(w_pair)).filter(
-        F.col("rk") <= _KMV_K
-    )
-    est = topk.groupBy("ta", "tb").agg(
-        F.count("*").cast("long").alias("union_sketch_n"),
-        F.max("h").cast("long").alias("kth_hash"),
-        F.sum(F.expr("CASE WHEN ca IS NOT NULL AND cb IS NOT NULL"
-                     " THEN ca * cb ELSE CAST(0 AS BIGINT) END"))
-        .cast("long")
-        .alias("sum_prod"),
-    )
-    exact = (
-        counts.selectExpr("event_type AS ta", "user_id", "c AS ca")
-        .join(counts.selectExpr("event_type AS tb", "user_id", "c AS cb"),
-              "user_id")
-        .filter(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(F.sum(F.expr("ca * cb")).cast("long").alias("exact_join_n"))
-    )
-    return (
-        est.join(exact, ["ta", "tb"])
-        .selectExpr(
-            "ta", "tb", "union_sketch_n", "sum_prod", "exact_join_n",
-            f"CASE WHEN union_sketch_n < {_KMV_K}"
-            "  THEN CAST(union_sketch_n AS DOUBLE)"
-            f" ELSE CAST(({_KMV_K} - 1) * CAST({_KMV_M} AS BIGINT) AS DOUBLE)"
-            "  / CAST(kth_hash AS DOUBLE) END AS union_est",
-        )
-        .selectExpr(
-            "ta", "tb", "union_sketch_n", "sum_prod", "exact_join_n",
-            "CAST(sum_prod AS DOUBLE) * union_est"
-            " / CAST(union_sketch_n AS DOUBLE) AS est_join_n",
-        )
-        .selectExpr(
-            "ta", "tb", "union_sketch_n", "sum_prod", "exact_join_n",
-            "est_join_n",
-            "abs(est_join_n - exact_join_n) <= 0.30 * exact_join_n"
-            " AS within_tol",
-        )
-    )
 
 
 def register_all() -> None:

@@ -158,75 +158,5 @@ FROM sums
 """
 
 
-_HEAPS_POINTS = 10
-
-
-def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law fit — the other classic corpus law (vocabulary growth
-    V(N) = k·N^β): ln V vs ln N OLS over 10 corpus prefixes. The
-    vocabulary size after the first n documents is computed WITHOUT
-    materializing prefixes, via the first-touch identity
-    (``rel_cumulative_distinct``): V(prefix d) = #{shingles whose
-    MINIMUM doc_id falls inside the first d deciles} — one groupBy for
-    per-shingle first doc, a 10-row broadcast threshold dim, and a
-    bounded explode. Same det-ln + exact-BIGINT OLS as the Zipf fit;
-    both laws share the arithmetic, so the pair reads as one module.
-
-    Emits per-point rows (decile, n_docs, vocab) ALONGSIDE the fitted
-    (beta, r2) repeated per row — the curve and the fit in one result,
-    checkable against each other."""
-    docs = _docs(spark, sf_dir)
-    bounds = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    )
-    deciles = spark.range(1, _HEAPS_POINTS + 1).selectExpr("id AS decile")
-    thresholds = deciles.crossJoin(F.broadcast(bounds)).selectExpr(
-        "decile",
-        f"lo - 1 + ((hi - lo + 1) * decile) DIV {_HEAPS_POINTS} AS t",
-    )
-    first_touch = (
-        docs.withColumn("tokens", F.expr(SPARK_TOKENS))
-        .selectExpr("doc_id", f"explode({SPARK_SHINGLES}) AS shingle")
-        .groupBy("shingle")
-        .agg(F.min("doc_id").alias("first_doc"))
-    )
-    vocab = (
-        first_touch.crossJoin(F.broadcast(thresholds))
-        .filter(F.col("first_doc") <= F.col("t"))
-        .groupBy("decile", "t")
-        .agg(F.count("*").cast("long").alias("vocab"))
-    )
-    ndocs = (
-        docs.crossJoin(F.broadcast(thresholds))
-        .filter(F.col("doc_id") <= F.col("t"))
-        .groupBy("decile")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-    )
-    pts = vocab.join(ndocs, "decile").select("decile", "n_docs", "vocab")
-    # _det_ln_micro consumes its src column, so keep carry copies
-    lnd = _det_ln_micro(pts.withColumn("nd", F.col("n_docs")), "n_docs", "x_micro")
-    lnd = _det_ln_micro(lnd.withColumn("vc", F.col("vocab")), "vocab", "y_micro")
-    lnd = lnd.selectExpr(
-        "decile", "nd AS n_docs", "vc AS vocab", "x_micro", "y_micro"
-    ).localCheckpoint()  # 10 rows, read by the fit and the output join
-    sums = lnd.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x_micro").cast("long").alias("sx"),
-        F.sum("y_micro").cast("long").alias("sy"),
-        F.sum(F.expr("x_micro * y_micro")).cast("long").alias("sxy"),
-        F.sum(F.expr("x_micro * x_micro")).cast("long").alias("sxx"),
-        F.sum(F.expr("y_micro * y_micro")).cast("long").alias("syy"),
-    ).selectExpr(
-        "CAST(n * sxy - sx * sy AS DOUBLE)"
-        " / CAST(n * sxx - sx * sx AS DOUBLE) AS beta",
-        "CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)"
-        " / (CAST(n * sxx - sx * sx AS DOUBLE)"
-        " * CAST(n * syy - sy * sy AS DOUBLE)) AS r2",
-    )
-    return lnd.select("decile", "n_docs", "vocab").crossJoin(
-        F.broadcast(sums)
-    )
-
-
 def register_all() -> None:
     register("text_zipf_fit", q_zipf_fit, _zipf_sql())

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 
 from ..config import SizingParams
 from ..operators.classify import classify
-from ..operators.derive import derive
 from ..operators.route import RoutedPlan, route
 from ..operators.sweep import explode_events, sweep_maxima
 
@@ -88,7 +87,7 @@ def run_api_sizing(
 
 
 def run_sizing(query_history: DataFrame, params: SizingParams) -> SizingResult:
-    routed = route(query_history, params, derive)
+    routed = route(query_history, params)
     # sweep_maxima caches the exploded events itself: its eager
     # bucket-bounds pass materializes them, and the cached derived table
     # under them, before the report reads both

@@ -55,12 +55,6 @@ API_DOC_SCHEMA = T.StructType(
     ]
 )
 
-API_PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("queries", T.ArrayType(API_DOC_SCHEMA), True),
-        T.StructField("warnings", T.ArrayType(T.StringType()), True),
-    ]
-)
 
 # --- 24-column output (golden schema, F5 in FIXTURES.md) ----------------------
 

@@ -12,6 +12,11 @@ from impala_base_to_cdw_sizing_spark.session import build_spark  # noqa: E402
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+# A cheap 8-permutation / 4-band MinHash signature, (params, n_bands) for
+# ``operators.text._band_frame``: the streaming near-dup tests band the
+# corpus with it to stay fast.
+MH_SMALL = ([(2, 1), (3, 7), (5, 13), (7, 31), (11, 101), (13, 257), (17, 523), (19, 1019)], 4)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -1,9 +1,8 @@
 """Behavioral pins for mixture.py (oracle parity of the registered rows runs in tools/compare_oracle.py).
 
 Parity alone can't catch a vacuous query — both engines happily agree on
-all-false output. These tests pin the semantics: the Bloom filter's
-no-false-negative guarantee with nonzero measured false positives, and
-the mixture sampler actually downsampling over-share sources.
+all-false output. These tests pin the semantics: the mixture sampler
+actually downsampling over-share sources.
 """
 
 from __future__ import annotations
@@ -19,21 +18,8 @@ from tools.compare_oracle import compare_frames, duck_connection  # noqa: E402
 
 from impala_base_to_cdw_sizing_spark.operators.mixture import (  # noqa: E402
     SQL_MIX_SOURCES,
-    q_dedup_bloom,
     q_mix_sources,
 )
-
-
-def test_bloom_no_false_negatives_and_some_false_positives(spark):
-    rows = q_dedup_bloom(spark, SF_SMALL).collect()
-    members = [r for r in rows if r["exact_dup"]]
-    assert members, "corpus-member probes must exist"
-    # Bloom guarantee: a present digest can NEVER miss
-    assert all(r["bloom_hit"] for r in members)
-    # fixture is sized so the false-positive branch is exercised
-    assert any(r["false_positive"] for r in rows)
-    # and a false positive is never an exact dup, by definition
-    assert all(not r["exact_dup"] for r in rows if r["false_positive"])
 
 
 def test_mix_sources_downsamples_toward_equal_share(spark):

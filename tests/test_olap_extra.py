@@ -45,7 +45,6 @@ def test_merge_asof_semantics(spark):
 
 def test_unpivot_inverts_pivot_exactly(spark):
     from impala_base_to_cdw_sizing_spark.operators.olap_extra import (
-        q_mode_per_group,
         q_pivot,
         q_unpivot,
     )
@@ -57,58 +56,6 @@ def test_unpivot_inverts_pivot_exactly(spark):
     assert len(long_rows) == len(wide) * 5
     for r in long_rows:
         assert wide[r.o_orderstatus][f"n_{r.o_orderpriority[0]}"] == r.n
-    # mode agrees with a max over the melted counts (smallest-value tie)
-    from collections import defaultdict
-
-    best = {}
-    for r in long_rows:
-        cur = best.get(r.o_orderstatus)
-        if cur is None or (-r.n, r.o_orderpriority) < (-cur[1], cur[0]):
-            best[r.o_orderstatus] = (r.o_orderpriority, r.n)
-    got = {
-        r.o_orderstatus: (r.mode_priority, r.mode_n)
-        for r in q_mode_per_group(spark, SF_ORACLE).collect()
-    }
-    assert got == best
-
-
-def test_pareto_abc_replicates_and_cuts_correctly(spark):
-    from impala_base_to_cdw_sizing_spark.operators.olap_extra import (
-        q_pareto_abc,
-    )
-    from tests.conftest import SF_ORACLE
-
-    orders = (
-        spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
-        .selectExpr(
-            "o_custkey",
-            "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents",
-        )
-        .collect()
-    )
-    from collections import defaultdict
-
-    rev = defaultdict(int)
-    for r in orders:
-        rev[r.o_custkey] += r.cents
-    ordered = sorted(rev.items(), key=lambda kv: (-kv[1], kv[0]))
-    total = sum(rev.values())
-    cum = 0
-    agg = defaultdict(lambda: [0, 0])
-    for ck, v in ordered:
-        cum += v
-        cls = "A" if cum * 100 <= total * 80 else ("B" if cum * 100 <= total * 95 else "C")
-        agg[cls][0] += 1
-        agg[cls][1] += v
-    rows = q_pareto_abc(spark, SF_ORACLE).collect()
-    got = {r.abc_class: (r.n_customers, r.class_rev_cents) for r in rows}
-    assert got == {k: tuple(v) for k, v in agg.items()}
-    # Pareto shape is real: A is a minority of customers holding ~80%
-    by = {r.abc_class: r for r in rows}
-    n_all = sum(r.n_customers for r in rows)
-    assert by["A"].n_customers < n_all
-    assert 0.5 < by["A"].rev_share <= 0.80 + by["A"].class_rev_cents / n_all / max(total, 1)
-    assert abs(sum(r.rev_share for r in rows) - 1.0) < 1e-9
 
 
 def test_gini_replicates_and_bounds(spark):
@@ -138,52 +85,3 @@ def test_gini_replicates_and_bounds(spark):
     assert row.gini == gini
     # revenue inequality is real but bounded on this corpus
     assert 0.0 < row.gini < 1.0
-
-
-def test_lorenz_deciles_replicates_and_ties_to_gini(spark):
-    from impala_base_to_cdw_sizing_spark.operators.olap_extra import (
-        q_gini,
-        q_lorenz_deciles,
-    )
-    from tests.conftest import SF_ORACLE
-
-    orders = (
-        spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
-        .selectExpr(
-            "o_custkey",
-            "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents",
-        )
-        .collect()
-    )
-    from collections import defaultdict
-
-    rev = defaultdict(int)
-    for r in orders:
-        rev[r.o_custkey] += r.cents
-    xs = [v for _, v in sorted(rev.items(), key=lambda kv: (kv[1], kv[0]))]
-    n, k = len(xs), 10
-    q, r_ = divmod(n, k)
-    expect, i = {}, 0
-    cum = 0
-    for d in range(1, k + 1):
-        size = q + 1 if d <= r_ else q
-        tile = xs[i : i + size]
-        i += size
-        cum += sum(tile)
-        expect[d] = (size, sum(tile), cum)
-    rows = sorted(
-        q_lorenz_deciles(spark, SF_ORACLE).collect(), key=lambda r: r.decile
-    )
-    total = sum(xs)
-    for r in rows:
-        size, trev, crev = expect[r.decile]
-        assert (r.n_customers, r.tile_rev, r.cum_rev) == (size, trev, crev)
-        assert r.cum_share == crev / total
-    # Lorenz curve is convex-ish and ends at exactly 1
-    shares = [r.cum_share for r in rows]
-    assert shares == sorted(shares) and shares[-1] == 1.0
-    assert rows[0].tile_share < rows[-1].tile_share
-    # consistency with the scalar: positive inequality <=> bottom
-    # decile holds less than 10%
-    g = q_gini(spark, SF_ORACLE).collect()[0].gini
-    assert (g > 0) == (rows[0].tile_share < 0.1)

@@ -74,72 +74,6 @@ def test_pca_matches_numpy_replica_and_true_eigvec(spark):
     assert lam >= w[-2] * 0.5  # clearly in the top of the spectrum
 
 
-def _numpy_replica_comp2(vecs: np.ndarray, xn1: np.ndarray):
-    """Component-2 replica: same recurrence with the per-round
-    Gram–Schmidt step against the fixed nano-int v1."""
-    n = len(vecs)
-    e_nano = np.floor(vecs * _NANO + 0.5).astype(np.int64)
-    mean = e_nano.sum(axis=0, dtype=object)
-    m = np.array([float(s) / _NANO / n for s in mean])
-    cv = vecs - m
-    xn = np.zeros(DIM, dtype=np.int64)
-    xn[1] = 1_000_000_000
-    nrm = 0.0
-    for _ in range(_PCA_ROUNDS):
-        dt = cv @ (xn / _NANO)
-        t_nano = np.floor(cv * dt[:, None] * _NANO + 0.5).astype(np.int64)
-        s = t_nano.sum(axis=0, dtype=object)
-        yd = np.array([float(v) / _NANO for v in s])
-        # fixed-index-order fold, like both engines
-        proj = 0.0
-        for d in range(DIM):
-            proj += yd[d] * (xn1[d] / _NANO)
-        yd = np.array([yd[d] - proj * (xn1[d] / _NANO) for d in range(DIM)])
-        acc = 0.0
-        for d in range(DIM):
-            acc += yd[d] * yd[d]
-        nrm = math.sqrt(acc)
-        xn = np.floor(yd / nrm * _NANO + 0.5).astype(np.int64)
-    return xn, nrm
-
-
-def test_pca_topk_orthogonal_and_matches_replica(spark):
-    from impala_base_to_cdw_sizing_spark.operators.pca import q_pca_topk
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").toPandas()
-    vecs = np.array([np.asarray(v, dtype=np.float64) for v in emb.embedding])
-    n = len(vecs)
-    xn1_ref, nrm1_ref, _ = _numpy_replica(vecs)
-    xn2_ref, nrm2_ref = _numpy_replica_comp2(vecs, xn1_ref)
-
-    out = q_pca_topk(spark, SF_ORACLE).toPandas()
-    c1 = out[out.component == 1].sort_values("pos")
-    c2 = out[out.component == 2].sort_values("pos")
-    assert len(c1) == len(c2) == DIM
-    # bit-exact against the replica for BOTH components
-    assert (c1.loading_nano.to_numpy() == xn1_ref).all()
-    assert (c2.loading_nano.to_numpy() == xn2_ref).all()
-    assert c2.lambda_micro.iloc[0] == int(math.floor(nrm2_ref / n * 1e6 + 0.5))
-
-    # orthogonality witness: |v1·v2| within a few nano units — the
-    # per-round Gram–Schmidt keeps the stored integer directions
-    # orthogonal to quantization precision
-    assert out.ortho_nano.nunique() == 1
-    assert 0 <= out.ortho_nano.iloc[0] <= 10, out.ortho_nano.iloc[0]
-    v1 = c1.loading_nano.to_numpy() / _NANO
-    v2 = c2.loading_nano.to_numpy() / _NANO
-    assert abs(float(np.dot(v1, v2))) < 1e-8
-
-    # the deflated direction sits in the top of the spectrum but below
-    # component 1's estimate (eigenvalue ordering survives deflation)
-    cvx = vecs - vecs.mean(axis=0)
-    w, _v = np.linalg.eigh(cvx.T @ cvx / n)
-    lam1 = c1.lambda_micro.iloc[0] / 1e6
-    lam2 = c2.lambda_micro.iloc[0] / 1e6
-    assert lam2 <= lam1 * 1.001
-    assert lam2 >= w[-10] * 0.5  # clearly not noise-floor
-
-
 def test_whitening_unit_variance_and_decorrelation(spark):
     """The whitening contract: each output coordinate has ~unit variance
     (its PCA direction's Rayleigh lambda normalizes it) and the two

@@ -18,7 +18,6 @@ from impala_base_to_cdw_sizing_spark.operators.pq import (  # noqa: E402
     _N_CELLS,
     _pq_index,
     q_pq_refine,
-    q_pq_trained,
 )
 
 
@@ -45,15 +44,3 @@ def test_refine_dominates_adc_only(spark):
     for sf in (SF_SMALL, SF_ORACLE):
         recall = ann_recall_at3(spark, sf, q_pq_refine(spark, sf))
         assert recall >= 2 / 3, (sf, recall)
-
-
-def test_training_strictly_reduces_distortion_everywhere(spark):
-    # Lloyd from the seed init can never worsen it (monotone
-    # convergence); on this corpus it strictly improves EVERY subspace
-    # (measured ~25% at sf0.01) — equality would mean the training is
-    # dead code
-    rows = q_pq_trained(spark, SF_ORACLE).collect()
-    assert len(rows) == _M
-    for r in rows:
-        assert r.improved
-        assert r.d_trained_micro < r.d_seed_micro, r

@@ -1,11 +1,10 @@
-"""Round-7 operators: weighted reservoir sampling, overlap chunking,
+"""Round-7 operators: weighted reservoir sampling,
 SQ8 ANN, bigram-LM perplexity. Each test checks a property the oracle
 parity run can't: an independent pure-Python replication, a structural
 invariant, or a degenerate fixture."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import duckdb
@@ -77,49 +76,6 @@ def test_reservoir_favors_heavy_docs(spark):
         ).fetchall()
     ]
     assert sum(sel) / len(sel) > sum(all_chars) / len(all_chars)
-
-
-# --- text_chunk_overlap -----------------------------------------------------------
-
-
-def test_chunk_overlap_covers_and_overlaps(spark):
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        _OCHUNK_SIZE,
-        _OCHUNK_STRIDE,
-        q_chunk_overlap,
-    )
-
-    rows = q_chunk_overlap(spark, SF_SMALL).collect()
-    docs = dict(
-        duckdb.sql(
-            f"SELECT doc_id, text FROM '{SF_SMALL}/documents.parquet'"
-        ).fetchall()
-    )
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert set(by_doc) == set(docs)
-    for doc_id, chunks in by_doc.items():
-        toks = docs[doc_id].split(" ")
-        chunks.sort(key=lambda r: r.chunk_idx)
-        # chunk count formula
-        n = len(toks)
-        expect_chunks = max(
-            1, math.ceil((n - _OCHUNK_SIZE) / _OCHUNK_STRIDE) + 1
-        )
-        assert len(chunks) == expect_chunks
-        # full coverage: last chunk reaches the final token
-        last = chunks[-1]
-        assert last.tok_start + last.n_chunk_tokens == n
-        # consecutive chunks overlap by size - stride (when full)
-        for a, b in zip(chunks, chunks[1:]):
-            assert b.tok_start == a.tok_start + _OCHUNK_STRIDE
-            if a.n_chunk_tokens == _OCHUNK_SIZE:
-                assert b.tok_start < a.tok_start + a.n_chunk_tokens
-        # hash identity: recompute one chunk per doc in Python
-        probe = chunks[0]
-        text = " ".join(toks[probe.tok_start : probe.tok_start + _OCHUNK_SIZE])
-        assert probe.chunk_hash == hashlib.md5(text.encode()).hexdigest()
 
 
 # --- sim_sq8_ann ------------------------------------------------------------------
@@ -323,29 +279,6 @@ def test_soft_weights_conserve_cluster_mass(spark):
     assert n_canonical == len(by_hash)
 
 
-# --- rel_incremental_rollup -------------------------------------------------------
-
-
-def test_incremental_rollup_witness_nonvacuous(spark):
-    """merge ≡ recompute must hold (consistent=1 on every group) and
-    the test must prove BOTH sides contribute: the snapshot/delta cut
-    has to split the events non-trivially or the merge is the identity
-    and the witness proves nothing."""
-    from impala_base_to_cdw_sizing_spark.operators.olap_extra import (
-        _INC_CUT_NS,
-        q_incremental_rollup,
-    )
-    from impala_base_to_cdw_sizing_spark.sources.files import load_events
-
-    rows = q_incremental_rollup(spark, SF_SMALL).collect()
-    assert rows and all(r.consistent == 1 for r in rows)
-    e = load_events(spark, SF_SMALL)
-    n_snap = e.filter(e.ts < _INC_CUT_NS).count()
-    n_delta = e.filter(e.ts >= _INC_CUT_NS).count()
-    assert n_snap > 0 and n_delta > 0
-    assert sum(r.n for r in rows) == n_snap + n_delta
-
-
 # --- emb_hard_negatives -----------------------------------------------------------
 
 
@@ -463,143 +396,6 @@ def test_drift_psi_stable_corpus_and_injected_drift(spark, tmp_path):
     shifted = q_drift_psi(spark, p).collect()
     assert shifted and all(r.band == "major" for r in shifted)
     assert all(r.psi > 0.25 for r in shifted)
-
-
-# --- asof_view_nearest ------------------------------------------------------------
-
-
-def test_asof_nearest_matches_pandas(spark):
-    """pd.merge_asof(direction='nearest') is the reference semantics —
-    with the one deliberate divergence pinned separately: on an exact
-    |delta| tie this op chooses the BACKWARD (earlier) view
-    deterministically, while pandas nearest also takes the earlier side,
-    so the two agree everywhere including ties."""
-    import pandas as pd
-
-    from impala_base_to_cdw_sizing_spark.operators.asof import (
-        q_asof_view_nearest,
-    )
-    from impala_base_to_cdw_sizing_spark.sources.files import load_events
-
-    got = {
-        r.purchase_id: (r.view_id, r.direction, r.delta_ns)
-        for r in q_asof_view_nearest(spark, SF_SMALL).collect()
-    }
-    ev = load_events(spark, SF_SMALL).select(
-        "user_id", "event_id", "event_type", "ts"
-    ).toPandas()
-    p = (
-        ev[ev.event_type == "purchase"]
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
-    )
-    v = (
-        ev[ev.event_type == "view"]
-        .sort_values(["ts", "event_id"])
-        .rename(columns={"event_id": "view_id"})
-        .reset_index(drop=True)
-    )
-    ref = pd.merge_asof(
-        p, v[["user_id", "view_id", "ts"]],
-        on="ts", by="user_id", direction="nearest", suffixes=("", "_v"),
-    )
-    # pandas nearest breaks exact-|delta| ties toward backward as well;
-    # compare the matched view id row-by-row
-    mism = 0
-    for r in ref.itertuples():
-        g = got.get(r.event_id)
-        assert g is not None
-        if g[0] != r.view_id:
-            mism += 1
-    assert mism == 0, mism
-    # witness sanity: delta sign matches direction
-    for vid, direction, delta in got.values():
-        if direction == "backward":
-            assert delta <= 0
-        elif direction == "forward":
-            assert delta >= 0
-
-
-# --- dedup_soft_fuzzy + rel_hourly_spikes_mad -------------------------------------
-
-
-def test_soft_fuzzy_mass_and_cluster_consistency(spark):
-    """Fuzzy soft weights: mass ~1e6 per CC cluster, canonical = the
-    cluster-min doc, and clusters agree with dedup_components."""
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        q_dedup_components,
-        q_dedup_soft_fuzzy,
-    )
-
-    rows = q_dedup_soft_fuzzy(spark, SF_SMALL).collect()
-    cc = {r.doc_id: r.cluster for r in q_dedup_components(spark, SF_SMALL).collect()}
-    by_cluster: dict[int, list] = {}
-    for r in rows:
-        assert cc[r.doc_id] == r.cluster
-        by_cluster.setdefault(r.cluster, []).append(r)
-    multi = 0
-    for cid, members in by_cluster.items():
-        n = len(members)
-        assert all(m.cluster_size == n for m in members)
-        assert abs(sum(m.weight_micro for m in members) - 1_000_000) <= n
-        assert sum(m.is_canonical for m in members) == 1
-        assert min(m.doc_id for m in members) == cid
-        if n > 1:
-            multi += 1
-    assert multi > 0, "fixture must contain near-dup clusters"
-
-
-def test_mad_spikes_robust_vs_mean(spark, tmp_path):
-    """MAD flags survive a masking incident: one colossal hour inflates
-    the MEAN threshold (rel_hourly_spikes stops flagging a 4x hour) but
-    not the median/MAD one. Built on a synthetic log where the property
-    is provable by hand."""
-    import pyspark.sql.functions as F
-
-    from impala_base_to_cdw_sizing_spark.operators.funnels import (
-        q_hourly_spikes,
-        q_hourly_spikes_mad,
-    )
-
-    hour = 3_600_000_000  # us
-    rows = []
-    eid = 0
-    # 20 quiet hours of 10 events, one 40-event hour (the real spike),
-    # one 4000-event hour (the masking incident)
-    for h in range(20):
-        for i in range(10):
-            rows.append((eid, (h * hour + i) * 1000, 1, "click", 1.0, "{}"))
-            eid += 1
-    for i in range(40):
-        rows.append((eid, (20 * hour + i) * 1000, 1, "click", 1.0, "{}")); eid += 1
-    for i in range(4000):
-        rows.append((eid, (21 * hour + i) * 1000, 1, "click", 1.0, "{}")); eid += 1
-    p = str(tmp_path / "madlog")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts_ns long, user_id long, event_type string,"
-        " value double, props string",
-    ).select(
-        "event_id",
-        F.timestamp_micros((F.col("ts_ns") / 1000).cast("long")).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    ).write.parquet(f"{p}/events.parquet")
-
-    mad_flags = {
-        r.hour_ms: r.is_spike
-        for r in q_hourly_spikes_mad(spark, p).collect()
-    }
-    mean_flags = {
-        r.hour_ms: r.is_spike for r in q_hourly_spikes(spark, p).collect()
-    }
-    h40 = 20 * 3_600_000
-    h4000 = 21 * 3_600_000
-    # mean threshold is masked by the incident: (10*20+40+4000)/22*1.5
-    # ≈ 289 > 40 → the 4x hour is NOT flagged by the mean rule
-    assert mean_flags[h40] is False
-    # the median rule flags both the spike and the incident
-    assert mad_flags[h40] is True and mad_flags[h4000] is True
-    assert all(not v for h, v in mad_flags.items() if h not in (h40, h4000))
 
 
 # --- rel_interval_join_banded -----------------------------------------------------
@@ -761,133 +557,3 @@ def test_phash_neardup_banding_guarantee(spark):
     if all_pairs:
         recall = len(got) / len(all_pairs)
         assert recall >= 0.6, recall
-
-
-# --- dedup_substring_scrub --------------------------------------------------------
-
-
-def test_substring_scrub_applies_cut_list_exactly(spark):
-    """The apply pass must remove EXACTLY the span-covered positions:
-    replicate the surgery in Python from the span report and compare
-    hashes; fully-covered docs degrade to the empty hash, not a
-    dropped row."""
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        q_dedup_substring_spans,
-        q_substring_scrub,
-    )
-
-    spans: dict[int, list] = {}
-    for r in q_dedup_substring_spans(spark, SF_SMALL).collect():
-        spans.setdefault(r.doc_id, []).append((r.span_start, r.span_end))
-    docs = dict(
-        duckdb.sql(
-            f"SELECT doc_id, text FROM '{SF_SMALL}/documents.parquet'"
-        ).fetchall()
-    )
-    got = {r.doc_id: r for r in q_substring_scrub(spark, SF_SMALL).collect()}
-    assert set(got) == set(docs)
-    scrubbed_any = empty_any = False
-    for doc_id, text in docs.items():
-        toks = text.split(" ")
-        cover = set()
-        for a, b in spans.get(doc_id, []):
-            cover.update(range(a, b + 1))  # 1-based inclusive
-        kept = [t for i, t in enumerate(toks, start=1) if i not in cover]
-        r = got[doc_id]
-        assert r.n_tokens == len(toks)
-        assert r.n_kept == len(kept)
-        assert r.n_removed == len(toks) - len(kept)
-        assert r.cleaned_hash == hashlib.md5(" ".join(kept).encode()).hexdigest()
-        scrubbed_any |= bool(cover)
-        empty_any |= not kept
-    assert scrubbed_any, "fixture must exercise span removal"
-    assert empty_any, "fixture must exercise the fully-covered case"
-
-
-# --- rel_changepoint_cusum --------------------------------------------------------
-
-
-def test_cusum_localizes_injected_regime_shift(spark, tmp_path):
-    """A synthetic rate series with a known mean shift must localize
-    the changepoint at EXACTLY the last pre-shift hour (argmax |CUSUM|
-    sits at the boundary), and a pure-Python CUSUM replication must
-    match the scaled integer."""
-    import pyspark.sql.functions as F
-
-    from impala_base_to_cdw_sizing_spark.operators.funnels import (
-        q_changepoint_cusum,
-    )
-
-    hour_us = 3_600_000_000
-    rows = []
-    eid = 0
-    # rate 5/hour for 30 hours, then 20/hour for 30 hours → boundary 29
-    counts = [5] * 30 + [20] * 30
-    for h, c in enumerate(counts):
-        for i in range(c):
-            rows.append((eid, (h * hour_us + i) * 1000, 1, "click", 1.0, "{}"))
-            eid += 1
-    p = str(tmp_path / "cusumlog")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts_ns long, user_id long, event_type string,"
-        " value double, props string",
-    ).select(
-        "event_id",
-        F.timestamp_micros((F.col("ts_ns") / 1000).cast("long")).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    ).write.parquet(f"{p}/events.parquet")
-
-    r = q_changepoint_cusum(spark, p).collect()[0]
-    assert r.cp_hour_ms == 29 * 3_600_000  # last pre-shift hour
-    # python replication of the scaled CUSUM
-    T, S = len(counts), sum(counts)
-    prefix = 0
-    best = (0, None)
-    for k, x in enumerate(counts, start=1):
-        prefix += x
-        c = abs(T * prefix - k * S)
-        if c > best[0]:
-            best = (c, k - 1)
-    assert r.cusum_abs_scaled == best[0]
-    assert r.n_hours == T and r.total == S
-
-
-# --- sample_reservoir_dedup -------------------------------------------------------
-
-
-def test_reservoir_dedup_cluster_mass_semantics(spark, tmp_path):
-    """Python replication with the combined weight n_chars*soft_weight
-    on a constructed corpus containing a 4-copy cluster — the discount
-    must bite (each copy carries ~1/4 mass) and the selected set must
-    match the exact-arithmetic replication. (The static test corpora
-    have no exact-duplicate texts, so the fixture is synthesized.)"""
-    from impala_base_to_cdw_sizing_spark.operators.sampling import (
-        _KNUTH,
-        _RES_K,
-        _RES_M,
-        q_sample_reservoir_dedup,
-    )
-    from impala_base_to_cdw_sizing_spark.operators.text import q_dedup_soft
-
-    rows = []
-    for d in range(80):
-        text = "dup dup dup" if d % 20 == 0 else f"uniq text number {d}"
-        rows.append((d, text, "en", "s0", len(text)))
-    p = str(tmp_path / "dupcorpus")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(f"{p}/documents.parquet")
-
-    soft = {r.doc_id: r.weight_micro for r in q_dedup_soft(spark, p).collect()}
-    # the 4-copy cluster (docs 0, 20, 40, 60) carries 250000 micro each
-    assert all(soft[d] == 250_000 for d in (0, 20, 40, 60))
-    keyed = []
-    for doc_id, text, *_rest in rows:
-        h = (doc_id * _KNUTH) % _RES_M
-        ln_micro = _det_ln(float(_RES_M + 1) / float(h + 1))
-        w = len(text) * soft[doc_id]
-        keyed.append((float(ln_micro) / float(w), doc_id))
-    keyed.sort()
-    got = q_sample_reservoir_dedup(spark, p).collect()
-    assert sorted((r.race_key, r.doc_id) for r in got) == keyed[: _RES_K]

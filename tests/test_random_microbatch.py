@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 pytestmark = pytest.mark.slow  # release-gate tier
 
-from tests.conftest import SF_SMALL  # noqa: E402
+from tests.conftest import MH_SMALL, SF_SMALL  # noqa: E402
 
 SEEDS = range(20)
 
@@ -133,17 +133,14 @@ NEARDUP_CAP = 8
 
 
 def test_neardup_stream_invariant_to_random_boundaries(spark, tmp_path):
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        _MH_SMALL,
-        _band_frame,
-    )
+    from impala_base_to_cdw_sizing_spark.operators.text import _band_frame
     from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
         neardup_candidates_batch,
         neardup_candidates_stream,
     )
 
     banded = (
-        _band_frame(spark, SF_SMALL, *_MH_SMALL)
+        _band_frame(spark, SF_SMALL, *MH_SMALL)
         .selectExpr(
             "doc_id", "doc_id AS arrival",
             "CAST(band_id AS LONG) AS band_id", "band_key",

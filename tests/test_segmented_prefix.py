@@ -76,7 +76,7 @@ def test_segmented_cumsum_equals_python_running_sum(spark, case):
         decimal,
     )
     # ordering-consistent buckets: a monotone quantization of lead,
-    # negated when lead sorts descending (negative ids, as pareto_classes)
+    # negated when lead sorts descending (negative ids)
     q = f"floor(lead / {width}) * {gap}"
     df = df.withColumn("b", F.expr(f"-({q})" if desc else q).cast("long"))
     lead = F.col("lead").desc() if desc else F.col("lead").asc()

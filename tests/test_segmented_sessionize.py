@@ -14,10 +14,6 @@ from impala_base_to_cdw_sizing_spark.operators.relational import (
     SQL_SESSIONIZE,
     q_sessionize_segmented,
 )
-from impala_base_to_cdw_sizing_spark.operators.sequences import (
-    SQL_SESSION_STATS,
-    q_session_stats_segmented,
-)
 from tests.conftest import SF_SMALL
 from tools.compare_oracle import compare_frames, duck_connection
 
@@ -26,16 +22,12 @@ _WEEK = S._SESS_SPAN_NS
 
 def test_segmented_equals_sequential_on_testdata(spark):
     con = duck_connection(SF_SMALL)
-    for seg, sequential_sql in [
-        (q_sessionize_segmented, SQL_SESSIONIZE),
-        (q_session_stats_segmented, SQL_SESSION_STATS),
-    ]:
-        issues = compare_frames(
-            seg.__name__,
-            seg(spark, SF_SMALL).toPandas(),
-            con.execute(sequential_sql).fetch_df(),
-        )
-        assert not issues, (seg.__name__, issues)
+    issues = compare_frames(
+        "q_sessionize_segmented",
+        q_sessionize_segmented(spark, SF_SMALL).toPandas(),
+        con.execute(SQL_SESSIONIZE).fetch_df(),
+    )
+    assert not issues, issues
 
 
 @pytest.mark.parametrize("boundary_gap", [
@@ -67,17 +59,15 @@ def test_bucket_boundary_carry(spark, boundary_gap):
     ]
     ev = spark.createDataFrame(rows, "user_id BIGINT, ts BIGINT, event_id BIGINT")
 
-    flagged = S.sessionize_flags(ev, _GAP_NS, with_session_id=True)
-    got = {
-        r.event_id: (r.new_session, r.session_id) for r in flagged.collect()
-    }
+    flagged = S.sessionize_flags(ev, _GAP_NS)
+    got = {r.event_id: r.new_session for r in flagged.collect()}
     expect_e2_new = 0 if boundary_gap == _GAP_NS else 1
-    assert got[1] == (1, 1)
-    assert got[2] == (expect_e2_new, 1 + expect_e2_new)
-    assert got[3] == (1, 2 + expect_e2_new)  # carried over the empty bucket
-    assert got[4] == (1, 1)
-    assert got[5] == (0, 1)
-    assert got[6] == (0, 1)  # sub-gap across the boundary: same session
+    assert got[1] == 1
+    assert got[2] == expect_e2_new
+    assert got[3] == 1  # carried over the empty bucket
+    assert got[4] == 1
+    assert got[5] == 0
+    assert got[6] == 0  # sub-gap across the boundary: same session
 
     # and the full sequential replication on the same frame
     from pyspark.sql import Window
@@ -93,9 +83,6 @@ def test_bucket_boundary_carry(spark, boundary_gap):
                 | (F.col("ts") - F.col("prev_ts") > _GAP_NS)
             ).cast("long"),
         )
-        .withColumn("session_id", F.sum("new_session").over(w))
     )
-    seq_map = {
-        r.event_id: (r.new_session, r.session_id) for r in seq.collect()
-    }
+    seq_map = {r.event_id: r.new_session for r in seq.collect()}
     assert got == seq_map

@@ -168,82 +168,3 @@ def test_kmv_jaccard_witness_and_nondegeneracy(spark):
     assert max(exacts) - min(exacts) > 0.01
     # the estimate is an estimate, not a copy of the exact column
     assert any(r.est_jaccard != r.exact_jaccard for r in rows)
-
-
-def test_kmv_newusers_replicates_in_pure_python(spark):
-    """Difference-cardinality estimator: replicate the union-top-k
-    proportion arithmetic AND the exact day-over-day new-user counts in
-    pure Python, row for row."""
-    ev = load_events(spark, SF_SMALL).selectExpr(
-        "CAST(ts DIV 86400000000000 AS BIGINT) AS day", "user_id"
-    ).collect()
-    by_day = defaultdict(set)
-    for r in ev:
-        by_day[r.day].add(r.user_id)
-    days = sorted(by_day)
-    rows = SS.q_kmv_newusers(spark, SF_SMALL).collect()
-    expect = {}
-    for da, db in zip(days, days[1:]):
-        sa = {(u * SS._KNUTH) % SS._KMV_M for u in by_day[da]}
-        sb = {(u * SS._KNUTH) % SS._KMV_M for u in by_day[db]}
-        ka, kb = (set(sorted(s)[: SS._KMV_K]) for s in (sa, sb))
-        union_topk = sorted(ka | kb)[: SS._KMV_K]
-        b_only = sum(1 for h in union_topk if h in kb and h not in ka)
-        n = len(union_topk)
-        u_est = (
-            float(n)
-            if n < SS._KMV_K
-            else (SS._KMV_K - 1) * float(SS._KMV_M) / max(union_topk)
-        )
-        est = b_only / n * u_est
-        exact_new = len(by_day[db] - by_day[da])
-        expect[(da, db)] = (n, b_only, exact_new, est)
-    assert len(rows) == len(expect)
-    for r in rows:
-        n, b_only, exact_new, est = expect[(r.da, r.db)]
-        assert (r.union_sketch_n, r.b_only_n, r.exact_new) == (
-            n, b_only, exact_new,
-        )
-        assert r.est_new == est
-        assert r.within_tol is True
-    # churn is real on this corpus at sf0.001: most days see new users
-    # (tiny per-day sets make an occasional fully-returning day normal)
-    assert sum(1 for r in rows if r.exact_new > 0) > len(rows) // 2
-
-
-def test_join_cardinality_replicates_in_pure_python(spark):
-    """Tuple-sketch join sizing: replicate the union-top-k
-    inverse-probability estimate AND the exact join size in pure
-    Python, row for row."""
-    ev = load_events(spark, SF_SMALL).selectExpr(
-        "event_type", "user_id"
-    ).collect()
-    cnt = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        cnt[r.event_type][r.user_id] += 1
-    types = sorted(cnt)
-    rows = SS.q_join_cardinality(spark, SF_SMALL).collect()
-    expect = {}
-    for i, a in enumerate(types):
-        for b in types[i + 1:]:
-            ha = {(u * SS._KNUTH) % SS._KMV_M: c for u, c in cnt[a].items()}
-            hb = {(u * SS._KNUTH) % SS._KMV_M: c for u, c in cnt[b].items()}
-            ka = dict(sorted(ha.items())[: SS._KMV_K])
-            kb = dict(sorted(hb.items())[: SS._KMV_K])
-            topk = sorted(set(ka) | set(kb))[: SS._KMV_K]
-            n = len(topk)
-            sp = sum(ka[h] * kb[h] for h in topk if h in ka and h in kb)
-            u_est = (
-                float(n)
-                if n < SS._KMV_K
-                else (SS._KMV_K - 1) * float(SS._KMV_M) / max(topk)
-            )
-            est = sp * u_est / n
-            exact = sum(c * cnt[b].get(u, 0) for u, c in cnt[a].items())
-            expect[(a, b)] = (n, sp, exact, est)
-    assert len(rows) == len(expect)
-    for r in rows:
-        n, sp, exact, est = expect[(r.ta, r.tb)]
-        assert (r.union_sketch_n, r.sum_prod, r.exact_join_n) == (n, sp, exact)
-        assert r.est_join_n == est
-        assert r.within_tol is True

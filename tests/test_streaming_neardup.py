@@ -6,12 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from impala_base_to_cdw_sizing_spark.operators.text import _MH_SMALL, _band_frame
+from impala_base_to_cdw_sizing_spark.operators.text import _band_frame
 from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
     neardup_candidates_batch,
     neardup_candidates_stream,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import MH_SMALL, SF_SMALL
 import pytest
 
 CAP = 8
@@ -22,7 +22,7 @@ def _banded(spark):
     # the real LSH banding of the corpus (small signature keeps the
     # test fast), arrival = doc_id so the order is replayable
     return (
-        _band_frame(spark, SF_SMALL, *_MH_SMALL)
+        _band_frame(spark, SF_SMALL, *MH_SMALL)
         .selectExpr("doc_id", "doc_id AS arrival", "CAST(band_id AS LONG) AS band_id", "band_key")
     )
 

@@ -5,8 +5,10 @@ evidence for the queries they actually ran. The r9 registry grew past
 both sweeps' last recorded runs (ANSI at 213, width at 215, registry at
 223) without anything failing — silently. These tests make registry
 growth loud: every registered name must appear in the last recorded
-manifest of BOTH sweeps, and both manifests must be
-all-green. Adding a query without re-running the sweeps fails here.
+manifest of BOTH sweeps, and both manifests must be all-green. The
+ANSI manifest must check exactly the registry, so removing a query
+without re-running it fails too. Adding a query without re-running the
+sweeps fails here.
 
 Regenerate with:
     python tools/compare_oracle.py --all --ansi --manifest=ANSI_SWEEP.json <sf_dir>
@@ -48,11 +50,16 @@ def test_ansi_sweep_covers_registry():
         "ANSI_SWEEP.json lacks head_commit/utc — re-run the sweep"
     )
     assert m["fail"] == 0, f"ANSI sweep recorded failures: {m['failed_names']}"
-    missing = sorted(_registry_names() - set(m["checked"]))
-    assert not missing, (
-        f"registered queries absent from the last ANSI sweep: {missing} — "
+    # exactly the registry: a manifest recorded over a different registry
+    # (more names or fewer) is evidence for a different tree
+    registry = _registry_names()
+    checked = set(m["checked"])
+    assert checked == registry, (
+        f"ANSI sweep checked names the registry lacks: {sorted(checked - registry)}; "
+        f"registered names it did not check: {sorted(registry - checked)} — "
         "re-run tools/compare_oracle.py --all --ansi --manifest=ANSI_SWEEP.json"
     )
+    assert m["ok"] == len(registry), (m["ok"], len(registry))
 
 
 def test_width_sweep_covers_registry():

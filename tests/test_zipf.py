@@ -62,45 +62,3 @@ def test_zipf_fit_replicates_in_pure_python(spark):
     # variance in ln-ln space
     assert row.slope < 0
     assert 0.5 < row.r2 <= 1.0
-
-
-def test_heaps_fit_replicates_and_shapes(spark):
-    """Heaps'-law growth: replicate deciles, first-touch vocabulary
-    counts, and the det-ln OLS; assert the law's shape — vocabulary
-    monotone, final point = total distinct shingles, 0 < beta < 1
-    (sub-linear growth), high r² in ln-ln space."""
-    docs = sorted(_docs(spark, SF_SMALL).collect(), key=lambda d: d.doc_id)
-    ids = [d.doc_id for d in docs]
-    lo, hi = min(ids), max(ids)
-    pts = []
-    for d in range(1, Z._HEAPS_POINTS + 1):
-        t = lo - 1 + ((hi - lo + 1) * d) // Z._HEAPS_POINTS
-        seen = set()
-        n_docs = 0
-        for doc in docs:
-            if doc.doc_id <= t:
-                n_docs += 1
-                seen.update(_shingles(doc.text))
-        pts.append((d, n_docs, len(seen)))
-    xy = [(_det_ln_micro(n), _det_ln_micro(v)) for _, n, v in pts]
-    n = len(xy)
-    sx = sum(x for x, _ in xy); sy = sum(y for _, y in xy)
-    sxy = sum(x * y for x, y in xy)
-    sxx = sum(x * x for x, _ in xy); syy = sum(y * y for _, y in xy)
-    beta = float(n * sxy - sx * sy) / float(n * sxx - sx * sx)
-    r2 = (
-        float(n * sxy - sx * sy) ** 2
-        / (float(n * sxx - sx * sx) * float(n * syy - sy * sy))
-    )
-    rows = sorted(Z.q_heaps_fit(spark, SF_SMALL).collect(), key=lambda r: r.decile)
-    assert [(r.decile, r.n_docs, r.vocab) for r in rows] == pts
-    for r in rows:
-        assert r.beta == beta and r.r2 == r2
-    vocabs = [r.vocab for r in rows]
-    assert vocabs == sorted(vocabs)
-    all_sh = set()
-    for d in docs:
-        all_sh.update(_shingles(d.text))
-    assert vocabs[-1] == len(all_sh)
-    assert 0.0 < rows[0].beta < 1.0
-    assert rows[0].r2 > 0.9
