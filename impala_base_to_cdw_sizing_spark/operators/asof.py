@@ -191,6 +191,55 @@ FROM carried WHERE side = 1
 """
 
 
+def q_asof_view_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest as-of: each purchase ↔ the view MINIMIZING |Δt| in either
+    direction, ties to the backward (earlier) match — the sensor/feed
+    alignment semantics (``pd.merge_asof(direction='nearest')``).
+    Composes the two ordered-carry passes (each one window, no join
+    explosion) and resolves per row; emits the chosen direction and the
+    signed delta as witnesses. Exact integer nanos throughout."""
+    from ..sources.files import load_events
+
+    ev = load_events(spark, sf_dir)
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("pts"),
+        F.col("event_id").alias("eid"),
+    )
+    views = ev.filter(F.col("event_type") == "view").select(
+        "user_id",
+        F.col("event_id").alias("view_id"),
+        F.col("ts").alias("pts"),
+        F.col("ts").alias("vts"),
+        F.col("event_id").alias("eid"),
+    )
+    back = merge_asof(
+        purchases, views, on="pts", by="user_id",
+        right_cols=["view_id", "vts"], tiebreak="eid",
+    ).selectExpr(
+        "user_id", "purchase_id", "pts",
+        "asof_view_id AS b_id", "asof_vts AS b_ts",
+    )
+    fwd = merge_asof(
+        purchases, views, on="pts", by="user_id",
+        right_cols=["view_id", "vts"], direction="forward", tiebreak="eid",
+    ).selectExpr("user_id", "purchase_id", "asof_view_id AS f_id",
+                 "asof_vts AS f_ts")
+    return back.join(fwd, ["user_id", "purchase_id"]).selectExpr(
+        "user_id", "purchase_id",
+        "CASE WHEN b_id IS NULL THEN f_id WHEN f_id IS NULL THEN b_id"
+        " WHEN pts - b_ts <= f_ts - pts THEN b_id ELSE f_id END AS view_id",
+        "CASE WHEN b_id IS NULL AND f_id IS NULL THEN CAST(NULL AS STRING)"
+        " WHEN b_id IS NULL THEN 'forward' WHEN f_id IS NULL THEN 'backward'"
+        " WHEN pts - b_ts <= f_ts - pts THEN 'backward'"
+        " ELSE 'forward' END AS direction",
+        "CASE WHEN b_id IS NULL THEN f_ts - pts WHEN f_id IS NULL"
+        " THEN b_ts - pts WHEN pts - b_ts <= f_ts - pts THEN b_ts - pts"
+        " ELSE f_ts - pts END AS delta_ns",
+    )
+
+
 def register_all() -> None:
     register("asof_view_before_purchase", q_asof_view_before_purchase, SQL_ASOF)
 

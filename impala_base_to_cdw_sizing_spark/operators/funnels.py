@@ -35,6 +35,43 @@ from .queries_ext import register
 _WEEK_NS = 7 * 24 * 3600 * 1_000_000_000
 
 
+def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, view_ns, click_ns, purchase_ns, stage_reached): the
+    strictly-ordered 3-step funnel; later stages are NULL when the
+    funnel stalls, stage_reached counts completed steps."""
+    ev = load_events(spark, sf_dir).select("user_id", "event_type", "ts")
+    views = (
+        ev.filter(F.col("event_type") == "view")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("view_ns"))
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .join(views, "user_id")
+        .filter(F.col("ts") > F.col("view_ns"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("click_ns"))
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(clicks, "user_id")
+        .filter(F.col("ts") > F.col("click_ns"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("purchase_ns"))
+    )
+    users = ev.select("user_id").distinct()
+    return (
+        users.join(views, "user_id", "left")
+        .join(clicks, "user_id", "left")
+        .join(purchases, "user_id", "left")
+        .selectExpr(
+            "user_id", "view_ns", "click_ns", "purchase_ns",
+            "CAST((view_ns IS NOT NULL) AS INT) + CAST((click_ns IS NOT NULL) AS INT)"
+            " + CAST((purchase_ns IS NOT NULL) AS INT) AS stage_reached",
+        )
+    )
+
+
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cohort_week, week_offset, n_users): of the users first seen in
     ``cohort_week``, how many were active ``week_offset`` weeks later

@@ -248,6 +248,92 @@ def decode_media(with_payload_df: DataFrame, kernel: str = "stub") -> DataFrame:
     return with_payload_df.mapInPandas(_batches, DECODE_SCHEMA)
 
 
+FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes binary"
+
+
+def sample_frames(with_payload_df: DataFrame, n_frames: int = 4) -> DataFrame:
+    """Frame-sampling fan-out: each payload yields ``n_frames`` equal-width
+    slices (the video-keyframe batch shape: 1 input row → N output rows)."""
+
+    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                step = max(1, len(payload) // n_frames)
+                for j in range(n_frames):
+                    rows.append((doc_id, j, payload[j * step : (j + 1) * step]))
+            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
+
+    return with_payload_df.mapInPandas(_batches, FRAME_SCHEMA)
+
+
+RESIZE_SCHEMA = (
+    "doc_id long, width int, height int, thumb_width int, thumb_height int, "
+    "thumb_bytes binary"
+)
+
+
+def resize_media(with_payload_df: DataFrame, max_dim: int = 8) -> DataFrame:
+    """Resize stub: recompute target dims preserving aspect ratio and emit
+    a deterministic 'thumbnail' (payload subsampled to thumb_w*thumb_h
+    bytes). Real deployments swap the kernel for PIL's ``Image.resize``;
+    the Spark-side contract (schema, Arrow batches, bytes out) is real."""
+    import pandas as pd
+
+    def _batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                w, h, _ = _decode_payload(payload)
+                # pin the longest side to max_dim exactly and round the
+                # short side (plain division truncates for non-power-of-2
+                # max_dim: 16/1.6 → 9.999… → int() = 9)
+                if w >= h:
+                    tw, th = max_dim, max(1, int(h * max_dim / w + 0.5))
+                else:
+                    tw, th = max(1, int(w * max_dim / h + 0.5)), max_dim
+                step = max(1, len(payload) // (tw * th))
+                rows.append((doc_id, w, h, tw, th, payload[::step][: tw * th]))
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height",
+                    "thumb_width", "thumb_height", "thumb_bytes",
+                ],
+            )
+
+    return with_payload_df.mapInPandas(_batches, RESIZE_SCHEMA)
+
+
+FEATURE_DIM = 16
+FEATURE_SCHEMA = "doc_id long, features array<float>"
+
+
+def extract_features(with_payload_df: DataFrame) -> DataFrame:
+    """Feature-extraction stub: payload → fixed-dim float vector
+    (byte-histogram folded to FEATURE_DIM bins, L1-normalized) —
+    deterministic stand-in for an image/audio embedding model. The
+    output column is the same ``array<float>`` shape the similarity
+    operators consume, so the full media → embedding → ANN pipeline is
+    wired end-to-end."""
+    import numpy as np
+    import pandas as pd
+
+    def _batches(it):
+        for pdf in it:
+            feats = []
+            for payload in pdf["payload"]:
+                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
+                hist = np.bincount(arr % FEATURE_DIM, minlength=FEATURE_DIM)
+                total = hist.sum() or 1
+                feats.append((hist / total).astype("float32"))
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "features": feats}
+            )
+
+    return with_payload_df.mapInPandas(_batches, FEATURE_SCHEMA)
+
+
 def q_mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode metadata through the Pandas-UDF path. The stub kernel is
     pure arithmetic on the payload bytes, so the DuckDB oracle

@@ -1,19 +1,9 @@
 """Table profiling — the ANALYZE/statistics-collection surface.
 
 Every optimizer and data-quality pipeline starts from per-column
-statistics and value histograms; these two queries implement that shape
+statistics and value histograms; this query implements the histogram
 the way a 100 TB stats pass must:
 
-- ``rel_analyze_stats``: ONE scan computing per-column null counts,
-  min/max, and an NDV estimate for every profiled column simultaneously.
-  The NDV uses ``approx_count_distinct`` deliberately: N exact
-  ``COUNT(DISTINCT)``s in one aggregate trigger Catalyst's Expand (N×
-  the rows through the shuffle — the trap SCALE.md measures at 12×
-  cost), while N HLL buffers coexist in one two-phase partial agg —
-  this is WHY engines collect NDV approximately. Exact values
-  (counts, nulls, min/max) are oracle-matched; the NDV estimates are
-  pinned as within-10% booleans (HLL++ is deterministic for fixed
-  data, so the flags are stable).
 - ``rel_equidepth_histogram``: 8 equal-population buckets of
   ``o_totalprice`` via NTILE semantics with a deterministic tiebreak —
   per-bucket count/min/max, the equi-depth histogram optimizers prefer
@@ -24,6 +14,12 @@ the way a 100 TB stats pass must:
   (``segmented.segmented_row_number`` / ``segmented.ntile_expr``) — no
   single-partition sort anywhere in the plan. The DuckDB oracle runs the
   one-window NTILE, so the two-phase bit-equality is oracle-gated.
+
+``q_analyze_stats`` (not registered; pinned by ``tests/test_profiling.py``)
+is the one-scan statistics pass: per-column null counts, min/max and an
+``approx_count_distinct`` NDV estimate for every profiled column in one
+two-phase aggregate (N exact ``COUNT(DISTINCT)``s would trigger
+Catalyst's Expand), with the estimates checked within 10% of exact NDVs.
 """
 
 from __future__ import annotations

@@ -531,7 +531,7 @@ GROUP BY user_id
 """
 
 
-# --- TPC-H Q18 adaptation (columns limited to the testdata schema) -------------
+# --- TPC-H Q18/Q19 adaptations (columns limited to the testdata schema) --------
 
 
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,6 +571,40 @@ FROM (
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
+
+
+def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q19 disjunctive predicate revenue: OR-of-ANDs across both join
+    sides. Catalyst extracts the common conjuncts it can push to each
+    scan (brand set, quantity bounds) and evaluates the residual
+    disjunction post-join — the plan shape that distinguishes a pushdown
+    engine from a scan-everything one."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    cond = (
+        (
+            (F.col("p_brand") == "Brand#1")
+            & (F.col("p_size").between(1, 15))
+            & (F.col("l_quantity").between(1, 20))
+        )
+        | (
+            (F.col("p_brand") == "Brand#7")
+            & (F.col("p_size").between(10, 30))
+            & (F.col("l_quantity").between(10, 35))
+        )
+        | (
+            (F.col("p_brand") == "Brand#13")
+            & (F.col("p_size").between(20, 50))
+            & (F.col("l_quantity").between(20, 50))
+        )
+    )
+    return joined.filter(cond).agg(
+        F.count("*").alias("n_lines"),
+        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "revenue"
+        ),
+    )
 
 
 # --- semi-structured: schema'd JSON extraction -----------------------------------

@@ -745,6 +745,38 @@ def q_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # across docs. Pure per-row explode — zero shuffles, linear in corpus
 # size, nothing to salt or cap.
 
+_OCHUNK_SIZE = 32
+_OCHUNK_STRIDE = 24
+
+
+def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c, s = _OCHUNK_SIZE, _OCHUNK_STRIDE
+    return (
+        _docs(spark, sf_dir)
+        .withColumn("tokens", F.expr(SPARK_TOKENS))
+        .selectExpr(
+            "doc_id",
+            # n <= size → 1 chunk; else ceil((n-size)/stride)+1, so the
+            # last window starts within the doc and covers its tail
+            f"greatest(1, CAST(ceil((size(tokens) - {c}) / {s}.0) AS INT) + 1)"
+            " AS n_chunks",
+            "tokens",
+        )
+        .selectExpr(
+            "doc_id",
+            "explode(transform(sequence(0, n_chunks - 1), i -> struct("
+            f" CAST(i AS BIGINT) AS chunk_idx,"
+            f" CAST(i * {s} AS BIGINT) AS tok_start,"
+            f" CAST(size(slice(tokens, i * {s} + 1, {c})) AS BIGINT)"
+            "   AS n_chunk_tokens,"
+            f" md5(encode(concat_ws(' ', slice(tokens, i * {s} + 1, {c})),"
+            "   'utf-8')) AS chunk_hash"
+            "))) AS ch",
+        )
+        .select("doc_id", "ch.chunk_idx", "ch.tok_start",
+                "ch.n_chunk_tokens", "ch.chunk_hash")
+    )
+
 
 def _chunks_sql() -> str:
     c = _CHUNK_TOKENS
@@ -1830,6 +1862,73 @@ reach(doc_id, r) AS (
 )
 SELECT doc_id, MIN(r) AS cluster FROM reach GROUP BY doc_id
 """
+
+
+def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """APPLY the ExactSubstr cut list: remove every token covered by a
+    duplicated span (:func:`q_dedup_substring_spans`) and emit the
+    cleaned document's stats + content hash — the step that turns the
+    span report into training data. Survivors keep their original
+    order (positions filtered, then re-joined in index order), so the
+    cleaned hash is deterministic; a doc whose every token is covered
+    degrades to the empty-string hash, not a dropped row.
+
+    Shape: the span list aggregates per doc (a handful of structs) and
+    joins back on doc_id — the coverage test is an order-independent
+    ``exists`` over that tiny array, evaluated per token WITHIN the
+    row (no explode, no second shuffle). Scale is the spans pipeline's;
+    the apply pass is one narrow map + one per-doc join."""
+    spans = (
+        q_dedup_substring_spans(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(
+            F.expr(
+                "collect_list(struct(span_start AS s, span_end AS e)) AS spans"
+            )
+        )
+    )
+    return (
+        _docs(spark, sf_dir)
+        .withColumn("tokens", F.expr(SPARK_TOKENS))
+        .join(spans, "doc_id", "left")
+        .selectExpr(
+            "doc_id",
+            "tokens",
+            "CAST(size(tokens) AS BIGINT) AS n_tokens",
+            "filter(sequence(1, size(tokens)), i -> spans IS NULL OR"
+            " NOT exists(spans, s -> i >= s.s AND i <= s.e)) AS kept",
+        )
+        .selectExpr(
+            "doc_id", "n_tokens",
+            "CAST(size(kept) AS BIGINT) AS n_kept",
+            "n_tokens - size(kept) AS n_removed",
+            "md5(encode(concat_ws(' ',"
+            " transform(kept, i -> element_at(tokens, i))), 'utf-8'))"
+            " AS cleaned_hash",
+        )
+    )
+
+
+def q_dedup_soft_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Soft dedup over NEAR-duplicate clusters: ``dedup_soft_weights``
+    gives exact-copy clusters 1/n mass; this op applies the same
+    down-weighting to the MinHash connected components
+    (:func:`q_dedup_components`), so a page with 7 near-identical
+    variants trains with total mass 1, not 7 — the fuzzy form of
+    SoftDeDup that production pipelines actually want (exact-hash soft
+    weights miss every boilerplate variant). One extra groupBy + join
+    on the cluster id beyond the CC pass; the oracle composes the
+    recursive-reachability fixpoint with the same weight arithmetic."""
+    labels = q_dedup_components(spark, sf_dir)
+    sizes = labels.groupBy("cluster").agg(
+        F.count("*").cast("long").alias("cluster_size")
+    )
+    return labels.join(sizes, "cluster").selectExpr(
+        "doc_id", "cluster", "cluster_size",
+        "CAST(floor(1000000.0 / cluster_size + 0.5) AS BIGINT)"
+        " AS weight_micro",
+        "CAST(doc_id = cluster AS BIGINT) AS is_canonical",
+    )
 
 
 # --- Gopher-style repetition / quality filters ------------------------------

@@ -35,79 +35,3 @@ def read_partitioned(spark: SparkSession, path: str, fmt: str = "parquet") -> Da
     """Read a partitioned layout; partition columns come back as regular
     columns and partition pruning applies to filters on them."""
     return spark.read.format(fmt).load(path)
-
-
-# --- z-order (Morton) clustering ------------------------------------------------
-#
-# Directory partitioning prunes ONE key; bucketing co-locates ONE join
-# key. When queries filter on TWO independent high-cardinality columns
-# (user AND time, key AND price), a total order on either column leaves
-# the other scattered across every file — parquet min/max row-group
-# stats then skip nothing for the second predicate. Sorting by the
-# interleaved-bit (Morton/z-order) key keeps files compact in BOTH
-# dimensions simultaneously: each file covers a small rectangle of the
-# 2-D value space, so either predicate skips most files. This is the
-# technique behind Delta's OPTIMIZE ZORDER BY, implemented here as plain
-# expressions + repartitionByRange (no format dependency); the benefit
-# is MEASURED from real parquet footer stats in tests/test_zorder.py,
-# not asserted.
-
-_Z_BITS = 16  # per dimension; 2 dims → 32-bit Morton key
-
-
-def zorder_key_expr(col_a: str, col_b: str, bounds: dict[str, tuple]) -> str:
-    """SQL expression for the 2-D Morton key of (col_a, col_b).
-
-    ``bounds[col] = (min, max)`` — collected once from stats (one cheap
-    agg at write time); each value normalizes to a ``_Z_BITS``-bit
-    integer, and the two bit strings interleave via a codegen-friendly
-    sum over bit positions."""
-
-    def norm(c: str) -> str:
-        lo, hi = bounds[c]
-        span = (hi - lo) or 1
-        return (
-            f"CAST(floor((CAST({c} AS DOUBLE) - {lo}) / {span}"
-            f" * {(1 << _Z_BITS) - 1} + 0.5) AS BIGINT)"
-        )
-
-    a, b = norm(col_a), norm(col_b)
-    terms = []
-    for i in range(_Z_BITS):
-        terms.append(f"(shiftright({a}, {i}) % 2) * {1 << (2 * i)}")
-        terms.append(f"(shiftright({b}, {i}) % 2) * {1 << (2 * i + 1)}")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """Cluster ``df`` on the Morton key of two columns and write
-    ``n_files`` files, each covering a compact 2-D rectangle.
-
-    One stats agg + one range repartition + sorted write — the standard
-    recurring OPTIMIZE job shape; at 100 TB run it per partition
-    (compose with ``write_partitioned``: partition by date, z-order
-    within each date)."""
-    from pyspark.sql import functions as F
-
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).first()
-    key = zorder_key_expr(
-        col_a, col_b, {col_a: (lo_a, hi_a), col_b: (lo_b, hi_b)}
-    )
-    (
-        df.withColumn("_zkey", F.expr(key))
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )

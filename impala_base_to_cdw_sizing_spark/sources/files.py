@@ -10,14 +10,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..memo import MEMO
 from ..schemas import QUERY_HISTORY_SCHEMA
-
-TPCH_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 # fan-out decision per (path, parallelism, rows_per_task): tiny
@@ -139,12 +135,6 @@ def read_input(
     return df.repartition(fan) if fan else df
 
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table. Column pruning + predicate pushdown reach
-    the parquet scan because the schema is declared by the file itself."""
-    return read_input(spark, sf_dir, name)
-
-
 def load_events(
     spark: SparkSession,
     sf_dir: str,
@@ -174,11 +164,34 @@ def load_events(
 
 def read_query_history_csv(spark: SparkSession, path: str) -> DataFrame:
     """EP2 replay source (A5): header-driven CSV with the 12-column replay
-    schema enforced (``impala_query_sizing.py:172-187``)."""
+    schema enforced (``impala_query_sizing.py:172-187``).
+
+    Fail-fast on malformed fields: each field is read as text and cast to
+    its declared type, and a non-empty field that does not parse
+    (``12GB`` in a DOUBLE column) raises on the first action that reads
+    it, instead of the default PERMISSIVE mode's silent NULL (the
+    reference's silent try/except, ``impala_query_sizing.py:189-200``,
+    SURVEY.md I1). An empty field, or a column the file does not have,
+    is NULL; Spark's own FAILFAST mode would reject such a short row
+    too. CSV column pruning means only the columns a plan reads are
+    parsed and checked."""
+    text = T.StructType(
+        [T.StructField(f.name, T.StringType()) for f in QUERY_HISTORY_SCHEMA.fields]
+    )
+    raw = spark.read.option("header", True).schema(text).csv(path)
+    return raw.selectExpr(*[_checked_cast(f) for f in QUERY_HISTORY_SCHEMA.fields])
+
+
+def _checked_cast(field: T.StructField) -> str:
+    """SQL text casting the text column ``field.name`` to its declared
+    type: NULL stays NULL, a value that does not parse raises."""
+    n, t = field.name, field.dataType.simpleString().upper()
+    if t == "STRING":
+        return n
     return (
-        spark.read.option("header", True)
-        .schema(QUERY_HISTORY_SCHEMA)
-        .csv(path)
+        f"coalesce(try_cast({n} AS {t}),"
+        f" if({n} IS NULL, NULL, raise_error(concat('{n}=', {n}, ' is not a {t}'))))"
+        f" AS {n}"
     )
 
 
@@ -194,8 +207,6 @@ def read_query_history_with_quarantine(
     dropped. PERMISSIVE mode keeps the scan single-pass at any scale
     (FAILFAST dies on the first bad row; DROPMALFORMED loses data
     unaccountably)."""
-    from pyspark.sql import types as T
-
     # build a FRESH StructType: StructType.add() mutates the receiver,
     # so calling it on the shared module constant would permanently grow
     # every other reader's schema
@@ -224,9 +235,9 @@ def read_query_history(spark: SparkSession, path: str, fmt: str = "csv") -> Data
     """Multi-format replay source: the same enforced schema over csv /
     json / parquet / orc (schema declared, never inferred — a 100 TB scan
     with inference is two scans)."""
-    reader = spark.read.schema(QUERY_HISTORY_SCHEMA)
     if fmt == "csv":
-        return reader.option("header", True).csv(path)
+        return read_query_history_csv(spark, path)
+    reader = spark.read.schema(QUERY_HISTORY_SCHEMA)
     if fmt == "json":
         return reader.json(path)
     if fmt == "parquet":

@@ -1,16 +1,47 @@
-"""Multimodal BMP decode/resize kernels and the Pandas-UDF cosine
+"""Multimodal resize/feature-extract plumbing and the Pandas-UDF cosine
 equivalence with the expression form."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from impala_base_to_cdw_sizing_spark.operators.multimodal import (
+    FEATURE_DIM,
+    extract_features,
+    resize_media,
+    with_payload,
+)
 from impala_base_to_cdw_sizing_spark.operators.similarity import (
     SPARK_DOT,
     cosine_pandas_udf,
 )
 
 from tests.conftest import SF_SMALL
+
+
+def test_resize_preserves_aspect_and_bounds(spark):
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(30)
+    out = resize_media(with_payload(docs), max_dim=8).collect()
+    assert len(out) == 30
+    for r in out:
+        assert 1 <= r.thumb_width <= 8 and 1 <= r.thumb_height <= 8
+        assert max(r.thumb_width, r.thumb_height) == 8  # longest side hits max
+        assert len(r.thumb_bytes) <= r.thumb_width * r.thumb_height
+
+
+def test_feature_extraction_feeds_similarity_ops(spark):
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(50)
+    feats = extract_features(with_payload(docs))
+    row = feats.first()
+    assert len(row.features) == FEATURE_DIM
+    assert abs(sum(row.features) - 1.0) < 1e-5  # L1-normalized
+    # the array<float> output plugs straight into the expression-level
+    # vector math the ANN operators use
+    normed = feats.selectExpr(
+        "doc_id",
+        "transform(features, x -> CAST(x AS DOUBLE)) AS v",
+    ).selectExpr("doc_id", f"{SPARK_DOT.format(a='v', b='v')} AS norm2")
+    assert normed.filter(F.col("norm2") > 0).count() == 50
 
 
 def test_pandas_udf_cosine_matches_expression_form(spark):

@@ -48,3 +48,46 @@ def test_markov_replicates_in_pure_python(spark):
     # probabilities row-normalize exactly (sum of exact fractions)
     for src, rs in by_src.items():
         assert sum(r.n_trans for r in rs) == rs[0].n_src_total
+
+
+def test_ewma_replicates_in_pure_python(spark):
+    ev = (
+        load_events(spark, SF_SMALL)
+        .selectExpr("event_type", "CAST(ts DIV 3600000000000 AS BIGINT) AS hr")
+        .collect()
+    )
+    hourly = Counter((r.event_type, r.hr) for r in ev)
+    L = SQ._EWMA_LAGS
+    rows = SQ.q_ewma_hourly(spark, SF_SMALL).collect()
+    assert len(rows) == len(hourly)
+    for r in rows:
+        num = den = 0
+        for lag in range(L):
+            c = hourly.get((r.event_type, r.hr - lag))
+            if c is not None:
+                w = 1 << (L - 1 - lag)
+                num += c * w
+                den += w
+        assert (r.num, r.den, r.n_events) == (
+            num,
+            den,
+            hourly[(r.event_type, r.hr)],
+        )
+        assert r.ewma == num / den
+    # smoothing is real: the EWMA differs from the raw count somewhere,
+    # and a full-history hour weights the current count at 2^15/(2^16-1)
+    assert any(r.ewma != float(r.n_events) for r in rows)
+    # history length varies (gaps renormalize the divisor, not decay it)
+    assert len({r.den for r in rows}) > 1
+
+
+def test_ewma_full_history_hours_exist_at_sf001(spark):
+    # sf0.001 is too sparse for a 16-hour unbroken run per type; at
+    # sf0.01 the hour grid is dense, so complete-history rows (den =
+    # 2^16 − 1) must exist — the truncated-EWMA steady state.
+    from tests.conftest import SF_ORACLE
+
+    L = SQ._EWMA_LAGS
+    rows = SQ.q_ewma_hourly(spark, SF_ORACLE).collect()
+    full = [r for r in rows if r.den == (1 << L) - 1]
+    assert len(full) > len(rows) // 4

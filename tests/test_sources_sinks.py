@@ -6,10 +6,12 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
 from impala_base_to_cdw_sizing_spark.operators.multimodal import (
     decode_media,
+    sample_frames,
     with_payload,
 )
 from impala_base_to_cdw_sizing_spark.plans.pipeline import run_sizing
@@ -248,7 +250,7 @@ def test_ep1_api_mode_end_to_end(spark):
     assert values.concurrent["max_concurrent_queries"] >= 1
 
 
-def test_multimodal_decode_stub_kernel(spark):
+def test_multimodal_decode_and_frames(spark):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(20)
     payloads = with_payload(docs)
     decoded = decode_media(payloads)
@@ -257,3 +259,7 @@ def test_multimodal_decode_stub_kernel(spark):
     for r in rows:
         assert r.n_pixels == r.width * r.height
         assert 0 <= r.mean_byte <= 255
+    frames = sample_frames(payloads, n_frames=4)
+    assert frames.count() == 80
+    one = frames.filter(F.col("frame_idx") == 0).first()
+    assert isinstance(one.frame_bytes, (bytes, bytearray))
