@@ -54,10 +54,13 @@ def main(argv: list[str] | None = None) -> int:
             qh = prepare_query_history(read_query_history_csv(spark, params.input_file))
             result = run_sizing(qh, params)
         except PySparkException as e:
-            # the reader raises on a malformed field and run_sizing's
-            # eager sweep pass reads every derive input, so the error
-            # surfaces here, before any sink is written; its first line
-            # names the field and value, the rest is the JVM stack
+            # the reader's raise_error on a malformed field surfaces here,
+            # in run_sizing's eager sweep pass over every derive input,
+            # before any sink is written; its first line names the field
+            # and value, the rest is the JVM stack. Any other Spark
+            # failure is not an input error and keeps its full trace.
+            if e.getCondition() != "USER_RAISED_EXCEPTION":
+                raise
             reason = str(e).strip().splitlines()[0]
             print(f"ERROR: reading replay input {params.input_file} failed: {reason}")
             return 1

@@ -11,6 +11,7 @@ import random
 import pytest
 from impala_base_to_cdw_sizing_spark.operators.funnels import (
     _WEEK_NS,
+    q_funnel_steps,
     q_retention_cohorts,
     q_scd2_intervals,
 )
@@ -28,6 +29,27 @@ def _write_log(spark, tmp_path, rows):
     path = tmp_path / "events.parquet"
     df.coalesce(1).write.mode("overwrite").parquet(str(path))
     return str(tmp_path)
+
+
+def _ref_funnel(rows):
+    """Pure-Python strictly-ordered view→click→purchase per user."""
+    by_user = {}
+    for eid, ts, uid, et in rows:
+        by_user.setdefault(uid, []).append((ts, eid, et))
+    out = {}
+    for uid, evs in by_user.items():
+        evs.sort()
+        v = min((ts for ts, _, et in evs if et == "view"), default=None)
+        c = (
+            min((ts for ts, _, et in evs if et == "click" and ts > v), default=None)
+            if v is not None else None
+        )
+        p = (
+            min((ts for ts, _, et in evs if et == "purchase" and ts > c), default=None)
+            if c is not None else None
+        )
+        out[uid] = (v, c, p)
+    return out
 
 
 def _ref_scd2(rows):
@@ -49,7 +71,7 @@ def _ref_scd2(rows):
 
 
 @pytest.mark.slow  # re-tiered r15: driver gate = fast tier; this test's coverage stays in the release gate (pytest -m "")
-def test_retention_and_scd2_match_python_reference_on_random_logs(spark, tmp_path):
+def test_funnel_and_scd2_match_python_reference_on_random_logs(spark, tmp_path):
     rng = random.Random(20260814)
     for trial in range(4):
         n_users, n_events = rng.randint(2, 5), rng.randint(10, 60)
@@ -71,6 +93,16 @@ def test_retention_and_scd2_match_python_reference_on_random_logs(spark, tmp_pat
             if (r[2], r[1]) not in seen and not seen.add((r[2], r[1]))
         ]
         sf = _write_log(spark, tmp_path / f"t{trial}", rows)
+
+        got_f = {
+            r.user_id: (r.view_ns, r.click_ns, r.purchase_ns)
+            for r in q_funnel_steps(spark, sf).collect()
+        }
+        want_f = {
+            u: tuple(None if t is None else t * 1_000_000 for t in v)
+            for u, v in _ref_funnel(rows).items()
+        }
+        assert got_f == want_f, f"funnel trial {trial}"
 
         got_r = {
             (r.cohort_week, r.week_offset): r.n_users

@@ -7,7 +7,7 @@ From them the walk follows every name a reached definition reads:
 plain names through the module's own definitions and its imports, and
 ``module.attr`` chains through module aliases. A module's top-level
 statements other than definitions run when any of its names is reached.
-Tests are not roots.
+Tests are not roots, ``perfbench/tests/`` included.
 
 Every top-level function, class and constant in ``operators/``,
 ``sinks/`` and ``sources/`` that the walk does not reach must be in
@@ -78,8 +78,9 @@ _NEXT_BATCH = {
     "operators.relational.q_tpch_q19": "test_tpch_gap::test_q19_disjunction_pushes_common_conjuncts",
     "operators.asof.q_asof_view_nearest": "test_r7_ops::test_asof_nearest_matches_pandas",
     "operators.funnels.q_funnel_steps": (
-        "test_funnels ordering pins and the unbounded side of "
-        "test_funnel_window_replicates_and_differs_from_unbounded"
+        "test_funnels ordering pins, the unbounded side of "
+        "test_funnel_window_replicates_and_differs_from_unbounded and the "
+        "funnel half of test_funnels_fuzz"
     ),
     "operators.mixture.DUCK_DIGEST": "test_hash_kernels::test_duck_digest_matches_python_md5",
     "operators.multimodal.FRAME_SCHEMA": "schema of sample_frames",
@@ -128,7 +129,7 @@ def _module_name(path: Path) -> str:
 def _sources() -> dict[str, Path]:
     files = list((REPO / PKG).rglob("*.py")) + [REPO / "__spark_entry__.py", REPO / "bench.py"]
     files += list((REPO / "tools").rglob("*.py")) + list((REPO / "perfbench").rglob("*.py"))
-    return {_module_name(p): p for p in files}
+    return {_module_name(p): p for p in files if "tests" not in p.relative_to(REPO).parts}
 
 
 class _Module:

@@ -95,21 +95,11 @@ def test_console_script_main_reads_sys_argv():
     assert "ERROR: Config file parameter required" in r.stdout
 
 
-@pytest.mark.parametrize(
-    "column, bad", [("reqd_agg_mem", "12GB"), ("num_backends", "eight")]
-)
-def test_malformed_replay_field_is_one_error_line(
-    spark, tmp_path: Path, capsys, column, bad
-):
-    """A field that does not parse as its declared type must stop the
-    replay with one ``ERROR:`` line naming the input, exit 1, and write
-    no sink — not size the row from a NULL. Both columns are derive
-    inputs: CSV column pruning parses only the columns a plan reads.
-    Runs ``main`` in-process on the shared session."""
+def _main_in_process(spark, tmp_path: Path, rows) -> int:
+    """Write ``rows`` as a replay CSV and run ``main`` on it in-process,
+    on the shared session."""
     from impala_base_to_cdw_sizing_spark.__main__ import main
 
-    rows = [list(r) for r in ROWS]
-    rows[1][HEADER.index(column)] = bad
     input_csv = tmp_path / "history.csv"
     with input_csv.open("w", newline="") as f:
         w = csv.writer(f)
@@ -121,14 +111,49 @@ def test_malformed_replay_field_is_one_error_line(
     # shared session; put the test session's width back afterwards
     width = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        rc = main(["cdw-sizing", str(conf)])
+        return main(["cdw-sizing", str(conf)])
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", width)
+
+
+@pytest.mark.parametrize(
+    "column, bad", [("reqd_agg_mem", "12GB"), ("num_backends", "eight")]
+)
+def test_malformed_replay_field_is_one_error_line(
+    spark, tmp_path: Path, capsys, column, bad
+):
+    """A field that does not parse as its declared type must stop the
+    replay with one ``ERROR:`` line naming the input, exit 1, and write
+    no sink — not size the row from a NULL. Both columns are derive
+    inputs: CSV column pruning parses only the columns a plan reads."""
+    rows = [list(r) for r in ROWS]
+    rows[1][HEADER.index(column)] = bad
+    rc = _main_in_process(spark, tmp_path, rows)
     out, err = capsys.readouterr()
     assert rc == 1
     errors = [line for line in out.splitlines() if line.startswith("ERROR:")]
     assert len(errors) == 1, out
-    assert str(input_csv) in errors[0] and bad in errors[0], errors[0]
+    assert str(tmp_path / "history.csv") in errors[0] and bad in errors[0], errors[0]
     assert "Total Queries" not in out
     assert "Traceback" not in out + err
     assert not (tmp_path / "out_main").exists()
+
+
+def test_sizing_failure_is_not_reported_as_an_input_error(
+    spark, tmp_path: Path, capsys, monkeypatch
+):
+    """Only the reader's malformed-field error becomes the one-line input
+    error; any other Spark failure in sizing propagates with its trace."""
+    from pyspark.errors import PySparkValueError
+
+    from impala_base_to_cdw_sizing_spark.plans import pipeline
+
+    def fail(qh, params):
+        raise PySparkValueError(
+            errorClass="CANNOT_BE_EMPTY", messageParameters={"item": "sizing"}
+        )
+
+    monkeypatch.setattr(pipeline, "run_sizing", fail)
+    with pytest.raises(PySparkValueError):
+        _main_in_process(spark, tmp_path, ROWS)
+    assert "ERROR:" not in capsys.readouterr().out
