@@ -293,8 +293,9 @@ def _streaming_mode() -> None:
     one pre-written parquet file per trigger — deterministic, no
     wall-clock coupling) and prints ONE JSON line with rows/s, mean
     batch latency, and the state-store maxima vs their structural
-    bounds. ``--batches N`` (default 100) and ``--scale N`` mirror
-    tools/stream_bench.py."""
+    bounds. ``--batches N`` (default 100) sets the trigger count and
+    ``--scale N`` (default 1) multiplies the rows per trigger; run it as
+    ``python bench.py --streaming``."""
     import shutil
     import tempfile
 

@@ -28,9 +28,6 @@ from .sampling import _KNUTH, _M32  # the one shared deterministic coin
 from .text import DUCK_TOKENS, SPARK_TOKENS
 from ..sources.files import read_input
 
-# 60-bit md5 document digest, DuckDB dialect
-DUCK_DIGEST = "CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT)"
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_input(spark, sf_dir, "documents")

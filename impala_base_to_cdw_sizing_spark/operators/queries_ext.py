@@ -154,9 +154,8 @@ def _load_providers() -> None:
     relational.register_all()
     olap_extra.register_all()
 
-    from . import countmin, mixture, profiling, surprisal, tpch_gap
+    from . import countmin, mixture, profiling, surprisal
 
-    tpch_gap.register_all()
     mixture.register_all()
     surprisal.register_all()
     countmin.register_all()

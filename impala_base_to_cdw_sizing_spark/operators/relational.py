@@ -8,6 +8,9 @@ the engine must get right at 100 TB:
 - q1   : scan + predicate pushdown + hash aggregate (map-side partial)
 - q3   : selective broadcast dim join + agg + deterministic top-k
 - q5   : multi-join star (broadcast small dims, shuffle only the fact)
+- q9   : profit arithmetic over a LIKE-filtered part subset joined through
+         supplier and nation (supply cost is a 60%-of-retail stand-in:
+         the testdata has no partsupp table)
 - semi/anti joins: EXISTS/NOT EXISTS without materializing the right side
 - top-k per group: ranked window with partition pruning
 - set ops: INTERSECT/EXCEPT via shuffle-dedup
@@ -230,6 +233,46 @@ FROM (
      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
 )
 GROUP BY cust_nation, supp_nation, l_year
+"""
+
+
+# --- q9: product-line profit by nation and year (multi-table arithmetic) ------
+
+
+def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q9 shape: profit per supplier nation per year over a LIKE-filtered
+    part subset. Supply cost is a 60%-of-retail stand-in (the
+    testdata has no ps_supplycost); the profit expression mixes two fact
+    columns and a dim column — the multi-table arithmetic shape."""
+    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
+    supp = _t(spark, sf_dir, "supplier")
+    nat = _t(spark, sf_dir, "nation")
+    li = _t(spark, sf_dir, "lineitem")
+    profit = (
+        F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
+    )
+    return (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
+        .withColumn("o_year", F.year("l_shipdate").cast("long"))
+        .groupBy(F.col("n_name").alias("nation"), F.col("o_year"))
+        .agg(dsum(profit).alias("sum_profit"), F.count("*").alias("n_lines"))
+    )
+
+
+SQL_Q9 = f"""
+SELECT n_name AS nation, CAST(year(l_shipdate) AS BIGINT) AS o_year,
+  {dsum_sql('l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity')}
+    AS sum_profit,
+  COUNT(*) AS n_lines
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+WHERE p_name LIKE '%gear%'
+GROUP BY 1, 2
 """
 
 
@@ -531,7 +574,7 @@ GROUP BY user_id
 """
 
 
-# --- TPC-H Q18/Q19 adaptations (columns limited to the testdata schema) --------
+# --- q18: large-volume orders (HAVING on an aggregate) -------------------------
 
 
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,40 +614,6 @@ FROM (
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
-
-
-def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q19 disjunctive predicate revenue: OR-of-ANDs across both join
-    sides. Catalyst extracts the common conjuncts it can push to each
-    scan (brand set, quantity bounds) and evaluates the residual
-    disjunction post-join — the plan shape that distinguishes a pushdown
-    engine from a scan-everything one."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & (F.col("p_size").between(1, 15))
-            & (F.col("l_quantity").between(1, 20))
-        )
-        | (
-            (F.col("p_brand") == "Brand#7")
-            & (F.col("p_size").between(10, 30))
-            & (F.col("l_quantity").between(10, 35))
-        )
-        | (
-            (F.col("p_brand") == "Brand#13")
-            & (F.col("p_size").between(20, 50))
-            & (F.col("l_quantity").between(20, 50))
-        )
-    )
-    return joined.filter(cond).agg(
-        F.count("*").alias("n_lines"),
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "revenue"
-        ),
-    )
 
 
 # --- semi-structured: schema'd JSON extraction -----------------------------------
@@ -701,6 +710,7 @@ def register_all() -> None:
     register("rel_tpch_q3_topk", q_tpch_q3, SQL_Q3)
     register("rel_tpch_q5_star", q_tpch_q5, SQL_Q5)
     register("rel_tpch_q7_volume", q_tpch_q7, SQL_Q7)
+    register("rel_tpch_q9_profit", q_tpch_q9, SQL_Q9)
     register("rel_tpch_q4_exists", q_tpch_q4, SQL_Q4)
     register("rel_tpch_q6_pushdown", q_tpch_q6, SQL_Q6)
     register("rel_tpch_q13_histogram", q_tpch_q13, SQL_Q13)

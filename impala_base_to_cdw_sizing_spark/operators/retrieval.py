@@ -23,13 +23,6 @@ Both follow the repo's determinism and scale contracts:
   |ln ratio| ≤ ~16.6 — both hold to ~e^16 bigram tokens; past that the
   ratio decomposes into ln-sums of smaller exact ratios (documented,
   not needed at any tested sf).
-
-``q_fuzzy_join_blocked`` (not registered; pinned by
-``tests/test_retrieval.py``) is a blocked fuzzy self-join over DISTINCT
-customer names: prefix blocking (all but the last 2 chars) bounds every
-block at ~100 candidates, then ``levenshtein() <= 1`` inside the block —
-the standard entity-resolution blocking shape (pairs are Σ|block|² ≤
-100·n, linear in names, never all-pairs).
 """
 
 from __future__ import annotations
@@ -248,39 +241,6 @@ SELECT prev, cur, c12, {_DET_LN_W} AS pmi_micro FROM (
   )
 )
 """
-
-
-# --- entity-resolution fuzzy join -------------------------------------------------
-
-_FUZZY_MAX_DIST = 1
-_FUZZY_BLOCK_TAIL = 2  # block on all but the last N chars
-
-
-def q_fuzzy_join_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    names = (
-        read_input(spark, sf_dir, "customer")
-        .select("c_name")
-        .distinct()
-        .withColumn(
-            "blk",
-            F.expr(
-                f"substring(c_name, 1, length(c_name) - {_FUZZY_BLOCK_TAIL})"
-            ),
-        )
-    )
-    a, b = names.alias("a"), names.alias("b")
-    return (
-        a.join(b, "blk")
-        .filter(F.col("a.c_name") < F.col("b.c_name"))
-        .select(
-            F.col("a.c_name").alias("name_a"),
-            F.col("b.c_name").alias("name_b"),
-            F.levenshtein(F.col("a.c_name"), F.col("b.c_name")).cast(
-                "long"
-            ).alias("dist"),
-        )
-        .filter(F.col("dist") <= _FUZZY_MAX_DIST)
-    )
 
 
 def register_all() -> None:

@@ -94,59 +94,6 @@ FROM trans JOIN totals USING (src)
 """
 
 
-_EWMA_LAGS = 16  # truncation horizon: weight 2^-(j+1) is < 0.002% past j=15
-
-
-def q_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated EWMA (α = 1/2) over per-type hourly event counts — a
-    recency-weighted level estimate per hour.
-
-    EWMA is a *recursion* (ewma_t = α·x_t + (1−α)·ewma_{t−1}) — the
-    classic "can't express in one window" shape, because frame
-    aggregates can't weight by distance. The scale-safe rewrite:
-    truncate the geometric tail at 16 lags (residual mass 2^-16) and
-    renormalize over what remains: weights are the exact integers
-    2^(15−j) for lag j, and the divisor is the sum of weights of the
-    lags actually observed — so truncation and hour-gaps both shift
-    weight instead of silently decaying toward zero. Each hourly count
-    then contributes to ≤16 target hours — a bounded explode +
-    partial-agg groupBy, no window at all, no recursion, and gaps in
-    the hour sequence renormalize instead of silently decaying.
-
-    num and den stay exact BIGINTs (max count · 2^15 · 16 lags ≪ 2^63);
-    the EWMA is one double division — bit-equal cross-engine.
-    """
-    ev = load_events(spark, sf_dir).selectExpr(
-        "event_type", "CAST(ts DIV 3600000000000 AS BIGINT) AS hr"
-    )
-    hourly = ev.groupBy("event_type", "hr").agg(
-        F.count("*").cast("long").alias("n_events")
-    )
-    contrib = hourly.selectExpr(
-        "event_type",
-        "hr AS src_hr",
-        "n_events",
-        f"explode(sequence(0, {_EWMA_LAGS - 1})) AS lag",
-    ).selectExpr(
-        "event_type",
-        "src_hr + lag AS hr",
-        f"n_events * shiftleft(CAST(1 AS BIGINT), {_EWMA_LAGS - 1} - lag) AS wx",
-        f"shiftleft(CAST(1 AS BIGINT), {_EWMA_LAGS - 1} - lag) AS w",
-    )
-    sums = contrib.groupBy("event_type", "hr").agg(
-        F.sum("wx").cast("long").alias("num"),
-        F.sum("w").cast("long").alias("den"),
-    )
-    return hourly.join(sums, ["event_type", "hr"]).selectExpr(
-        "event_type",
-        "hr",
-        "n_events",
-        "num",
-        "den",
-        "CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS ewma",
-    )
-
-
 def register_all() -> None:
     register(
         "rel_markov_transitions", q_markov_transitions, SQL_MARKOV_TRANSITIONS

@@ -138,7 +138,12 @@ def build_spark(
     extra_conf: dict[str, str] | None = None,
     data_dir: str | None = None,
 ) -> SparkSession:
-    """Build a SparkSession.
+    """Build a SparkSession, or return the one already running in this
+    process unchanged.
+
+    ``getOrCreate()`` would re-apply the runtime SQL confs below to a
+    running session, so a CLI call made in-process (a test, the
+    benchmark) would reset its caller's shuffle width and AQE settings.
 
     Defaults are tuned for the local[32] test box but every knob is
     cluster-safe:
@@ -150,6 +155,9 @@ def build_spark(
       ``data_dir`` so ≥sf1 harness runs measure the plan, not the width),
       not the 200 default.
     """
+    running = SparkSession._instantiatedSession
+    if running is not None and running._sc._jsc is not None:
+        return running
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or _scaled_partitions(data_dir, cpus)

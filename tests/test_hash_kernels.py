@@ -1,8 +1,8 @@
 """Property tests for the cross-engine hash kernels — no Spark session.
 
-The sketch operators' correctness rests on three deterministic kernels
-agreeing across engines: the 60-bit md5 document digest, the shared
-universal-hash cell family, and the JL sign matrix. Parity tests compare
+The sketch operators' correctness rests on two deterministic kernels
+agreeing across engines: the shared universal-hash cell family and the
+JL sign matrix. Parity tests compare
 Spark to DuckDB; these properties compare BOTH dialect formulas to an
 independent Python reference over randomized inputs, so a dialect
 expression that drifts (precedence, modulo semantics, hex parsing)
@@ -11,7 +11,6 @@ fails even if both engines drift together.
 
 from __future__ import annotations
 
-import hashlib
 import sys
 from pathlib import Path
 
@@ -28,19 +27,6 @@ from impala_base_to_cdw_sizing_spark.operators.hashes import (  # noqa: E402
     UHASH_P,
     uhash_expr,
 )
-from impala_base_to_cdw_sizing_spark.operators.mixture import (  # noqa: E402
-    DUCK_DIGEST,
-)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.text(min_size=0, max_size=200).filter(lambda s: "\x00" not in s))
-def test_duck_digest_matches_python_md5(text):
-    got = _CON.execute(
-        f"SELECT {DUCK_DIGEST} FROM (SELECT ? AS text)", [text]
-    ).fetchone()[0]
-    want = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:15], 16)
-    assert got == want
 
 
 @settings(max_examples=50, deadline=None)

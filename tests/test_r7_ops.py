@@ -1,11 +1,9 @@
-"""Round-7 operators: weighted reservoir sampling, overlap chunking,
-SQ8 ANN, bigram-LM perplexity. Each test checks a property the oracle
+"""Round-7 operators: weighted reservoir sampling, SQ8 ANN, bigram-LM perplexity. Each test checks a property the oracle
 parity run can't: an independent pure-Python replication, a structural
 invariant, or a degenerate fixture."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import duckdb
@@ -80,46 +78,6 @@ def test_reservoir_favors_heavy_docs(spark):
 
 
 # --- text_chunk_overlap -----------------------------------------------------------
-
-
-def test_chunk_overlap_covers_and_overlaps(spark):
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        _OCHUNK_SIZE,
-        _OCHUNK_STRIDE,
-        q_chunk_overlap,
-    )
-
-    rows = q_chunk_overlap(spark, SF_SMALL).collect()
-    docs = dict(
-        duckdb.sql(
-            f"SELECT doc_id, text FROM '{SF_SMALL}/documents.parquet'"
-        ).fetchall()
-    )
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert set(by_doc) == set(docs)
-    for doc_id, chunks in by_doc.items():
-        toks = docs[doc_id].split(" ")
-        chunks.sort(key=lambda r: r.chunk_idx)
-        # chunk count formula
-        n = len(toks)
-        expect_chunks = max(
-            1, math.ceil((n - _OCHUNK_SIZE) / _OCHUNK_STRIDE) + 1
-        )
-        assert len(chunks) == expect_chunks
-        # full coverage: last chunk reaches the final token
-        last = chunks[-1]
-        assert last.tok_start + last.n_chunk_tokens == n
-        # consecutive chunks overlap by size - stride (when full)
-        for a, b in zip(chunks, chunks[1:]):
-            assert b.tok_start == a.tok_start + _OCHUNK_STRIDE
-            if a.n_chunk_tokens == _OCHUNK_SIZE:
-                assert b.tok_start < a.tok_start + a.n_chunk_tokens
-        # hash identity: recompute one chunk per doc in Python
-        probe = chunks[0]
-        text = " ".join(toks[probe.tok_start : probe.tok_start + _OCHUNK_SIZE])
-        assert probe.chunk_hash == hashlib.md5(text.encode()).hexdigest()
 
 
 # --- sim_sq8_ann ------------------------------------------------------------------
@@ -445,85 +403,7 @@ def test_drift_psi_stable_corpus_and_injected_drift(spark, tmp_path):
 # --- asof_view_nearest ------------------------------------------------------------
 
 
-def test_asof_nearest_matches_pandas(spark):
-    """pd.merge_asof(direction='nearest') is the reference semantics —
-    with the one deliberate divergence pinned separately: on an exact
-    |delta| tie this op chooses the BACKWARD (earlier) view
-    deterministically, while pandas nearest also takes the earlier side,
-    so the two agree everywhere including ties."""
-    import pandas as pd
-
-    from impala_base_to_cdw_sizing_spark.operators.asof import (
-        q_asof_view_nearest,
-    )
-    from impala_base_to_cdw_sizing_spark.sources.files import load_events
-
-    got = {
-        r.purchase_id: (r.view_id, r.direction, r.delta_ns)
-        for r in q_asof_view_nearest(spark, SF_SMALL).collect()
-    }
-    ev = load_events(spark, SF_SMALL).select(
-        "user_id", "event_id", "event_type", "ts"
-    ).toPandas()
-    p = (
-        ev[ev.event_type == "purchase"]
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
-    )
-    v = (
-        ev[ev.event_type == "view"]
-        .sort_values(["ts", "event_id"])
-        .rename(columns={"event_id": "view_id"})
-        .reset_index(drop=True)
-    )
-    ref = pd.merge_asof(
-        p, v[["user_id", "view_id", "ts"]],
-        on="ts", by="user_id", direction="nearest", suffixes=("", "_v"),
-    )
-    # pandas nearest breaks exact-|delta| ties toward backward as well;
-    # compare the matched view id row-by-row
-    mism = 0
-    for r in ref.itertuples():
-        g = got.get(r.event_id)
-        assert g is not None
-        if g[0] != r.view_id:
-            mism += 1
-    assert mism == 0, mism
-    # witness sanity: delta sign matches direction
-    for vid, direction, delta in got.values():
-        if direction == "backward":
-            assert delta <= 0
-        elif direction == "forward":
-            assert delta >= 0
-
-
 # --- dedup_soft_fuzzy -------------------------------------------------------------
-
-
-def test_soft_fuzzy_mass_and_cluster_consistency(spark):
-    """Fuzzy soft weights: mass ~1e6 per CC cluster, canonical = the
-    cluster-min doc, and clusters agree with dedup_components."""
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        q_dedup_components,
-        q_dedup_soft_fuzzy,
-    )
-
-    rows = q_dedup_soft_fuzzy(spark, SF_SMALL).collect()
-    cc = {r.doc_id: r.cluster for r in q_dedup_components(spark, SF_SMALL).collect()}
-    by_cluster: dict[int, list] = {}
-    for r in rows:
-        assert cc[r.doc_id] == r.cluster
-        by_cluster.setdefault(r.cluster, []).append(r)
-    multi = 0
-    for cid, members in by_cluster.items():
-        n = len(members)
-        assert all(m.cluster_size == n for m in members)
-        assert abs(sum(m.weight_micro for m in members) - 1_000_000) <= n
-        assert sum(m.is_canonical for m in members) == 1
-        assert min(m.doc_id for m in members) == cid
-        if n > 1:
-            multi += 1
-    assert multi > 0, "fixture must contain near-dup clusters"
 
 
 # --- rel_interval_join_banded -----------------------------------------------------
@@ -688,41 +568,3 @@ def test_phash_neardup_banding_guarantee(spark):
 
 
 # --- dedup_substring_scrub --------------------------------------------------------
-
-
-def test_substring_scrub_applies_cut_list_exactly(spark):
-    """The apply pass must remove EXACTLY the span-covered positions:
-    replicate the surgery in Python from the span report and compare
-    hashes; fully-covered docs degrade to the empty hash, not a
-    dropped row."""
-    from impala_base_to_cdw_sizing_spark.operators.text import (
-        q_dedup_substring_spans,
-        q_substring_scrub,
-    )
-
-    spans: dict[int, list] = {}
-    for r in q_dedup_substring_spans(spark, SF_SMALL).collect():
-        spans.setdefault(r.doc_id, []).append((r.span_start, r.span_end))
-    docs = dict(
-        duckdb.sql(
-            f"SELECT doc_id, text FROM '{SF_SMALL}/documents.parquet'"
-        ).fetchall()
-    )
-    got = {r.doc_id: r for r in q_substring_scrub(spark, SF_SMALL).collect()}
-    assert set(got) == set(docs)
-    scrubbed_any = empty_any = False
-    for doc_id, text in docs.items():
-        toks = text.split(" ")
-        cover = set()
-        for a, b in spans.get(doc_id, []):
-            cover.update(range(a, b + 1))  # 1-based inclusive
-        kept = [t for i, t in enumerate(toks, start=1) if i not in cover]
-        r = got[doc_id]
-        assert r.n_tokens == len(toks)
-        assert r.n_kept == len(kept)
-        assert r.n_removed == len(toks) - len(kept)
-        assert r.cleaned_hash == hashlib.md5(" ".join(kept).encode()).hexdigest()
-        scrubbed_any |= bool(cover)
-        empty_any |= not kept
-    assert scrubbed_any, "fixture must exercise span removal"
-    assert empty_any, "fixture must exercise the fully-covered case"

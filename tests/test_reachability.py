@@ -61,62 +61,20 @@ ALLOWED: dict[str, str] = {
         "horizon of the unrolled label propagation that test_round2 compares "
         "the declared converged connected components with"
     ),
+    "sinks.layout.write_partitioned": (
+        "partitioned sink, the write half of ingestion with pushdown "
+        "(PAPER.md), a stated capability; test_partition_pruning pins it"
+    ),
+    "sinks.layout.read_partitioned": (
+        "partition-pruned read of write_partitioned output, ingestion with "
+        "pushdown (PAPER.md), a stated capability; test_partition_pruning "
+        "checks static and dynamic pruning on it"
+    ),
     "sources.files.read_query_history": (
         "multi-format (csv/json/parquet/orc) replay reader, a stated "
         "capability; test_catalog_formats round-trips it"
     ),
 }
-
-# Test-only definitions kept with their tests for the next deletion batch
-# (ROADMAP item 3); each maps to the tests that still pin it.
-_NEXT_BATCH = {
-    "operators.tpch_gap._psup": "the partsupp-supplier frame of q_tpch_q2",
-    **{
-        f"operators.tpch_gap.q_tpch_q{n}": "test_tpch_gap nonvacuity and plan-shape pins"
-        for n in (2, 8, 11, 12, 14, 15, 16, 17, 20, 21, 22)
-    },
-    "operators.relational.q_tpch_q19": "test_tpch_gap::test_q19_disjunction_pushes_common_conjuncts",
-    "operators.asof.q_asof_view_nearest": "test_r7_ops::test_asof_nearest_matches_pandas",
-    "operators.funnels.q_funnel_steps": (
-        "test_funnels ordering pins, the unbounded side of "
-        "test_funnel_window_replicates_and_differs_from_unbounded and the "
-        "funnel half of test_funnels_fuzz"
-    ),
-    "operators.mixture.DUCK_DIGEST": "test_hash_kernels::test_duck_digest_matches_python_md5",
-    "operators.multimodal.FRAME_SCHEMA": "schema of sample_frames",
-    "operators.multimodal.sample_frames": "test_sources_sinks::test_multimodal_decode_and_frames",
-    "operators.multimodal.RESIZE_SCHEMA": "schema of resize_media",
-    "operators.multimodal.resize_media": "test_mm_features::test_resize_preserves_aspect_and_bounds",
-    "operators.multimodal.FEATURE_DIM": "vector width of extract_features",
-    "operators.multimodal.FEATURE_SCHEMA": "schema of extract_features",
-    "operators.multimodal.extract_features": (
-        "test_mm_features::test_feature_extraction_feeds_similarity_ops"
-    ),
-    "operators.profiling._PROFILE_COLS": "column list of q_analyze_stats",
-    "operators.profiling.q_analyze_stats": "test_profiling",
-    "operators.retrieval._FUZZY_MAX_DIST": "edit-distance cut of q_fuzzy_join_blocked",
-    "operators.retrieval._FUZZY_BLOCK_TAIL": "blocking key of q_fuzzy_join_blocked",
-    "operators.retrieval.q_fuzzy_join_blocked": (
-        "test_retrieval::test_fuzzy_join_precision_and_blocking_recall_contract"
-    ),
-    "operators.sequences._EWMA_LAGS": "horizon of q_ewma_hourly",
-    "operators.sequences.q_ewma_hourly": "test_sequences EWMA replication tests",
-    "operators.text._OCHUNK_SIZE": "window of q_chunk_overlap",
-    "operators.text._OCHUNK_STRIDE": "stride of q_chunk_overlap",
-    "operators.text.q_chunk_overlap": "test_r7_ops::test_chunk_overlap_covers_and_overlaps",
-    "operators.text.q_dedup_soft_fuzzy": (
-        "test_r7_ops::test_soft_fuzzy_mass_and_cluster_consistency"
-    ),
-    "operators.text.q_substring_scrub": (
-        "test_r7_ops::test_substring_scrub_applies_cut_list_exactly"
-    ),
-    "sinks.layout.write_partitioned": "test_partition_pruning",
-    "sinks.layout.read_partitioned": "test_partition_pruning",
-    "sources.files.read_query_history_with_quarantine": (
-        "test_catalog_formats::test_corrupt_record_quarantine"
-    ),
-}
-ALLOWED.update({k: f"test-only; kept with {v}" for k, v in _NEXT_BATCH.items()})
 
 
 def _module_name(path: Path) -> str:
@@ -282,4 +240,4 @@ def test_walk_sees_through_imports_and_module_attributes():
     # reached only through `files.read_query_history_csv` in __main__ and perfbench
     assert (f"{PKG}.sources.files", "read_query_history_csv") in walk.reached
     # reached through a register() argument
-    assert (f"{PKG}.operators.tpch_gap", "q_tpch_q9") in walk.reached
+    assert (f"{PKG}.operators.relational", "q_tpch_q9") in walk.reached

@@ -107,13 +107,7 @@ def _main_in_process(spark, tmp_path: Path, rows) -> int:
         w.writerows(rows)
     conf = tmp_path / "sizing.conf"
     conf.write_text(f"input_file={input_csv}\noutput_file={tmp_path}/out_main\n")
-    # main's build_spark re-applies the CLI's shuffle width to the
-    # shared session; put the test session's width back afterwards
-    width = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        return main(["cdw-sizing", str(conf)])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", width)
+    return main(["cdw-sizing", str(conf)])
 
 
 @pytest.mark.parametrize(

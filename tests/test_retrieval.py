@@ -1,7 +1,6 @@
-"""Adversarial self-checks for the r8 retrieval/linkage operators —
-pure-Python replications (the defense that caught the r7 identifier
-collision: parity alone cannot see identical-wrong answers) plus the
-blocking-recall contract for the fuzzy join.
+"""Adversarial self-checks for the r8 retrieval operators — pure-Python
+replications (the defense that caught the r7 identifier collision:
+parity alone cannot see identical-wrong answers).
 """
 
 from __future__ import annotations
@@ -9,15 +8,11 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-import pyarrow.parquet as pq
-
 from impala_base_to_cdw_sizing_spark.operators import retrieval
 from impala_base_to_cdw_sizing_spark.operators.retrieval import (
     _BM25_B,
     _BM25_K1,
     _BM25_QUERIES,
-    _FUZZY_BLOCK_TAIL,
-    _FUZZY_MAX_DIST,
     _PMI_MIN_COUNT,
 )
 from tests.conftest import SF_SMALL
@@ -127,37 +122,3 @@ def _lev(a: str, b: str) -> int:
             )
         prev = cur
     return prev[-1]
-
-
-def test_fuzzy_join_precision_and_blocking_recall_contract(spark):
-    names = sorted(
-        set(
-            pq.read_table(f"{SF_SMALL}/customer.parquet", columns=["c_name"])
-            .column("c_name")
-            .to_pylist()
-        )
-    )
-    got = {
-        (r.name_a, r.name_b): r.dist
-        for r in retrieval.q_fuzzy_join_blocked(spark, SF_SMALL).collect()
-    }
-    # precision 1: every emitted pair is a true close pair
-    for (a, b), d in got.items():
-        assert a < b and d <= _FUZZY_MAX_DIST and _lev(a, b) == d
-    # the blocking contract: every true pair whose names AGREE on the
-    # block prefix (edits confined to the last _FUZZY_BLOCK_TAIL chars)
-    # is found — the structural recall guarantee; pairs with earlier
-    # edits are out of contract (standard ER blocking trade-off,
-    # documented in the operator docstring)
-    expected = {}
-    by_block = defaultdict(list)
-    for n in names:
-        by_block[n[: len(n) - _FUZZY_BLOCK_TAIL]].append(n)
-    for blk in by_block.values():
-        for i, a in enumerate(blk):
-            for b in blk[i + 1 :]:
-                d = _lev(a, b)
-                if d <= _FUZZY_MAX_DIST:
-                    expected[(a, b) if a < b else (b, a)] = d
-    assert got == expected
-    assert len(got) > 0

@@ -92,3 +92,22 @@ def test_scaled_partitions_ignores_sidecar_files(tmp_path):
     sparse(ds / "_metadata", 64 * mib)
     # 64 MiB of data at 8 MiB/partition -> 8, not 32
     assert _scaled_partitions(str(tmp_path), cpus=1) == 8
+
+
+def test_build_spark_leaves_a_running_session_unchanged(spark):
+    """The CLI builds its session with ``build_spark`` on every call; run
+    in-process, it must get the caller's session as it is, not one with
+    its shuffle width and AQE reset to the CLI's defaults."""
+    from impala_base_to_cdw_sizing_spark.session import build_spark
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert build_spark("sizing-replay") is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

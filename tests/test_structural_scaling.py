@@ -2,7 +2,7 @@
 
 The skewed-sf10 defense of `dedup_prefixfilter` (candidates/pair-mass/
 output linear in data) and `dedup_components` (CC edges/rounds identical
-under skew) lived in SCALE.md prose + one-off `tools/probe_sf30.py` runs.
+under skew) lived in SCALE.md prose + one-off sf30 probe runs.
 Here the same counts are computed at sf1/sf3 (uniform + skew, derived
 deterministically from the driver's sf0.1 by `tools/gen_sf1.py` —
 generated on the fly if the `.testdata` dirs are missing) and the ratios
