@@ -14,6 +14,12 @@ the way a 100 TB stats pass must:
   (``segmented.segmented_row_number`` / ``segmented.ntile_expr``) — no
   single-partition sort anywhere in the plan. The DuckDB oracle runs the
   one-window NTILE, so the two-phase bit-equality is oracle-gated.
+
+``q_analyze_stats`` (not registered; pinned by ``tests/test_profiling.py``)
+is the one-scan statistics pass: per-column null counts, min/max and an
+``approx_count_distinct`` NDV estimate for every profiled column in one
+two-phase aggregate (N exact ``COUNT(DISTINCT)``s would trigger
+Catalyst's Expand), with the estimates checked within 10% of exact NDVs.
 """
 
 from __future__ import annotations
@@ -24,6 +30,70 @@ from pyspark.sql import functions as F
 from .queries_ext import register
 from .segmented import ntile_expr, segmented_row_number
 from ..sources.files import read_input
+
+# (column, family): string bounds surface as min_value/max_value
+# VARCHAR, numeric bounds as min_num/max_num DOUBLE — typed per family
+# instead of one stringified pair, because the two engines' shortest-
+# round-trip double formatters disagree on scientific-notation
+# thresholds (Java Double.toString switches to E-notation at 1e7), so a
+# stringified double bound silently depends on the data staying small.
+# Doubles compare exactly in the comparator; bigint→double is exact
+# below 2^53.
+_PROFILE_COLS = [
+    ("o_orderstatus", "str"),
+    ("o_orderpriority", "str"),
+    ("o_custkey", "num"),
+    ("o_totalprice", "num"),
+]
+
+
+def q_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = read_input(spark, sf_dir, "orders")
+    # THE one-scan stats pass: nulls, min/max, and every column's HLL
+    # buffer coexist in a single two-phase aggregate (approx distinct is
+    # a plain agg buffer — no Expand). min/max aggregate in the NATIVE
+    # type: casting to string before aggregating would make numeric
+    # bounds lexicographic ("99993" > "100279") — wrong statistics that
+    # a mirrored oracle happily agrees with.
+    one_scan_aggs = [F.count("*").alias("n_rows")]
+    for c, _fam in _PROFILE_COLS:
+        one_scan_aggs += [
+            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}"),
+            F.min(F.col(c)).alias(f"min_{c}"),
+            F.max(F.col(c)).alias(f"max_{c}"),
+            F.approx_count_distinct(c, 0.02).alias(f"approx_ndv_{c}"),
+        ]
+    wide = orders.agg(*one_scan_aggs)
+    # the exact NDVs exist ONLY to verify the estimates; each would
+    # force an Expand if merged into the shared aggregate, so they run
+    # as separate 1-row aggregates — a production stats pass drops them
+    for c, _fam in _PROFILE_COLS:
+        wide = wide.crossJoin(
+            orders.agg(F.countDistinct(c).alias(f"exact_ndv_{c}"))
+        )
+    rows = []
+    for c, fam in _PROFILE_COLS:
+        if fam == "str":
+            bounds = (
+                f"CAST(min_{c} AS STRING), CAST(max_{c} AS STRING),"
+                " CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)"
+            )
+        else:
+            bounds = (
+                "CAST(NULL AS STRING), CAST(NULL AS STRING),"
+                f" CAST(min_{c} AS DOUBLE), CAST(max_{c} AS DOUBLE)"
+            )
+        rows.append(
+            f"'{c}', nulls_{c}, {bounds}, exact_ndv_{c},"
+            f" CAST(abs(approx_ndv_{c} - exact_ndv_{c})"
+            f" <= 0.1 * exact_ndv_{c} AS BIGINT)"
+        )
+    return wide.selectExpr(
+        "n_rows",
+        f"stack({len(_PROFILE_COLS)}, {', '.join(rows)})"
+        " AS (col_name, n_nulls, min_value, max_value, min_num, max_num,"
+        " exact_ndv, ndv_within_10pct)",
+    )
 
 
 _N_BUCKETS = 8

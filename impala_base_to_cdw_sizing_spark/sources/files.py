@@ -195,6 +195,42 @@ def _checked_cast(field: T.StructField) -> str:
     )
 
 
+def read_query_history_with_quarantine(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame]:
+    """CSV replay with corrupt-record QUARANTINE instead of the
+    reference's silent try/except partial state (``impala_query_sizing
+    .py:189-200``'s I1, replaced by fail-fast in the main path): rows
+    that violate the declared schema land in a quarantine frame carrying
+    the raw line, the clean frame holds only fully-parsed rows — both
+    sides of every malformed input are accounted for, none silently
+    dropped. PERMISSIVE mode keeps the scan single-pass at any scale
+    (FAILFAST dies on the first bad row; DROPMALFORMED loses data
+    unaccountably)."""
+    # build a FRESH StructType: StructType.add() mutates the receiver,
+    # so calling it on the shared module constant would permanently grow
+    # every other reader's schema
+    schema = T.StructType(
+        list(QUERY_HISTORY_SCHEMA.fields)
+        + [T.StructField("_corrupt_record", T.StringType(), True)]
+    )
+    raw = (
+        spark.read.schema(schema)
+        .option("header", True)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .csv(path)
+        # PERMISSIVE's corrupt column is lazily populated; materialize
+        # the split once so both frames agree on one parse
+        .cache()
+    )
+    good = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+    quarantine = raw.filter(F.col("_corrupt_record").isNotNull()).select(
+        F.col("_corrupt_record").alias("raw_line")
+    )
+    return good, quarantine
+
+
 def read_query_history(spark: SparkSession, path: str, fmt: str = "csv") -> DataFrame:
     """Multi-format replay source: the same enforced schema over csv /
     json / parquet / orc (schema declared, never inferred — a 100 TB scan

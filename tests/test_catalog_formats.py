@@ -114,6 +114,36 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     assert rows[2]["score"] == 9.5
 
 
+def test_corrupt_record_quarantine(spark, tmp_path):
+    """Malformed replay rows are QUARANTINED with their raw line, not
+    silently dropped (the engine-grade replacement for the reference's
+    try/except partial state): clean + quarantined = total input."""
+    from impala_base_to_cdw_sizing_spark.sources.files import (
+        read_query_history_with_quarantine,
+    )
+
+    p = tmp_path / "dirty.csv"
+    header = (
+        "query_id,pool,start_time,end_time,duration_millis,reqd_cache_gb,"
+        "reqd_agg_mem,memory_spilled_gb,cpu_time_sec,query_type,"
+        "admission_wait,num_backends"
+    )
+    good1 = "q1,root.p,2021-01-01T00:00:00.000Z,2021-01-01T00:00:01.000Z,1000,1.5,2.0,0.0,3.5,QUERY,10,3"
+    bad_long = "q2,root.p,2021-01-01T00:00:00.000Z,2021-01-01T00:00:01.000Z,NOT_A_NUMBER,1.5,2.0,0.0,3.5,QUERY,10,3"
+    good2 = "q3,root.p,2021-01-01T00:00:02.000Z,2021-01-01T00:00:03.000Z,1000,0.5,1.0,0.0,1.5,DDL,0,2"
+    bad_double = "q4,root.p,2021-01-01T00:00:00.000Z,2021-01-01T00:00:01.000Z,1000,BROKEN,2.0,0.0,3.5,QUERY,10,3"
+    p.write_text("\n".join([header, good1, bad_long, good2, bad_double]) + "\n")
+
+    good, quarantine = read_query_history_with_quarantine(spark, str(p))
+    assert {r["query_id"] for r in good.collect()} == {"q1", "q3"}
+    q_rows = quarantine.collect()
+    assert len(q_rows) == 2
+    # the raw lines round-trip for repair/replay
+    assert any("NOT_A_NUMBER" in r["raw_line"] for r in q_rows)
+    assert any("BROKEN" in r["raw_line"] for r in q_rows)
+    assert good.count() + quarantine.count() == 4
+
+
 def test_small_files_compaction_preserves_rows(spark, tmp_path):
     """The small-files remedy: an over-fragmented dataset (64 tiny
     files — the streaming-ingest pathology) compacts to a few

@@ -37,6 +37,12 @@ ALLOWED: dict[str, str] = {
         "the PSI binning of streaming/drift_stream.py; the streaming tier is "
         "a stated capability no root reaches"
     ),
+    "operators.profiling.q_analyze_stats": (
+        "one-scan ANALYZE statistics pass (per-column nulls, min/max, approx "
+        "NDV), the statistics-collection capability of operators/profiling; "
+        "test_profiling pins its bounds and scan count"
+    ),
+    "operators.profiling._PROFILE_COLS": "column list of q_analyze_stats",
     "operators.relational.setops_via_native_operators": (
         "native INTERSECT/EXCEPT reference that test_relational compares the "
         "declared single-pass rel_setops with"
@@ -73,6 +79,11 @@ ALLOWED: dict[str, str] = {
     "sources.files.read_query_history": (
         "multi-format (csv/json/parquet/orc) replay reader, a stated "
         "capability; test_catalog_formats round-trips it"
+    ),
+    "sources.files.read_query_history_with_quarantine": (
+        "replay reader that quarantines malformed rows with their raw line "
+        "instead of dropping them, an ingestion capability; "
+        "test_catalog_formats::test_corrupt_record_quarantine pins it"
     ),
 }
 
