@@ -132,9 +132,13 @@ def _run_ep1(spark, sf_dir: str) -> float:
     dir has events rows in 1000-row pages; the timed region is the real
     paged REST client (``requests_fetcher`` → ``fetch_pages`` → per-page
     Arrow record batches → ONE ``createDataFrame``, the r13 union-chain
-    fix) plus the C1-C4 flatten, forced end-to-end with the noop sink. Doc/JSON generation happens
-    server-side OUTSIDE the page cache so serialization cost stays in
-    the measurement only once per page, like a real CM host."""
+    fix, returned through a lazy ``localCheckpoint`` so the plan starts
+    at a ``LogicalRDD`` rather than a ``LocalRelation`` that Catalyst
+    would fold on the driver) plus the C1-C4 flatten, forced end-to-end
+    with the noop sink: the flatten runs as whole-stage codegen in that
+    one job. Doc/JSON generation happens server-side OUTSIDE the page
+    cache so serialization cost stays in the measurement only once per
+    page, like a real CM host."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 

@@ -6,8 +6,9 @@ URL construction, basic-auth header, query-string encoding of the
 filter, ``limit/offset`` pagination, the warning-driven window shrink,
 and the error path (``raise_for_status`` → the reference aborts with
 ``SystemExit(err)`` on any ``RequestException``,
-``impala_query_sizing.py:143-145``; the engine's fetcher surfaces the
-same ``requests`` exception to its caller).
+``impala_query_sizing.py:143-145``; the engine's fetcher retries a
+transient failure at the same offset, then surfaces a ``requests``
+exception to its caller).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import pytest
 import requests
 
 from impala_base_to_cdw_sizing_spark.sources.cm_api import (
+    FETCH_ATTEMPTS,
     PAGE_SIZE,
     build_filter,
     fetch_pages,
@@ -45,7 +47,10 @@ class _CMHandler(BaseHTTPRequestHandler):
       short warning-bearing page at offset PAGE_SIZE → the client must
       shrink the window to the warning's last token and reset offset;
     - to=2024-01-15 (the shrunk window): one short clean page → stop;
-    - to=boom: HTTP 500 → RequestException path.
+    - to=boom: HTTP 500 on every attempt → RequestException path;
+    - to=denied: HTTP 403, not retried;
+    - to=flaky: a full page at offset 0 and a short page at PAGE_SIZE,
+      each failing on its first GET (a 503, then a truncated body).
     Every request is recorded (path, query, auth header) for assertions.
     """
 
@@ -54,7 +59,8 @@ class _CMHandler(BaseHTTPRequestHandler):
     def do_GET(self):  # noqa: N802 — BaseHTTPRequestHandler contract
         parsed = urlparse(self.path)
         qs = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-        type(self).requests_log.append(
+        log = type(self).requests_log
+        log.append(
             {
                 "path": parsed.path,
                 "qs": qs,
@@ -62,9 +68,28 @@ class _CMHandler(BaseHTTPRequestHandler):
             }
         )
         to, offset = qs.get("to", ""), int(qs.get("offset", "0"))
-        if to == "boom":
-            self.send_response(500)
+        if to in ("boom", "denied"):
+            self.send_response(500 if to == "boom" else 403)
             self.end_headers()
+            return
+        if to == "flaky":
+            # the first GET of each page fails: a 503 at offset 0, a
+            # page cut short mid-JSON at offset PAGE_SIZE
+            first = sum(r["qs"].get("offset") == qs.get("offset") for r in log) == 1
+            if first and offset == 0:
+                self.send_response(503)
+                self.end_headers()
+                return
+            n = PAGE_SIZE if offset == 0 else 3
+            body = {"queries": [_doc(offset + i) for i in range(n)], "warnings": []}
+            payload = json.dumps(body).encode()
+            if first:
+                payload = payload[: len(payload) // 2]
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(payload)))
+            self.end_headers()
+            self.wfile.write(payload)
             return
         if to == "2024-02-01":
             if offset == 0:
@@ -140,8 +165,30 @@ def test_http_error_aborts_like_the_reference(cm_server):
     fetch = requests_fetcher(cm_server, _CLUSTER, _USER, _PASS)
     with pytest.raises(requests.exceptions.RequestException) as err:
         list(fetch_pages(fetch, "2024-01-01", "boom"))
+    # a 5xx on every attempt: the error names the page and the attempts
+    assert f"offset 0 failed after {FETCH_ATTEMPTS} attempts" in str(err.value)
+    assert len(_CMHandler.requests_log) == FETCH_ATTEMPTS
     with pytest.raises(SystemExit):
         raise SystemExit(err.value)  # the reference's abort, verbatim
+
+
+def test_http_transient_page_failures_are_retried(cm_server):
+    """A 503 and a page cut short mid-JSON are each fetched again at the
+    same offset; every doc comes back exactly once."""
+    fetch = requests_fetcher(cm_server, _CLUSTER, _USER, _PASS)
+    pages = list(fetch_pages(fetch, "2024-01-01", "flaky"))
+    ids = [d["queryId"] for page in pages for d in page]
+    assert sorted(ids) == sorted(f"q{i}" for i in range(PAGE_SIZE + 3))
+    offsets = [r["qs"]["offset"] for r in _CMHandler.requests_log]
+    assert offsets == ["0", "0", str(PAGE_SIZE), str(PAGE_SIZE)]
+
+
+def test_http_4xx_fails_without_retry(cm_server):
+    fetch = requests_fetcher(cm_server, _CLUSTER, _USER, _PASS)
+    with pytest.raises(requests.exceptions.HTTPError) as err:
+        list(fetch_pages(fetch, "2024-01-01", "denied"))
+    assert err.value.response.status_code == 403
+    assert len(_CMHandler.requests_log) == 1
 
 
 def test_http_empty_result_yields_no_pages(cm_server):

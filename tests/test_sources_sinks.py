@@ -103,6 +103,34 @@ def test_api_load_and_flatten_skip_route(spark):
     assert rows["api-1"].num_backends == 4
 
 
+def test_api_docs_plan_is_not_folded_on_the_driver(spark):
+    """``createDataFrame`` over an Arrow table is a ``LocalRelation``,
+    and Catalyst folds every projection and filter above one by
+    evaluating it on the driver while it optimizes. The docs come back
+    as a ``LogicalRDD``, so the flatten, prepare, route filters and
+    derive stay in the plan and run on the executors."""
+    from impala_base_to_cdw_sizing_spark.operators.derive import derive
+    from impala_base_to_cdw_sizing_spark.operators.route import (
+        accepted_filter,
+        skip_split,
+    )
+    from impala_base_to_cdw_sizing_spark.plans.pipeline import (
+        prepare_query_history,
+    )
+
+    def fetcher(from_date, to_date, pool, offset):
+        n = 1000 if offset < 2000 else 7  # two full pages, one short
+        return {"queries": [_doc(offset + i) for i in range(n)], "warnings": []}
+
+    docs = load_api_queries(spark, fetcher, "T0", "T1")
+    qh = prepare_query_history(flatten_api_docs(docs))
+    with_metrics, _ = skip_split(accepted_filter(qh, DEFAULT_PARAMS))
+    derived = derive(with_metrics, DEFAULT_PARAMS)
+    plan = derived._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" not in plan
+    assert derived.count() == 2007
+
+
 def test_sizing_sinks(spark, tmp_path: Path):
     qh = query_history_from_events(spark, SF_SMALL)
     res = run_sizing(qh, DEFAULT_PARAMS)
