@@ -10,9 +10,7 @@ Input is the committed, deterministic fixture
 ``fixtures/api_docs.parquet`` (FIXTURES.md F2, ``tools/gen_api_fixture.py``
 — pure integer arithmetic, no RNG/network). Spark reads it through the
 real ``API_DOC_SCHEMA`` MAP column and runs the real flatten; DuckDB reads
-the SAME file, as the ``api_docs`` view a DuckDB harness creates over
-:data:`FIXTURE` (``tools/compare_oracle.duck_connection``), and replicates
-every extraction/cast/round in SQL
+the SAME file and replicates every extraction/cast/round in SQL
 (map access is ``attributes['k'][1]`` — DuckDB map extraction returns a
 list, missing key → empty list → NULL, matching Spark's
 ``try_element_at``). Rounding is the repo-wide ``round2_sql`` form so the
@@ -62,8 +60,7 @@ def _round2(x: str) -> str:
 
 
 def oracle_api_flatten() -> str:
-    """DuckDB twin over the same fixture file, read as the ``api_docs``
-    view so the oracle text holds no checkout path."""
+    """DuckDB twin over the same fixture file."""
     return f"""
 SELECT
   queryId AS query_id,
@@ -88,7 +85,7 @@ SELECT
   CASE WHEN queryType <> 'QUERY' THEN 'rejected'
        WHEN attributes['memory_aggregate_peak'][1] IS NOT NULL THEN 'accepted'
        ELSE 'skipped' END AS route
-FROM api_docs
+FROM read_parquet('{FIXTURE}')
 """
 
 

@@ -40,20 +40,17 @@ def prepare_query_history(flat: DataFrame) -> DataFrame:
     and argmax — it is derived per-row as ``xxhash64(query_id)``
     (query_id is unique), NOT a global ``row_number()`` window, which
     would collapse every ingest to a single partition. Shuffle-free and
-    partitioning-independent. One ``selectExpr`` of SQL text with
-    ``withColumns`` semantics: an expression whose name is already a
-    column replaces it in place, the others are appended."""
-    exprs = {
-        "start_ms": "unix_millis(to_timestamp(start_time))",
-        "end_ms": "unix_millis(to_timestamp(end_time))",
-        "admission_wait": "CAST(admission_wait AS BIGINT)",
-        "num_backends": "CAST(num_backends AS BIGINT)",
-        "seq": "xxhash64(query_id)",
-    }
-    cols = flat.columns
-    return flat.selectExpr(
-        *[f"{exprs[c]} AS {c}" if c in exprs else f"`{c}`" for c in cols],
-        *[f"{e} AS {n}" for n, e in exprs.items() if n not in cols],
+    partitioning-independent."""
+    from pyspark.sql import functions as F
+
+    return flat.withColumns(
+        {
+            "start_ms": F.unix_millis(F.to_timestamp("start_time")),
+            "end_ms": F.unix_millis(F.to_timestamp("end_time")),
+            "admission_wait": F.col("admission_wait").cast("long"),
+            "num_backends": F.col("num_backends").cast("long"),
+            "seq": F.xxhash64("query_id"),
+        }
     )
 
 

@@ -46,9 +46,6 @@ def test_oracle_sql_parses_in_duckdb():
         "documents": "doc_id bigint, text varchar, lang varchar,"
         " source varchar, n_chars bigint",
         "embeddings": "vec_id bigint, embedding float[], label int",
-        "api_docs": "queryId varchar, startTime varchar, endTime varchar,"
-        " durationMillis bigint, queryState varchar, \"user\" varchar,"
-        " queryType varchar, attributes map(varchar, varchar)",
     }
     for name, cols in ddl.items():
         con.execute(f"CREATE TABLE {name} ({cols})")
@@ -57,13 +54,6 @@ def test_oracle_sql_parses_in_duckdb():
             con.execute(f"EXPLAIN {sql}")
         except Exception as e:  # noqa: BLE001
             raise AssertionError(f"oracle {name} failed to plan: {e}") from e
-
-
-def test_oracle_sql_holds_no_checkout_path():
-    """Oracle texts read views, never files by absolute path: the text
-    and any digest of it are the same in every checkout of a commit."""
-    root = str(Path(ent.__file__).resolve().parent)
-    assert [n for n, sql in ent.oracle_sql().items() if root in sql] == []
 
 
 @pytest.mark.slow  # re-tiered r15: driver gate = fast tier; this test's coverage stays in the release gate (pytest -m "")

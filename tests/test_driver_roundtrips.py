@@ -18,7 +18,6 @@ from py4j.clientserver import ClientServerConnection
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
 from impala_base_to_cdw_sizing_spark.operators.classify import classify
 from impala_base_to_cdw_sizing_spark.operators.derive import derive
-from impala_base_to_cdw_sizing_spark.plans.pipeline import prepare_query_history
 from impala_base_to_cdw_sizing_spark.schemas import API_DOC_SCHEMA
 from impala_base_to_cdw_sizing_spark.sources.cm_api import flatten_api_docs
 from tests.test_pipeline import QH_SCHEMA, ROWS
@@ -78,19 +77,9 @@ def test_report_aggregate_builds_in_few_roundtrips(query_history):
     assert _roundtrips(lambda: report_aggregate(derived, DEFAULT_PARAMS)) <= 150
 
 
-# composed from Columns, the EP1 flatten took 612 round-trips and
-# prepare_query_history 93. Each selectExpr string is one Py4J call
-# (the list is copied element by element), so these now cost about one
-# round-trip per output column: 19 for the flatten's 15 and 24 for
-# prepare's 18, two of them reading the input's column names
+# composed from Columns, the EP1 flatten took 612 round-trips. Each
+# selectExpr string is one Py4J call (the list is copied element by
+# element), so it now costs about one round-trip per output column: 19
+# for its 15 columns
 def test_api_flatten_builds_in_few_roundtrips(api_docs):
     assert _roundtrips(lambda: flatten_api_docs(api_docs)) <= 40
-
-
-def test_prepare_query_history_builds_in_few_roundtrips(api_docs):
-    prepare_query_history(flatten_api_docs(api_docs))  # warm
-    flat = flatten_api_docs(api_docs)  # a new frame, as in each
-    # iteration: its column names are not fetched yet
-    with _count_roundtrips() as counts:
-        prepare_query_history(flat)
-    assert counts["c"] + counts["r"] <= 25

@@ -64,16 +64,11 @@ def manifest_stamp() -> dict[str, str]:
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """The sf dir's tables as views, plus ``api_docs`` over the committed
-    EP1 fixture that the ``sizing_api_flatten`` oracle reads."""
-    from impala_base_to_cdw_sizing_spark.operators.api_flatten import FIXTURE
-
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    con.execute(f"CREATE VIEW api_docs AS SELECT * FROM read_parquet('{FIXTURE}')")
     return con
 
 
