@@ -45,6 +45,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if params.input_file:
         spark = build_spark("sizing-replay")
+        # a malformed field fails its task, and log4j would print the
+        # failure with its JVM stack next to the one ERROR line below:
+        # the JVM log is off for the read and sizing, and the caller's
+        # session gets its level back after
+        log_level = _root_log_level(spark)
+        spark.sparkContext.setLogLevel("OFF")
         # replay rows use ISO string timestamps; the shared boundary
         # adapter projects the engine's epoch-millis interval columns and
         # a deterministic shuffle-free seq (xxhash64(query_id)) so replay
@@ -64,6 +70,8 @@ def main(argv: list[str] | None = None) -> int:
             reason = str(e).strip().splitlines()[0]
             print(f"ERROR: reading replay input {params.input_file} failed: {reason}")
             return 1
+        finally:
+            spark.sparkContext.setLogLevel(log_level)
     else:
         spark = build_spark("sizing-api")
         try:
@@ -88,6 +96,12 @@ def main(argv: list[str] | None = None) -> int:
 
     print(format_reports(collect_report_values(result, params)))
     return 0
+
+
+def _root_log_level(spark) -> str:
+    """The JVM root logger's level, as ``setLogLevel`` takes it."""
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    return log4j.LogManager.getRootLogger().getLevel().name()
 
 
 def _project24(df):

@@ -133,17 +133,17 @@ GROUP BY token, exact_n
 # --- sharded heavy-hitters global view (batch twin of streaming Space-Saving) -----
 #
 # streaming/heavyhitters.py keeps one capacity-`cap` Space-Saving
-# summary per item shard; its merged view (`global_topk`) unions the
-# shard summaries and states the honest combined guarantee (no false
-# negatives above max_g N_g / cap). This is the EXACT-batch twin of
-# that view over the events table: items = user_id, shards = user_id %
+# summary per item shard. Shards partition the item space, so the
+# union of the shard summaries is the global summary, with the honest
+# combined guarantee (no false negatives above max_g N_g / cap). This
+# is the EXACT-batch form of that merged view over the events table:
+# items = user_id, shards = user_id %
 # _HH_SHARDS (the portable shard router), per-shard "summary" = the
 # top-`cap` items by exact count (what a capacity-`cap` tracker
 # guarantees to hold: at most cap items can exceed N_g/cap, since
 # cap·(N_g/cap) = N_g), merged into the global top-k with the bound as
-# a column. The streaming test pins the stream's merged view against
-# exactly these semantics. Two honesty caveats (r6 ADVICE): the shard
-# router here is `user_id % _HH_SHARDS` while the streaming twin routes
+# a column. Two honesty caveats (r6 ADVICE): the shard
+# router here is `user_id % _HH_SHARDS` while the streaming operator routes
 # by `hash(item) % n_groups` — both partition the item space, so the
 # union-is-global argument is identical, but the correspondence is
 # structural (same shape, same bound), not row-for-row; and the output

@@ -513,19 +513,9 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_table(ref, cur, types)
 
 
-def psi_bin_expr(value_col: str = "value") -> str:
-    """The shared binning expression (Spark SQL dialect)."""
-    return (
-        f"least({_PSI_BINS - 1}, greatest(0,"
-        f" CAST(floor({value_col} / {_PSI_BIN_W}) AS INT)))"
-    )
-
-
 def psi_table(ref: DataFrame, cur: DataFrame, types: DataFrame) -> DataFrame:
     """PSI per event_type from two count frames ``(event_type, bin, r)``
-    / ``(event_type, bin, c)`` — the batch op and the streaming drift
-    monitor share this exact arithmetic, so stream-cumulative PSI ==
-    batch PSI is a testable identity, not an analogy."""
+    / ``(event_type, bin, c)``."""
     from .curation import _DET_LN_W, _DET_LN_Y, _DET_LN_Z, _DET_LN_Z2
 
     grid = types.selectExpr(

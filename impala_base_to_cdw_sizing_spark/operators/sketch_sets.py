@@ -271,7 +271,7 @@ def kmv_sliding_from_sketch(sketch: DataFrame) -> DataFrame:
     (event_type, hr, h) — SHARED by the batch op above and the
     streaming sketch maintainer (``streaming/kmv_stream.py``), so the
     stream ≡ batch identity is the same code path, not a mirrored
-    reimplementation (the drift_stream/psi_table contract).
+    reimplementation.
 
     The sketch frame is hours × k rows — the eager localCheckpoint
     both materializes it once for the two reads below (hours + fan-out)

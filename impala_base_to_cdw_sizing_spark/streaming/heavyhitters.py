@@ -110,54 +110,3 @@ def heavyhitters_stream(
         output_mode,
         GroupStateTimeout.NoTimeout,
     )
-
-
-def global_topk(summary: DataFrame, k: int, cap: int = DEFAULT_CAP) -> DataFrame:
-    """Merged view over the per-shard summaries (r5 verdict #5).
-
-    Shards partition the item space (items route by ``hash(item) %
-    n_groups``), so an item lives in exactly one shard's summary and
-    the UNION of the shard summaries IS the global summary — merging is
-    selection, not counter addition. The honest combined guarantee is
-    therefore per-shard, surfaced as a column: ``guarantee_bound =
-    max_g(N_g) / cap``, where ``N_g = sum(est_count)`` over shard g's
-    summary (a Space-Saving invariant: every arrival adds exactly 1 to
-    the summary's total, evictions preserve it, so the summary total
-    equals the shard's stream length). Any item whose true GLOBAL count
-    exceeds ``guarantee_bound`` exceeds its own shard's ``N_g / cap``
-    and is guaranteed present — no false negatives above the bound.
-    Per-item bounds carry over unchanged: ``est - err <= true <= est``.
-
-    The output keeps EVERY row with ``est_count > guarantee_bound`` in
-    addition to the top-``k`` by estimate (r6 ADVICE: a plain
-    ``rank <= k`` cut could push a true heavy hitter out of the view
-    when other items carry inflated estimates, so the no-false-negative
-    guarantee would only hold pre-truncation). ``true <= est``, so any
-    item with ``true > guarantee_bound`` satisfies the kept predicate —
-    the guarantee survives truncation. The result is still bounded by
-    ``n_groups * cap`` rows by construction, never by the stream, so
-    the partition-less window is safe at any scale.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    totals = summary.groupBy("grp").agg(
-        F.sum("est_count").alias("n_g")
-    )
-    bound = totals.agg(
-        (F.max("n_g") / F.lit(cap)).alias("guarantee_bound")
-    )
-    w = Window.orderBy(F.col("est_count").desc(), F.col("item").asc())
-    return (
-        summary.join(totals, "grp")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .crossJoin(F.broadcast(bound))
-        .filter(
-            (F.col("rank") <= k)
-            | (F.col("est_count") > F.col("guarantee_bound"))
-        )
-        .select(
-            "rank", "item", "grp", "est_count", "err", "n_g",
-            "guarantee_bound",
-        )
-    )

@@ -18,8 +18,7 @@ feeds them to the SHARED merge arithmetic
 (``operators.sketch_sets.kmv_sliding_from_sketch``) — the same code
 path the batch op ends with, so stream ≡ batch after consuming the same
 events is an identity of inputs, pinned in
-``tests/test_kmv_stream.py``, not a mirrored reimplementation (the
-drift_stream/psi_table contract).
+``tests/test_kmv_stream.py``, not a mirrored reimplementation.
 """
 
 from __future__ import annotations

@@ -33,12 +33,11 @@ artifact of a bounded key space:
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 T0_MS = 1_600_000_000_000  # fixed epoch base: runs are replayable
 
 HH_SCHEMA = "grp long, item string, ts_ms long, seq long"
-ND_SCHEMA = "doc_id long, arrival_ts timestamp, band_id long, band_key long"
+ND_SCHEMA = "doc_id long, ts_ms long, band_id long, band_key long"
 
 
 def hh_batch_rows(b: int, rows: int, n_groups: int, hot: int = 8):
@@ -75,13 +74,36 @@ def nd_batch_rows(b: int, keys_per_batch: int, docs_per_key: int):
     ]
 
 
-def _drive(spark: SparkSession, src_dir: str, ckpt: str, build_query, mode: str):
-    """Start ``build_query(readStream_df)`` over the pre-written files,
-    one file per trigger, and return the per-batch progress list."""
+def _drive(
+    spark: SparkSession,
+    workdir: str,
+    name: str,
+    schema: str,
+    batches,
+    operator,
+    mode: str,
+):
+    """Write each row list of ``batches`` as one parquet file, stream
+    them back through ``operator`` one file per trigger into the noop
+    sink, and return the per-batch progress list."""
+    src = f"{workdir}/{name}_src"
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "256")
-    q = build_query(src_dir).writeStream.outputMode(mode).format(
-        "noop"
-    ).option("checkpointLocation", ckpt).start()
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        operator(stream)
+        .writeStream.outputMode(mode)
+        .format("noop")
+        .option("checkpointLocation", f"{workdir}/{name}_ckpt")
+        .start()
+    )
     q.processAllAvailable()
     progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
     q.stop()
@@ -98,21 +120,12 @@ def run_heavyhitters_load(
 ):
     from .heavyhitters import heavyhitters_stream
 
-    src = f"{workdir}/hh_src"
-    for b in range(n_batches):
-        spark.createDataFrame(
-            hh_batch_rows(b, rows_per_batch, n_groups), HH_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def build(src_dir):
-        stream = (
-            spark.readStream.schema(HH_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        return heavyhitters_stream(stream, cap=cap, output_mode="update")
-
-    progress = _drive(spark, src, f"{workdir}/hh_ckpt", build, "update")
+    progress = _drive(
+        spark, workdir, "hh", HH_SCHEMA,
+        (hh_batch_rows(b, rows_per_batch, n_groups) for b in range(n_batches)),
+        lambda s: heavyhitters_stream(s, cap=cap, output_mode="update"),
+        "update",
+    )
     return summarize(progress, state_bound=n_groups)
 
 
@@ -127,32 +140,19 @@ def run_neardup_load(
 ):
     from .neardup_stream import neardup_candidates_stream_ttl
 
-    src = f"{workdir}/nd_src"
-    for b in range(n_batches):
-        spark.createDataFrame(
-            nd_batch_rows(b, keys_per_batch, docs_per_key),
-            "doc_id long, ts_ms long, band_id long, band_key long",
-        ).select(
-            "doc_id",
-            F.timestamp_millis("ts_ms").alias("arrival_ts"),
-            "band_id",
-            "band_key",
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def build(src_dir):
-        stream = (
-            spark.readStream.schema(ND_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        return neardup_candidates_stream_ttl(
-            stream,
+    progress = _drive(
+        spark, workdir, "nd", ND_SCHEMA,
+        (nd_batch_rows(b, keys_per_batch, docs_per_key) for b in range(n_batches)),
+        lambda s: neardup_candidates_stream_ttl(
+            s.selectExpr(
+                "doc_id", "timestamp_millis(ts_ms) AS arrival_ts", "band_id", "band_key"
+            ),
             cap=cap,
             horizon=f"{horizon_min} minutes",
             horizon_ms=horizon_min * 60_000,
-        )
-
-    progress = _drive(spark, src, f"{workdir}/nd_ckpt", build, "append")
+        ),
+        "append",
+    )
     # live buckets: the horizon enters TWICE — once as the watermark
     # delay (watermark = max event time - horizon) and once as the
     # timeout offset past a bucket's newest arrival — so with a
@@ -197,21 +197,12 @@ def run_session_load(
 ):
     from .session_stream import session_stream
 
-    src = f"{workdir}/sess_src"
-    for b in range(n_batches):
-        spark.createDataFrame(
-            session_batch_rows(b, rows_per_batch, n_users), SESSION_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def build(src_dir):
-        stream = (
-            spark.readStream.schema(SESSION_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        return session_stream(stream)
-
-    progress = _drive(spark, src, f"{workdir}/sess_ckpt", build, "update")
+    progress = _drive(
+        spark, workdir, "sess", SESSION_SCHEMA,
+        (session_batch_rows(b, rows_per_batch, n_users) for b in range(n_batches)),
+        session_stream,
+        "update",
+    )
     return summarize(progress, state_bound=n_users)
 
 
@@ -273,21 +264,12 @@ def run_sweep_load(
     + 1 boundary-straddler, independent of stream length."""
     from .sweep_stream import windowed_concurrency
 
-    src = f"{workdir}/sweep_src"
-    for b in range(n_batches):
-        spark.createDataFrame(
-            sweep_batch_rows(b, rows_per_batch), SWEEP_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def build(src_dir):
-        stream = (
-            spark.readStream.schema(SWEEP_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        return windowed_concurrency(stream)
-
-    progress = _drive(spark, src, f"{workdir}/sweep_ckpt", build, "update")
+    progress = _drive(
+        spark, workdir, "sweep", SWEEP_SCHEMA,
+        (sweep_batch_rows(b, rows_per_batch) for b in range(n_batches)),
+        windowed_concurrency,
+        "update",
+    )
     return summarize(progress, state_bound=4)
 
 
@@ -317,19 +299,10 @@ def run_kmv_load(
     length or per-key event volume (each cell holds <= k hashes)."""
     from .kmv_stream import kmv_sketch_stream
 
-    src = f"{workdir}/kmv_src"
-    for b in range(n_batches):
-        spark.createDataFrame(
-            kmv_batch_rows(b, n_types, rows_per_type), KMV_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def build(src_dir):
-        stream = (
-            spark.readStream.schema(KMV_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        return kmv_sketch_stream(stream)
-
-    progress = _drive(spark, src, f"{workdir}/kmv_ckpt", build, "update")
+    progress = _drive(
+        spark, workdir, "kmv", KMV_SCHEMA,
+        (kmv_batch_rows(b, n_types, rows_per_type) for b in range(n_batches)),
+        kmv_sketch_stream,
+        "update",
+    )
     return summarize(progress, state_bound=n_types * _KMV_CLOCK_HOURS)

@@ -13,9 +13,9 @@ bounded by user cardinality, independent of stream length. Each
 update emits the key's post-batch snapshot tagged with a version;
 the newest version per user IS the answer ``rel_sessionize`` computes
 over the same events, pinned as an identity in
-``tests/test_session_stream.py`` (the kmv_stream/drift_stream
-contract: shared constants + a stream-equals-batch test, not a
-mirrored reimplementation).
+``tests/test_session_stream.py`` (the kmv_stream contract: shared
+constants + a stream-equals-batch test, not a mirrored
+reimplementation).
 
 Ordering contract: batches fold events sorted by (ts, event_id) and
 must arrive time-partitioned ACROSS batches (the replay harness feeds

@@ -5,34 +5,25 @@ The batch sweep (operators.sweep) is the source of truth for correctness
 hashes; this module demonstrates the same event stream processed as a
 Structured Streaming job: event-time tumbling windows with a watermark
 aggregate the ±1 query events into per-window arrival/departure/net
-counts and micro-unit resource deltas. A downstream cumulative sum over
-*closed* windows (tiny — one row per window) yields running concurrency,
-exactly the segmented-sweep decomposition (SURVEY §4.3.2) with windows as
-buckets.
+counts and micro-unit resource deltas — the segmented-sweep
+decomposition (SURVEY §4.3.2) with windows as buckets.
 
 At scale: watermark bounds state; window aggregation is the standard
 shuffle-by-window-key plan; late events within the watermark are folded
 in, later ones dropped — semantics the batch path has no analog for, so
-they are test-pinned here.
+they are test-pinned here. On a batch frame Spark ignores the watermark,
+so the same function also runs as a batch query;
+``tests/test_streaming.py`` checks both executions against a
+plain-Python reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WINDOW = "1 hour"
 WATERMARK = "2 hours"
-
-
-def event_stream(spark: SparkSession, events_dir: str, schema) -> DataFrame:
-    """File-backed event stream (tests write exploded sweep events to a
-    directory; production would read Kafka with the same downstream)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
 
 
 def windowed_concurrency(events: DataFrame) -> DataFrame:
@@ -55,131 +46,4 @@ def windowed_concurrency(events: DataFrame) -> DataFrame:
             F.col("win.start").alias("window_start"),
             "starts", "ends", "net_queries", "net_pods_u",
         )
-    )
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str = "sweep_stream"
-) -> DataFrame:
-    """Drive the streaming query to completion over the available files
-    (synchronous: for tests/local smoke; production uses a real trigger)."""
-    q = (
-        stream_df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")
-
-
-def batch_equivalent(events: DataFrame) -> DataFrame:
-    """The same windowed aggregation as a batch query (equivalence check)."""
-    with_ts = events.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    return (
-        with_ts.groupBy(F.window("ts", WINDOW).alias("win"))
-        .agg(
-            F.sum(F.when(F.col("sign") > 0, 1).otherwise(0)).alias("starts"),
-            F.sum(F.when(F.col("sign") < 0, 1).otherwise(0)).alias("ends"),
-            F.sum("sign").alias("net_queries"),
-            F.sum("pods_u").alias("net_pods_u"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "starts", "ends", "net_queries", "net_pods_u",
-        )
-    )
-
-
-def windowed_concurrency_by_pool(events: DataFrame) -> DataFrame:
-    """Per-pool keyed variant of :func:`windowed_concurrency` — the
-    reference sizes per resource pool (``sizing.conf:8`` pool filter), so
-    the streaming sweep must key the same dimension. Input adds a
-    ``pool`` column; the state key becomes (pool, window) — watermark
-    bounds state exactly as in the global form, scaled by the (small)
-    pool cardinality."""
-    with_ts = events.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    return (
-        with_ts.withWatermark("ts", WATERMARK)
-        .groupBy(F.col("pool"), F.window("ts", WINDOW).alias("win"))
-        .agg(
-            F.sum(F.when(F.col("sign") > 0, 1).otherwise(0)).alias("starts"),
-            F.sum(F.when(F.col("sign") < 0, 1).otherwise(0)).alias("ends"),
-            F.sum("sign").alias("net_queries"),
-            F.sum("pods_u").alias("net_pods_u"),
-        )
-        .select(
-            "pool",
-            F.col("win.start").alias("window_start"),
-            "starts", "ends", "net_queries", "net_pods_u",
-        )
-    )
-
-
-def batch_equivalent_by_pool(events: DataFrame) -> DataFrame:
-    """Batch twin of :func:`windowed_concurrency_by_pool`."""
-    with_ts = events.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    return (
-        with_ts.groupBy(F.col("pool"), F.window("ts", WINDOW).alias("win"))
-        .agg(
-            F.sum(F.when(F.col("sign") > 0, 1).otherwise(0)).alias("starts"),
-            F.sum(F.when(F.col("sign") < 0, 1).otherwise(0)).alias("ends"),
-            F.sum("sign").alias("net_queries"),
-            F.sum("pods_u").alias("net_pods_u"),
-        )
-        .select(
-            "pool",
-            F.col("win.start").alias("window_start"),
-            "starts", "ends", "net_queries", "net_pods_u",
-        )
-    )
-
-
-def session_bursts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session-window variant (SURVEY §2.J streaming row, 'session-window
-    optional'): contiguous bursts of query activity separated by ``gap`` of
-    silence, per pool. Works identically as a streaming aggregation
-    (``groupBy(session_window(...))`` with a watermark) and as batch —
-    batch form here so equivalence is assertable.
-
-    Input: pool, ts_ms, sign events.
-    """
-    with_ts = events.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-    return (
-        with_ts.groupBy(
-            F.col("pool"), F.session_window("ts", gap).alias("session")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.when(F.col("sign") > 0, 1).otherwise(0)).alias("n_starts"),
-        )
-        .select(
-            "pool",
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "n_events",
-            "n_starts",
-        )
-    )
-
-
-def cumulative_concurrency(windowed: DataFrame) -> DataFrame:
-    """Closed windows → running concurrency at window boundaries.
-
-    One row per window (tiny), so a global ordered window here is safe at
-    any scale — this is the 'carry' half of the segmented sweep.
-    """
-    from pyspark.sql import Window
-
-    w = (
-        Window.orderBy("window_start")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return windowed.select(
-        "window_start",
-        F.sum("net_queries").over(w).alias("concurrent_at_window_end"),
-        (F.sum("net_pods_u").over(w).cast("double") / 1_000_000.0).alias(
-            "pods_at_window_end"
-        ),
     )

@@ -1,4 +1,4 @@
-"""SQL catalog, multi-format replay sources, golden hash."""
+"""Multi-format replay sources, golden hash."""
 
 from __future__ import annotations
 
@@ -6,27 +6,9 @@ import hashlib
 
 import pytest
 
-from impala_base_to_cdw_sizing_spark import catalog
 from impala_base_to_cdw_sizing_spark.sources.files import read_query_history
 
 from tests.conftest import SF_SMALL
-
-
-def test_sql_catalog_views(spark):
-    catalog.register_views(spark, SF_SMALL)
-    row = catalog.sql(
-        spark,
-        """
-        SELECT count(*) AS n FROM query_history q
-        JOIN events e ON q.seq = e.event_id
-        """,
-    ).collect()[0]
-    assert row.n == 1000
-    top = catalog.sql(
-        spark,
-        "SELECT pool, count(*) n FROM query_history GROUP BY pool ORDER BY n DESC LIMIT 1",
-    ).collect()[0]
-    assert top.n > 0
 
 
 def test_multi_format_replay_roundtrip(spark, tmp_path):

@@ -2,8 +2,8 @@
 per-(type, hour) sketch state must equal the batch op's sketch
 hash-for-hash, and the SHARED sliding-merge arithmetic
 (``kmv_sliding_from_sketch``) must therefore reproduce
-``sketch_kmv_sliding`` row-for-row — the drift_stream identity applied
-to the newest sketch. Also pins the state bound: every emitted sketch
+``sketch_kmv_sliding`` row-for-row — a stream≡batch identity of shared
+code applied to the newest sketch. Also pins the state bound: every emitted sketch
 is ≤ k hashes, and the number of state keys equals the occupied clock
 grid, not the event count."""
 

@@ -88,9 +88,9 @@ def test_sweep_stream_invariant_to_random_boundaries(spark, tmp_path):
         query_history_from_events,
     )
     from impala_base_to_cdw_sizing_spark.streaming.sweep_stream import (
-        batch_equivalent,
         windowed_concurrency,
     )
+    from tests.test_streaming import hourly_windows, window_rows
 
     qh = query_history_from_events(spark, SF_SMALL)
     res = run_sizing(qh, DEFAULT_PARAMS)
@@ -99,10 +99,7 @@ def test_sweep_stream_invariant_to_random_boundaries(spark, tmp_path):
     # watermark (a replay that time-travels >2h backwards is a different
     # semantic, pinned by test_streaming.py's late-event test)
     rows = [tuple(r) for r in ev.orderBy("ts_ms").collect()]
-    want = {
-        r.window_start: (r.starts, r.ends, r.net_queries, r.net_pods_u)
-        for r in batch_equivalent(ev).collect()
-    }
+    want = hourly_windows(rows)
     assert want
 
     for seed in SEEDS:
@@ -111,10 +108,7 @@ def test_sweep_stream_invariant_to_random_boundaries(spark, tmp_path):
             spark, tmp_path, f"sweep_seed{seed}", chunks, SWEEP_SCHEMA,
             windowed_concurrency, "complete",
         )
-        got = {
-            r.window_start: (r.starts, r.ends, r.net_queries, r.net_pods_u)
-            for r in out.collect()
-        }
+        got = window_rows(out)
         assert got == want, f"seed {seed}: {len(chunks)} chunks diverged"
 
 
@@ -123,7 +117,7 @@ def test_sweep_stream_invariant_to_random_boundaries(spark, tmp_path):
 BANDED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
-        T.StructField("arrival", T.LongType()),
+        T.StructField("arrival_ts", T.TimestampType()),
         T.StructField("band_id", T.LongType()),
         T.StructField("band_key", T.LongType()),
     ]
@@ -136,13 +130,17 @@ def test_neardup_stream_invariant_to_random_boundaries(spark, tmp_path):
     from impala_base_to_cdw_sizing_spark.operators.text import _band_frame
     from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
         neardup_candidates_batch,
-        neardup_candidates_stream,
+        neardup_candidates_stream_ttl,
     )
 
+    # arrival_ts = doc_id milliseconds past a 2020 epoch base: the whole
+    # stream spans under a second of event time, inside the 10-minute
+    # TTL horizon, so no bucket can expire and the TTL stream must equal
+    # the batch pairs (at epoch 0 itself a doc would count as late)
     banded = (
         _band_frame(spark, SF_SMALL, *MH_SMALL)
         .selectExpr(
-            "doc_id", "doc_id AS arrival",
+            "doc_id", "timestamp_millis(1600000000000 + doc_id) AS arrival_ts",
             "CAST(band_id AS LONG) AS band_id", "band_key",
         )
         .cache()
@@ -152,13 +150,13 @@ def test_neardup_stream_invariant_to_random_boundaries(spark, tmp_path):
         for r in neardup_candidates_batch(banded, cap=NEARDUP_CAP).collect()
     }
     assert want, "fixture must produce candidate pairs"
-    rows = [tuple(r) for r in banded.orderBy("arrival", "band_id").collect()]
+    rows = [tuple(r) for r in banded.orderBy("arrival_ts", "band_id").collect()]
 
     for seed in SEEDS:
         chunks = _random_chunks(rows, random.Random(1000 + seed))
         out = _feed_stream(
             spark, tmp_path, f"neardup_seed{seed}", chunks, BANDED_SCHEMA,
-            lambda s: neardup_candidates_stream(s, cap=NEARDUP_CAP),
+            lambda s: neardup_candidates_stream_ttl(s, cap=NEARDUP_CAP),
             "append",
         )
         got = {

@@ -95,11 +95,8 @@ def test_console_script_main_reads_sys_argv():
     assert "ERROR: Config file parameter required" in r.stdout
 
 
-def _main_in_process(spark, tmp_path: Path, rows) -> int:
-    """Write ``rows`` as a replay CSV and run ``main`` on it in-process,
-    on the shared session."""
-    from impala_base_to_cdw_sizing_spark.__main__ import main
-
+def _write_replay(tmp_path: Path, rows) -> Path:
+    """Write ``rows`` as a replay CSV and a config that sizes it."""
     input_csv = tmp_path / "history.csv"
     with input_csv.open("w", newline="") as f:
         w = csv.writer(f)
@@ -107,7 +104,21 @@ def _main_in_process(spark, tmp_path: Path, rows) -> int:
         w.writerows(rows)
     conf = tmp_path / "sizing.conf"
     conf.write_text(f"input_file={input_csv}\noutput_file={tmp_path}/out_main\n")
-    return main(["cdw-sizing", str(conf)])
+    return conf
+
+
+def _main_in_process(spark, tmp_path: Path, rows) -> int:
+    """Run ``main`` on a replay of ``rows`` in-process, on the shared
+    session."""
+    from impala_base_to_cdw_sizing_spark.__main__ import main
+
+    return main(["cdw-sizing", str(_write_replay(tmp_path, rows))])
+
+
+def _malformed_rows() -> list[list]:
+    rows = [list(r) for r in ROWS]
+    rows[1][HEADER.index("reqd_agg_mem")] = "12GB"
+    return rows
 
 
 @pytest.mark.parametrize(
@@ -131,6 +142,33 @@ def test_malformed_replay_field_is_one_error_line(
     assert "Total Queries" not in out
     assert "Traceback" not in out + err
     assert not (tmp_path / "out_main").exists()
+
+
+def test_malformed_replay_field_leaves_no_jvm_stack_on_stderr(tmp_path: Path):
+    """The failing task's log4j lines (``ERROR Executor`` with its Java
+    stack, ``WARN TaskSetManager``) must not follow the one ``ERROR:``
+    line onto the terminal."""
+    repo = str(Path(__file__).resolve().parent.parent)
+    conf = _write_replay(tmp_path, _malformed_rows())
+    r = subprocess.run(
+        [sys.executable, "-m", "impala_base_to_cdw_sizing_spark", str(conf)],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+    )
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert sum(line.startswith("ERROR:") for line in r.stdout.splitlines()) == 1, r.stdout
+    stack = [line for line in r.stderr.splitlines() if "at org.apache.spark" in line]
+    assert not stack, r.stderr[-2000:]
+
+
+def test_in_process_main_gives_the_session_its_log_level_back(spark, tmp_path: Path):
+    from impala_base_to_cdw_sizing_spark.__main__ import _root_log_level
+
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        assert _main_in_process(spark, tmp_path, _malformed_rows()) == 1
+        assert _root_log_level(spark) == "ERROR"
+    finally:
+        spark.sparkContext.setLogLevel("WARN")
 
 
 def test_sizing_failure_is_not_reported_as_an_input_error(

@@ -1,9 +1,7 @@
 """Structured Streaming sweep: stream ≡ batch on the same event files,
-plus cumulative concurrency consistency with the batch sweep."""
+and the late-event semantics the batch path has no analog for."""
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
 
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
 from impala_base_to_cdw_sizing_spark.operators.sweep import explode_events
@@ -12,24 +10,12 @@ from impala_base_to_cdw_sizing_spark.sources.synthetic import (
     query_history_from_events,
 )
 from impala_base_to_cdw_sizing_spark.streaming.sweep_stream import (
-    batch_equivalent,
-    batch_equivalent_by_pool,
-    cumulative_concurrency,
-    event_stream,
-    run_stream_to_memory,
     windowed_concurrency,
-    windowed_concurrency_by_pool,
 )
 
 from tests.conftest import SF_SMALL
 
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("sign", T.IntegerType()),
-        T.StructField("pods_u", T.LongType()),
-    ]
-)
+EVENT_SCHEMA = "ts_ms long, sign int, pods_u long"
 
 
 def _event_files(spark, tmp_path):
@@ -42,101 +28,58 @@ def _event_files(spark, tmp_path):
     return path, ev
 
 
-def test_stream_equals_batch(spark, tmp_path):
-    path, ev = _event_files(spark, tmp_path)
-    stream = event_stream(spark, path, EVENT_SCHEMA)
-    result = run_stream_to_memory(windowed_concurrency(stream), "sweep_test")
-    got = {r.window_start: r for r in result.collect()}
-    want = {r.window_start: r for r in batch_equivalent(ev).collect()}
-    assert got.keys() == want.keys()
-    for k in want:
-        assert (
-            got[k].starts == want[k].starts
-            and got[k].ends == want[k].ends
-            and got[k].net_queries == want[k].net_queries
-            and got[k].net_pods_u == want[k].net_pods_u
-        ), f"window {k}"
+def hourly_windows(rows) -> dict[int, tuple[int, int, int, int]]:
+    """Batch reference for ``windowed_concurrency``, in plain Python:
+    (ts_ms, sign, pods_u) rows → {window start ms: (starts, ends,
+    net_queries, net_pods_u)} over epoch-aligned one-hour windows."""
+    hour = 3_600_000
+    out: dict[int, list[int]] = {}
+    for ts_ms, sign, pods_u in rows:
+        w = out.setdefault(ts_ms - ts_ms % hour, [0, 0, 0, 0])
+        w[0] += sign > 0
+        w[1] += sign < 0
+        w[2] += sign
+        w[3] += pods_u
+    return {k: tuple(v) for k, v in out.items()}
 
 
-POOL_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("pool", T.StringType()),
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("sign", T.IntegerType()),
-        T.StructField("pods_u", T.LongType()),
-    ]
-)
-
-
-def _pool_event_files(spark, tmp_path):
-    qh = query_history_from_events(spark, SF_SMALL)
-    res = run_sizing(qh, DEFAULT_PARAMS)
-    ev = explode_events(res.routed.kept, keys=("pool",)).select(
-        "pool", "ts_ms", "sign", "pods_u"
-    )
-    path = str(tmp_path / "pool_events")
-    ev.repartition(4).write.mode("overwrite").parquet(path)
-    return path, ev
-
-
-def test_stream_equals_batch_per_pool(spark, tmp_path):
-    """The reference sizes per resource pool (sizing.conf:8): the keyed
-    streaming sweep must match its batch twin on every (pool, window),
-    and the per-pool nets must reconcile to the global windowed form."""
-    path, ev = _pool_event_files(spark, tmp_path)
-    stream = event_stream(spark, path, POOL_EVENT_SCHEMA)
-    result = run_stream_to_memory(
-        windowed_concurrency_by_pool(stream), "sweep_pool_test"
-    )
-    got = {(r.pool, r.window_start): r for r in result.collect()}
-    want = {(r.pool, r.window_start): r for r in batch_equivalent_by_pool(ev).collect()}
-    assert got.keys() == want.keys() and len(got) > 1
-    assert len({p for p, _ in got}) > 1  # the pool key is real, not constant
-    for k in want:
-        assert (
-            got[k].starts == want[k].starts
-            and got[k].ends == want[k].ends
-            and got[k].net_queries == want[k].net_queries
-            and got[k].net_pods_u == want[k].net_pods_u
-        ), f"pool-window {k}"
-    # per-pool nets sum to the global form's nets per window
-    by_window: dict = {}
-    for (_, w), r in got.items():
-        agg = by_window.setdefault(w, [0, 0])
-        agg[0] += r.net_queries
-        agg[1] += r.net_pods_u
-    global_want = {
-        r.window_start: r
-        for r in batch_equivalent(ev.select("ts_ms", "sign", "pods_u")).collect()
+def window_rows(df) -> dict[int, tuple[int, int, int, int]]:
+    """``windowed_concurrency`` output keyed like :func:`hourly_windows`
+    (UTC epoch millis via SQL: a collected timestamp renders in the
+    machine's time zone)."""
+    return {
+        r.ms: (r.starts, r.ends, r.net_queries, r.net_pods_u)
+        for r in df.selectExpr(
+            "unix_millis(window_start) AS ms", "starts", "ends",
+            "net_queries", "net_pods_u",
+        ).collect()
     }
-    assert by_window.keys() == global_want.keys()
-    for w, (nq, npods) in by_window.items():
-        assert nq == global_want[w].net_queries
-        assert npods == global_want[w].net_pods_u
 
 
-def test_session_bursts_stream_equals_batch(spark, tmp_path):
-    """session_window aggregation is the same declarative transform batch
-    or streaming; run it as an actual stream (complete mode) over the
-    per-pool event files and require identical sessions to the batch
-    form."""
-    path, ev = _pool_event_files(spark, tmp_path)
-    from impala_base_to_cdw_sizing_spark.streaming.sweep_stream import (
-        session_bursts,
+def test_stream_equals_batch(spark, tmp_path):
+    """windowed_concurrency run as a micro-batch stream (one file per
+    trigger, state carried across batches) and as a batch query (the
+    watermark is ignored there) both yield the windows of the batch
+    reference."""
+    path, ev = _event_files(spark, tmp_path)
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-
-    stream = event_stream(spark, path, POOL_EVENT_SCHEMA)
-    result = run_stream_to_memory(session_bursts(stream), "session_stream_test")
-
-    def keyed(df):
-        return {
-            (r.pool, r.session_start): (r.session_end, r.n_events, r.n_starts)
-            for r in df.collect()
-        }
-
-    got, want = keyed(result), keyed(session_bursts(ev))
-    assert got == want
-    assert len(got) > 1
+    q = (
+        windowed_concurrency(stream)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("sweep_test")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    want = hourly_windows(tuple(r) for r in ev.collect())
+    assert len(want) > 1
+    assert window_rows(spark.table("sweep_test")) == want
+    assert window_rows(windowed_concurrency(ev)) == want
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
@@ -145,29 +88,23 @@ def test_watermark_drops_late_events(spark, tmp_path):
     within the watermark is folded in."""
     import time as _time
 
-    from pyspark.sql import functions as F
-
-    from impala_base_to_cdw_sizing_spark.streaming.sweep_stream import (
-        windowed_concurrency,
-    )
-
     hour = 3_600_000
     path = tmp_path / "late"
     path.mkdir()
 
     def write_file(rows):
         # each coalesce(1) append creates one file → one micro-batch
-        spark.createDataFrame(
-            rows, "ts_ms long, sign int, pods_u long"
-        ).coalesce(1).write.mode("append").parquet(str(path))
+        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(path))
         _time.sleep(0.1)
 
     # batch 1: events up to t=12h → watermark advances to 12h - 2h = 10h
     write_file([(1 * hour, 1, 10), (12 * hour, 1, 10)])
 
-    stream = spark.readStream.schema(
-        "ts_ms long, sign int, pods_u long"
-    ).option("maxFilesPerTrigger", 1).parquet(str(path))
+    stream = spark.readStream.schema(EVENT_SCHEMA).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(str(path))
     q = (
         windowed_concurrency(stream)
         .writeStream.outputMode("append")
@@ -194,37 +131,3 @@ def test_watermark_drops_late_events(spark, tmp_path):
     # append mode emits only finalized windows (watermark passed): the 1h
     # window must have exactly its on-time event, the late +99 discarded
     assert got.get(1 * hour) == 1, got  # late event NOT folded in
-
-
-def test_session_bursts(spark):
-    from pyspark.sql import functions as F
-
-    from impala_base_to_cdw_sizing_spark.streaming.sweep_stream import (
-        session_bursts,
-    )
-
-    minute = 60_000
-    rows = [  # pool, ts_ms, sign — two bursts for etl, one for bi
-        ("etl", 0 * minute, 1), ("etl", 5 * minute, -1),
-        ("etl", 10 * minute, 1),  # within 30min gap of previous → same session
-        ("etl", 120 * minute, 1), ("etl", 125 * minute, -1),  # new session
-        ("bi", 7 * minute, 1), ("bi", 9 * minute, -1),
-    ]
-    ev = spark.createDataFrame(rows, "pool string, ts_ms long, sign int")
-    got = session_bursts(ev).orderBy("pool", "session_start").collect()
-    by_pool = {}
-    for r in got:
-        by_pool.setdefault(r.pool, []).append(r)
-    assert len(by_pool["etl"]) == 2  # 120min silence splits the sessions
-    assert by_pool["etl"][0].n_events == 3
-    assert by_pool["etl"][1].n_starts == 1
-    assert len(by_pool["bi"]) == 1 and by_pool["bi"][0].n_events == 2
-
-
-def test_cumulative_concurrency_closes_to_zero(spark, tmp_path):
-    _, ev = _event_files(spark, tmp_path)
-    cum = cumulative_concurrency(batch_equivalent(ev)).orderBy(
-        "window_start"
-    ).collect()
-    assert cum[-1].concurrent_at_window_end == 0  # every query start has an end
-    assert abs(cum[-1].pods_at_window_end) < 1e-9

@@ -9,7 +9,6 @@ import collections
 
 from pyspark.sql import types as T
 
-import pytest
 from impala_base_to_cdw_sizing_spark.streaming.heavyhitters import (
     heavyhitters_stream,
     spacesaving_fold,
@@ -182,80 +181,3 @@ def test_summary_state_survives_checkpoint_restart(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     )
     assert got == sorted(expect)
-
-
-@pytest.mark.slow  # re-tiered r15: driver gate = fast tier; this test's coverage stays in the release gate (pytest -m "")
-def test_global_topk_merged_view_guarantees(spark, tmp_path):
-    """r5 verdict #5: the merged view over the per-shard summaries must
-    (a) be the union-selection of the shard summaries ranked globally,
-    (b) state the honest combined bound max_g(N_g)/cap with N_g
-    recovered from the Space-Saving total-preservation invariant, and
-    (c) keep the no-false-negative guarantee: every item whose exact
-    global count exceeds the bound appears — pinned against exact batch
-    counts across 3 micro-batches."""
-    from impala_base_to_cdw_sizing_spark.streaming.heavyhitters import (
-        global_topk,
-    )
-
-    rows = _skewed_rows()
-    cut = len(rows) // 3
-    batches = [rows[:cut], rows[cut : 2 * cut], rows[2 * cut :]]
-    out = _run_stream(spark, tmp_path, batches)
-
-    # final per-group snapshot (same slicing as the reference test)
-    ref: dict[int, dict] = {g: {} for g in range(N_GROUPS)}
-    for g, item, _ts, _seq in rows:
-        spacesaving_fold([item], ref[g], CAP)
-    snap_rows = []
-    for g in range(N_GROUPS):
-        grp_rows = out[out.grp == g].tail(len(ref[g]))
-        snap_rows += [
-            (int(g), r.item, int(r.est_count), int(r.err))
-            for r in grp_rows.itertuples()
-        ]
-    summary = spark.createDataFrame(
-        snap_rows, "grp long, item string, est_count long, err long"
-    )
-
-    k = 6
-    view = global_topk(summary, k=k, cap=CAP).toPandas()
-    # every emitted row is in the top-k OR above the combined bound
-    # (r6 ADVICE: above-bound rows survive the top-k truncation), and
-    # the view never exceeds the n_groups*cap structural bound
-    assert len(view) >= min(k, len(snap_rows))
-    assert len(view) <= len(snap_rows)
-    for r in view.itertuples():
-        assert r.rank <= k or r.est_count > r.guarantee_bound
-    # (a) ranked by est_count desc, item asc; rows drawn from the union
-    ests = list(view.est_count)
-    assert ests == sorted(ests, reverse=True)
-    union = {(r[0], r[1]) for r in snap_rows}
-    assert all((g, i) in union for g, i in zip(view.grp, view.item))
-
-    # (b) N_g is each shard's true stream length (total preservation)
-    import collections
-
-    group_n = collections.Counter(g for g, *_ in rows)
-    for g in set(view.grp):
-        assert (view[view.grp == g].n_g == group_n[g]).all()
-    expect_bound = max(group_n.values()) / CAP
-    assert (abs(view.guarantee_bound - expect_bound) < 1e-12).all()
-
-    # (c) no false negatives above the combined bound — and the bound
-    # is non-vacuous on this stream (hot1/hot2 exceed it)
-    exact = collections.Counter(item for _g, item, _t, _s in rows)
-    above = {i for i, c in exact.items() if c > expect_bound}
-    assert above, "stream must exercise the bound"
-    in_view = set(view.item)
-    assert above <= in_view, (above - in_view)
-    # per-item bounds survive the merge
-    for r in view.itertuples():
-        assert r.est_count - r.err <= exact[r.item] <= r.est_count
-
-    # (d) truncation survival (r6 ADVICE): even with k=1 — small enough
-    # that a plain rank cut WOULD drop true heavy hitters — every item
-    # whose exact count exceeds the bound is still emitted, because
-    # true <= est implies est > bound for all of them
-    tiny = global_topk(summary, k=1, cap=CAP).toPandas()
-    assert above <= set(tiny.item), (above - set(tiny.item))
-    assert len(tiny) < len(snap_rows)  # still a selection, not the union

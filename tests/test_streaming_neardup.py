@@ -1,6 +1,6 @@
 """Streaming LSH near-dup candidates: bounded per-bucket state, pairs
 emitted on arrival, stream ≡ batch on the same arrival order — including
-across micro-batch boundaries."""
+across micro-batch boundaries — and event-time expiry of cold buckets."""
 
 from __future__ import annotations
 
@@ -9,21 +9,39 @@ from pyspark.sql import functions as F
 from impala_base_to_cdw_sizing_spark.operators.text import _band_frame
 from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
     neardup_candidates_batch,
-    neardup_candidates_stream,
+    neardup_candidates_stream_ttl,
 )
 from tests.conftest import MH_SMALL, SF_SMALL
 import pytest
 
 CAP = 8
-BANDED_SCHEMA = "doc_id long, arrival long, band_id long, band_key long"
+# arrival epoch base: an event at epoch 0 is not later than the initial
+# watermark (0), so the stateful operator would drop it as late
+T0 = 1_600_000_000_000
+BANDED_SCHEMA = "doc_id long, arrival_ts timestamp, band_id long, band_key long"
+
+
+def _frame(spark, rows):
+    """(doc_id, arrival epoch millis, band_id, band_key) rows → banded frame."""
+    return spark.createDataFrame(
+        rows, "doc_id long, ts_ms long, band_id long, band_key long"
+    ).select(
+        "doc_id", F.timestamp_millis("ts_ms").alias("arrival_ts"), "band_id", "band_key"
+    )
 
 
 def _banded(spark):
     # the real LSH banding of the corpus (small signature keeps the
-    # test fast), arrival = doc_id so the order is replayable
+    # test fast); arrival = T0 + doc_id milliseconds so the order is
+    # replayable and the stream spans under a second of event time —
+    # inside the TTL horizon, so no bucket expires and the stream must
+    # equal the batch candidate set
     return (
         _band_frame(spark, SF_SMALL, *MH_SMALL)
-        .selectExpr("doc_id", "doc_id AS arrival", "CAST(band_id AS LONG) AS band_id", "band_key")
+        .selectExpr(
+            "doc_id", f"timestamp_millis({T0} + doc_id) AS arrival_ts",
+            "CAST(band_id AS LONG) AS band_id", "band_key",
+        )
     )
 
 
@@ -38,7 +56,7 @@ def _run_stream(spark, tmp_path, frames):
         if first:
             stream = spark.readStream.schema(BANDED_SCHEMA).parquet(src)
             q = (
-                neardup_candidates_stream(stream, cap=CAP)
+                neardup_candidates_stream_ttl(stream, cap=CAP)
                 .writeStream.outputMode("append")
                 .format("memory")
                 .queryName(out_name)
@@ -54,8 +72,8 @@ def test_stream_equals_batch_across_microbatches(spark, tmp_path):
     banded = _banded(spark).cache()
     cut = 250  # arrival split: two micro-batches
     frames = [
-        banded.filter(F.col("arrival") < cut),
-        banded.filter(F.col("arrival") >= cut),
+        banded.filter(F.col("doc_id") < cut),
+        banded.filter(F.col("doc_id") >= cut),
     ]
     got = {
         (r.band_id, r.band_key, r.doc_a, r.doc_b)
@@ -76,20 +94,6 @@ def test_ttl_evicts_cold_buckets(spark, tmp_path):
     the horizon — the bucket's state must be gone, so the late doc emits
     NO pairs with batch-1 priors and restarts the bucket (a subsequent
     in-horizon doc pairs only with it)."""
-    from pyspark.sql import functions as F
-
-    from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
-        neardup_candidates_stream_ttl,
-    )
-
-    schema = "doc_id long, arrival_ts timestamp, band_id long, band_key long"
-
-    def frame(rows):
-        return spark.createDataFrame(rows, "doc_id long, ts_ms long, band_id long, band_key long").select(
-            "doc_id", F.timestamp_millis("ts_ms").alias("arrival_ts"), "band_id", "band_key"
-        )
-
-    t0 = 1_600_000_000_000
     hour = 3_600_000
     # event-time timeout semantics: the watermark only advances at
     # micro-batch end, and a timed-out group is invoked (and evicted)
@@ -97,18 +101,18 @@ def test_ttl_evicts_cold_buckets(spark, tmp_path):
     # through a DIFFERENT bucket, give the evictor one data-less batch,
     # then probe the cold bucket
     batches = [
-        frame([(1, t0, 0, 7), (2, t0 + 1000, 0, 7)]),        # bucket 7 seeded
-        frame([(100, t0 + 3 * hour, 0, 9)]),                 # watermark jumps
-        frame([(101, t0 + 3 * hour + 1000, 0, 9)]),          # bucket 7 evicted here
-        frame([(3, t0 + 3 * hour + 2000, 0, 7)]),            # cold-bucket probe
-        frame([(4, t0 + 3 * hour + 3000, 0, 7)]),            # restarted bucket
+        _frame(spark, [(1, T0, 0, 7), (2, T0 + 1000, 0, 7)]),  # bucket 7 seeded
+        _frame(spark, [(100, T0 + 3 * hour, 0, 9)]),  # watermark jumps
+        _frame(spark, [(101, T0 + 3 * hour + 1000, 0, 9)]),  # bucket 7 evicted here
+        _frame(spark, [(3, T0 + 3 * hour + 2000, 0, 7)]),  # cold-bucket probe
+        _frame(spark, [(4, T0 + 3 * hour + 3000, 0, 7)]),  # restarted bucket
     ]
     src = str(tmp_path / "ttl_src")
     q = None
     for f in batches:
         f.coalesce(1).write.mode("append").parquet(src)
         if q is None:
-            stream = spark.readStream.schema(schema).parquet(src)
+            stream = spark.readStream.schema(BANDED_SCHEMA).parquet(src)
             q = (
                 neardup_candidates_stream_ttl(
                     stream, cap=8, horizon="10 minutes", horizon_ms=600_000
@@ -132,8 +136,7 @@ def test_ttl_evicts_cold_buckets(spark, tmp_path):
 
 def test_hot_bucket_state_and_fanout_are_capped(spark, tmp_path):
     # one synthetic hot bucket: 40 docs, same band key
-    rows = [(i, i, 0, 12345) for i in range(40)]
-    hot = spark.createDataFrame(rows, BANDED_SCHEMA)
+    hot = _frame(spark, [(i, T0 + i, 0, 12345) for i in range(40)])
     out = _run_stream(spark, tmp_path, [hot]).collect()
     # every arrival pairs with at most CAP priors...
     from collections import Counter
@@ -152,9 +155,6 @@ def test_ttl_state_survives_checkpoint_restart(spark, tmp_path):
     same checkpoint — bucket state must survive (the post-restart doc
     pairs with pre-restart priors) and no pair may be emitted twice
     (exactly-once via checkpoint + file sink)."""
-    from impala_base_to_cdw_sizing_spark.streaming.neardup_stream import (
-        neardup_candidates_stream_ttl,
-    )
 
     src = str(tmp_path / "rsrc")
     out = str(tmp_path / "rout")
