@@ -15,9 +15,9 @@ bit-for-bit with no float-summation order dependence:
 - ``r' = (15 * 10^9) div (100 * N) + Σ contributions`` — a bigint sum,
   order-independent.
 
-A dangling-mass redistribution term (one broadcast 1-row agg per
-round) keeps the rank sum EXACTLY 10⁹ nano-units after every round,
-with a pinned remainder policy. Fixed-horizon iterations are the
+A dangling-mass redistribution term (the rank sum, observed on each
+round's checkpoint job) keeps the rank sum EXACTLY 10⁹ nano-units
+after every round, with a pinned remainder policy. Fixed-horizon iterations are the
 intended shape: curation wants a stable score, not a fixpoint
 certificate — 3 damped rounds already separate hubs from leaves on
 near-dup graphs, and the oracle replays the identical unrolled chain
@@ -33,9 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fixpoint import checkpoint, iterate
 from .queries_ext import register
-from .smallplan import small_plan_mode
-from .text import _minhash_sql, q_dedup_minhash
+from .text import _minhash_sql, _near_dup_edges, q_dedup_minhash
 from ..sources.files import read_input
 
 _NANO = 1_000_000_000
@@ -53,91 +53,80 @@ def pagerank_ranks_conserving(
     ordering is deterministic without a float epsilon. The rank sum is
     EXACTLY 10⁹ nano-units after every round. Per round, the leaked
     mass L = 10⁹ − Σ(base + in_sum) — dangling-node damped mass plus
-    every truncating-division remainder — is measured with one global
-    1-row aggregate and redistributed uniformly (``L div N`` to every
+    every truncating-division remainder — is observed on the round's
+    checkpoint job and redistributed uniformly (``L div N`` to every
     node); the final sub-N remainder (``L mod N`` < N nano-units, i.e.
     < N/10⁹ of total mass) is parked on the lowest doc_id. That
     remainder policy is pinned — deterministic, integer-exact, and
     mirrored by the oracle — rather than hidden in float round-off.
-    The init is conserving too (10⁹ div N each, remainder to the lowest
-    id). Cost over a plain power iteration: one broadcast 1-row agg per
-    round."""
-    edges = edges.cache()
-    outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
-    nodes = docs.join(
-        outdeg, docs.doc_id == outdeg.doc_a, "left"
-    ).select(
-        "doc_id", F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg")
-    ).cache()
-    n_docs = nodes.count()
-    if n_docs == 0:
-        return nodes.selectExpr(
-            "doc_id", "CAST(0 AS BIGINT) AS rank_nano", "outdeg"
-        )
-    base = (15 * _NANO) // (_DAMP_DEN * n_docs)
-    min_doc = F.broadcast(nodes.agg(F.min("doc_id").alias("min_doc")))
-
-    ranks = nodes.crossJoin(min_doc).selectExpr(
-        "doc_id",
-        f"CAST({_NANO // n_docs} + CASE WHEN doc_id = min_doc"
-        f" THEN {_NANO % n_docs} ELSE 0 END AS BIGINT) AS rank_nano",
+    The init is the same spread of the whole unit over all-zero ranks
+    (10⁹ div N each, remainder to the lowest id)."""
+    edges, nodes, n_edges, seen = _graph(
+        edges, docs, F.count("*").alias("n"), F.min("doc_id").alias("min_doc")
     )
-    # r15: small-graph fast path — each round's pre-checkpoint executes
-    # inside the gate, so every round's shuffles skip the per-stage AQE
-    # re-planning
-    n_edges = edges.count()
-    with small_plan_mode(edges.sparkSession, n_edges):
-        for _ in range(n_iters):
-            contrib = (
-                edges.join(ranks, edges.doc_a == ranks.doc_id)
-                .join(nodes.select(F.col("doc_id").alias("src"), "outdeg"),
-                      edges.doc_a == F.col("src"))
-                .selectExpr(
-                    "doc_b AS doc_id",
-                    f"({_DAMP_NUM} * rank_nano) div ({_DAMP_DEN} * outdeg) AS c",
-                )
-                .groupBy("doc_id")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            pre = nodes.join(contrib, "doc_id", "left").selectExpr(
-                "doc_id",
-                f"CAST({base} + coalesce(in_sum, 0) AS BIGINT) AS pre",
-            )
-            # materialize the round (graph_ppr's per-round hygiene): the
-            # leak aggregate AND next round's contrib both read `pre`, so
-            # without truncation the round's whole subplan is evaluated
-            # twice and the lineage compounds per iteration (measured 12 s
-            # at sf0.1 vs ~4 s for the same-shape ppr loop). One tiny
-            # N-row checkpoint per round makes leak + ranks single-eval.
-            pre = pre.localCheckpoint(eager=True)
-            leak = F.broadcast(
-                pre.agg(
-                    (F.lit(_NANO) - F.sum("pre")).cast("long").alias("leak")
-                )
-            )
-            ranks = pre.crossJoin(leak).crossJoin(min_doc).selectExpr(
-                "doc_id",
-                f"CAST(pre + leak div {n_docs} + CASE WHEN doc_id = min_doc"
-                f" THEN leak % {n_docs} ELSE 0 END AS BIGINT) AS rank_nano",
-            )
-        out = nodes.join(ranks, "doc_id").select(
-            "doc_id", "rank_nano", "outdeg"
+    n_docs, min_doc = seen["n"], seen["min_doc"]
+    if n_docs == 0:
+        return nodes.selectExpr("doc_id", "CAST(0 AS BIGINT) AS rank_nano", "outdeg")
+    base = (15 * _NANO) // (_DAMP_DEN * n_docs)
+
+    def spread(pre: DataFrame, seen: list) -> DataFrame:
+        # the leak is never negative (Σpre ≤ 10⁹), so Python's // and %
+        # agree with SQL div and %
+        leak = _NANO - (seen[-1]["mass"] if seen else 0)
+        return pre.selectExpr(
+            "doc_id",
+            f"CAST(pre + {leak // n_docs} + CASE WHEN doc_id = {min_doc}"
+            f" THEN {leak % n_docs} ELSE 0 END AS BIGINT) AS rank_nano",
+            "outdeg",
         )
-        out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+
+    pre, seen = iterate(
+        nodes.selectExpr("doc_id", "CAST(0 AS BIGINT) AS pre", "outdeg"),
+        lambda pre, seen: _in_sums(edges, spread(pre, seen)).selectExpr(
+            "doc_id",
+            f"CAST({base} + coalesce(in_sum, 0) AS BIGINT) AS pre",
+            "outdeg",
+        ),
+        max_rounds=n_iters,
+        rows=n_edges,
+        observe=(F.sum("pre").alias("mass"),),
+    )
+    return spread(pre, seen)
+
+
+def _graph(edges: DataFrame, docs: DataFrame, *metrics):
+    """Checkpoint ``edges``, observing its row count (the gate size),
+    and ``docs`` with each doc's ``outdeg``, observing ``metrics``.
+    Returns (edges, nodes, edge count, observed metrics)."""
+    edges, e_seen = checkpoint(edges, F.count("*").alias("n"))
+    outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
+    nodes, seen = checkpoint(
+        docs.join(outdeg, docs.doc_id == outdeg.doc_a, "left")
+        .drop("doc_a")
+        .withColumn("outdeg", F.coalesce("outdeg", F.lit(0)).cast("long")),
+        *metrics,
+    )
+    return edges, nodes, e_seen["n"], seen
+
+
+def _in_sums(edges: DataFrame, ranks: DataFrame) -> DataFrame:
+    """``ranks`` (doc_id, rank_nano, outdeg, ...) with each doc's damped
+    in-edge sum ``in_sum`` (NULL without in-edges): every edge u→v
+    carries ``(85 * r_u) div (100 * outdeg_u)``."""
+    contrib = (
+        edges.join(ranks, edges.doc_a == ranks.doc_id)
+        .selectExpr(
+            "doc_b AS doc_id",
+            f"({_DAMP_NUM} * rank_nano) div ({_DAMP_DEN} * outdeg) AS c",
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("c").alias("in_sum"))
+    )
+    return ranks.join(contrib, "doc_id", "left")
 
 
 def q_graph_pagerank_conserving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = (
-        q_dedup_minhash(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
+    edges = _near_dup_edges(spark, sf_dir)
     docs = read_input(spark, sf_dir, "documents").select("doc_id")
     return pagerank_ranks_conserving(edges, docs)
 
@@ -309,71 +298,41 @@ def ppr_ranks(
     Everything else — truncating-division contributions, order-free
     BIGINT sums — is shared arithmetic; dangling mass is not
     redistributed."""
-    edges = edges.cache()
-    outdeg = edges.groupBy("doc_a").agg(F.count("*").alias("outdeg"))
-    nodes = docs.join(
-        outdeg, docs.doc_id == outdeg.doc_a, "left"
-    ).select(
-        "doc_id",
-        "is_seed",
-        F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
-    ).cache()
-    n_seeds = nodes.filter(F.col("is_seed") == 1).count()
+    edges, nodes, n_edges, seen = _graph(
+        edges, docs, F.expr("count_if(is_seed = 1)").alias("seeds")
+    )
+    n_seeds = seen["seeds"]
     if n_seeds == 0:
         return nodes.selectExpr(
             "doc_id", "CAST(0 AS BIGINT) AS rank_nano", "outdeg", "is_seed"
         )
     base = (15 * _NANO) // (_DAMP_DEN * n_seeds)
-    ranks = nodes.selectExpr(
-        "doc_id",
-        f"CAST(CASE WHEN is_seed = 1 THEN {_NANO // n_seeds}"
-        " ELSE 0 END AS BIGINT) AS rank_nano",
+    ranks, _ = iterate(
+        nodes.selectExpr(
+            "doc_id",
+            f"CAST(CASE WHEN is_seed = 1 THEN {_NANO // n_seeds}"
+            " ELSE 0 END AS BIGINT) AS rank_nano",
+            "outdeg",
+            "is_seed",
+        ),
+        lambda ranks, seen: _in_sums(edges, ranks).selectExpr(
+            "doc_id",
+            f"CAST(CASE WHEN is_seed = 1 THEN {base} ELSE 0 END"
+            " + coalesce(in_sum, 0) AS BIGINT) AS rank_nano",
+            "outdeg",
+            "is_seed",
+        ),
+        max_rounds=n_iters,
+        rows=n_edges,
     )
-    # r15: small-graph fast path (the unrolled plan executes at the
-    # final localCheckpoint, inside the gate)
-    n_edges = edges.count()
-    with small_plan_mode(edges.sparkSession, n_edges):
-        for _ in range(n_iters):
-            contrib = (
-                edges.join(ranks, edges.doc_a == ranks.doc_id)
-                .join(nodes.select(F.col("doc_id").alias("src"), "outdeg"),
-                      edges.doc_a == F.col("src"))
-                .selectExpr(
-                    "doc_b AS doc_id",
-                    f"({_DAMP_NUM} * rank_nano) div ({_DAMP_DEN} * outdeg) AS c",
-                )
-                .groupBy("doc_id")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                nodes.join(contrib, "doc_id", "left")
-                .selectExpr(
-                    "doc_id",
-                    f"CAST(CASE WHEN is_seed = 1 THEN {base} ELSE 0 END"
-                    " + coalesce(in_sum, 0) AS BIGINT) AS rank_nano",
-                )
-            )
-        out = nodes.join(ranks, "doc_id").select(
-            "doc_id", "rank_nano", "outdeg", "is_seed"
-        )
-        out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+    return ranks
 
 
 _PPR_SEED_LANG = "de"
 
 
 def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = (
-        q_dedup_minhash(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
+    edges = _near_dup_edges(spark, sf_dir)
     docs = read_input(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         f"CASE WHEN lang = '{_PPR_SEED_LANG}' THEN 1 ELSE 0 END AS is_seed",

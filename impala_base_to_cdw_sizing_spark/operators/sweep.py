@@ -90,12 +90,8 @@ _RAW_MEASURES: dict[str, str] = {
 }
 
 
-def explode_events(kept: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
-    """F1: one row per interval endpoint; measures signed, micro-quantized.
-
-    ``keys`` passes extra grouping columns (e.g. ``("pool",)``) through to
-    the endpoint rows for keyed downstream sweeps; the default (none)
-    keeps the global-sweep oracle path byte-identical."""
+def explode_events(kept: DataFrame) -> DataFrame:
+    """F1: one row per interval endpoint; measures signed, micro-quantized."""
 
     def endpoint(ts: str, sign: int) -> str:
         neg = "-" if sign < 0 else ""
@@ -106,7 +102,6 @@ def explode_events(kept: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
 
     return kept.selectExpr(
         "seq",
-        *keys,
         f"inline(array({endpoint('start_ms + admission_wait', 1)}, "
         f"{endpoint('end_ms', -1)}))",
     )

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import checkpoint, iterate
 from .queries_ext import register
-from .smallplan import small_plan_mode
 from ..memo import MEMO
 from ..sources.files import ROWS_PER_TASK_HEAVY, read_input
 
@@ -305,18 +305,17 @@ w{i} AS MATERIALIZED (
 )"""
 
 
-# --- BPE: convergent training (driver loop, r5 verdict #3) -------------------------
+# --- BPE: convergent training (driver loop) --------------------------------------
 #
-# The unrolled-3-round form above is the oracle-shaped replay; a real
-# trainer runs to a TARGET merge count and stops early when the best
-# pair's frequency falls under a minimum (merging a once-seen pair
-# never helps compression) — the same unrolled→convergent promotion
-# dedup_components made (cc_labels_converged). The driver loop does one
-# O(1)-row action per round (the argmax pair — the cc digest-check
-# precedent) and eagerly checkpoints the vocabulary each round so plan
-# depth stays constant. The oracle replays ALL target rounds as CTEs
-# and gates the output to the contiguous prefix of rounds whose best
-# pair meets the minimum — exactly the rounds the driver executed.
+# A real trainer runs to a TARGET merge count and stops early when the
+# best pair's frequency falls under a minimum (merging a once-seen pair
+# never helps compression). The loop runs on the fixed-point driver
+# (fixpoint.iterate): each round is one checkpointed vocabulary, and the
+# round's merge row is observed on that checkpoint job, so plan depth
+# stays constant and no round runs a second action. The oracle replays
+# ALL target rounds as CTEs and gates the output to the contiguous
+# prefix of rounds whose best pair meets the minimum — exactly the
+# rounds the driver executed.
 
 _BPE_TARGET_MERGES = 16
 _BPE_MIN_PAIR_N = 2
@@ -359,17 +358,16 @@ def _bpe_trained_converged(
     and the driver-side merge table rows ``(round, lhs, rhs, merged,
     pair_n)``.
 
-    Round shape (r14 optimization, guide §1.2 "per-task work" after the
-    algorithm is right): ONE Spark job per merge round instead of two.
-    The round's argmax pair rides the broadcast side of the merge job
+    Round shape: ONE checkpoint per merge round. The round's argmax
+    pair rides the broadcast side of the merge job
     (TakeOrderedAndProject → 1-row BroadcastNestedLoopJoin build) and
     the checkpointed vocabulary carries the chosen ``(l, r, m, pair_n)``
-    on every row, so the driver reads the merge row back with a
-    first() over the ALREADY-materialized RDD (no recompute) rather
-    than a second full pair-count job. The stop rule is folded into the
-    merge CASE — an under-minimum (or absent) best pair leaves ``syms``
-    untouched, so breaking after the read keeps the vocabulary
-    bit-identical to the two-job form that broke BEFORE merging. At toy
+    on every row, so the driver observes the merge row on that same
+    job rather than running a second pair-count job or a read-back
+    action. The stop rule is folded into the merge CASE — an
+    under-minimum (or absent) best pair leaves ``syms`` untouched, so
+    stopping after the round keeps the vocabulary bit-identical to the
+    two-job form that broke BEFORE merging. At toy
     scale each vocab-sized job is ~0.2 s of fixed scheduling/planning
     cost, so halving the job count halves the loop; at 100 TB scale the
     same fusion halves the number of cluster-wide barriers per round."""
@@ -377,40 +375,51 @@ def _bpe_trained_converged(
     memo = MEMO.get(key)
     if memo is not None:
         return memo
-    words = (
+    words, w_seen = checkpoint(
         _docs(spark, sf_dir)
         .selectExpr(f"explode(regexp_extract_all(text, '{_BPE_RE}', 0)) AS piece")
         .groupBy("piece")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .selectExpr("piece", "cnt", "regexp_extract_all(piece, '.', 0) AS syms")
-        .localCheckpoint(eager=True)
+        .selectExpr("piece", "cnt", "regexp_extract_all(piece, '.', 0) AS syms"),
+        F.count("*").alias("n"),
     )
-    merges: list[tuple[int, str, str, str, int]] = []
-    for i in range(1, target + 1):
+
+    def step(words: DataFrame, seen: list) -> DataFrame:
+        words = words.select("piece", "cnt", "syms")
         best = (
             _bpe_pair_counts(words)
             .orderBy(F.col("pair_n").desc(), F.col("l").asc(), F.col("r").asc())
             .limit(1)
             .selectExpr("l", "r", "concat(l, r) AS m", "pair_n")
         )
-        cand = (
-            words.join(F.broadcast(best), F.lit(True), "left")
-            .selectExpr(
-                "piece", "cnt",
-                f"CASE WHEN l IS NULL OR pair_n < {min_pair_n} THEN syms"
-                " ELSE aggregate(syms, CAST(array() AS array<string>), (acc, s) ->"
-                " CASE WHEN size(acc) > 0 AND element_at(acc, -1) = l AND s = r"
-                " THEN concat(slice(acc, 1, size(acc) - 1), array(m))"
-                " ELSE concat(acc, array(s)) END) END AS syms",
-                "l", "r", "m", "pair_n",
-            )
-            .localCheckpoint(eager=True)
+        return words.join(F.broadcast(best), F.lit(True), "left").selectExpr(
+            "piece", "cnt",
+            f"CASE WHEN l IS NULL OR pair_n < {min_pair_n} THEN syms"
+            " ELSE aggregate(syms, CAST(array() AS array<string>), (acc, s) ->"
+            " CASE WHEN size(acc) > 0 AND element_at(acc, -1) = l AND s = r"
+            " THEN concat(slice(acc, 1, size(acc) - 1), array(m))"
+            " ELSE concat(acc, array(s)) END) END AS syms",
+            "l", "r", "m", "pair_n",
         )
-        row = cand.select("l", "r", "m", "pair_n").first()
-        words = cand.select("piece", "cnt", "syms")
-        if row is None or row["l"] is None or row["pair_n"] < min_pair_n:
-            break
-        merges.append((i, row["l"], row["r"], row["m"], row["pair_n"]))
+
+    def merged(pair: dict) -> bool:
+        return pair["l"] is not None and pair["pair_n"] >= min_pair_n
+
+    words, seen = iterate(
+        words,
+        step,
+        max_rounds=target,
+        observe=tuple(F.max(c).alias(c) for c in ("l", "r", "m", "pair_n")),
+        converged=lambda seen: not merged(seen[-1]),
+        rows=w_seen["n"],
+    )
+    words = words.select("piece", "cnt", "syms")
+    # only the stopping round, always the last, merged nothing
+    merges = [
+        (i, p["l"], p["r"], p["m"], p["pair_n"])
+        for i, p in enumerate(seen, 1)
+        if merged(p)
+    ]
     MEMO[key] = (words, merges)
     return words, merges
 
@@ -1601,6 +1610,19 @@ FROM dedup WHERE rn = 1
 _CC_ITERS = 4
 
 
+def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash near-duplicate graph (est_jaccard ≥ 0.5) as symmetric
+    (doc_a, doc_b) edges, both directions of every pair."""
+    pairs = (
+        q_dedup_minhash(spark, sf_dir)
+        .filter(F.col("est_jaccard") >= 0.5)
+        .select("doc_a", "doc_b")
+    )
+    return pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    )
+
+
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster near-duplicates into duplicate groups: min-label
     propagation iterated **to convergence** (:func:`cc_labels_converged`)
@@ -1618,14 +1640,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     with their own id as cluster. At corpus scale the iteration frames
     shrink from |corpus| to |near-dup endpoints| (orders of magnitude).
     """
-    pairs = (
-        q_dedup_minhash(spark, sf_dir)
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
+    edges = _near_dup_edges(spark, sf_dir)
     endpoints = edges.select(F.col("doc_a").alias("doc_id")).distinct()
     labels = cc_labels_converged(edges, endpoints)
     docs = _docs(spark, sf_dir).select("doc_id")
@@ -1662,12 +1677,17 @@ def cc_labels_converged(
     ``max_iters`` is a runaway bound, not a correctness horizon."""
     from .skew import salted_agg
 
+    # cached, not checkpointed: ``nodes`` is usually derived from the
+    # same edge plan, and the cache serves it on the label checkpoint,
+    # whose observed row count sizes the gate
     edges = edges.cache()
-    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster"))
-    labels = labels.localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
+    labels, n_seen = checkpoint(
+        nodes.select("doc_id", F.col("doc_id").alias("cluster")),
+        F.count("*").alias("n"),
+    )
+
+    def step(state: DataFrame, seen: list) -> DataFrame:
+        labels = state.select("doc_id", "cluster")
         contrib = edges.join(labels, edges.doc_b == labels.doc_id).select(
             "doc_a", "cluster"
         )
@@ -1678,28 +1698,29 @@ def cc_labels_converged(
             combine=lambda d: [F.min("part_min").alias("nbr_min")],
             n_salts=n_salts,
         )
-        # one materialization per iteration carries both the new label and
-        # the previous one, so the convergence check is a cheap scan of
-        # the checkpointed frame — no extra join against the old labels
-        step = (
-            labels.join(nbr, labels.doc_id == nbr.doc_a, "left")
-            .select(
-                "doc_id",
-                F.col("cluster").alias("prev_cluster"),
-                F.least(
-                    F.col("cluster"), F.coalesce("nbr_min", F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
+        # the round carries both the new label and the previous one, so
+        # the changed-label count is observed on the checkpoint job — no
+        # extra join against the old labels, no extra action
+        return labels.join(nbr, labels.doc_id == nbr.doc_a, "left").select(
+            "doc_id",
+            F.col("cluster").alias("prev_cluster"),
+            F.least(
+                F.col("cluster"), F.coalesce("nbr_min", F.col("cluster"))
+            ).alias("cluster"),
         )
-        changed = step.filter(F.col("cluster") != F.col("prev_cluster")).count()
-        labels = step.select("doc_id", "cluster")
-        if changed == 0:
-            break
+
+    labels, seen = iterate(
+        labels,
+        step,
+        max_rounds=max_iters,
+        observe=(F.expr("count_if(cluster <> prev_cluster)").alias("changed"),),
+        converged=lambda seen: seen[-1]["changed"] == 0,
+        rows=n_seen["n"],
+    )
     edges.unpersist()
     if rounds_out is not None:
-        rounds_out.append(rounds)
-    return labels
+        rounds_out.append(len(seen))
+    return labels.select("doc_id", "cluster")
 
 
 def cc_labels_star(
@@ -1720,11 +1741,11 @@ def cc_labels_star(
     ``edges`` symmetric (doc_a, doc_b), no self-loops; ``nodes`` one
     doc_id per vertex. Each round is two groupBy+join passes over the
     current edge frame, localCheckpoint-ed to truncate lineage.
-    Convergence = the (count, xxhash64-sum) edge digest repeating — an
-    O(1)-row action per round; the final stars give every node the
-    component minimum as its direct neighbor. Labels are property-tested
-    equal to :func:`cc_labels_converged` and oracle-checked through
-    ``dedup_hybrid``'s recursive-CTE fixpoint."""
+    Convergence = the (count, xxhash64-xor) edge digest repeating,
+    observed on each round's checkpoint job; the final stars give every
+    node the component minimum as its direct neighbor. Labels are
+    property-tested equal to :func:`cc_labels_converged` and
+    oracle-checked through ``dedup_hybrid``'s recursive-CTE fixpoint."""
 
     def _star(e: DataFrame, large: bool, dedupe: bool = True) -> DataFrame:
         m = e.groupBy("doc_a").agg(F.min("doc_b").alias("mnb")).select(
@@ -1749,43 +1770,25 @@ def cc_labels_star(
             F.col("u").alias("doc_a"), F.col("v").alias("doc_b")
         ).union(out.select(F.col("v").alias("doc_a"), F.col("u").alias("doc_b")))
 
-    e = edges.localCheckpoint(eager=True)
-    spark = e.sparkSession
-    # Small-graph fast path (r15, guide §1.2/§2.4): with AQE on, EVERY
-    # tiny shuffle of EVERY star round becomes its own re-optimized
-    # query stage — dedup_hybrid planned 87 jobs at sf0.1, almost all
-    # AQE re-planning of sub-100k-row frames, and the job-scheduling
-    # overhead dominated the round's actual work. small_plan_mode runs
-    # the ROUNDS with AQE off and a shuffle width scaled to the edge
-    # count; both confs are restored after the loop, so the final label
-    # join (and everything else on the session) still plans under AQE.
-    # The count is an O(partitions) action over the already-materialized
-    # checkpoint. At real scale n_edges exceeds the threshold and the
-    # loop is untouched.
-    n_edges = e.count()
-    prev_digest = None
-    rounds = 0
-    with small_plan_mode(spark, n_edges):
-        for _ in range(max_iters):
-            # the intermediate large-star output skips its distinct: the
-            # small-star pass only min-aggregates and joins over it, both
-            # duplicate-insensitive for the resulting edge SET, and the round
-            # ends in a distinct — one shuffle fewer per round, identical
-            # per-round edge sets (so identical digests and round counts)
-            e = _star(
-                _star(e, large=True, dedupe=False), large=False
-            ).localCheckpoint(eager=True)
-            rounds += 1
-            digest = e.agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(doc_a, doc_b))").alias("h"),
-            ).first()
-            digest = (digest["n"], digest["h"])
-            if digest == prev_digest:
-                break
-            prev_digest = digest
+    e, e_seen = checkpoint(edges, F.count("*").alias("n"))
+    # the intermediate large-star output skips its distinct: the
+    # small-star pass only min-aggregates and joins over it, both
+    # duplicate-insensitive for the resulting edge SET, and the round
+    # ends in a distinct — one shuffle fewer per round, identical
+    # per-round edge sets (so identical digests and round counts)
+    e, seen = iterate(
+        e,
+        lambda e, seen: _star(_star(e, large=True, dedupe=False), large=False),
+        max_rounds=max_iters,
+        observe=(
+            F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(doc_a, doc_b))").alias("h"),
+        ),
+        converged=lambda seen: len(seen) > 1 and seen[-1] == seen[-2],
+        rows=e_seen["n"],
+    )
     if rounds_out is not None:
-        rounds_out.append(rounds)
+        rounds_out.append(len(seen))
     star_min = e.groupBy("doc_a").agg(F.min("doc_b").alias("nbr_min"))
     return nodes.join(
         star_min, nodes.doc_id == star_min.doc_a, "left"

@@ -56,6 +56,15 @@ def test_star_equals_converged_on_mixed_shapes(spark):
     assert star[99] == 99
 
 
+def test_empty_edge_set_leaves_every_node_its_own_cluster(spark):
+    # both loops size their gate and stop test from observed counts;
+    # with no edge at all every node is a singleton component
+    edges, nodes = _sym(spark, [], [5, 3, 9])
+    expected = {5: 5, 3: 3, 9: 9}
+    assert _labels(cc_labels_star(edges, nodes)) == expected
+    assert _labels(cc_labels_converged(edges, nodes)) == expected
+
+
 def _duck_cc_oracle(pairs, node_ids):
     """Independent fixpoint: DuckDB recursive reachability over the same
     edge list — the exact oracle shape ``dedup_components`` is checked

@@ -7,6 +7,7 @@ from __future__ import annotations
 from impala_base_to_cdw_sizing_spark.operators.graph_rank import (
     _NANO,
     pagerank_ranks_conserving,
+    ppr_ranks,
     q_graph_pagerank_conserving,
 )
 from tests.conftest import SF_SMALL
@@ -38,6 +39,17 @@ def test_pagerank_degenerate_graphs(spark):
     # single isolated doc: it holds the whole unit of mass
     assert rows[0].rank_nano == _NANO
     assert rows[0].outdeg == 0
+
+
+def test_ppr_without_seeds_ranks_every_doc_zero(spark):
+    """No seed, no teleport mass: the seed count observed on the node
+    checkpoint is 0, and every doc keeps rank 0 with its out-degree."""
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "doc_a long, doc_b long")
+    docs = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 0)], "doc_id long, is_seed int"
+    )
+    rows = sorted(ppr_ranks(edges, docs).collect())
+    assert [tuple(r) for r in rows] == [(1, 0, 1, 0), (2, 0, 1, 0), (3, 0, 0, 0)]
 
 
 def test_pagerank_hub_outranks_leaves_on_star(spark):

@@ -5,7 +5,8 @@ jobs each rep schedules (setJobGroup + statusTracker), printing one JSON
 line with per-rep ``walls`` and ``jobs`` lists. Every rep starts cold:
 the Spark cache and every in-process memo are cleared first, so the
 warm-up rep and later reps are comparable. Used for job-count A/Bs
-(small_plan_mode, plan refactors that must keep a query's job count).
+(the fixed-point driver's small-plan gate, plan refactors that must
+keep a query's job count).
 
 Usage: SPARK_GRAFT_SF_DIR=... python tools/job_count_probe.py name ...
 """
